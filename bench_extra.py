@@ -7,9 +7,9 @@ report are reproducible).
                                      # and repeat the batch section there
 
 Sections:
-  batch_ab     fused bucket kernel vs DataFrame plan, disjunctive AND
-               conjunctive 200-query batches (identical-results assert +
-               best-of-2 wall times)
+  batch_ab     exact evaluator in each bucket partition (local.bucket_topk)
+               vs DataFrame plan, disjunctive AND conjunctive 200-query
+               batches (identical-results assert + best-of-2 wall times)
   local_dist   per-query driver-local vs distributed latency for the
                bench headline shapes (the crossover evidence backing
                BENCH/LOCAL_CROSSOVER.json)
@@ -33,9 +33,11 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 def _bench_batch(spark, idx_dir: str, tag: str, out: dict):
     from pyspark.sql import functions as F
 
+    import whoosh_spark.query as Q
     import whoosh_spark.search.batch as B
     from whoosh_spark.index import Index
     from whoosh_spark.search import Searcher
+    from whoosh_spark.search import local as L
 
     ix = Index(spark, idx_dir)
     s = Searcher(ix, exact_scores=True, cache_postings=False)
@@ -64,26 +66,28 @@ def _bench_batch(spark, idx_dir: str, tag: str, out: dict):
     rec: dict = {}
     for conj in (False, True):
         name = "conjunctive" if conj else "disjunctive"
-        spark.sparkContext.setJobDescription(f"{tag} {name} fused")
-        fused_rows = rows(B.batch_fused_topk(s, batch, k=10, conjunctive=conj))
+        node = Q.And if conj else Q.Or
+        trees = [(qid, node([Q.Term(f, t) for t in terms]))
+                 for qid, f, terms in batch]
+        spark.sparkContext.setJobDescription(f"{tag} {name} bucket placement")
+        bucket_rows = rows(L.bucket_topk(s, trees, 10))
         if conj:
             spark.sparkContext.setJobDescription(f"{tag} {name} chunk plan")
             df_rows = rows(B.batch_conjunctive_search(s, batch, k=10))
             df_sec = best2(lambda: B.batch_conjunctive_search(s, batch, k=10).collect())
         else:
-            orig = B.batch_fused_topk
-            B.batch_fused_topk = lambda *a, **kw: None
+            orig = L.bucket_topk
+            L.bucket_topk = lambda *a, **kw: None
             try:
                 spark.sparkContext.setJobDescription(f"{tag} {name} DataFrame plan")
                 df_rows = rows(B.batch_term_search(s, batch, k=10, use_wand=False))
                 df_sec = best2(lambda: B.batch_term_search(
                     s, batch, k=10, use_wand=False).collect())
             finally:
-                B.batch_fused_topk = orig
-        assert fused_rows == df_rows, f"{tag} {name}: kernel/plan mismatch"
-        fused_sec = best2(
-            lambda: B.batch_fused_topk(s, batch, k=10, conjunctive=conj).collect())
-        rec[name] = {"fused_sec": fused_sec, "dataframe_sec": df_sec,
+                L.bucket_topk = orig
+        assert bucket_rows == df_rows, f"{tag} {name}: bucket placement/plan mismatch"
+        bucket_sec = best2(lambda: L.bucket_topk(s, trees, 10).collect())
+        rec[name] = {"bucket_sec": bucket_sec, "dataframe_sec": df_sec,
                      "identical_results": True}
     out[f"batch_ab_{tag}"] = rec
 

@@ -17,6 +17,16 @@ from whoosh_spark.search import Searcher
 from whoosh_spark.search.batch import batch_conjunctive_search, batch_term_search
 
 
+@pytest.fixture(autouse=True)
+def generic_plan(monkeypatch):
+    """The skip is a generic-plan optimization: keep the bucket placement
+    of the exact evaluator, which decodes whole buckets either way, out of
+    the on/off comparisons."""
+    from whoosh_spark.search import local as L
+
+    monkeypatch.setattr(L, "bucket_topk", lambda *a, **kw: None)
+
+
 @pytest.fixture(scope="module")
 def sparse_ix(spark, tmp_path_factory):
     """4000 docs = ONE salt bucket; 'rareterm' only in doc ids 0..39

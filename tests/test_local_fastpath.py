@@ -63,6 +63,53 @@ def test_local_equals_distributed(ix, seed):
     assert got == want, (q, got[:5], want[:5])
 
 
+def _has_not(q):
+    return isinstance(q, Q.Not) or any(_has_not(c) for c in q.children())
+
+
+@pytest.mark.parametrize("seed", range(40))
+def test_bucket_placement_equals_generic(ix, seed, monkeypatch):
+    """Cross-placement differential: past the local threshold, bucket_topk
+    answers every tree without Not, bit-identical to the generic plan
+    (Searcher.search with the placement patched off)."""
+    from whoosh_spark.search import local as L
+
+    q = _gen(random.Random(seed))
+    s = Searcher(ix, use_local=False, local_threshold=0)
+    out = L.bucket_topk(s, [("q", q)], 15)
+    assert (out is not None) == (not _has_not(q)), q
+    monkeypatch.setattr(L, "bucket_topk", lambda *a, **kw: None)
+    want = [(r["doc_id"], r["score"]) for r in s.search(q, limit=15).collect()]
+    if out is not None:
+        got = [(r["doc_id"], r["score"]) for r in out.orderBy("rank").collect()]
+        assert got == want, (q, got[:5], want[:5])
+
+
+def test_local_read_error_falls_back(ix, monkeypatch):
+    """An IO error while reading postings declines the driver placement;
+    the search still returns the generic plan's rows."""
+    import pyarrow.parquet as pq
+
+    from whoosh_spark.search import local as L
+    from whoosh_spark.search.local import try_local_search
+
+    q = Q.Or([Q.Term("text", "alfa"), Q.And([Q.Term("text", "bravo"),
+                                              Q.Not(Q.Term("text", "echo"))])])
+    with monkeypatch.context() as m:
+        m.setattr(L, "bucket_topk", lambda *a, **kw: None)
+        slow = Searcher(ix, use_local=False)
+        want = [(r["doc_id"], r["score"]) for r in slow.search(q, limit=15).collect()]
+
+    def unreadable(*a, **kw):
+        raise OSError("unreadable segment file")
+
+    monkeypatch.setattr(pq, "read_table", unreadable)
+    fast = Searcher(ix)
+    assert try_local_search(fast, q, 15) is None
+    got = [(r["doc_id"], r["score"]) for r in fast.search(q, limit=15).collect()]
+    assert got == want
+
+
 def test_local_path_actually_used(ix):
     from whoosh_spark.search.local import try_local_search
 

@@ -177,3 +177,20 @@ def test_heartbeat_stops_after_lock_stolen(tmp_path, monkeypatch):
         os.utime(path, (old, old))
         time.sleep(0.45)  # > heartbeat interval; must NOT utime foreign lock
         assert time.time() - os.stat(path).st_mtime > 50
+
+
+def test_clean_files_keeps_staging_while_locked(spark, tmp_path):
+    """clean_files removes an aged .deletes_staging dir only when no writer
+    holds the index lock (delete_docs stages under that lock)."""
+    from whoosh_spark.index.merge import clean_files
+
+    d = str(tmp_path / "staged")
+    create_in(spark, d, IndexSchema.of(text=TEXT()))
+    os.makedirs(os.path.join(d, "segments"), exist_ok=True)
+    staging = os.path.join(d, ".deletes_staging")
+    os.makedirs(staging)
+    with index_lock(d):
+        assert ".deletes_staging" not in clean_files(d, grace_secs=0)
+        assert os.path.isdir(staging)
+    assert ".deletes_staging" in clean_files(d, grace_secs=0)
+    assert not os.path.exists(staging)

@@ -252,6 +252,59 @@ def decode_position_lists_concat(buffers: list[bytes | None],
     return csum - prev, lens
 
 
+def decode_term_blocks(counts, ids: list[bytes], tfs: list[bytes],
+                       len_bytes: list[bytes], weights: list[bytes | None],
+                       positions: list[bytes | None] | None = None,
+                       deleted: np.ndarray | None = None):
+    """Decode one term's posting blocks into doc-id-sorted arrays.
+
+    The blocks may come from several segments or bucket partitions in any
+    order. A ``weights`` entry of None (no token-boost payload) means the
+    weight is the tf. Positions decode when ``positions`` holds any
+    payload. Doc ids in ``deleted`` (sorted) are dropped; the lookup is a
+    binary search, so its cost does not grow with the deleted count.
+
+    Returns (ids int64, weights float64, len_bytes uint8, positions), where
+    positions is None or (flat int64, per-posting lengths int64)."""
+    counts = np.asarray(counts, dtype=np.int64)
+    doc_ids = delta_decode_concat(ids, counts)
+    if all(w is None for w in weights):
+        ws = varint_decode_concat(tfs, int(counts.sum())).astype(np.float64)
+    else:
+        ws = np.concatenate([
+            np.frombuffer(w, dtype=np.float64) if w is not None
+            else varint_decode(tf, int(c)).astype(np.float64)
+            for w, tf, c in zip(weights, tfs, counts)
+        ])
+    lbs = np.frombuffer(b"".join(len_bytes), dtype=np.uint8)
+    pos = None
+    if positions is not None and any(p is not None for p in positions):
+        flat, lens = decode_position_lists_concat(positions, counts)
+        pos = flat.astype(np.int64), lens.astype(np.int64)
+    sel = None
+    if deleted is not None and deleted.size:
+        at = np.minimum(np.searchsorted(deleted, doc_ids), deleted.size - 1)
+        keep = deleted[at] != doc_ids
+        if not keep.all():
+            sel = np.flatnonzero(keep)
+    kept = doc_ids if sel is None else doc_ids[sel]
+    if kept.size > 1 and np.any(np.diff(kept) < 0):
+        # interleaved doc ranges of several segments/buckets
+        order = np.argsort(kept, kind="stable")
+        sel = order if sel is None else sel[order]
+    if sel is None:
+        return doc_ids, ws, lbs, pos
+    if pos is not None:
+        flat, lens = pos
+        lens_s = lens[sel]
+        starts = np.concatenate(([0], np.cumsum(lens)[:-1]))[sel]
+        out_starts = np.concatenate(([0], np.cumsum(lens_s)[:-1]))
+        take = (np.repeat(starts - out_starts, lens_s)
+                + np.arange(int(lens_s.sum()), dtype=np.int64))
+        pos = flat[take], lens_s
+    return doc_ids[sel], ws[sel], lbs[sel], pos
+
+
 def encode_float_lists(lists: list[np.ndarray]) -> bytes:
     """Per-posting float lists (position boosts) whose lengths mirror the
     posting's position list — no length header needed; decode reuses the

@@ -282,14 +282,23 @@ def clean_files(index_dir: str, grace_secs: float = CLEAN_GRACE_SECS) -> list[st
         return removed
     now = time.time()
     # crash leftovers at the index root: an aged .deletes_staging dir from
-    # a delete_docs that died between the staged write and the renames
+    # a delete_docs that died between the staged write and the renames.
+    # delete_docs stages under the index lock, so a held lock means a live
+    # writer may still own the dir: skip it until the lock is free.
     staging = os.path.join(index_dir, ".deletes_staging")
     try:
-        if now - os.stat(staging).st_mtime >= grace_secs:
-            shutil.rmtree(staging, ignore_errors=True)
-            removed.append(".deletes_staging")
+        aged = now - os.stat(staging).st_mtime >= grace_secs
     except FileNotFoundError:
-        pass
+        aged = False
+    if aged:
+        from whoosh_spark.index.lock import LockError, index_lock
+
+        try:
+            with index_lock(index_dir, timeout=0):
+                shutil.rmtree(staging, ignore_errors=True)
+            removed.append(".deletes_staging")
+        except LockError:
+            pass
     for name in os.listdir(segroot):
         if name in live:
             # live segment: GC superseded tombstone generations (each

@@ -13,9 +13,12 @@ cluster size (this powers the N vs 4N scaling evidence in bench.py).
 
 Supported batch shapes: bags of weighted terms per query, scored BM25F and
 combined by sum — the Or/term workload that dominates search serving.
-Conjunctive batches add a HAVING count = n_terms filter; phrase batches
-(``batch_phrase_search``) add a positional adjacency chain evaluated as
-JVM higher-order array expressions; prefix batches
+Conjunctive batches add a HAVING count = n_terms filter. Unrounded term
+and conjunctive bags usually skip this plan: ``batch_term_search`` hands
+them to the exact evaluator placed in each doc-complete bucket partition
+(``local.bucket_topk``), the engine ``Searcher.search`` also uses. Phrase
+batches (``batch_phrase_search``) add a positional adjacency chain
+evaluated as JVM higher-order array expressions; prefix batches
 (``batch_prefix_search``) expand against one lexicon scan per field and
 keep the reference's constant-score / single-term-degenerate semantics;
 fuzzy batches (``batch_fuzzy_search``) expand via one JVM-levenshtein
@@ -33,17 +36,13 @@ from whoosh_spark.search.engine import Searcher, _PlanContext
 
 
 def _prepare(searcher: Searcher, queries: list[tuple[str, str, list[str]]]):
-    ix = searcher.index
-    qrows = []
-    for qid, field, terms in queries:
-        for t in terms:
-            qrows.append((qid, field, t))
+    """(qdf, all_terms, plan) for a bag batch. qdf has one row per term
+    occurrence; its ``pos`` is the occurrence's place in the engine's
+    huffman And order (df descending, then query order), which
+    ``_and_agg`` sums in, and ``need`` the query's occurrence count."""
     import pandas as pd
 
-    qdf = ix.spark.createDataFrame(
-        pd.DataFrame(qrows, columns=["query_id", "field", "term"]),
-        schema="query_id string, field string, term string",
-    )
+    ix = searcher.index
     all_terms: dict[str, set] = {}
     for _, field, terms in queries:
         all_terms.setdefault(field, set()).update(terms)
@@ -52,7 +51,33 @@ def _prepare(searcher: Searcher, queries: list[tuple[str, str, list[str]]]):
     for field, ts in all_terms.items():
         for t, row in ix.term_stats(field, list(ts)).items():
             plan.stats[(field, t)] = row
+    qrows = []
+    for qid, field, terms in queries:
+        # huffman pop order IS a left fold over (df desc, seq): the merged
+        # weight of the two largest terms is more negative than any single
+        # remaining one, so the accumulator stays at the front of the queue
+        df = [int(plan.stats[(field, t)]["df"]) if plan.stats.get((field, t))
+              else 0 for t in terms]
+        order = sorted(range(len(terms)), key=lambda i: (-df[i], i))
+        for pos, i in enumerate(order):
+            qrows.append((qid, field, terms[i], pos, len(terms)))
+    qdf = ix.spark.createDataFrame(
+        pd.DataFrame(qrows, columns=["query_id", "field", "term", "pos", "need"]),
+        schema="query_id string, field string, term string, pos int, need int",
+    )
     return qdf, all_terms, plan
+
+
+def _and_agg(per_query: DataFrame) -> DataFrame:
+    """Conjunctive (query_id, doc_id, score) from per-(query, term
+    occurrence, doc) rows carrying qdf's ``pos`` and ``need``: scores
+    summed in ``pos`` order — the engine's And, bit for bit (a plain sum's
+    order is the shuffle's) — keeping docs that match every occurrence."""
+    return per_query.groupBy("query_id", "doc_id").agg(
+        F.aggregate(F.array_sort(F.collect_list(F.struct("pos", "score"))),
+                    F.lit(0.0), lambda acc, x: acc + x["score"]).alias("score"),
+        (F.count("*") == F.first("need")).alias("_all"),
+    ).filter("_all").select("query_id", "doc_id", "score")
 
 
 def _selective_fraction(searcher: Searcher,
@@ -87,407 +112,13 @@ def _topk_window(agg: DataFrame, k: int) -> DataFrame:
     # REVERTED: shipping the full aggregated (query, doc) set across the
     # JVM->Python boundary cost ~2x the Tungsten window sort it displaced
     # (27.8s -> 52s at 500k docs). The volume fix lives upstream: the
-    # fused bucket kernel (batch_fused_topk) never materializes that set.
+    # bucket placement (local.bucket_topk) never materializes that set.
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         agg.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "doc_id", F.col("score"), "rank")
     )
-
-
-def batch_fused_topk(
-    searcher: Searcher,
-    queries: list[tuple[str, str, list[str]]],
-    k: int = 10,
-    conjunctive: bool = False,
-    combine: str = "sum",
-    min_match: int = 0,
-    exclude: list[tuple[str, str]] | None = None,
-    require: list[tuple[str, str]] | None = None,
-) -> DataFrame | None:
-    """Disjunctive weighted-term batch top-k as ONE fused kernel over
-    bucket-co-partitioned posting blocks — the guide-§8 shape: every
-    per-(query, doc) decision happens where the postings already are, and
-    only ``queries x k`` candidate rows per partition ever reach a shuffle.
-
-    The DataFrame plan (decode -> score -> broadcast-join queries ->
-    groupBy(query, doc) -> window) is the right shape for SELECTIVE
-    batches, but for hot unselective ones it materializes and shuffles the
-    full matched set — |queries| x |matching docs| rows (10^8 at 500k docs
-    x 200 queries) — twice (aggregation + ranking window), just to keep k
-    rows per query. All of a doc's postings for every term share the
-    build-time ``bucket`` (doc_id // bucket_width), so partitioning the
-    compact ENCODED blocks by bucket makes each partition doc-complete:
-    the kernel decodes, scores (same numpy BM25 as the local evaluator,
-    bit-equal to the JVM expression), accumulates per query in the
-    query's term order (the engine's exact left-fold order), and emits its
-    local top-k. A final tiny window merges partition candidates — exact
-    by the top-k merge property (doc_id breaks score ties).
-
-    Parallelism below one-task-per-core is recovered by replicating the
-    block stream over G query-groups (each query belongs to exactly one
-    group, so per-(query, doc) work is never duplicated — only the cheap
-    block decode, bounded by G).
-
-    Eligibility (caller falls back to the DataFrame plan otherwise): plain
-    BM25F weighting, no tombstones (the kernel reads raw blocks), and no
-    ``round_to`` (faithful HALF_UP decimal rounding before the local cut
-    cannot be vectorized; rounded oracle comparisons keep the proven
-    plan)."""
-    import numpy as np
-    import pandas as pd
-
-    from whoosh_spark.index import codec
-    from whoosh_spark.index.quantize import BYTE_TO_LENGTH
-    from whoosh_spark.search.scoring import BM25F
-
-    ix = searcher.index
-    w = searcher.weighting
-    if type(w) is not BM25F or getattr(w, "use_final", False):
-        return None
-    if ix._delete_paths():
-        return None
-    _, all_terms, plan = _prepare(searcher, queries)
-
-    # per-(field, term) scoring constants (same values attach_scores feeds
-    # the JVM expression; score_np reproduces its op order bit-for-bit)
-    dc = ix.doc_count_all()
-    meta: dict = {}
-    for field, ts in all_terms.items():
-        ftype = searcher.schema[field] if field in searcher.schema else None
-        scorable = bool(ftype and ftype.scorable)
-        fboost = float(ftype.field_boost) if ftype else 1.0
-        avgfl = ix.avg_field_length(field) or 1.0
-        B = w.field_B(field)
-        for t in ts:
-            st = plan.stats.get((field, t))
-            if st is None:
-                continue
-            meta[(field, t)] = (w.idf(dc, int(st["df"])), avgfl, B, fboost, scorable)
-
-    nparts = max(1, ix.spark.sparkContext.defaultParallelism)
-    span = max(
-        (s.max_doc_id for s in ix.manifest.segments), default=0
-    ) - min((s.min_doc_id for s in ix.manifest.segments), default=0)
-    from whoosh_spark.index.build import DEFAULT_BUCKET_WIDTH
-
-    n_buckets = max(1, span // DEFAULT_BUCKET_WIDTH + 1)
-    G = int(max(1, min(len(queries), nparts // n_buckets)))
-    import zlib
-
-    qgroup = {qid: zlib.crc32(str(qid).encode()) % G for qid, _, _ in queries}
-    by_group: list[list[tuple[str, str, list[str]]]] = [[] for _ in range(G)]
-    for q in queries:
-        by_group[qgroup[q[0]]].append(q)
-
-    # membership-only term sets (AndNot / Require on the single-query
-    # route): their ids are decoded per partition but never scored —
-    # buckets are doc-complete, so per-partition exclusion/required
-    # membership is exact
-    extra_pairs = set(exclude or ()) | set(require or ())
-    exclude = list(exclude or ())
-    require = list(require or ())
-    term_pairs = {(f, t) for f, ts in all_terms.items() for t in ts} | extra_pairs
-    blocks = ix.postings_blocks().filter(
-        F.col("term").isin(sorted({t for _, t in term_pairs}))
-        & F.col("field").isin(sorted({f for f, _ in term_pairs}))
-    ).select("field", "term", "bucket", "count", "ids", "tfs", "len_bytes",
-             "weights")
-    if G > 1:
-        blocks = blocks.withColumn(
-            "g", F.explode(F.sequence(F.lit(0), F.lit(G - 1))))
-    else:
-        blocks = blocks.withColumn("g", F.lit(0))
-    parts = blocks.repartition(nparts, "bucket", "g")
-
-    def kernel(batches):
-        # (g, field, term) -> [ids chunks], [score chunks]
-        acc: dict = {}
-        # (g, field, term) -> [ids chunks] for membership-only terms
-        macc: dict = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for (g, fld, trm), idx in pdf.groupby(
-                    ["g", "field", "term"], sort=False).indices.items():
-                m = meta.get((fld, trm))
-                if m is None:
-                    if (fld, trm) in extra_pairs:
-                        sub = pdf.iloc[idx]
-                        counts = sub["count"].to_numpy().astype(np.int64)
-                        macc.setdefault((g, fld, trm), []).append(
-                            codec.delta_decode_concat(sub["ids"].tolist(), counts))
-                    continue
-                sub = pdf.iloc[idx]
-                counts = sub["count"].to_numpy().astype(np.int64)
-                n = int(counts.sum())
-                ids = codec.delta_decode_concat(sub["ids"].tolist(), counts)
-                wcol = sub["weights"]
-                if wcol.isna().all():
-                    ws = codec.varint_decode_concat(
-                        sub["tfs"].tolist(), n).astype(np.float64)
-                else:
-                    chunks = []
-                    for wv, tf_bin, c in zip(wcol, sub["tfs"], counts):
-                        if wv is not None:
-                            chunks.append(np.frombuffer(wv, dtype=np.float64))
-                        else:
-                            chunks.append(codec.varint_decode(
-                                tf_bin, int(c)).astype(np.float64))
-                    ws = np.concatenate(chunks)
-                lbs = np.frombuffer(b"".join(sub["len_bytes"]), dtype=np.uint8)
-                idf, avgfl, B, fboost, scorable = m
-                if scorable:
-                    fls = BYTE_TO_LENGTH[lbs].astype(np.float64)
-                    sc = w.score_np(idf, ws * fboost, fls, avgfl, B)
-                else:
-                    sc = ws * fboost
-                slot = acc.setdefault((g, fld, trm), ([], []))
-                slot[0].append(ids)
-                slot[1].append(sc)
-        if not acc:
-            return
-        groups = {g for g, _, _ in acc}
-        out_q: list = []
-        out_d: list = []
-        out_s: list = []
-        for g in groups:
-            term_scores = {
-                (fld, trm): (np.concatenate(chunks[0]), np.concatenate(chunks[1]))
-                for (gg, fld, trm), chunks in acc.items() if gg == g
-            }
-            mem = {
-                (fld, trm): np.concatenate(chunks)
-                for (gg, fld, trm), chunks in macc.items() if gg == g
-            }
-
-            def _member_ids(pairs_list):
-                """Union doc set of membership pairs present here (a pair
-                that is also a scoring term reads its ids from acc)."""
-                arrs = []
-                for p in pairs_list:
-                    if p in term_scores:
-                        arrs.append(term_scores[p][0])
-                    elif p in mem:
-                        arrs.append(mem[p])
-                return (np.unique(np.concatenate(arrs)) if arrs
-                        else np.empty(0, dtype=np.int64))
-
-            for qid, field, terms in by_group[g]:
-                parts_i = [term_scores[(field, t)] for t in terms
-                           if (field, t) in term_scores]
-                if not parts_i or (conjunctive and len(parts_i) < len(terms)):
-                    continue  # conjunctive: a term with no postings here
-                # per-doc fold IN TERM ORDER over columns aligned to the
-                # union doc set — bit-identical to the engine's left fold
-                # (0.0-fill for absent terms is the join plan's coalesce;
-                # NOTE add.reduceat was tried and replaced: numpy reduces
-                # pairwise, which re-associates the sum by 1 ulp)
-                docs = np.unique(np.concatenate([p[0] for p in parts_i]))
-                if combine == "max":
-                    sums = np.full(docs.size, float("-inf"))
-                else:
-                    sums = np.zeros(docs.size, dtype=np.float64)
-                npresent = (np.zeros(docs.size, dtype=np.int32)
-                            if conjunctive or min_match else None)
-                for ids_t, sc_t in parts_i:
-                    idx = np.searchsorted(docs, ids_t)
-                    if combine == "max":
-                        sums[idx] = np.maximum(sums[idx], sc_t)
-                    else:
-                        sums[idx] = sums[idx] + sc_t
-                    if npresent is not None:
-                        npresent[idx] += 1
-                if conjunctive:
-                    # all-terms-required: one contribution per term
-                    # occurrence (buckets are doc-complete, so the count
-                    # is global, not partial)
-                    keep = npresent == len(terms)
-                    docs, sums = docs[keep], sums[keep]
-                elif min_match:
-                    keep = npresent >= min_match
-                    docs, sums = docs[keep], sums[keep]
-                if exclude:
-                    keep = ~np.isin(docs, _member_ids(exclude),
-                                    assume_unique=True)
-                    docs, sums = docs[keep], sums[keep]
-                if require:
-                    keep = np.isin(docs, _member_ids(require),
-                                   assume_unique=True)
-                    docs, sums = docs[keep], sums[keep]
-                top = np.lexsort((docs, -sums))[:k]
-                out_q.extend([qid] * top.size)
-                out_d.append(docs[top])
-                out_s.append(sums[top])
-        if not out_q:
-            return
-        yield pd.DataFrame({
-            "query_id": out_q,
-            "doc_id": np.concatenate(out_d),
-            "score": np.concatenate(out_s),
-        }, copy=False)
-
-    cand = parts.mapInPandas(kernel, "query_id string, doc_id long, score double")
-    return _topk_window(cand, k)
-
-
-def phrase_fused_topk(
-    searcher: Searcher,
-    field: str,
-    words: list[str],
-    k: int = 10,
-) -> DataFrame | None:
-    """Single-phrase top-k through the bucket-co-partitioned kernel: per
-    partition, decode the words' postings WITH positions, intersect the
-    doc sets in word order, run the slop=1 adjacency check
-    (keys-vectorized, the same degenerate form as the engine expression
-    and the local evaluator), sum word scores over the engine's
-    order-preserving binary tree, and emit the local top-k. The generic
-    plan ships every matched doc's position ARRAYS through an
-    aggregation exchange; here positions never leave the partition that
-    decoded them. Same eligibility rules as batch_fused_topk."""
-    import numpy as np
-    import pandas as pd
-
-    from whoosh_spark.index import codec
-    from whoosh_spark.index.quantize import BYTE_TO_LENGTH
-    from whoosh_spark.search.scoring import BM25F
-
-    ix = searcher.index
-    w = searcher.weighting
-    if type(w) is not BM25F or getattr(w, "use_final", False):
-        return None
-    if ix._delete_paths():
-        return None
-    stats = ix.term_stats(field, sorted(set(words)))
-    if any(t not in stats for t in words):
-        # a missing word means no matches (reference positional.py)
-        return ix.spark.createDataFrame([], "doc_id long, score double")
-    ftype = searcher.schema[field] if field in searcher.schema else None
-    scorable = bool(ftype and ftype.scorable)
-    fboost = float(ftype.field_boost) if ftype else 1.0
-    avgfl = ix.avg_field_length(field) or 1.0
-    B = w.field_B(field)
-    dc = ix.doc_count_all()
-    meta = {t: (w.idf(dc, int(stats[t]["df"])), avgfl, B, fboost, scorable)
-            for t in set(words)}
-
-    nparts = max(1, ix.spark.sparkContext.defaultParallelism)
-    blocks = ix.postings_blocks().filter(
-        (F.col("field") == field) & F.col("term").isin(list(set(words)))
-    ).select("term", "bucket", "count", "ids", "tfs", "len_bytes",
-             "weights", "positions")
-    parts = blocks.repartition(nparts, "bucket")
-    uwords = sorted(set(words))
-
-    def kernel(batches):
-        acc: dict = {t: ([], [], [], []) for t in uwords}
-        got = False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            got = True
-            for trm, idx in pdf.groupby("term", sort=False).indices.items():
-                sub = pdf.iloc[idx]
-                counts = sub["count"].to_numpy().astype(np.int64)
-                n = int(counts.sum())
-                ids = codec.delta_decode_concat(sub["ids"].tolist(), counts)
-                wcol = sub["weights"]
-                if wcol.isna().all():
-                    ws = codec.varint_decode_concat(
-                        sub["tfs"].tolist(), n).astype(np.float64)
-                else:
-                    chunks = []
-                    for wv, tf_bin, c in zip(wcol, sub["tfs"], counts):
-                        if wv is not None:
-                            chunks.append(np.frombuffer(wv, dtype=np.float64))
-                        else:
-                            chunks.append(codec.varint_decode(
-                                tf_bin, int(c)).astype(np.float64))
-                    ws = np.concatenate(chunks)
-                lbs = np.frombuffer(b"".join(sub["len_bytes"]), dtype=np.uint8)
-                pos_flat, pos_lens = codec.decode_position_lists_concat(
-                    sub["positions"].tolist(), counts)
-                idf, avgfl_, B_, fboost_, scorable_ = meta[trm]
-                if scorable_:
-                    fls = BYTE_TO_LENGTH[lbs].astype(np.float64)
-                    sc = w.score_np(idf, ws * fboost_, fls, avgfl_, B_)
-                else:
-                    sc = ws * fboost_
-                slot = acc[trm]
-                slot[0].append(ids)
-                slot[1].append(sc)
-                slot[2].append(pos_flat)
-                slot[3].append(pos_lens)
-        if not got:
-            return
-        per_word: dict = {}
-        for t in uwords:
-            ids_c, sc_c, pf_c, pl_c = acc[t]
-            if not ids_c:
-                return  # a word absent from this partition: no match here
-            ids = np.concatenate(ids_c)
-            sc = np.concatenate(sc_c)
-            pf = np.concatenate(pf_c) if pf_c else np.empty(0, np.int64)
-            pl = np.concatenate(pl_c)
-            if ids.size > 1 and np.any(np.diff(ids) < 0):
-                order = np.argsort(ids, kind="stable")
-                offs = np.concatenate(([0], np.cumsum(pl))).astype(np.int64)
-                lens_o = pl[order]
-                starts_o = offs[order]
-                total = int(lens_o.sum())
-                gstart = np.concatenate(([0], np.cumsum(lens_o)[:-1]))
-                within = np.arange(total, dtype=np.int64) - np.repeat(gstart, lens_o)
-                pf = pf[np.repeat(starts_o, lens_o) + within]
-                pl = lens_o
-                ids, sc = ids[order], sc[order]
-            per_word[t] = (ids, sc, pf,
-                           np.concatenate(([0], np.cumsum(pl))).astype(np.int64))
-        docs = per_word[words[0]][0]
-        for t in words[1:]:
-            docs = np.intersect1d(docs, per_word[t][0], assume_unique=True)
-        if docs.size == 0:
-            return
-        if len(words) > 1:
-            # slop=1 ordered adjacency via (candidate << 32 | position)
-            KEY = np.int64(1) << np.int64(32)
-            keys = []
-            for t in words:
-                ids, _, pf, offs = per_word[t]
-                idx = np.searchsorted(ids, docs)
-                lens = offs[idx + 1] - offs[idx]
-                total = int(lens.sum())
-                gstart = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                within = np.arange(total, dtype=np.int64) - np.repeat(gstart, lens)
-                pvals = pf[np.repeat(offs[idx], lens) + within]
-                group = np.repeat(np.arange(idx.size, dtype=np.int64), lens)
-                keys.append(group * KEY + pvals)
-            survivors = keys[0]
-            for i in range(1, len(keys)):
-                survivors = survivors[np.isin(survivors + np.int64(i), keys[i])]
-            if not survivors.size:
-                return
-            matched = docs[np.unique(survivors // KEY)]
-        else:
-            matched = docs
-
-        # order-preserving binary score tree (engine tree_score shape)
-        def tree(lo: int, hi: int):
-            if hi - lo == 1:
-                ids, sc, _, _ = per_word[words[lo]]
-                idx = np.searchsorted(ids, matched)
-                return sc[idx]
-            half = (hi - lo) // 2
-            return tree(lo, lo + half) + tree(lo + half, hi)
-
-        sums = tree(0, len(words))
-        top = np.lexsort((matched, -sums))[:k]
-        yield pd.DataFrame({"doc_id": matched[top], "score": sums[top]},
-                           copy=False)
-
-    cand = parts.mapInPandas(kernel, "doc_id long, score double")
-    return cand
 
 
 def batch_term_search(
@@ -499,38 +130,43 @@ def batch_term_search(
     round_to: int | None = None,
     conjunctive_skip: bool = True,
 ) -> DataFrame:
-    """queries: [(query_id, field, [terms...])] -> top-k per query.
+    """queries: [(query_id, field, [terms...])] -> top-k per query, each
+    query scored as ``Or`` (or ``And`` when ``conjunctive``) of its terms.
+    This is the bag API; ``batch_search`` sends query trees to
+    ``local.bucket_topk`` itself and calls this only for the routes below
+    that need bags.
 
     Returns DataFrame(query_id, doc_id, score, rank). ``use_wand``:
     True routes disjunctive batches through per-query block-max pruning
-    (batch_wand_search), False forces the full-decode plan, and "auto"
-    (default) picks WAND when >=80% of the batch is selective (has a
-    doc-range-sparse high-idf term) — where WAND measured 3.1x faster —
-    and the exact plan otherwise (where WAND's bounds cannot prune and
-    its extra phases cost ~5%). All three produce identical top-k.
-    ``round_to`` rounds scores BEFORE the top-k window so the k-boundary
-    tie-cut is deterministic across engines (oracle comparisons).
-    Conjunctive batches route through per-query chunk-intersection block
-    skipping (exact; ``conjunctive_skip=False`` keeps the full-decode plan
-    for A/B benchmarking)."""
+    (batch_wand_search), False skips it, and "auto" (default) picks WAND
+    when >=80% of the batch is selective (has a doc-range-sparse high-idf
+    term) — where WAND measured 3.1x faster. Every other batch runs the
+    exact evaluator once per doc-complete bucket partition
+    (``local.bucket_topk``) on the bag's Or/And tree, which scores each
+    query bit-identically to ``Searcher.search`` and never materializes
+    the |queries| x |docs| matched set. Two cases keep DataFrame plans:
+    selective conjunctive batches take per-query chunk-intersection block
+    skipping (it decodes less; ``conjunctive_skip=False`` keeps the
+    full-decode plan for A/B benchmarking), and ``round_to`` rounds scores
+    BEFORE the top-k window so the k-boundary tie-cut is deterministic
+    across engines (oracle comparisons). Conjunctive plans sum in the
+    engine's huffman order too; disjunctive ones sum in shuffle order."""
     if use_wand == "auto":
         use_wand = (not conjunctive
                     and _selective_fraction(searcher, queries, k) >= 0.8)
     if use_wand and not conjunctive:
         return batch_wand_search(searcher, queries, k, round_to=round_to)
-    if round_to is None:
-        # unselective serving: the fused bucket kernel never materializes
-        # the |queries| x |docs| matched set (see its doc). For SELECTIVE
-        # conjunctive batches the chunk-intersection plan below can still
-        # win by decoding less; route them there (same signal as the WAND
-        # auto-route: a doc-range-sparse term drives the pruning).
-        selective = (conjunctive
-                     and _selective_fraction(searcher, queries, k) >= 0.8)
-        if not selective:
-            fused = batch_fused_topk(searcher, queries, k,
-                                     conjunctive=conjunctive)
-            if fused is not None:
-                return fused
+    if round_to is None and not (
+            conjunctive and _selective_fraction(searcher, queries, k) >= 0.8):
+        from whoosh_spark.query import nodes as Q
+        from whoosh_spark.search.local import bucket_topk
+
+        node = Q.And if conjunctive else Q.Or
+        trees = [(qid, node([Q.Term(field, t) for t in terms]))
+                 for qid, field, terms in queries]
+        out = bucket_topk(searcher, trees, k)
+        if out is not None:
+            return out
     if conjunctive and conjunctive_skip:
         return batch_conjunctive_search(searcher, queries, k, round_to=round_to)
     ix = searcher.index
@@ -552,20 +188,13 @@ def batch_term_search(
 
     joined = scored.join(F.broadcast(qdf), on=["field", "term"])
     if conjunctive:
-        agg = joined.groupBy("query_id", "doc_id").agg(
-            F.sum("score").alias("score"), F.count("*").alias("_n")
-        )
-        n_terms = qdf.groupBy("query_id").agg(F.count("*").alias("_need"))
-        agg = agg.join(F.broadcast(n_terms), on="query_id").filter(
-            F.col("_n") == F.col("_need")
-        )
+        out = _and_agg(joined)
     else:
         # no match-count needed for disjunctive scoring — dropping the
         # count column narrows the (query, doc) shuffle rows
-        agg = joined.groupBy("query_id", "doc_id").agg(
+        out = joined.groupBy("query_id", "doc_id").agg(
             F.sum("score").alias("score")
         )
-    out = agg.select("query_id", "doc_id", "score")
     if round_to is not None:
         out = out.withColumn("score", F.round(F.col("score"), round_to))
     return _topk_window(out, k)
@@ -641,14 +270,7 @@ def batch_conjunctive_search(
     per_query = scored.join(allowed, on=["field", "term", "bucket", "block_no"])
     # restore duplicate-term multiplicity (qdf join fans out repeated terms)
     per_query = per_query.join(F.broadcast(qdf), on=["query_id", "field", "term"])
-    agg = per_query.groupBy("query_id", "doc_id").agg(
-        F.sum("score").alias("score"), F.count("*").alias("_n")
-    )
-    n_terms = qdf.groupBy("query_id").agg(F.count("*").alias("_need"))
-    agg = agg.join(F.broadcast(n_terms), on="query_id").filter(
-        F.col("_n") == F.col("_need")
-    )
-    out = agg.select("query_id", "doc_id", "score")
+    out = _and_agg(per_query)
     if round_to is not None:
         out = out.withColumn("score", F.round(F.col("score"), round_to))
     topk = _topk_window(out, k)
@@ -702,22 +324,16 @@ def batch_wand_search(
     ``batch_term_search(use_wand="auto")`` routes those batches here. The
     saturated control (every term touches every 256-id chunk) prunes 0%
     and pays the extra phases, so auto keeps it on the exact plan."""
-    from whoosh_spark.search.wand import EPS, _max_quality, _term_constants
+    from whoosh_spark.search.wand import EPS, _max_quality, _wand_consts
 
     ix = searcher.index
     spark = ix.spark
     qdf, all_terms, plan = _prepare(searcher, queries)
 
     # driver-side per-(field,term) constants + bounds
-    consts: dict = {}
-    mq: dict = {}
-    for field, ts in all_terms.items():
-        for t in ts:
-            c = _term_constants(searcher, plan.stats, field, t)
-            if c is not None:
-                c["boost"] = 1.0
-                consts[(field, t)] = c
-                mq[(field, t)] = _max_quality(searcher, c)
+    consts = _wand_consts(searcher, plan.stats, [
+        (f, t, 1.0) for f, ts in all_terms.items() for t in ts])
+    mq = {ft: _max_quality(searcher, c) for ft, c in consts.items()}
     if not consts:
         return spark.createDataFrame([], "query_id string, doc_id long, score double, rank int")
 
@@ -1306,18 +922,22 @@ def batch_search(
     ``parser``). Every query is routed to the batch kernel matching its
     tree shape — Term/Or bags and Variations to ``batch_term_search``
     (auto block-max WAND), all-terms-required Ands to
-    ``batch_conjunctive_search`` (chunk-intersection skipping), Phrases to
+    ``batch_conjunctive_search`` (chunk-intersection skipping), unrounded
+    bag batches neither skip route claims to ``local.bucket_topk`` (the
+    exact evaluator in each doc-complete bucket partition), Phrases to
     ``batch_phrase_search`` (grouped by slop, one positional decode pass
     each), Prefixes to ``batch_prefix_search``, FuzzyTerms to
     ``batch_fuzzy_search`` (grouped by (maxdist, prefixlength)), and
     constant-score Wildcard/Regex/TermRange to ``batch_multiterm_search``
     — so N queries of the same shape share ONE posting scan + shuffle
-    instead of N sequential jobs. Trees no kernel serves exactly (boosts,
-    minmatch/scale, Not/nested boolean, spans, column ranges) fall back to
-    the per-query engine inside the same returned union; pass
-    ``strict=True`` to raise instead (a serving deployment that must never
-    run per-query jobs). Returns DataFrame(query_id, doc_id, score, rank);
-    queries with no matches contribute no rows.
+    instead of N sequential jobs. Other trees (boosts, minmatch, nested
+    boolean) join that one ``bucket_topk`` call when it accepts them and
+    ``round_to`` is unset; the rest (Not, Or(scale=), spans, column
+    ranges, ...) fall back to the per-query engine inside the same
+    returned union; pass ``strict=True`` to raise instead (a serving
+    deployment that must never run per-query jobs). Returns
+    DataFrame(query_id, doc_id, score, rank); queries with no matches
+    contribute no rows.
 
     Fallback note: batch kernels apply ``round_to`` BEFORE their top-k
     tie-cut; fallback queries keep the engine's exact-score cut and round
@@ -1358,6 +978,26 @@ def batch_search(
             buckets[kind].append((qid, field, terms))
 
     outs = []
+    if round_to is None:
+        from whoosh_spark.search.local import bucket_topk, bucket_tree
+
+        # one bucket_topk call answers every tree it accepts: bag batches
+        # except selective ones (WAND and the chunk-intersection plan
+        # decode less there) and the trees no batch kernel serves
+        cands = list(fallback)
+        tree_of = dict(queries)
+        for kind in ("term", "and"):
+            qs = buckets[kind]
+            if qs and _selective_fraction(searcher, qs, k) < 0.8:
+                cands += [(qid, tree_of[qid]) for qid, _, _ in qs]
+        exact = [(qid, t) for qid, t in
+                 ((qid, bucket_tree(searcher, q)) for qid, q in cands) if t is not None]
+        taken = {qid for qid, _ in exact}
+        fallback = [f for f in fallback if f[0] not in taken]
+        for kind in ("term", "and"):
+            buckets[kind] = [b for b in buckets[kind] if b[0] not in taken]
+        if exact:
+            outs.append(bucket_topk(searcher, exact, k))
     if buckets["term"]:
         outs.append(batch_term_search(
             searcher, buckets["term"], k=k, round_to=round_to))

@@ -30,7 +30,9 @@ from pyspark.sql.pandas.functions import pandas_udf
 
 from whoosh_spark.index.catalog import Index
 from whoosh_spark.query import nodes as Q
-from whoosh_spark.search.scoring import BM25F, MultiWeighting, WeightingModel
+from whoosh_spark.search.scoring import (
+    BM25F, MultiWeighting, WeightingModel, term_constants,
+)
 
 NEG_INF = float("-inf")
 
@@ -136,18 +138,21 @@ class Searcher:
             wand = self.wand_search(q, limit)
             if wand is not None:
                 return wand
-        if (limit is not None and filter_q is None and mask_q is None
-                and not getattr(self.weighting, "use_final", False)):
-            # flat term bags past the local threshold: the fused bucket
-            # kernel (search/batch.py) evaluates a batch of ONE with the
-            # same float-op order as the exact plan for these shapes —
-            # Or's left fold IS the kernel's concat-order segmented sum,
-            # a 2-term And is order-free, DisMax's max is associative —
-            # and never materializes/shuffles the full matched set.
-            # Measured at 2.5M docs: or5 4.9s -> ~1.5s, and2 3.4 -> ~1.2s.
-            fused = self._fused_single(q, limit)
-            if fused is not None:
-                return fused
+        from whoosh_spark.search.local import bucket_topk, kernel_shape
+
+        if (self.exact_scores and limit is not None and filter_q is None
+                and mask_q is None and kernel_shape(q)):
+            # past the local threshold: the same exact evaluator runs once
+            # per doc-complete bucket partition (search/local.py) for flat
+            # term bags, slop-1 phrases and AndNot/Require of a bag. Unlike
+            # the expression/join plans below it never materializes or
+            # shuffles the full matched set. Measured at 2.5M docs: or5
+            # 4.9s -> ~1.5s, and2 3.4 -> ~1.2s. The relaxed
+            # exact_scores=False contract keeps its aggregation plan:
+            # oracle comparisons hash that plan's output.
+            df = bucket_topk(self, [("q", q)], limit)
+            if df is not None:
+                return df.orderBy(F.asc("rank")).select("doc_id", "score")
         df = self.matches(q, filter_q=filter_q, mask_q=mask_q)
         df = df.orderBy(F.desc("score"), F.asc("doc_id"))
         if limit is not None:
@@ -185,127 +190,6 @@ class Searcher:
         plan.ensure_persisted()  # WAND references the base twice (seed + main)
         df, _ = wand_topk(plan, terms, limit)
         return df
-
-    def _fused_single(self, q: Q.Query, limit: int) -> DataFrame | None:
-        """Route one flat term-bag query through the fused bucket kernel
-        when the result is bit-equal to the exact plan's:
-
-          Or(Terms..., minmatch=0, no scale)  — kernel concat order = the
-                                                ArrayUnionMatcher left fold
-          And(<=2 Terms)                      — concatenated in the huffman
-                                                pop order (df desc, seq)
-          DisjunctionMax(Terms...)            — max is associative
-          Term                                — trivial single bag
-
-        Same-field unboosted children only (boosts would need a weight
-        channel in the bag); the kernel itself declines non-BM25F
-        weightings and tombstoned indexes, falling back to the generic
-        plan. ``exact_scores=False`` searchers are eligible too — the
-        kernel's fixed fold order is one of the orders that contract
-        already allows."""
-        if not self.exact_scores:
-            # the relaxed contract keeps its proven aggregation plan: its
-            # sum order is unspecified, so swapping in the kernel's fixed
-            # order could move a last-ulp top-k boundary between runs of
-            # DIFFERENT engines (exactly what oracle comparisons hash)
-            return None
-        from whoosh_spark.search.batch import batch_fused_topk
-
-        if type(q) is Q.Phrase and q.slop == 1 and q.boost == 1.0 and q.words:
-            from whoosh_spark.search.batch import phrase_fused_topk
-
-            df = phrase_fused_topk(self, q.field, list(q.words), k=limit)
-            if df is None:
-                return None
-            return df.orderBy(F.desc("score"), F.asc("doc_id")).limit(limit)
-        exclude = require = None
-        if type(q) is Q.AndNot or type(q) is Q.Require:
-            # anti/semi joins keep the positive side's scores untouched:
-            # the kernel applies the membership set per doc-complete
-            # partition, which is the same doc filter
-            if q.boost != 1.0:
-                return None
-            docset = self._fused_docset(q.b)
-            bag = self._fused_bag(q.a)
-            if docset is None or bag is None:
-                return None
-            if type(q) is Q.AndNot:
-                exclude = docset
-            else:
-                require = docset
-        else:
-            bag = self._fused_bag(q)
-            if bag is None:
-                return None
-        field, terms, conjunctive, combine, min_match = bag
-        df = batch_fused_topk(self, [("q", field, terms)], k=limit,
-                              conjunctive=conjunctive, combine=combine,
-                              min_match=min_match, exclude=exclude,
-                              require=require)
-        if df is None:
-            return None
-        return df.orderBy(F.asc("rank")).select("doc_id", "score")
-
-    def _fused_bag(self, q: Q.Query):
-        """(field, terms, conjunctive, combine, min_match) when ``q`` is a
-        flat term bag the kernel reproduces bit-exactly; None otherwise."""
-        if isinstance(q, Q.Term):
-            if q.boost != 1.0:
-                return None
-            return q.field, [q.text], False, "sum", 0
-        if type(q) is Q.Or and q.scale is None:
-            subs = q.subqueries
-            if (not subs or q.boost != 1.0
-                    or not all(type(c) is Q.Term and c.boost == 1.0 for c in subs)
-                    or len({c.field for c in subs}) != 1):
-                return None
-            return (subs[0].field, [c.text for c in subs], False, "sum",
-                    int(q.minmatch or 0))
-        if type(q) is Q.DisjunctionMax:
-            subs = q.subqueries
-            if (not subs or q.boost != 1.0
-                    or not all(type(c) is Q.Term and c.boost == 1.0 for c in subs)
-                    or len({c.field for c in subs}) != 1):
-                return None
-            return subs[0].field, [c.text for c in subs], False, "max", 0
-        if type(q) is Q.And and len(q.subqueries) >= 2:
-            subs = q.subqueries
-            if (q.boost != 1.0
-                    or not all(type(c) is Q.Term and c.boost == 1.0 for c in subs)
-                    or len({c.field for c in subs}) != 1
-                    or len({c.text for c in subs}) != len(subs)):
-                return None
-            field = subs[0].field
-            # huffman pop order IS a left fold over (df desc, seq): the
-            # first merge takes the two most-negative weights and the
-            # merged weight (their sum) is strictly more negative than
-            # any single remaining item, so the accumulator stays at the
-            # front and every later merge appends the next-largest term —
-            # ((s_a + s_b) + s_c) + ... in df-descending order. (A zero-df
-            # term would tie at weight 0.0, but then the conjunction is
-            # empty under any order.)
-            stats = {}
-            for t, row in self.index.term_stats(field, [c.text for c in subs]).items():
-                stats[(field, t)] = row
-            sv = _Stats(stats, self.index.doc_count_all())
-            ests = [(0 - c.estimate_size(sv), i, c.text)
-                    for i, c in enumerate(subs)]
-            ests.sort()
-            return field, [t for _, _, t in ests], True, "sum", 0
-        return None
-
-    @staticmethod
-    def _fused_docset(q: Q.Query):
-        """Membership (field, term) pairs whose doc-id UNION is q's
-        matched set — Term or a plain Or of Terms (boosts are irrelevant
-        to membership); None for shapes needing more than a union."""
-        if isinstance(q, Q.Term):
-            return [(q.field, q.text)]
-        if (type(q) is Q.Or and q.minmatch == 0 and q.scale is None
-                and q.subqueries
-                and all(type(c) is Q.Term for c in q.subqueries)):
-            return [(c.field, c.text) for c in q.subqueries]
-        return None
 
     def search_results(self, q: Q.Query, limit: int | None = 10,
                        terms: bool = False, sortedby=None,
@@ -1193,25 +1077,19 @@ class _PlanContext:
         w = self.s.weighting
         dc = self.ix.doc_count_all()
         meta_rows = []
-        for field, term in sorted(set(terms)):
+        for (field, term), c in term_constants(
+                self.s, self.stats, sorted(set(terms))).items():
             st = self.stats.get((field, term))
-            df_count = int(st["df"]) if st else 0
-            ftype = self.s.schema[field] if field in self.s.schema else None
-            scorable = bool(ftype and ftype.scorable)
-            fboost = float(ftype.field_boost) if ftype else 1.0
-            # MultiWeighting: the FIELD's model supplies idf and B
-            fm = w.for_field(field) if isinstance(w, MultiWeighting) else w
-            B = fm.field_B(field) if hasattr(fm, "field_B") else 0.0
             meta_rows.append(
                 {
                     "field": field,
                     "term": term,
-                    "idf": fm.idf(dc, df_count) if df_count else 0.0,
-                    "avgfl": self.ix.avg_field_length(field) or 1.0,
-                    "b": B,
-                    "one_minus_b": 1 - B,
-                    "fboost": fboost,
-                    "scorable": scorable,
+                    "idf": c["idf"],
+                    "avgfl": c["avgfl"],
+                    "b": c["B"],
+                    "one_minus_b": 1 - c["B"],
+                    "fboost": c["fboost"],
+                    "scorable": c["scorable"],
                     # DFR-model statistics (cf: collection term frequency,
                     # fl_total: total field length, dc: doc_count_all)
                     "cf": float(st["total_tf"]) if st else 0.0,

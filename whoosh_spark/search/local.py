@@ -1,30 +1,37 @@
-"""Adaptive driver-local top-k for SMALL candidate sets.
+"""The exact numpy evaluator and its two placements.
 
-Spark's per-job overhead (~0.3-0.8s: scheduling, Python-worker hops, a
-shuffle for top-k) dominates interactive single-query latency when the
-query's posting lists are tiny. Like an AQE-style adaptive choice, the
-Searcher routes a query driver-side when EVERY term's df (known job-free
-from the prefetched stats / manifest) keeps the total postings under
-``local_threshold``; otherwise the distributed DataFrame plan runs.
+``LocalEvaluator`` evaluates a query tree over (sorted doc_id array, score
+array) match sets with the exact float-op order of the DataFrame engine
+(score formula = scoring.score_np, bit-equal to score_py; And in huffman
+order; Or and DisjunctionMax folded in child order over aligned columns),
+so every placement returns results IDENTICAL to the generic plan —
+asserted across random query trees by tests/test_local_fastpath.py and
+tests/test_fused_kernel.py. It reads a posting source, the
+``postings``/``positions`` dicts both placements fill through
+``codec.decode_term_blocks``, and per-term constants from
+``scoring.term_constants``.
 
-The local evaluator reads ONLY the query terms' posting blocks straight
-from the segment Parquet files with pyarrow (row-group pruning on the
-term-sorted files still applies — zero Spark jobs), decodes them with the
-same numpy codec, and evaluates the query tree with the exact float-op
-order of the DataFrame engine (score formula = scoring.score_np, bit-equal
-to score_py; And in huffman order; Or left-fold in child order) so results
-are IDENTICAL — asserted by tests/test_local_fastpath.py across random
-query trees.
+Driver placement (``try_local_search``): Spark's per-job overhead
+(~0.3-0.8s: scheduling, Python-worker hops, a shuffle for top-k) dominates
+interactive latency when a query's posting lists are tiny. Like an
+AQE-style adaptive choice, the Searcher evaluates driver-side when EVERY
+term's df (job-free from the prefetched stats) keeps the total postings
+under ``local_threshold``: pyarrow reads ONLY the query terms' blocks from
+the segment Parquet files (row-group pruning on the term-sorted files
+still applies — zero Spark jobs). Measured ~8x faster than the dict
+evaluator it replaced (r6), which moves the local-vs-distributed
+crossover into the millions of postings (see LOCAL_THRESHOLD).
 
-Everything here is numpy-vectorized: match sets are (sorted unique doc_id
-array, score array) pairs; per-doc combining uses intersect1d/isin indexed
-arithmetic, which performs the same per-element IEEE ops as the old dict
-fold did. Measured ~8x faster than the dict evaluator (r6), which moves
-the local-vs-distributed crossover into the millions of postings — the
-default threshold is sized from that measurement (see LOCAL_THRESHOLD).
-
-At 100 TB this path simply never triggers for hot terms (df exceeds the
-threshold) — the distributed plan remains the scale path.
+Bucket placement (``bucket_topk``): all of a doc's postings share the
+build-time ``bucket`` (doc_id // bucket_width), so repartitioning the
+ENCODED blocks by bucket makes each partition doc-complete. One
+``mapInPandas`` decodes each partition's blocks, runs the evaluator for
+every query of the batch and emits a local top-k; a small window merges
+the partitions, exact by the top-k merge property (doc_id breaks score
+ties). Only ``queries x k`` rows per partition reach a shuffle — this is
+the scale path for hot terms past the threshold. ``Searcher.search`` sends
+it the single-query shapes ``kernel_shape`` names; ``batch_search`` sends
+it every tree ``bucket_tree`` accepts, in one call.
 """
 
 from __future__ import annotations
@@ -36,6 +43,7 @@ import numpy as np
 from whoosh_spark.index import codec
 from whoosh_spark.index.quantize import BYTE_TO_LENGTH
 from whoosh_spark.query import nodes as Q
+from whoosh_spark.search.scoring import term_constants
 
 #: Max total postings for the driver-local path. Crossover measurement
 #: (BENCH/LOCAL_CROSSOVER.json, r6): the vectorized evaluator answers a
@@ -66,7 +74,7 @@ _SUPPORTED = (Q.Term, Q.And, Q.Or, Q.DisjunctionMax, Q.Not, Q.AndNot,
 
 
 def _supported(q) -> bool:
-    if isinstance(q, Q.Or) and (q.minmatch or q.scale is not None):
+    if isinstance(q, Q.Or) and q.scale is not None:
         return False
     if isinstance(q, Q.Phrase) and type(q) is not Q.Phrase:
         return _supported_children(q)  # Ordered subclass ok (same chain)
@@ -95,154 +103,113 @@ def _first_parquet_file(path: str) -> str:
     return path
 
 
-class _LocalIndex:
-    """Driver-side posting access for one query's term set.
+#: posting-block columns, in codec.decode_term_blocks argument order
+_BLOCK_COLS = ("count", "ids", "tfs", "len_bytes", "weights", "positions")
 
-    postings[(field, term)] -> (ids, weights, fls): doc-id-sorted arrays.
-    positions[(field, term)] -> (pos_flat, pos_lens): ragged position
-    lists aligned 1:1 with the postings arrays.
-    """
 
-    def __init__(self, ix, plain, positional):
-        import pyarrow.parquet as pq
+def _deleted_ids(ix):
+    """The index's deleted doc ids, sorted (``codec.decode_term_blocks``
+    binary-searches them), or None."""
+    paths = ix._delete_paths()
+    if not paths:
+        return None
+    import pyarrow.parquet as pq
 
-        self.ix = ix
-        self.postings: dict = {}
-        self.positions: dict = {}
-        by_field: dict = {}
-        for f, t in plain | positional:
-            by_field.setdefault(f, set()).add(t)
-        deleted = self._deleted_ids()
-        # accumulate per-(field,term) block buffers across segments, then
-        # batch-decode each term's blocks in one vectorized pass
-        acc: dict = {}
-        for field, terms in by_field.items():
-            need_pos = {t for f, t in positional if f == field}
-            cols = ["term", "count", "ids", "tfs", "len_bytes", "weights",
-                    "positions"]
-            for seg in ix.manifest.segments:
-                path = os.path.join(seg.path(ix.index_dir), "postings.parquet")
-                # pre-weight-channel segments lack the weights column
-                avail = set(pq.read_schema(_first_parquet_file(path)).names)
-                tbl = pq.read_table(
-                    path, columns=[c for c in cols if c in avail],
-                    filters=[("field", "==", field), ("term", "in", list(terms))],
-                )
-                nrows = tbl.num_rows
-                if not nrows:
-                    continue
-                terms_l = tbl["term"].to_pylist()
-                counts = tbl["count"].to_numpy()
-                ids_l = tbl["ids"].to_pylist()
-                tfs_l = tbl["tfs"].to_pylist()
-                lbs_l = tbl["len_bytes"].to_pylist()
-                ws_l = (tbl["weights"].to_pylist() if "weights" in avail
-                        else [None] * nrows)
-                pos_l = (tbl["positions"].to_pylist()
-                         if "positions" in tbl.column_names else [None] * nrows)
-                for i, t in enumerate(terms_l):
-                    a = acc.setdefault((field, t), ([], [], [], [], [], []))
-                    a[0].append(int(counts[i]))
-                    a[1].append(ids_l[i])
-                    a[2].append(tfs_l[i])
-                    a[3].append(lbs_l[i])
-                    a[4].append(ws_l[i])
-                    a[5].append(pos_l[i] if t in need_pos else None)
-        for key, (cnts, ids_b, tfs_b, lbs_b, ws_b, pos_b) in acc.items():
-            counts = np.asarray(cnts, dtype=np.int64)
-            n = int(counts.sum())
-            ids = codec.delta_decode_concat(ids_b, counts)
-            # weights: the scoring weight is the token-boost sum when a
-            # block carries a weights payload, else tf
-            if any(w is not None for w in ws_b):
-                parts = []
-                for w, tf_bin, c in zip(ws_b, tfs_b, counts):
-                    if w is not None:
-                        parts.append(np.frombuffer(w, dtype=np.float64))
-                    else:
-                        parts.append(
-                            codec.varint_decode(tf_bin, int(c)).astype(np.float64))
-                ws = np.concatenate(parts)
-            else:
-                ws = codec.varint_decode_concat(tfs_b, n).astype(np.float64)
-            lbs = np.frombuffer(b"".join(lbs_b), dtype=np.uint8)
-            pos_flat = pos_lens = None
-            if any(p is not None for p in pos_b):
-                pos_flat, pos_lens = codec.decode_position_lists_concat(
-                    pos_b, counts)
-            if deleted is not None and deleted.size:
-                keep = ~np.isin(ids, deleted)
-                if not keep.all():
-                    if pos_flat is not None:
-                        pos_flat = pos_flat[np.repeat(keep, pos_lens)]
-                        pos_lens = pos_lens[keep]
-                    ids, ws, lbs = ids[keep], ws[keep], lbs[keep]
-            if ids.size > 1 and np.any(np.diff(ids) < 0):
-                # multi-segment interleaved doc ranges: restore sorted order
-                order = np.argsort(ids, kind="stable")
-                if pos_flat is not None:
-                    offs = np.concatenate(
-                        ([0], np.cumsum(pos_lens))).astype(np.int64)
-                    pos_flat = np.concatenate(
-                        [pos_flat[offs[j]:offs[j + 1]] for j in order]
-                    ) if pos_flat.size else pos_flat
-                    pos_lens = pos_lens[order]
-                ids, ws, lbs = ids[order], ws[order], lbs[order]
-            fls = BYTE_TO_LENGTH[lbs].astype(np.float64)
-            self.postings[key] = (ids, ws, fls)
-            if pos_flat is not None:
-                self.positions[key] = (pos_flat.astype(np.int64),
-                                       pos_lens.astype(np.int64))
+    return np.unique(np.concatenate(
+        [pq.read_table(p, columns=["doc_id"])["doc_id"].to_numpy() for p in paths]))
 
-    def _deleted_ids(self):
-        paths = self.ix._delete_paths()
-        if not paths:
-            return None
-        import pyarrow.parquet as pq
 
-        ids = [pq.read_table(p, columns=["doc_id"])["doc_id"].to_numpy() for p in paths]
-        return np.concatenate(ids) if ids else None
+def _load_term(postings, positions, key, blocks, want_pos, deleted):
+    """Decode one term's block columns (``_BLOCK_COLS`` order) into the
+    evaluator's posting source."""
+    *cols, pos = blocks
+    ids, ws, lbs, pos = codec.decode_term_blocks(
+        *cols, pos if want_pos else None, deleted=deleted)
+    postings[key] = (ids, ws, BYTE_TO_LENGTH[lbs].astype(np.float64))
+    if pos is not None:
+        positions[key] = pos
+
+
+def _read_postings(ix, plain, positional, deleted):
+    """Driver posting source: pyarrow reads of just the query terms'
+    blocks from every segment, decoded like a bucket partition's."""
+    import pyarrow.parquet as pq
+
+    by_field: dict = {}
+    for f, t in plain | positional:
+        by_field.setdefault(f, set()).add(t)
+    acc: dict = {}
+    for field, terms in by_field.items():
+        want = _BLOCK_COLS if any(f == field for f, _ in positional) \
+            else _BLOCK_COLS[:-1]
+        for seg in ix.manifest.segments:
+            path = os.path.join(seg.path(ix.index_dir), "postings.parquet")
+            # pre-weight-channel segments lack the weights column
+            avail = set(pq.read_schema(_first_parquet_file(path)).names)
+            tbl = pq.read_table(
+                path, columns=["term"] + [c for c in want if c in avail],
+                filters=[("field", "==", field), ("term", "in", list(terms))],
+            )
+            n = tbl.num_rows
+            cols = [tbl[c].to_pylist() if c in tbl.column_names else [None] * n
+                    for c in _BLOCK_COLS]
+            for i, t in enumerate(tbl["term"].to_pylist()):
+                a = acc.setdefault((field, t), tuple([] for _ in _BLOCK_COLS))
+                for col, out in zip(cols, a):
+                    out.append(col[i])
+    postings: dict = {}
+    positions: dict = {}
+    for key, blocks in acc.items():
+        _load_term(postings, positions, key, blocks, key in positional, deleted)
+    return postings, positions
+
+
+def _docs_universe(ix, deleted) -> np.ndarray:
+    import pyarrow.parquet as pq
+
+    ids = [
+        pq.read_table(os.path.join(seg.path(ix.index_dir), "docs.parquet"),
+                      columns=["doc_id"])["doc_id"].to_numpy()
+        for seg in ix.manifest.segments
+    ]
+    universe = (np.unique(np.concatenate(ids)) if ids
+                else np.empty(0, dtype=np.int64))
+    if deleted is not None:
+        universe = np.setdiff1d(universe, deleted)
+    return universe.astype(np.int64)
 
 
 class LocalEvaluator:
     """Mirror of engine.py's _compile over (sorted doc_id array, score
-    array) match sets — per-doc float ops identical to the dict fold."""
+    array) match sets — per-doc float ops identical to the engine's.
 
-    def __init__(self, searcher, lix: _LocalIndex, stats: dict, stats_view):
-        self.s = searcher
-        self.lix = lix
-        self.stats = stats
+    ``postings[(field, term)]`` -> (ids, weights, field lengths) and
+    ``positions[(field, term)]`` -> (flat positions, per-posting lengths)
+    are doc-id-sorted; ``consts`` holds ``scoring.term_constants`` for the
+    terms with stats. ``universe`` returns every live doc id, for Not; only
+    the driver placement has one."""
+
+    def __init__(self, postings: dict, positions: dict, consts: dict,
+                 stats_view, weighting, universe=None):
+        self.postings = postings
+        self.positions = positions
+        self.consts = consts
         self.stats_view = stats_view
+        self.w = weighting
+        self._universe = universe
         self._all_docs = None
 
     # ---- scored leaf ----
 
     def term_scores(self, field: str, term: str, boost: float = 1.0):
-        st = self.stats.get((field, term))
-        if st is None:
-            return _EMPTY_M
-        entry = self.lix.postings.get((field, term))
-        if entry is None:
+        c = self.consts.get((field, term))
+        entry = self.postings.get((field, term))
+        if c is None or entry is None:
             return _EMPTY_M
         ids, ws, fls = entry
-        w = self.s.weighting
-        dc = self.s.index.doc_count_all()
-        ftype = self.s.schema[field] if field in self.s.schema else None
-        scorable = bool(ftype and ftype.scorable)
-        fboost = float(ftype.field_boost) if ftype else 1.0
-        idf = w.idf(dc, int(st["df"]))
-        avgfl = self.s.index.avg_field_length(field) or 1.0
-        B = w.field_B(field) if hasattr(w, "field_B") else 0.0
-        if scorable and hasattr(w, "score_np"):
-            sc = w.score_np(idf, ws * fboost, fls, avgfl, B)
-        elif scorable and hasattr(w, "score_py"):
-            wb = ws * fboost
-            sc = np.array(
-                [w.score_py(idf, wi, fl, avgfl, B) for wi, fl in zip(wb, fls)],
-                dtype=np.float64,
-            )
-        else:
-            sc = ws * fboost
+        wb = ws * c["fboost"]
+        sc = (self.w.score_np(c["idf"], wb, fls, c["avgfl"], c["B"])
+              if c["scorable"] else wb)
         if boost != 1.0:
             sc = sc * boost
         return ids, sc
@@ -255,24 +222,10 @@ class LocalEvaluator:
             return self._complement(m)
         return m
 
-    def _docs_universe(self) -> np.ndarray:
-        if self._all_docs is None:
-            import pyarrow.parquet as pq
-
-            ids = []
-            for seg in self.s.index.manifest.segments:
-                p = os.path.join(seg.path(self.s.index.index_dir), "docs.parquet")
-                ids.append(pq.read_table(p, columns=["doc_id"])["doc_id"].to_numpy())
-            universe = (np.unique(np.concatenate(ids)) if ids
-                        else np.empty(0, dtype=np.int64))
-            deleted = self.lix._deleted_ids()
-            if deleted is not None:
-                universe = np.setdiff1d(universe, deleted, assume_unique=False)
-            self._all_docs = universe.astype(np.int64)
-        return self._all_docs
-
     def _complement(self, m):
-        ids = np.setdiff1d(self._docs_universe(), m[0], assume_unique=True)
+        if self._all_docs is None:
+            self._all_docs = self._universe()
+        ids = np.setdiff1d(self._all_docs, m[0], assume_unique=True)
         return ids, np.ones(ids.size, dtype=np.float64)
 
     def _eval(self, q):
@@ -294,16 +247,14 @@ class LocalEvaluator:
         if isinstance(q, Q.And):
             return self._eval_and(q), False
         if isinstance(q, Q.Or):
-            return self._eval_or(q), False
+            docs, sc, n = self._fold(q.subqueries, np.add)
+            if q.minmatch:
+                keep = n >= q.minmatch
+                docs, sc = docs[keep], sc[keep]
+            return self._boost((docs, sc), q.boost), False
         if isinstance(q, Q.DisjunctionMax):
-            acc = None
-            for c in q.subqueries:
-                ids, sc = self.evaluate(c)
-                if acc is None:
-                    acc = (ids, sc.copy())
-                else:
-                    acc = self._union_combine(acc, (ids, sc), np.maximum)
-            return self._boost(acc or _EMPTY_M, q.boost), False
+            docs, sc, _ = self._fold(q.subqueries, np.maximum)
+            return self._boost((docs, sc), q.boost), False
         if isinstance(q, Q.AndNot):
             a = self.evaluate(q.a)
             b = self.evaluate(q.b)
@@ -372,43 +323,29 @@ class LocalEvaluator:
                                         return_indices=True)
         return (common, ma[1][ia] + mb[1][ib]), False
 
-    @staticmethod
-    def _union_combine(acc, m, combine):
-        """acc (owned) U m, combining scores of common docs with
-        ``combine(acc_score, m_score)`` — acc + child order, like the dict
-        fold. Both sides sorted unique; result sorted unique."""
-        acc_ids, acc_sc = acc
-        m_ids, m_sc = m
-        if not m_ids.size:
-            return acc
-        if not acc_ids.size:
-            return m_ids, m_sc.copy()
-        _, ia, ib = np.intersect1d(acc_ids, m_ids, assume_unique=True,
-                                   return_indices=True)
-        acc_sc[ia] = combine(acc_sc[ia], m_sc[ib])
-        mask = np.ones(m_ids.size, dtype=bool)
-        mask[ib] = False
-        if mask.any():
-            acc_ids = np.concatenate([acc_ids, m_ids[mask]])
-            acc_sc = np.concatenate([acc_sc, m_sc[mask]])
-            order = np.argsort(acc_ids, kind="stable")
-            acc_ids, acc_sc = acc_ids[order], acc_sc[order]
-        return acc_ids, acc_sc
-
-    def _eval_or(self, q):
-        acc = None
-        for c in q.subqueries:
-            ids, sc = self.evaluate(c)
-            if acc is None:
-                acc = (ids, sc.copy())
-            else:
-                acc = self._union_combine(acc, (ids, sc), np.add)
-        return self._boost(acc or _EMPTY_M, q.boost)
+    def _fold(self, subqueries, combine):
+        """Aligned-column fold in child order: each child's scores land on
+        the union doc set through one searchsorted ``combine`` (add or
+        max), the per-doc op sequence of the engine's outer-join left fold
+        (an absent child is the join's 0.0 / -inf coalesce, which leaves
+        the sum unchanged). NOTE add.reduceat was tried and replaced:
+        numpy reduces pairwise, which re-associates the sum by 1 ulp.
+        Returns (docs, scores, per-doc count of matching children)."""
+        ms = [self.evaluate(c) for c in subqueries]
+        docs = np.unique(np.concatenate([m[0] for m in ms] or [_EMPTY_M[0]]))
+        acc = (np.full(docs.size, -np.inf) if combine is np.maximum
+               else np.zeros(docs.size, dtype=np.float64))
+        n = np.zeros(docs.size, dtype=np.int64)
+        for ids, sc in ms:
+            idx = np.searchsorted(docs, ids)
+            acc[idx] = combine(acc[idx], sc)
+            n[idx] += 1
+        return docs, acc, n
 
     def _positions_of(self, field: str, word: str):
         """(ids, pos_flat, pos_offsets) for one positional term, or None."""
-        entry = self.lix.postings.get((field, word))
-        pos = self.lix.positions.get((field, word))
+        entry = self.postings.get((field, word))
+        pos = self.positions.get((field, word))
         if entry is None or pos is None:
             return None
         ids = entry[0]
@@ -435,7 +372,7 @@ class LocalEvaluator:
         from whoosh_spark.search.engine import _span_near_chain
 
         for w in q.words:
-            if (q.field, w) not in self.stats:
+            if (q.field, w) not in self.consts:
                 return _EMPTY_M
         per_word = [self._positions_of(q.field, w) for w in q.words]
         if any(p is None for p in per_word):
@@ -538,19 +475,41 @@ def _contains_multiterm(q) -> bool:
     return any(_contains_multiterm(c) for c in q.children())
 
 
-def try_local_search(searcher, q, limit: int):
-    """None when the query isn't eligible; else the top-k rows
-    [(doc_id, score)] computed entirely driver-side (no Spark jobs once
-    the field stats are prefetched)."""
-    if isinstance(q, Q.MultiTerm) or _contains_multiterm(q):
+def _resolve(searcher, q):
+    """``q`` with multiterms expanded against the driver-cached lexicon,
+    or None when a lexicon is not cached or a node is outside the
+    evaluator."""
+    if _contains_multiterm(q):
         try:
             q = _resolve_multiterms_local(q, searcher)
         except _NotLocal:
             return None
-    if not _supported(q):
+    return q if _supported(q) else None
+
+
+def _term_stats(ix, pairs) -> dict:
+    stats = {}
+    for field in {f for f, _ in pairs}:
+        terms = [t for f, t in pairs if f == field]
+        for t, row in ix.term_stats(field, terms).items():
+            stats[(field, t)] = row
+    return stats
+
+
+def try_local_search(searcher, q, limit: int):
+    """Driver placement: None when the query isn't eligible or a posting
+    read fails; else the top-k rows [(doc_id, score)] computed entirely
+    driver-side (no Spark jobs once the field stats are prefetched)."""
+    import pyarrow as pa
+
+    from whoosh_spark.search.engine import _Stats
+
+    q = _resolve(searcher, q)
+    if q is None:
         return None
     ix = searcher.index
-    if _has_not(q) and ix.doc_count_all() > getattr(searcher, "local_threshold", LOCAL_THRESHOLD):
+    threshold = getattr(searcher, "local_threshold", LOCAL_THRESHOLD)
+    if _has_not(q) and ix.doc_count_all() > threshold:
         return None  # complements need the doc universe — distributed territory
     plain: set = set()
     positional: set = set()
@@ -558,12 +517,7 @@ def try_local_search(searcher, q, limit: int):
     if not plain:
         return None
     # stats (prefetched fields answer without a job)
-    stats = {}
-    for field in {f for f, _ in plain}:
-        terms = [t for f, t in plain if f == field]
-        for t, row in ix.term_stats(field, terms).items():
-            stats[(field, t)] = row
-    threshold = getattr(searcher, "local_threshold", LOCAL_THRESHOLD)
+    stats = _term_stats(ix, plain)
     total_postings = sum(int(st["df"]) for st in stats.values() if st)
     if total_postings > threshold:
         return None
@@ -579,15 +533,170 @@ def try_local_search(searcher, q, limit: int):
     )
     if pos_occ > 5 * threshold:
         return None
-    from whoosh_spark.search.engine import _Stats
-
-    lix = _LocalIndex(ix, plain, positional)
-    ev = LocalEvaluator(searcher, lix, stats, _Stats(stats, ix.doc_count_all()))
     try:
+        deleted = _deleted_ids(ix)
+        postings, positions = _read_postings(ix, plain, positional, deleted)
+        ev = LocalEvaluator(postings, positions,
+                            term_constants(searcher, stats, stats),
+                            _Stats(stats, ix.doc_count_all()), searcher.weighting,
+                            universe=lambda: _docs_universe(ix, deleted))
         ids, sc = ev.evaluate(q)
-    except TypeError:
+    except (OSError, pa.ArrowException, TypeError):
+        # unreadable segment files: the distributed plan answers instead
         return None
     order = np.lexsort((ids, -sc))
     if limit is not None:
         order = order[:limit]
     return [(int(ids[i]), float(sc[i])) for i in order]
+
+
+def _flat_bag(q) -> bool:
+    """Term, or Or/DisjunctionMax/And of Terms on one field, all
+    unboosted (Or without scale; And without a repeated term)."""
+    if type(q) is Q.Term:
+        return q.boost == 1.0
+    subs = q.subqueries if isinstance(q, Q.CompoundQuery) else None
+    if (not subs or q.boost != 1.0
+            or type(q) not in (Q.Or, Q.DisjunctionMax, Q.And)
+            or not all(type(c) is Q.Term and c.boost == 1.0 for c in subs)
+            or len({c.field for c in subs}) != 1):
+        return False
+    if type(q) is Q.Or:
+        return q.scale is None
+    return type(q) is not Q.And or len({c.text for c in subs}) == len(subs)
+
+
+def kernel_shape(q) -> bool:
+    """The single-query shapes ``Searcher.search`` sends to the bucket
+    placement past the local threshold: flat term bags (``_flat_bag``),
+    an unboosted slop-1 Phrase, and AndNot/Require of a flat bag by a
+    flat Term or Or bag without minmatch. These are the shapes the
+    hot-term latency measurements covered; every other tree keeps the
+    generic plan."""
+    if type(q) is Q.Phrase:
+        return q.slop == 1 and q.boost == 1.0 and bool(q.words)
+    if type(q) in (Q.AndNot, Q.Require):
+        b = q.b
+        return (q.boost == 1.0 and _flat_bag(q.a) and _flat_bag(b)
+                and (type(b) is Q.Term or (type(b) is Q.Or and not b.minmatch)))
+    return _flat_bag(q)
+
+
+def _sloppy_phrase(q) -> bool:
+    if isinstance(q, Q.Phrase) and q.slop != 1 and len(q.words) > 1:
+        return True
+    return any(_sloppy_phrase(c) for c in q.children())
+
+
+def bucket_tree(searcher, q):
+    """``q`` with multiterms resolved when the bucket placement can answer
+    it, else None: a weighting other than plain BM25F (score_np is
+    bit-equal to that JVM expression only), a tree with Not (a complement
+    needs each bucket's doc universe), Or(scale=) or a multi-word Phrase
+    with slop other than 1 (its per-candidate Python span check has no
+    cost cap here), or an uncached multiterm lexicon."""
+    from whoosh_spark.search.scoring import BM25F
+
+    if type(searcher.weighting) is not BM25F:
+        return None
+    q = _resolve(searcher, q)
+    if q is None or _has_not(q) or _sloppy_phrase(q):
+        return None
+    return q
+
+
+def bucket_topk(searcher, queries, k: int):
+    """Bucket placement: top-``k`` per query for ``queries`` =
+    [(query_id, tree)], the evaluator run once per doc-complete bucket
+    partition inside one ``mapInPandas``. Returns DataFrame(query_id,
+    doc_id, score, rank), or None when ``bucket_tree`` declines any tree.
+    Deleted doc ids ship in the kernel closure and are dropped during
+    decode.
+
+    Parallelism below one task per core is recovered by replicating the
+    block stream over G query groups: each query belongs to exactly one
+    group, so per-(query, doc) work is never duplicated — only the cheap
+    block decode, bounded by G."""
+    import zlib
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from whoosh_spark.index.build import DEFAULT_BUCKET_WIDTH
+    from whoosh_spark.search.batch import _topk_window
+    from whoosh_spark.search.engine import _Stats
+
+    trees = []
+    plain: set = set()
+    positional: set = set()
+    for qid, q in queries:
+        q = bucket_tree(searcher, q)
+        if q is None:
+            return None
+        _collect_terms(q, plain, positional)
+        trees.append((qid, q))
+    ix = searcher.index
+    if not plain:
+        return ix.spark.createDataFrame(
+            [], "query_id string, doc_id long, score double, rank int")
+    w = searcher.weighting
+    stats = _term_stats(ix, plain)
+    consts = term_constants(searcher, stats, stats)
+    stats_view = _Stats(stats, ix.doc_count_all())
+    deleted = _deleted_ids(ix)
+
+    nparts = max(1, ix.spark.sparkContext.defaultParallelism)
+    segs = ix.manifest.segments
+    span = (max((s.max_doc_id for s in segs), default=0)
+            - min((s.min_doc_id for s in segs), default=0))
+    G = int(max(1, min(len(trees), nparts // (span // DEFAULT_BUCKET_WIDTH + 1))))
+    by_group: list = [[] for _ in range(G)]
+    for qid, q in trees:
+        by_group[zlib.crc32(str(qid).encode()) % G].append((qid, q))
+
+    cols = ["field", "term", "bucket", *_BLOCK_COLS[:-1]]
+    if positional:
+        cols.append("positions")
+    blocks = ix.postings_blocks().filter(
+        F.col("term").isin(sorted({t for _, t in consts}))
+        & F.col("field").isin(sorted({f for f, _ in consts}))
+    ).select(*cols)
+    blocks = blocks.withColumn(
+        "g", F.explode(F.sequence(F.lit(0), F.lit(G - 1))) if G > 1 else F.lit(0))
+    parts = blocks.repartition(nparts, "bucket", "g")
+
+    def kernel(batches):
+        acc: dict = {}  # (g, field, term) -> block columns
+        for pdf in batches:
+            for (g, fld, trm), idx in pdf.groupby(
+                    ["g", "field", "term"], sort=False).indices.items():
+                sub = pdf.iloc[idx]
+                a = acc.setdefault((g, fld, trm), tuple([] for _ in _BLOCK_COLS))
+                for c, out in zip(_BLOCK_COLS, a):
+                    out.extend(sub[c].tolist() if c in sub else [None] * len(sub))
+        out_q: list = []
+        out_d: list = []
+        out_s: list = []
+        for g in {g for g, _, _ in acc}:
+            postings: dict = {}
+            positions: dict = {}
+            for (gg, fld, trm), cols_ in acc.items():
+                if gg == g:
+                    _load_term(postings, positions, (fld, trm), cols_,
+                               (fld, trm) in positional, deleted)
+            ev = LocalEvaluator(postings, positions, consts, stats_view, w)
+            for qid, q in by_group[g]:
+                ids, sc = ev.evaluate(q)
+                top = np.lexsort((ids, -sc))[:k]
+                out_q.extend([qid] * top.size)
+                out_d.append(ids[top])
+                out_s.append(sc[top])
+        if out_q:
+            yield pd.DataFrame({
+                "query_id": out_q,
+                "doc_id": np.concatenate(out_d),
+                "score": np.concatenate(out_s),
+            }, copy=False)
+
+    cand = parts.mapInPandas(kernel, "query_id string, doc_id long, score double")
+    return _topk_window(cand, k)

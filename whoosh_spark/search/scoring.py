@@ -265,3 +265,29 @@ class FunctionWeighting(WeightingModel):
 
     def max_quality(self, idf, max_w, min_fl, avgfl, B, K1=None):
         return float("inf")  # unknown function: WAND pruning not offered
+
+
+def term_constants(searcher, stats: dict, terms) -> dict:
+    """(field, term) -> the per-term constants every scoring route feeds
+    its score formula: ``idf``, ``avgfl``, ``B``, ``fboost`` and
+    ``scorable``. Computed once on the driver for the JVM score
+    expression's broadcast meta rows, WAND's block bounds and the numpy
+    evaluator alike, so every route scores a posting from the same
+    Python floats. Under MultiWeighting the field's model supplies idf
+    and B; a term without stats gets idf 0.0."""
+    w = searcher.weighting
+    dc = searcher.index.doc_count_all()
+    out = {}
+    for field, term in terms:
+        st = stats.get((field, term))
+        df = int(st["df"]) if st else 0
+        fm = w.for_field(field) if isinstance(w, MultiWeighting) else w
+        ftype = searcher.schema[field] if field in searcher.schema else None
+        out[(field, term)] = {
+            "idf": fm.idf(dc, df) if df else 0.0,
+            "avgfl": searcher.index.avg_field_length(field) or 1.0,
+            "B": fm.field_B(field) if hasattr(fm, "field_B") else 0.0,
+            "fboost": float(ftype.field_boost) if ftype else 1.0,
+            "scorable": bool(ftype and ftype.scorable),
+        }
+    return out

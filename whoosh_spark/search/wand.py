@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from whoosh_spark.search.scoring import BM25F, byte_to_length_col
+from whoosh_spark.search.scoring import byte_to_length_col, term_constants
 
 EPS = 1e-12
 
@@ -40,26 +40,17 @@ EPS = 1e-12
 from whoosh_spark.index.catalog import BOUND_CHUNK  # noqa: E402,F401
 
 
-def _term_constants(searcher, stats, field: str, term: str) -> dict | None:
-    st = stats.get((field, term))
-    if not st:
-        return None
-    w = searcher.weighting
-    dc = searcher.index.doc_count_all()
-    ftype = searcher.schema[field]
-    fboost = float(ftype.field_boost)
-    idf = w.idf(dc, int(st["df"]))
-    avgfl = searcher.index.avg_field_length(field) or 1.0
-    B = w.field_B(field) if isinstance(w, BM25F) else 0.0
-    return {
-        "idf": idf,
-        "avgfl": avgfl,
-        "B": B,
-        "fboost": fboost,
-        "scorable": bool(ftype.scorable),
-        "max_tf": float(st["max_tf"]),
-        "min_len_byte": int(st["min_len_byte"]),
-    }
+def _wand_consts(searcher, stats, terms) -> dict:
+    """(field, term) -> the shared scoring constants plus the query
+    ``boost`` and the term's bound inputs (max_tf, min_len_byte), for the
+    [(field, term, boost)] query terms that have stats."""
+    live = [(f, t, b) for f, t, b in terms if stats.get((f, t))]
+    consts = term_constants(searcher, stats, [(f, t) for f, t, _ in live])
+    for f, t, b in live:
+        st = stats[(f, t)]
+        consts[(f, t)].update(boost=b, max_tf=float(st["max_tf"]),
+                              min_len_byte=int(st["min_len_byte"]))
+    return consts
 
 
 def _max_quality(searcher, c: dict) -> float:
@@ -81,12 +72,7 @@ def wand_topk(plan, terms: list[tuple[str, str, float]], k: int) -> tuple[DataFr
     """
     s = plan.s
     ix = plan.ix
-    consts = {}
-    for field, term, boost in terms:
-        c = _term_constants(s, plan.stats, field, term)
-        if c is not None:
-            c["boost"] = boost
-            consts[(field, term)] = c
+    consts = _wand_consts(s, plan.stats, terms)
     if not consts:
         return plan._empty(), {"blocks_total": 0, "blocks_kept": 0, "theta": 0.0}
 
@@ -203,12 +189,7 @@ def wand_block_counts(plan, terms: list[tuple[str, str, float]], k: int) -> dict
     """Diagnostic: how many blocks the pruned plan reads vs the full scan."""
     s = plan.s
     ix = plan.ix
-    consts = {}
-    for field, term, boost in terms:
-        c = _term_constants(s, plan.stats, field, term)
-        if c is not None:
-            c["boost"] = boost
-            consts[(field, term)] = c
+    consts = _wand_consts(s, plan.stats, terms)
     if not consts:
         return {"blocks_total": 0, "blocks_kept": 0}
     mq = {ft: _max_quality(s, c) * c["boost"] for ft, c in consts.items()}
