@@ -5,11 +5,19 @@ report are reproducible).
   python bench_extra.py              # all sections at sf1.0
   python bench_extra.py --sf10      # also build the 10x replica corpus
                                      # and repeat the batch section there
+  python bench_extra.py --sf-dir=DIR
+                                     # only the batch section, on the
+                                     # corpus DIR/documents.parquet
+                                     # (e.g. the sf0.1 testdata)
 
 Sections:
   batch_ab     exact evaluator in each bucket partition (local.bucket_topk)
                vs DataFrame plan, disjunctive AND conjunctive 200-query
-               batches (identical-results assert + best-of-2 wall times)
+               batches, and (--sf10 / --sf-dir runs) vs the phrase and
+               prefix batch kernels on a 100-query slop-1 phrase batch
+               and a prefix batch, which batch_search sends to
+               bucket_topk (identical-results assert + best-of-2 wall
+               times)
   local_dist   per-query driver-local vs distributed latency for the
                bench headline shapes (the crossover evidence backing
                BENCH/LOCAL_CROSSOVER.json)
@@ -30,7 +38,18 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 REPO = os.path.dirname(os.path.abspath(__file__))
 
 
-def _bench_batch(spark, idx_dir: str, tag: str, out: dict):
+def best2(fn):
+    """Best-of-2 wall seconds of ``fn()``."""
+    best = None
+    for _ in range(2):
+        t0 = time.time()
+        fn()
+        dt = time.time() - t0
+        best = dt if best is None or dt < best else best
+    return round(best, 2)
+
+
+def _bench_batch(spark, idx_dir: str, tag: str, out: dict, docs_pq=None):
     from pyspark.sql import functions as F
 
     import whoosh_spark.query as Q
@@ -49,15 +68,6 @@ def _bench_batch(spark, idx_dir: str, tag: str, out: dict):
     rng = random.Random(1234)
     batch = [(f"b{i}", "text", rng.sample(top_terms, min(2, len(top_terms))))
              for i in range(200)]
-
-    def best2(fn):
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            fn()
-            dt = time.time() - t0
-            best = dt if best is None or dt < best else best
-        return round(best, 2)
 
     def rows(df):
         return sorted((r["query_id"], r["rank"], r["doc_id"],
@@ -89,7 +99,59 @@ def _bench_batch(spark, idx_dir: str, tag: str, out: dict):
         bucket_sec = best2(lambda: L.bucket_topk(s, trees, 10).collect())
         rec[name] = {"bucket_sec": bucket_sec, "dataframe_sec": df_sec,
                      "identical_results": True}
+    if docs_pq is not None:  # phrases are drawn from the corpus text
+        texts = [r["text"] for r in
+                 spark.read.parquet(docs_pq).select("text").limit(500).collect()]
+        rec.update(_bench_phrase_prefix(spark, s, top_terms, texts))
     out[f"batch_ab_{tag}"] = rec
+
+
+def _bench_phrase_prefix(spark, s, top_terms, texts) -> dict:
+    """bucket_topk against batch_phrase_search / batch_prefix_search:
+    slop-1 phrases are adjacent word pairs of ``texts``, prefixes
+    the distinct 2- and 3-letter stems of the top terms. Rows must be
+    equal, scores bit for bit."""
+    import whoosh_spark.query as Q
+    import whoosh_spark.search.batch as B
+    from whoosh_spark.search import local as L
+
+    rng = random.Random(4321)
+    lex = set(top_terms)
+    pairs: set = set()
+    for text in texts:
+        words = text.lower().split()
+        pairs.update((a, b) for a, b in zip(words, words[1:])
+                     if a != b and a in lex and b in lex)
+    phrases = rng.sample(sorted(pairs), min(100, len(pairs)))
+    stems = sorted({t[:n] for t in top_terms for n in (2, 3) if len(t) > n})
+    stems = rng.sample(stems, min(100, len(stems)))
+
+    def rows(df):
+        return sorted((r["query_id"], r["rank"], r["doc_id"], r["score"])
+                      for r in df.collect())
+
+    shapes = {
+        "phrase": ([(f"p{i}", "text", list(ws)) for i, ws in enumerate(phrases)],
+                   lambda qs: Q.Phrase("text", qs[2]),
+                   lambda qs: B.batch_phrase_search(s, qs, k=10)),
+        "prefix": ([(f"x{i}", "text", st) for i, st in enumerate(stems)],
+                   lambda qs: Q.Prefix("text", qs[2]),
+                   lambda qs: B.batch_prefix_search(s, qs, k=10)),
+    }
+    rec: dict = {}
+    for name, (queries, tree, kernel) in shapes.items():
+        trees = [(q[0], tree(q)) for q in queries]
+        spark.sparkContext.setJobDescription(f"{name} bucket placement")
+        bucket_rows = rows(L.bucket_topk(s, trees, 10))
+        spark.sparkContext.setJobDescription(f"{name} batch kernel")
+        assert bucket_rows == rows(kernel(queries)), f"{name}: bucket/kernel mismatch"
+        rec[name] = {
+            "queries": len(trees),
+            "bucket_sec": best2(lambda: L.bucket_topk(s, trees, 10).collect()),
+            "kernel_sec": best2(lambda: kernel(queries).collect()),
+            "identical_results": True,
+        }
+    return rec
 
 
 def _bench_local_dist(spark, idx_dir: str, out: dict):
@@ -126,6 +188,20 @@ def _bench_local_dist(spark, idx_dir: str, out: dict):
     out["local_vs_distributed_sf1.0"] = rec
 
 
+def _bench_index(spark, docs_pq: str, name: str) -> str:
+    """The index of ``docs_pq`` under .index_cache/<name>, built once."""
+    idx = os.path.join(REPO, ".index_cache", name)
+    if not os.path.exists(idx):
+        from whoosh_spark.index import build_index
+        from whoosh_spark.schema import ID, TEXT, IndexSchema
+
+        schema = IndexSchema.of(lang=ID(stored=True), source=ID(stored=True),
+                                text=TEXT())
+        build_index(spark, spark.read.parquet(docs_pq), schema, idx,
+                    sha_col="text")
+    return idx
+
+
 def main():
     from whoosh_spark.session import get_spark
 
@@ -134,6 +210,17 @@ def main():
                       shuffle_partitions=max(cpus, 8))
     spark.sparkContext.setLogLevel("ERROR")
     out: dict = {"cpus": cpus}
+
+    sf_dir = next((a.split("=", 1)[1] for a in sys.argv
+                   if a.startswith("--sf-dir=")), None)
+    if sf_dir:
+        name = os.path.basename(os.path.normpath(sf_dir))
+        docs_pq = os.path.join(sf_dir, "documents.parquet")
+        _bench_batch(spark, _bench_index(spark, docs_pq, f"bench_{name}"), name,
+                     out, docs_pq)
+        print(json.dumps(out))
+        spark.stop()
+        return
 
     sf1_idx = os.path.join(REPO, ".index_cache", "bench_sf1.0")
     if not os.path.exists(sf1_idx):
@@ -150,9 +237,6 @@ def main():
     if "--sf10" in sys.argv:
         from pyspark.sql import functions as F
 
-        from whoosh_spark.index import build_index
-        from whoosh_spark.schema import ID, TEXT, IndexSchema
-
         sf10_dir = os.path.join(REPO, ".index_cache", "sf10_docs")
         doc_pq = os.path.join(sf10_dir, "documents.parquet")
         if not os.path.exists(doc_pq):
@@ -163,13 +247,8 @@ def main():
                    .select((F.col("doc_id") + F.col("_rep") * n).alias("doc_id"),
                            *[c for c in docs.columns if c != "doc_id"]))
             big.repartition(8).write.mode("overwrite").parquet(doc_pq)
-        idx10 = os.path.join(REPO, ".index_cache", "bench_sf10_docs")
-        if not os.path.exists(idx10):
-            schema = IndexSchema.of(lang=ID(stored=True), source=ID(stored=True),
-                                    text=TEXT())
-            build_index(spark, spark.read.parquet(doc_pq), schema, idx10,
-                        sha_col="text")
-        _bench_batch(spark, idx10, "500k", out)
+        _bench_batch(spark, _bench_index(spark, doc_pq, "bench_sf10_docs"),
+                     "500k", out, doc_pq)
 
     print(json.dumps(out))
     spark.stop()

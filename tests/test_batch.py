@@ -274,17 +274,19 @@ def test_batch_search_routes_mixed_query_log(pix):
                          Q.Term("text", "join")], minmatch=2)),
         ("q_null", Q.NullQuery),
     ]
-    out = batch_search(s, batch, k=25).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["doc_id"], round(r["score"], 9)))
+    by_q = _ranked(batch_search(s, batch, k=25))
     for qid, q in batch:
-        want_df = s.search(q, limit=25)
-        want = [(i + 1, r["doc_id"], round(r["score"], 9))
-                for i, r in enumerate(want_df.collect())]
-        assert sorted(by_q.get(qid, [])) == want, qid
+        want = [(r["doc_id"], r["score"]) for r in s.search(q, limit=25).collect()]
+        assert by_q.get(qid, []) == want, qid
     assert "q_null" not in by_q
+
+
+def _ranked(out) -> dict:
+    """query_id -> exact [(doc_id, score)] in rank order."""
+    by_q: dict = {}
+    for r in sorted(out.collect(), key=lambda r: (r["query_id"], r["rank"])):
+        by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+    return by_q
 
 
 def test_batch_search_parses_strings_and_strict(pix):
@@ -294,15 +296,11 @@ def test_batch_search_parses_strings_and_strict(pix):
     s = Searcher(pix, exact_scores=True, cache_postings=False, use_local=False)
     p = QueryParser("text", pix.schema, group="or")
     batch = [("q1", "scan merge"), ("q2", '"merge join"'), ("q3", "sor*")]
-    out = batch_search(s, batch, k=25, parser=p).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["doc_id"], round(r["score"], 9)))
+    by_q = _ranked(batch_search(s, batch, k=25, parser=p))
     for qid, text in batch:
-        want = [(i + 1, r["doc_id"], round(r["score"], 9))
-                for i, r in enumerate(s.search(p.parse(text), limit=25).collect())]
-        assert sorted(by_q.get(qid, [])) == want, qid
+        want = [(r["doc_id"], r["score"])
+                for r in s.search(p.parse(text), limit=25).collect()]
+        assert by_q.get(qid, []) == want, qid
 
     with pytest.raises(ValueError, match="parser"):
         batch_search(s, [("q1", "scan")])

@@ -238,13 +238,186 @@ def test_batch_search_one_bucket_call(ix, monkeypatch):
     queries.append(("not", Q.And([T("alfa"), Q.Not(T("bravo"))])))
     want = {qid: _top(s, q, 8) for qid, q in queries}
     answered = _spy(monkeypatch)
-    rows = batch_search(s, queries, k=8).collect()
+    got = _by_query(batch_search(s, queries, k=8).collect())
     assert answered == [True]
-    got: dict = {}
-    for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
-        got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
     for qid, _ in queries:
         assert got.get(qid, []) == want[qid], qid
+
+
+def _by_query(rows) -> dict:
+    out: dict = {}
+    for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
+        out.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+    return out
+
+
+#: batch_search's DataFrame kernels, which serve what bucket_topk declines
+KERNELS = ("batch_term_search", "batch_phrase_search", "batch_prefix_search",
+           "batch_fuzzy_search", "batch_multiterm_search")
+
+
+def _kernel_spy(monkeypatch) -> dict:
+    """Patch the batch kernels to record the query ids of each call."""
+    import whoosh_spark.search.batch as B
+
+    calls: dict = {n: [] for n in KERNELS}
+    for name in KERNELS:
+        def spy(searcher, queries, *a, _name=name, _orig=getattr(B, name), **kw):
+            calls[_name].append(sorted(q[0] for q in queries))
+            return _orig(searcher, queries, *a, **kw)
+
+        monkeypatch.setattr(B, name, spy)
+    return calls
+
+
+MIX_VOCAB = "alfa bravo charlie sort sorted sorting scan scanner merge mergesort join".split()
+
+
+@pytest.fixture(scope="module")
+def mix(spark, tmp_path_factory):
+    """A 200-doc index whose lexicon has shared prefixes: ``sor*`` expands
+    to three terms, ``merge*`` to two, ``join*`` to one. Doc 0 starts with
+    the phrase "sort merge join"."""
+    rng = random.Random(17)
+    docs = [" ".join(rng.choice(MIX_VOCAB) for _ in range(rng.randint(4, 40)))
+            for _ in range(N_DOCS)]
+    docs[0] = "sort merge join " + docs[0]
+    d = str(tmp_path_factory.mktemp("mixix"))
+    build_index(spark, spark.createDataFrame([Row(doc_id=i, text=t)
+                                              for i, t in enumerate(docs)]),
+                IndexSchema.of(text=TEXT()), d, sha_col=None)
+    return Index(spark, d)
+
+
+def M(t):
+    return Q.Term("text", t)
+
+
+#: a mixed query log every tree of which bucket_topk accepts, but for the
+#: Not tree, which runs per query
+MIXED_LOG = {
+    "phrase2": lambda: Q.Phrase("text", ["alfa", "bravo"]),
+    "phrase3": lambda: Q.Phrase("text", ["sort", "merge", "join"]),
+    "phrase_dup": lambda: Q.Phrase("text", ["alfa", "alfa"]),
+    "phrase_missing": lambda: Q.Phrase("text", ["alfa", "zzz"]),
+    "prefix0": lambda: Q.Prefix("text", "zz"),
+    "prefix1": lambda: Q.Prefix("text", "joi"),
+    "prefix2": lambda: Q.Prefix("text", "merge"),
+    "prefix3": lambda: Q.Prefix("text", "sor"),
+    "wildcard": lambda: Q.Wildcard("text", "s*n*"),
+    "fuzzy": lambda: Q.FuzzyTerm("text", "sorte"),
+    "term": lambda: M("scan"),
+    "or2": lambda: Q.Or([M("alfa"), M("join")]),
+    "or3": lambda: Q.Or([M("sorted"), M("scanner"), M("charlie")]),
+    "and2": lambda: Q.And([M("alfa"), M("sort")]),
+    "and3": lambda: Q.And([M("merge"), M("bravo"), M("scan")]),
+    "not": lambda: Q.And([M("alfa"), Q.Not(M("bravo"))]),
+}
+
+#: MIXED_LOG queries that match nothing
+MIXED_EMPTY = {"phrase_missing", "prefix0"}
+
+
+def test_batch_search_mixed_log_one_bucket_call(mix, monkeypatch):
+    """Slop-1 phrases, cached-lexicon prefixes (0, 1, 2 and 3 terms), a
+    Wildcard, a FuzzyTerm and term/And bags all join ONE bucket_topk call;
+    no DataFrame batch kernel runs, and every query equals per-query
+    Searcher.search exactly."""
+    from whoosh_spark.search.batch import batch_search
+
+    s = Searcher(mix, exact_scores=True, cache_postings=False,
+                 use_local=False, local_threshold=0)
+    queries = [(n, f()) for n, f in sorted(MIXED_LOG.items())]
+    want = {qid: _top(s, q, 8) for qid, q in queries}
+    assert all(bool(want[qid]) == (qid not in MIXED_EMPTY) for qid, _ in queries)
+    calls = _kernel_spy(monkeypatch)
+    answered = _spy(monkeypatch)
+    got = _by_query(batch_search(s, queries, k=8).collect())
+    assert answered == [True]
+    assert calls == {n: [] for n in KERNELS}
+    for qid, _ in queries:
+        assert got.get(qid, []) == want[qid], qid
+
+
+def _declined_case(case, spark, mix, monkeypatch):
+    """(searcher, queries, round_to, kernel -> expected calls, query ids
+    of each bucket_topk call that answers) for one shape bucket_topk
+    declines, mixed with trees it accepts where the case allows."""
+    from whoosh_spark.search.scoring import TF_IDF
+
+    opts = dict(exact_scores=True, cache_postings=False, use_local=False,
+                local_threshold=0)
+    phrase = ("phrase", Q.Phrase("text", ["alfa", "bravo"]))
+    if case == "slop2":
+        queries = [("sloppy", Q.Phrase("text", ["sort", "join"], slop=2)), phrase]
+        return (Searcher(mix, **opts), queries, None,
+                {"batch_phrase_search": [["sloppy"]]}, [["phrase"]])
+    if case == "round_to":
+        queries = [(n, MIXED_LOG[n]()) for n in
+                   ("phrase2", "prefix3", "wildcard", "fuzzy", "or2", "and2")]
+        return (Searcher(mix, **opts), queries, 6,
+                {"batch_phrase_search": [["phrase2"]],
+                 "batch_prefix_search": [["prefix3"]],
+                 "batch_multiterm_search": [["wildcard"]],
+                 "batch_fuzzy_search": [["fuzzy"]]}, [])
+    if case == "uncached_lexicon":
+        monkeypatch.setattr(Index, "PREFETCH_TERMS", 0)
+        fresh = Index(spark, mix.index_dir)
+        queries = [(n, MIXED_LOG[n]()) for n in ("prefix3", "wildcard", "fuzzy")]
+        return (Searcher(fresh, **opts), queries + [phrase], None,
+                {"batch_prefix_search": [["prefix3"]],
+                 "batch_multiterm_search": [["wildcard"]],
+                 "batch_fuzzy_search": [["fuzzy"]]},
+                # the fuzzy kernel scores its expanded bag through bucket_topk
+                [["fuzzy"], ["phrase"]])
+    if case == "max_expansion":
+        queries = [("prefix3", MIXED_LOG["prefix3"]()),  # 3 terms > 2
+                   ("prefix2", MIXED_LOG["prefix2"]()), phrase]
+        return (Searcher(mix, max_expansion=2, **opts), queries, None,
+                {"batch_prefix_search": [["prefix3"]]}, [["phrase", "prefix2"]])
+    assert case == "tf_idf"
+    queries = [(n, MIXED_LOG[n]()) for n in ("phrase2", "prefix3", "term", "or2")]
+    return (Searcher(mix, weighting=TF_IDF(), **opts), queries, None,
+            {"batch_phrase_search": [["phrase2"]],
+             "batch_prefix_search": [["prefix3"]]}, [])
+
+
+@pytest.mark.parametrize(
+    "case", ["slop2", "round_to", "uncached_lexicon", "max_expansion", "tf_idf"])
+def test_batch_search_declined_trees_keep_their_kernels(case, spark, mix, monkeypatch):
+    """A tree bucket_topk declines — a slop-2 phrase, any tree of a
+    round_to batch, a multiterm over an uncached lexicon or past
+    max_expansion, any tree under a non-BM25F weighting — still reaches
+    its DataFrame kernel; the accepted trees of the same batch still join
+    one bucket_topk call; every query equals per-query search."""
+    from whoosh_spark.search.batch import batch_search
+
+    s, queries, round_to, expected, bucket = _declined_case(
+        case, spark, mix, monkeypatch)
+    k = N_DOCS if round_to else 8  # no rounded k-boundary tie-cut
+    want = {qid: _top(s, q, k) for qid, q in queries}
+    calls = _kernel_spy(monkeypatch)
+    answered: list = []
+    orig = L.bucket_topk
+
+    def spy(searcher, trees, k):
+        out = orig(searcher, trees, k)
+        if out is not None:
+            answered.append(sorted(qid for qid, _ in trees))
+        return out
+
+    monkeypatch.setattr(L, "bucket_topk", spy)
+    got = _by_query(batch_search(s, queries, k=k, round_to=round_to).collect())
+    for kernel, qids in expected.items():
+        assert calls[kernel] == qids, kernel
+    assert sorted(answered) == bucket
+    assert all(want.values())
+    for qid, _ in queries:
+        if round_to is None:
+            assert got.get(qid, []) == want[qid], qid
+        else:
+            assert sorted(got.get(qid, [])) == sorted(
+                (d, round(sc, round_to)) for d, sc in want[qid]), qid
 
 
 def test_selective_conjunctive_batch_matches_search(spark, tmp_path, monkeypatch):
@@ -276,11 +449,8 @@ def test_selective_conjunctive_batch_matches_search(spark, tmp_path, monkeypatch
     trees = [(qid, Q.And([Q.Term(f, t) for t in ts])) for qid, f, ts in queries]
     want = {qid: _top(s, q, 3) for qid, q in trees}
     answered = _spy(monkeypatch)
-    rows = batch_search(s, trees, k=3).collect()
+    got = _by_query(batch_search(s, trees, k=3).collect())
     assert answered == []
-    got: dict = {}
-    for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
-        got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
     assert any(got.values())
     for qid, _ in trees:
         assert got.get(qid, []) == want[qid], qid

@@ -13,18 +13,25 @@ cluster size (this powers the N vs 4N scaling evidence in bench.py).
 
 Supported batch shapes: bags of weighted terms per query, scored BM25F and
 combined by sum — the Or/term workload that dominates search serving.
-Conjunctive batches add a HAVING count = n_terms filter. Unrounded term
-and conjunctive bags usually skip this plan: ``batch_term_search`` hands
-them to the exact evaluator placed in each doc-complete bucket partition
-(``local.bucket_topk``), the engine ``Searcher.search`` also uses. Phrase
-batches (``batch_phrase_search``) add a positional adjacency chain
-evaluated as JVM higher-order array expressions; prefix batches
-(``batch_prefix_search``) expand against one lexicon scan per field and
-keep the reference's constant-score / single-term-degenerate semantics;
-fuzzy batches (``batch_fuzzy_search``) expand via one JVM-levenshtein
-lexicon scan into scored Or bags; generic pattern/range batches
-(``batch_multiterm_search``) evaluate every query's term predicate in one
-Arrow pass over the lexicon.
+Conjunctive batches add a HAVING count = n_terms filter.
+
+``batch_search`` routes a query log by one rule: every tree the exact
+evaluator's bucket placement accepts (``local.bucket_tree``) joins ONE
+``local.bucket_topk`` call — the evaluator ``Searcher.search`` also uses,
+run once per doc-complete bucket partition — except selective bag batches,
+where block-max WAND and the chunk-intersection plan decode less. That
+covers bags, slop-1 phrases and multiterms expanded against the
+driver-cached lexicon. The DataFrame kernels here serve only what the
+placement declines (``round_to`` batches, non-BM25F weightings, phrases
+with slop other than 1, uncached lexicons, expansions past
+``max_expansion``): phrase batches (``batch_phrase_search``) add a
+positional adjacency chain evaluated as JVM higher-order array
+expressions; prefix batches (``batch_prefix_search``) expand against one
+lexicon scan per field and keep the reference's constant-score /
+single-term-degenerate semantics; fuzzy batches (``batch_fuzzy_search``)
+expand via one JVM-levenshtein lexicon scan into scored Or bags; generic
+pattern/range batches (``batch_multiterm_search``) evaluate every query's
+term predicate in one Arrow pass over the lexicon.
 """
 
 from __future__ import annotations
@@ -864,13 +871,15 @@ def batch_multiterm_search(
 
 
 def _classify_for_batch(q):
-    """Map a query tree onto a batch kernel, or None for engine fallback.
+    """Map a query tree onto the batch kernel that serves it when the
+    bucket placement declines it.
 
     Returns (kind, payload) where kind is one of "null", "term", "and",
     "phrase", "prefix", "fuzzy", "multiterm" — the shapes the batch
-    kernels serve with exact single-query semantics — or None when the
-    tree needs the full per-query planner (boosts, minmatch/scale, Not,
-    nested boolean, spans, ranges over stored columns, ...)."""
+    kernels serve with exact single-query semantics — or None for trees
+    no batch kernel serves (boosts, minmatch/scale, Not, nested boolean,
+    spans, ranges over stored columns, ...): the bucket placement or the
+    per-query engine answers those."""
     from whoosh_spark import query as Q
     from whoosh_spark.query.nodes import _NullQuery
 
@@ -919,25 +928,34 @@ def batch_search(
 ) -> DataFrame:
     """Serve a query log: ``queries`` is [(query_id, query)] where each
     query is a Query node or a raw query-language string (parsed with
-    ``parser``). Every query is routed to the batch kernel matching its
-    tree shape — Term/Or bags and Variations to ``batch_term_search``
-    (auto block-max WAND), all-terms-required Ands to
-    ``batch_conjunctive_search`` (chunk-intersection skipping), unrounded
-    bag batches neither skip route claims to ``local.bucket_topk`` (the
-    exact evaluator in each doc-complete bucket partition), Phrases to
-    ``batch_phrase_search`` (grouped by slop, one positional decode pass
-    each), Prefixes to ``batch_prefix_search``, FuzzyTerms to
-    ``batch_fuzzy_search`` (grouped by (maxdist, prefixlength)), and
-    constant-score Wildcard/Regex/TermRange to ``batch_multiterm_search``
-    — so N queries of the same shape share ONE posting scan + shuffle
-    instead of N sequential jobs. Other trees (boosts, minmatch, nested
-    boolean) join that one ``bucket_topk`` call when it accepts them and
-    ``round_to`` is unset; the rest (Not, Or(scale=), spans, column
-    ranges, ...) fall back to the per-query engine inside the same
-    returned union; pass ``strict=True`` to raise instead (a serving
-    deployment that must never run per-query jobs). Returns
-    DataFrame(query_id, doc_id, score, rank); queries with no matches
-    contribute no rows.
+    ``parser``). Returns DataFrame(query_id, doc_id, score, rank); queries
+    with no matches contribute no rows.
+
+    One routing rule: every tree the bucket placement accepts
+    (``local.bucket_tree``) joins ONE ``local.bucket_topk`` call — the
+    exact evaluator in each doc-complete bucket partition, so those
+    queries equal ``Searcher.search`` bit for bit — except Term/Or/And
+    bag batches that are selective (WAND and the chunk-intersection plan
+    decode less there). Multiterms join it expanded against the
+    driver-cached lexicon. The batch kernels serve only what that call
+    declines, one job chain per shape: bags to ``batch_term_search``,
+    phrases to ``batch_phrase_search`` (grouped by slop), Prefixes to
+    ``batch_prefix_search``, FuzzyTerms to ``batch_fuzzy_search`` (grouped
+    by (maxdist, prefixlength)) and constant-score Wildcard/Regex/TermRange
+    to ``batch_multiterm_search``. The bucket placement declines:
+
+    - every tree of a ``round_to`` batch
+    - every tree when the weighting is not plain BM25F
+    - multi-word phrases with slop other than 1
+    - multiterms on a field whose lexicon is past ``Index.PREFETCH_TERMS``
+      (not driver-cached), or that expand past ``max_expansion``
+    - trees with Not or Or(scale=)
+
+    Trees no batch kernel serves (Not, Or(scale=), spans, column ranges,
+    ...) fall back to the per-query engine inside the same returned
+    union; pass ``strict=True`` to raise on any tree outside the batch
+    kernels' shapes instead (a serving deployment that must never run
+    per-query jobs).
 
     Fallback note: batch kernels apply ``round_to`` BEFORE their top-k
     tie-cut; fallback queries keep the engine's exact-score cut and round
@@ -949,23 +967,46 @@ def batch_search(
         queries = [(qid, parser.parse(q) if isinstance(q, str) else q)
                    for qid, q in queries]
 
+    routed = []  # (query_id, tree, _classify_for_batch result)
+    for qid, q in queries:
+        c = _classify_for_batch(q)
+        if c is None and strict:
+            raise ValueError(
+                f"query {qid!r}: {type(q).__name__} tree has no exact "
+                "batch kernel (strict=True)")
+        if c is None or c[0] != "null":
+            routed.append((qid, q, c))
+
+    outs = []
+    if round_to is None:
+        from whoosh_spark.search.local import bucket_topk, bucket_tree
+
+        selective = set()
+        for kind in ("term", "and"):
+            bags = [(qid, *c[1]) for qid, _, c in routed if c and c[0] == kind]
+            if bags and _selective_fraction(searcher, bags, k) >= 0.8:
+                selective.update(qid for qid, _, _ in bags)
+        exact, declined = [], []
+        for qid, q, c in routed:
+            t = None if qid in selective else bucket_tree(searcher, q)
+            if t is None:
+                declined.append((qid, q, c))
+            else:
+                exact.append((qid, t))
+        if exact:
+            outs.append(bucket_topk(searcher, exact, k))
+        routed = declined
+
     buckets: dict = {"term": [], "and": [], "prefix": [], "multiterm": []}
     phrase_by_slop: dict = {}
     fuzzy_by_params: dict = {}
     fallback = []
-    for qid, q in queries:
-        c = _classify_for_batch(q)
+    for qid, q, c in routed:
         if c is None:
-            if strict:
-                raise ValueError(
-                    f"query {qid!r}: {type(q).__name__} tree has no exact "
-                    "batch kernel (strict=True)")
             fallback.append((qid, q))
             continue
         kind, payload = c
-        if kind == "null":
-            continue
-        elif kind == "phrase":
+        if kind == "phrase":
             slop, field, words = payload
             phrase_by_slop.setdefault(slop, []).append((qid, field, words))
         elif kind == "fuzzy":
@@ -977,27 +1018,6 @@ def batch_search(
             field, terms = payload
             buckets[kind].append((qid, field, terms))
 
-    outs = []
-    if round_to is None:
-        from whoosh_spark.search.local import bucket_topk, bucket_tree
-
-        # one bucket_topk call answers every tree it accepts: bag batches
-        # except selective ones (WAND and the chunk-intersection plan
-        # decode less there) and the trees no batch kernel serves
-        cands = list(fallback)
-        tree_of = dict(queries)
-        for kind in ("term", "and"):
-            qs = buckets[kind]
-            if qs and _selective_fraction(searcher, qs, k) < 0.8:
-                cands += [(qid, tree_of[qid]) for qid, _, _ in qs]
-        exact = [(qid, t) for qid, t in
-                 ((qid, bucket_tree(searcher, q)) for qid, q in cands) if t is not None]
-        taken = {qid for qid, _ in exact}
-        fallback = [f for f in fallback if f[0] not in taken]
-        for kind in ("term", "and"):
-            buckets[kind] = [b for b in buckets[kind] if b[0] not in taken]
-        if exact:
-            outs.append(bucket_topk(searcher, exact, k))
     if buckets["term"]:
         outs.append(batch_term_search(
             searcher, buckets["term"], k=k, round_to=round_to))
