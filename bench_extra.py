@@ -8,16 +8,21 @@ report are reproducible).
   python bench_extra.py --sf-dir=DIR
                                      # only the batch section, on the
                                      # corpus DIR/documents.parquet
-                                     # (e.g. the sf0.1 testdata)
+                                     # (e.g. the sf0.1 testdata) and on
+                                     # a synthetic 45,000-word-lexicon
+                                     # corpus
 
 Sections:
   batch_ab     exact evaluator in each bucket partition (local.bucket_topk)
                vs DataFrame plan, disjunctive AND conjunctive 200-query
-               batches, and (--sf10 / --sf-dir runs) vs the phrase and
-               prefix batch kernels on a 100-query slop-1 phrase batch
-               and a prefix batch, which batch_search sends to
-               bucket_topk (identical-results assert + best-of-2 wall
-               times)
+               batches, and vs the phrase, prefix, fuzzy and pattern
+               batch kernels on up-to-100-query slop-1 phrase, Prefix
+               (three expansion-width bands), FuzzyTerm (prefixlength 1
+               and 0) and Wildcard batches (identical-results assert +
+               best-of-2 wall times, cached lexicon size recorded);
+               --sf-dir runs repeat it on a synthetic 45,000-word
+               lexicon, where the driver-side multiterm expansion costs
+               most
   local_dist   per-query driver-local vs distributed latency for the
                bench headline shapes (the crossover evidence backing
                BENCH/LOCAL_CROSSOVER.json)
@@ -36,6 +41,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 REPO = os.path.dirname(os.path.abspath(__file__))
+#: distinct words of the synthetic large-lexicon corpus (below
+#: Index.PREFETCH_TERMS = 50,000, so its lexicon is driver-cached)
+LEXICON_TERMS = 45_000
 
 
 def best2(fn):
@@ -49,7 +57,7 @@ def best2(fn):
     return round(best, 2)
 
 
-def _bench_batch(spark, idx_dir: str, tag: str, out: dict, docs_pq=None):
+def _bench_batch(spark, idx_dir: str, tag: str, out: dict, docs_pq: str):
     from pyspark.sql import functions as F
 
     import whoosh_spark.query as Q
@@ -99,46 +107,88 @@ def _bench_batch(spark, idx_dir: str, tag: str, out: dict, docs_pq=None):
         bucket_sec = best2(lambda: L.bucket_topk(s, trees, 10).collect())
         rec[name] = {"bucket_sec": bucket_sec, "dataframe_sec": df_sec,
                      "identical_results": True}
-    if docs_pq is not None:  # phrases are drawn from the corpus text
-        texts = [r["text"] for r in
-                 spark.read.parquet(docs_pq).select("text").limit(500).collect()]
-        rec.update(_bench_phrase_prefix(spark, s, top_terms, texts))
+    # phrases are drawn from the corpus text
+    texts = [r["text"] for r in
+             spark.read.parquet(docs_pq).select("text").limit(500).collect()]
+    rec.update(_bench_routed_shapes(spark, s, top_terms, texts))
     out[f"batch_ab_{tag}"] = rec
 
 
-def _bench_phrase_prefix(spark, s, top_terms, texts) -> dict:
-    """bucket_topk against batch_phrase_search / batch_prefix_search:
-    slop-1 phrases are adjacent word pairs of ``texts``, prefixes
-    the distinct 2- and 3-letter stems of the top terms. Rows must be
-    equal, scores bit for bit."""
+#: expansion-width bands of the prefix A/B, in expanded terms
+PREFIX_BANDS = ((1, 4), (5, 16), (17, 1024))
+
+
+def _bench_routed_shapes(spark, s, top_terms, texts) -> dict:
+    """bucket_topk against the batch kernel of each shape batch_search
+    may send to the bucket placement: slop-1 phrases (adjacent word pairs
+    of ``texts``), Prefixes in three expansion-width bands (2-4 letter
+    stems of the cached lexicon), FuzzyTerms (top terms with the last
+    letter dropped; prefixlength 1, and 0 as the parser builds ``word~``)
+    and Wildcards (``t?rm*`` shapes of the top terms). Up to 100 queries
+    a batch. The bucket time includes the driver-side expansion against
+    the cached lexicon; batch_search_sec is the route batch_search
+    picks. Rows must be equal, scores bit for bit."""
+    import bisect
+
     import whoosh_spark.query as Q
     import whoosh_spark.search.batch as B
     from whoosh_spark.search import local as L
 
+    s.index._maybe_prefetch_field("text")
+    lexicon = sorted(t for (f, t), row in s.index._term_stats_cache.items()
+                     if f == "text" and row is not None)
+
+    def width(stem):
+        return (bisect.bisect_left(lexicon, stem + "\uffff")
+                - bisect.bisect_left(lexicon, stem))
+
     rng = random.Random(4321)
-    lex = set(top_terms)
+    top = set(top_terms)
     pairs: set = set()
     for text in texts:
         words = text.lower().split()
         pairs.update((a, b) for a, b in zip(words, words[1:])
-                     if a != b and a in lex and b in lex)
+                     if a != b and a in top and b in top)
     phrases = rng.sample(sorted(pairs), min(100, len(pairs)))
-    stems = sorted({t[:n] for t in top_terms for n in (2, 3) if len(t) > n})
-    stems = rng.sample(stems, min(100, len(stems)))
+    stem_width = {st: width(st) for st in
+                  {t[:n] for t in lexicon for n in (2, 3, 4) if len(t) > n}}
+    typos = sorted({t[:-1] for t in top_terms if len(t) > 3})
+    typos = rng.sample(typos, min(100, len(typos)))
+    globs = sorted({f"{t[0]}?{t[2:4]}*" for t in top_terms if len(t) > 3})
+    globs = rng.sample(globs, min(100, len(globs)))
 
     def rows(df):
         return sorted((r["query_id"], r["rank"], r["doc_id"], r["score"])
                       for r in df.collect())
 
+    def fuzzy(pl):
+        return ([(f"f{pl}_{i}", "text", w) for i, w in enumerate(typos)],
+                lambda qs: Q.FuzzyTerm("text", qs[2], maxdist=1, prefixlength=pl),
+                lambda qs: B.batch_fuzzy_search(s, qs, k=10, maxdist=1,
+                                                prefixlength=pl))
+
     shapes = {
         "phrase": ([(f"p{i}", "text", list(ws)) for i, ws in enumerate(phrases)],
                    lambda qs: Q.Phrase("text", qs[2]),
                    lambda qs: B.batch_phrase_search(s, qs, k=10)),
-        "prefix": ([(f"x{i}", "text", st) for i, st in enumerate(stems)],
-                   lambda qs: Q.Prefix("text", qs[2]),
-                   lambda qs: B.batch_prefix_search(s, qs, k=10)),
     }
-    rec: dict = {}
+    for lo, hi in PREFIX_BANDS:
+        pool = sorted(st for st, w in stem_width.items() if lo <= w <= hi)
+        if pool:
+            stems = rng.sample(pool, min(100, len(pool)))
+            shapes[f"prefix_{lo}-{hi}_terms"] = (
+                [(f"x{i}", "text", st) for i, st in enumerate(stems)],
+                lambda qs: Q.Prefix("text", qs[2]),
+                lambda qs: B.batch_prefix_search(s, qs, k=10))
+    shapes.update({
+        "fuzzy_prefixlength1": fuzzy(1),
+        "fuzzy_prefixlength0": fuzzy(0),
+        "wildcard": ([(f"w{i}", "text", g) for i, g in enumerate(globs)],
+                     lambda qs: Q.Wildcard("text", qs[2]),
+                     lambda qs: B.batch_multiterm_search(
+                         s, [(q[0], Q.Wildcard("text", q[2])) for q in qs], k=10)),
+    })
+    rec: dict = {"cached_lexicon_terms": len(lexicon)}
     for name, (queries, tree, kernel) in shapes.items():
         trees = [(q[0], tree(q)) for q in queries]
         spark.sparkContext.setJobDescription(f"{name} bucket placement")
@@ -149,8 +199,12 @@ def _bench_phrase_prefix(spark, s, top_terms, texts) -> dict:
             "queries": len(trees),
             "bucket_sec": best2(lambda: L.bucket_topk(s, trees, 10).collect()),
             "kernel_sec": best2(lambda: kernel(queries).collect()),
+            "batch_search_sec": best2(lambda: B.batch_search(s, trees, k=10).collect()),
             "identical_results": True,
         }
+        if name.startswith("prefix"):
+            ws = sorted(stem_width[q[2]] for q in queries)
+            rec[name]["median_expanded_terms"] = ws[len(ws) // 2]
     return rec
 
 
@@ -202,6 +256,40 @@ def _bench_index(spark, docs_pq: str, name: str) -> str:
     return idx
 
 
+def _bench_lexicon_corpus(spark, n_terms: int) -> str:
+    """documents.parquet of a synthetic corpus whose text field holds
+    ``n_terms`` distinct words (random 4-8 letter strings): every word
+    once, round-robin over the docs, plus 40 Zipf draws per doc from the
+    first 2,000 words so top terms and adjacent pairs repeat. The
+    testdata corpora share a 31-word vocabulary, which leaves the
+    driver-side expansion of a multiterm against the cached lexicon
+    unmeasured; this one stays under Index.PREFETCH_TERMS so the whole
+    lexicon is cached."""
+    import pandas as pd
+
+    path = os.path.join(REPO, ".index_cache", f"lex{n_terms}_docs", "documents.parquet")
+    if os.path.exists(path):
+        return path
+    rng = random.Random(97)
+    letters = "abcdefghiklmnoprstuw"
+    vocab: dict = {}
+    while len(vocab) < n_terms:
+        vocab.setdefault("".join(rng.choice(letters)
+                                 for _ in range(rng.randint(4, 8))), None)
+    words = list(vocab)
+    n_docs = 3000
+    hot = [1.0 / (r + 1) for r in range(2000)]
+    texts = []
+    for d in range(n_docs):
+        own = words[d::n_docs]
+        draws = rng.choices(words[:2000], weights=hot, k=40)
+        texts.append(" ".join(draws[:20] + own + draws[20:]))
+    pdf = pd.DataFrame({"doc_id": range(n_docs), "text": texts,
+                        "lang": "en", "source": "synthetic"})
+    spark.createDataFrame(pdf).repartition(4).write.mode("overwrite").parquet(path)
+    return path
+
+
 def main():
     from whoosh_spark.session import get_spark
 
@@ -218,20 +306,16 @@ def main():
         docs_pq = os.path.join(sf_dir, "documents.parquet")
         _bench_batch(spark, _bench_index(spark, docs_pq, f"bench_{name}"), name,
                      out, docs_pq)
+        lex_pq = _bench_lexicon_corpus(spark, LEXICON_TERMS)
+        _bench_batch(spark, _bench_index(spark, lex_pq, f"bench_lex{LEXICON_TERMS}"),
+                     f"lex{LEXICON_TERMS}", out, lex_pq)
         print(json.dumps(out))
         spark.stop()
         return
 
-    sf1_idx = os.path.join(REPO, ".index_cache", "bench_sf1.0")
-    if not os.path.exists(sf1_idx):
-        from whoosh_spark.index import build_index
-        from whoosh_spark.schema import ID, TEXT, IndexSchema
-
-        docs = spark.read.parquet("/root/testdata/sf1.0/documents.parquet")
-        schema = IndexSchema.of(lang=ID(stored=True), source=ID(stored=True),
-                                text=TEXT())
-        build_index(spark, docs, schema, sf1_idx, sha_col="text")
-    _bench_batch(spark, sf1_idx, "50k", out)
+    sf1_pq = "/root/testdata/sf1.0/documents.parquet"
+    sf1_idx = _bench_index(spark, sf1_pq, "bench_sf1.0")
+    _bench_batch(spark, sf1_idx, "50k", out, sf1_pq)
     _bench_local_dist(spark, sf1_idx, out)
 
     if "--sf10" in sys.argv:
@@ -240,7 +324,7 @@ def main():
         sf10_dir = os.path.join(REPO, ".index_cache", "sf10_docs")
         doc_pq = os.path.join(sf10_dir, "documents.parquet")
         if not os.path.exists(doc_pq):
-            docs = spark.read.parquet("/root/testdata/sf1.0/documents.parquet")
+            docs = spark.read.parquet(sf1_pq)
             n = docs.count()
             reps = spark.range(10).select(F.col("id").alias("_rep"))
             big = (docs.crossJoin(reps)

@@ -276,16 +276,18 @@ def test_batch_search_routes_mixed_query_log(pix):
     ]
     by_q = _ranked(batch_search(s, batch, k=25))
     for qid, q in batch:
-        want = [(r["doc_id"], r["score"]) for r in s.search(q, limit=25).collect()]
+        want = [(i + 1, r["doc_id"], r["score"])
+                for i, r in enumerate(s.search(q, limit=25).collect())]
         assert by_q.get(qid, []) == want, qid
     assert "q_null" not in by_q
 
 
 def _ranked(out) -> dict:
-    """query_id -> exact [(doc_id, score)] in rank order."""
+    """query_id -> exact [(rank, doc_id, score)] in rank order."""
     by_q: dict = {}
     for r in sorted(out.collect(), key=lambda r: (r["query_id"], r["rank"])):
-        by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
+        by_q.setdefault(r["query_id"], []).append(
+            (r["rank"], r["doc_id"], r["score"]))
     return by_q
 
 
@@ -298,8 +300,8 @@ def test_batch_search_parses_strings_and_strict(pix):
     batch = [("q1", "scan merge"), ("q2", '"merge join"'), ("q3", "sor*")]
     by_q = _ranked(batch_search(s, batch, k=25, parser=p))
     for qid, text in batch:
-        want = [(r["doc_id"], r["score"])
-                for r in s.search(p.parse(text), limit=25).collect()]
+        want = [(i + 1, r["doc_id"], r["score"])
+                for i, r in enumerate(s.search(p.parse(text), limit=25).collect())]
         assert by_q.get(qid, []) == want, qid
 
     with pytest.raises(ValueError, match="parser"):

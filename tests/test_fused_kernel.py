@@ -318,11 +318,28 @@ MIXED_LOG = {
 MIXED_EMPTY = {"phrase_missing", "prefix0"}
 
 
+def _answering_spy(monkeypatch) -> list:
+    """Patch bucket_topk to record the sorted query ids of each call that
+    answers."""
+    answered: list = []
+    orig = L.bucket_topk
+
+    def spy(searcher, trees, k):
+        out = orig(searcher, trees, k)
+        if out is not None:
+            answered.append(sorted(qid for qid, _ in trees))
+        return out
+
+    monkeypatch.setattr(L, "bucket_topk", spy)
+    return answered
+
+
 def test_batch_search_mixed_log_one_bucket_call(mix, monkeypatch):
     """Slop-1 phrases, cached-lexicon prefixes (0, 1, 2 and 3 terms), a
-    Wildcard, a FuzzyTerm and term/And bags all join ONE bucket_topk call;
-    no DataFrame batch kernel runs, and every query equals per-query
-    Searcher.search exactly."""
+    Wildcard and term/And bags all join ONE bucket_topk call; the phrase,
+    prefix and multiterm kernels never run. The FuzzyTerm stays on
+    batch_fuzzy_search, whose expanded bag is a second bucket_topk call
+    of its own. Every query equals per-query Searcher.search exactly."""
     from whoosh_spark.search.batch import batch_search
 
     s = Searcher(mix, exact_scores=True, cache_postings=False,
@@ -331,10 +348,12 @@ def test_batch_search_mixed_log_one_bucket_call(mix, monkeypatch):
     want = {qid: _top(s, q, 8) for qid, q in queries}
     assert all(bool(want[qid]) == (qid not in MIXED_EMPTY) for qid, _ in queries)
     calls = _kernel_spy(monkeypatch)
-    answered = _spy(monkeypatch)
+    answered = _answering_spy(monkeypatch)
     got = _by_query(batch_search(s, queries, k=8).collect())
-    assert answered == [True]
-    assert calls == {n: [] for n in KERNELS}
+    assert answered == [sorted(set(MIXED_LOG) - {"fuzzy", "not"}), ["fuzzy"]]
+    assert calls == {**{n: [] for n in KERNELS},
+                     "batch_fuzzy_search": [["fuzzy"]],
+                     "batch_term_search": [["fuzzy"]]}
     for qid, _ in queries:
         assert got.get(qid, []) == want[qid], qid
 
@@ -343,6 +362,7 @@ def _declined_case(case, spark, mix, monkeypatch):
     """(searcher, queries, round_to, kernel -> expected calls, query ids
     of each bucket_topk call that answers) for one shape bucket_topk
     declines, mixed with trees it accepts where the case allows."""
+    import whoosh_spark.search.batch as B
     from whoosh_spark.search.scoring import TF_IDF
 
     opts = dict(exact_scores=True, cache_postings=False, use_local=False,
@@ -370,6 +390,13 @@ def _declined_case(case, spark, mix, monkeypatch):
                  "batch_fuzzy_search": [["fuzzy"]]},
                 # the fuzzy kernel scores its expanded bag through bucket_topk
                 [["fuzzy"], ["phrase"]])
+    if case == "wide_expansion":
+        monkeypatch.setattr(B, "BUCKET_MAX_EXPANSION", 2)
+        queries = [(n, MIXED_LOG[n]()) for n in ("prefix3", "prefix2", "wildcard")]
+        return (Searcher(mix, **opts), queries + [phrase], None,
+                {"batch_prefix_search": [["prefix3"]],
+                 "batch_multiterm_search": [["wildcard"]]},
+                [["phrase", "prefix2"]])
     if case == "max_expansion":
         queries = [("prefix3", MIXED_LOG["prefix3"]()),  # 3 terms > 2
                    ("prefix2", MIXED_LOG["prefix2"]()), phrase]
@@ -383,11 +410,14 @@ def _declined_case(case, spark, mix, monkeypatch):
 
 
 @pytest.mark.parametrize(
-    "case", ["slop2", "round_to", "uncached_lexicon", "max_expansion", "tf_idf"])
+    "case", ["slop2", "round_to", "uncached_lexicon", "wide_expansion",
+             "max_expansion", "tf_idf"])
 def test_batch_search_declined_trees_keep_their_kernels(case, spark, mix, monkeypatch):
     """A tree bucket_topk declines — a slop-2 phrase, any tree of a
     round_to batch, a multiterm over an uncached lexicon or past
-    max_expansion, any tree under a non-BM25F weighting — still reaches
+    max_expansion, any tree under a non-BM25F weighting — or one
+    batch_search keeps off it, a multiterm expanding past
+    BUCKET_MAX_EXPANSION, still reaches
     its DataFrame kernel; the accepted trees of the same batch still join
     one bucket_topk call; every query equals per-query search."""
     from whoosh_spark.search.batch import batch_search
@@ -397,16 +427,7 @@ def test_batch_search_declined_trees_keep_their_kernels(case, spark, mix, monkey
     k = N_DOCS if round_to else 8  # no rounded k-boundary tie-cut
     want = {qid: _top(s, q, k) for qid, q in queries}
     calls = _kernel_spy(monkeypatch)
-    answered: list = []
-    orig = L.bucket_topk
-
-    def spy(searcher, trees, k):
-        out = orig(searcher, trees, k)
-        if out is not None:
-            answered.append(sorted(qid for qid, _ in trees))
-        return out
-
-    monkeypatch.setattr(L, "bucket_topk", spy)
+    answered = _answering_spy(monkeypatch)
     got = _by_query(batch_search(s, queries, k=k, round_to=round_to).collect())
     for kernel, qids in expected.items():
         assert calls[kernel] == qids, kernel

@@ -18,20 +18,25 @@ Conjunctive batches add a HAVING count = n_terms filter.
 ``batch_search`` routes a query log by one rule: every tree the exact
 evaluator's bucket placement accepts (``local.bucket_tree``) joins ONE
 ``local.bucket_topk`` call — the evaluator ``Searcher.search`` also uses,
-run once per doc-complete bucket partition — except selective bag batches,
-where block-max WAND and the chunk-intersection plan decode less. That
-covers bags, slop-1 phrases and multiterms expanded against the
-driver-cached lexicon. The DataFrame kernels here serve only what the
-placement declines (``round_to`` batches, non-BM25F weightings, phrases
-with slop other than 1, uncached lexicons, expansions past
-``max_expansion``): phrase batches (``batch_phrase_search``) add a
-positional adjacency chain evaluated as JVM higher-order array
-expressions; prefix batches (``batch_prefix_search``) expand against one
-lexicon scan per field and keep the reference's constant-score /
-single-term-degenerate semantics; fuzzy batches (``batch_fuzzy_search``)
-expand via one JVM-levenshtein lexicon scan into scored Or bags; generic
-pattern/range batches (``batch_multiterm_search``) evaluate every query's
-term predicate in one Arrow pass over the lexicon.
+run once per doc-complete bucket partition — except the shapes a kernel
+here serves faster: selective bag batches (block-max WAND and the
+chunk-intersection plan decode less), FuzzyTerms (one JVM Levenshtein
+lexicon scan per batch instead of a Python one per query) and
+Prefix/Wildcard/Regex/TermRange expanding past ``BUCKET_MAX_EXPANSION``
+terms (a distinct doc-id set instead of every expanded term scored). That
+call covers bags, slop-1 phrases, narrow multiterms expanded against the
+driver-cached lexicon and nested trees. The DataFrame kernels serve those
+exceptions and what the placement declines (``round_to`` batches,
+non-BM25F weightings, phrases with slop other than 1, uncached lexicons,
+expansions past ``max_expansion``): phrase batches
+(``batch_phrase_search``) add a positional adjacency chain evaluated as
+JVM higher-order array expressions; prefix batches
+(``batch_prefix_search``) expand against one lexicon scan per field and
+keep the reference's constant-score / single-term-degenerate semantics;
+fuzzy batches (``batch_fuzzy_search``) expand via one JVM-levenshtein
+lexicon scan into scored Or bags; generic pattern/range batches
+(``batch_multiterm_search``) evaluate every query's term predicate in
+one Arrow pass over the lexicon.
 """
 
 from __future__ import annotations
@@ -870,6 +875,55 @@ def batch_multiterm_search(
     return out
 
 
+#: Widest multiterm expansion ``batch_search`` sends to the bucket
+#: placement. Its evaluator scores every expanded term once per bucket
+#: partition, where the prefix and pattern kernels need only a distinct
+#: doc-id set, so the placement's cost grows with the expansion while the
+#: kernels' barely does. 100-prefix batches over 45,000 cached terms on 4
+#: cores (BENCH/BATCH_AB_LEXICON.json): 1-4 terms 1.8-1.9 s in the
+#: placement vs 2.3-2.4 s in ``batch_prefix_search``; 5-16 terms near the
+#: crossover (1.9-2.8 vs 2.3-2.4 s); ~113 terms 15-18 vs 2.6-7.9 s.
+BUCKET_MAX_EXPANSION = 16
+
+
+def _bucket_route(searcher, q, c, lexicons: dict):
+    """``q`` resolved for the ``batch_search`` bucket call, or None to
+    leave it to its kernel (``c`` is its ``_classify_for_batch`` result).
+    FuzzyTerms stay on ``batch_fuzzy_search``: resolving one here runs a
+    Python Levenshtein over every driver-cached term, once per query,
+    where the kernel tests the whole batch in one JVM lexicon scan.
+    Prefix/Wildcard/Regex/TermRange join only up to
+    ``BUCKET_MAX_EXPANSION`` expanded terms; a Prefix is measured first
+    by bisecting the sorted cached lexicon (``lexicons``: field -> sorted
+    terms, filled once per batch), so a wide one skips the per-query
+    resolve."""
+    import bisect
+
+    from whoosh_spark.search.local import bucket_tree
+
+    kind = c[0] if c else None
+    if kind == "fuzzy":
+        return None
+    ix = searcher.index
+    if kind == "prefix" and q.text:
+        ix._maybe_prefetch_field(q.field)
+        if q.field in ix._complete_fields:
+            if q.field not in lexicons:
+                lexicons[q.field] = sorted(
+                    t for (f, t), row in ix._term_stats_cache.items()
+                    if f == q.field and row is not None)
+            lex, p = lexicons[q.field], q.text
+            lo = bisect.bisect_left(lex, p)
+            hi = bisect.bisect_left(lex, p[:-1] + chr(ord(p[-1]) + 1), lo)
+            if hi - lo > BUCKET_MAX_EXPANSION:
+                return None
+    t = bucket_tree(searcher, q)
+    if (t is not None and kind in ("prefix", "multiterm")
+            and sum(1 for _ in t.leaves()) > BUCKET_MAX_EXPANSION):
+        return None
+    return t
+
+
 def _classify_for_batch(q):
     """Map a query tree onto the batch kernel that serves it when the
     bucket placement declines it.
@@ -934,12 +988,15 @@ def batch_search(
     One routing rule: every tree the bucket placement accepts
     (``local.bucket_tree``) joins ONE ``local.bucket_topk`` call — the
     exact evaluator in each doc-complete bucket partition, so those
-    queries equal ``Searcher.search`` bit for bit — except Term/Or/And
-    bag batches that are selective (WAND and the chunk-intersection plan
-    decode less there). Multiterms join it expanded against the
-    driver-cached lexicon. The batch kernels serve only what that call
-    declines, one job chain per shape: bags to ``batch_term_search``,
-    phrases to ``batch_phrase_search`` (grouped by slop), Prefixes to
+    queries equal ``Searcher.search`` bit for bit — except the shapes a
+    batch kernel serves faster: Term/Or/And bag batches that are selective
+    (WAND and the chunk-intersection plan decode less there), FuzzyTerms,
+    and Prefix/Wildcard/Regex/TermRange nodes expanding past
+    ``BUCKET_MAX_EXPANSION`` terms (see ``_bucket_route``). Multiterms
+    join it expanded against the driver-cached lexicon. The batch kernels
+    serve those exceptions and what the placement declines, one job chain
+    per shape: bags to ``batch_term_search``, phrases to
+    ``batch_phrase_search`` (grouped by slop), Prefixes to
     ``batch_prefix_search``, FuzzyTerms to ``batch_fuzzy_search`` (grouped
     by (maxdist, prefixlength)) and constant-score Wildcard/Regex/TermRange
     to ``batch_multiterm_search``. The bucket placement declines:
@@ -979,16 +1036,16 @@ def batch_search(
 
     outs = []
     if round_to is None:
-        from whoosh_spark.search.local import bucket_topk, bucket_tree
+        from whoosh_spark.search.local import bucket_topk
 
         selective = set()
         for kind in ("term", "and"):
             bags = [(qid, *c[1]) for qid, _, c in routed if c and c[0] == kind]
             if bags and _selective_fraction(searcher, bags, k) >= 0.8:
                 selective.update(qid for qid, _, _ in bags)
-        exact, declined = [], []
+        exact, declined, lexicons = [], [], {}
         for qid, q, c in routed:
-            t = None if qid in selective else bucket_tree(searcher, q)
+            t = None if qid in selective else _bucket_route(searcher, q, c, lexicons)
             if t is None:
                 declined.append((qid, q, c))
             else:

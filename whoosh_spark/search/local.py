@@ -32,9 +32,11 @@ ties). Only ``queries x k`` rows per partition reach a shuffle — this is
 the scale path for hot terms past the threshold. ``Searcher.search`` sends
 it the single-query shapes ``kernel_shape`` names. ``batch_search`` sends
 it, in one call, every tree of an unrounded batch that ``bucket_tree``
-accepts — bags, slop-1 phrases and multiterms expanded against the
-driver-cached lexicon — except selective bag batches; its DataFrame
-kernels serve only the trees ``bucket_tree`` declines.
+accepts — bags, slop-1 phrases, multiterms expanded against the
+driver-cached lexicon, nested trees — except selective bag batches,
+FuzzyTerms and wide multiterm expansions, which its DataFrame kernels
+serve faster; those kernels also serve the trees ``bucket_tree``
+declines.
 """
 
 from __future__ import annotations
@@ -614,9 +616,9 @@ def bucket_topk(searcher, queries, k: int):
     partition inside one ``mapInPandas``. Returns DataFrame(query_id,
     doc_id, score, rank), or None when ``bucket_tree`` declines any tree.
     Deleted doc ids ship in the kernel closure and are dropped during
-    decode. ``batch_search`` makes one call per batch with every tree
+    decode. ``batch_search`` makes one call per batch with the trees
     ``bucket_tree`` accepts, so a mixed query log (bags, slop-1 phrases,
-    cached-lexicon multiterms, nested trees) is one job chain.
+    narrow cached-lexicon multiterms, nested trees) is one job chain.
 
     Parallelism below one task per core is recovered by replicating the
     block stream over G query groups: each query belongs to exactly one
