@@ -415,11 +415,11 @@ def _declined_case(case, spark, mix, monkeypatch):
 def test_batch_search_declined_trees_keep_their_kernels(case, spark, mix, monkeypatch):
     """A tree bucket_topk declines — a slop-2 phrase, any tree of a
     round_to batch, a multiterm over an uncached lexicon or past
-    max_expansion, any tree under a non-BM25F weighting — or one
-    batch_search keeps off it, a multiterm expanding past
-    BUCKET_MAX_EXPANSION, still reaches
-    its DataFrame kernel; the accepted trees of the same batch still join
-    one bucket_topk call; every query equals per-query search."""
+    max_expansion, any tree under a non-BM25F weighting — and a multiterm
+    batch_search keeps off it for expanding past BUCKET_MAX_EXPANSION
+    still reach their DataFrame kernels; the accepted trees of the same
+    batch still join one bucket_topk call; every query equals per-query
+    search."""
     from whoosh_spark.search.batch import batch_search
 
     s, queries, round_to, expected, bucket = _declined_case(
