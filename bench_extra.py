@@ -5,6 +5,10 @@ report are reproducible).
   python bench_extra.py              # all sections at sf1.0
   python bench_extra.py --sf10      # also build the 10x replica corpus
                                      # and repeat the batch section there
+  python bench_extra.py --wand-ab --sf-dir=DIR
+                                     # only the wand_ab section, on
+                                     # DIR/documents.parquet (the sf0.1
+                                     # testdata for BENCH/WAND_AB.json)
   python bench_extra.py --sf-dir=DIR
                                      # only the batch section, on the
                                      # corpus DIR/documents.parquet
@@ -26,6 +30,15 @@ Sections:
   local_dist   per-query driver-local vs distributed latency for the
                bench headline shapes (the crossover evidence backing
                BENCH/LOCAL_CROSSOVER.json)
+  wand_ab      block-max WAND wall times (best-of-3) on a testdata
+               corpus and a 20,000-doc synth_code_corpus: single-query
+               search(use_wand=True) on the tests/test_wand.py shapes and
+               a selective rare+hot bag batch through batch_wand_search,
+               each against the exact route (rows asserted equal, bit
+               equality recorded) with blocks kept/total, and the
+               single-query conjunctive chunk intersection (And of a rare
+               and a hot term, and of a rare term and a slop-2 phrase)
+               against the full decode (BENCH/WAND_AB.json)
 
 Env: SPARK_GRAFT_CPUS (default 32).
 """
@@ -46,15 +59,15 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 LEXICON_TERMS = 45_000
 
 
-def best2(fn):
-    """Best-of-2 wall seconds of ``fn()``."""
+def best_of(fn, n=2):
+    """Best-of-``n`` wall seconds of ``fn()``."""
     best = None
-    for _ in range(2):
+    for _ in range(n):
         t0 = time.time()
         fn()
         dt = time.time() - t0
         best = dt if best is None or dt < best else best
-    return round(best, 2)
+    return round(best, 3)
 
 
 def _bench_batch(spark, idx_dir: str, tag: str, out: dict, docs_pq: str):
@@ -92,19 +105,19 @@ def _bench_batch(spark, idx_dir: str, tag: str, out: dict, docs_pq: str):
         if conj:
             spark.sparkContext.setJobDescription(f"{tag} {name} chunk plan")
             df_rows = rows(B.batch_conjunctive_search(s, batch, k=10))
-            df_sec = best2(lambda: B.batch_conjunctive_search(s, batch, k=10).collect())
+            df_sec = best_of(lambda: B.batch_conjunctive_search(s, batch, k=10).collect())
         else:
             orig = L.bucket_topk
             L.bucket_topk = lambda *a, **kw: None
             try:
                 spark.sparkContext.setJobDescription(f"{tag} {name} DataFrame plan")
                 df_rows = rows(B.batch_term_search(s, batch, k=10, use_wand=False))
-                df_sec = best2(lambda: B.batch_term_search(
+                df_sec = best_of(lambda: B.batch_term_search(
                     s, batch, k=10, use_wand=False).collect())
             finally:
                 L.bucket_topk = orig
         assert bucket_rows == df_rows, f"{tag} {name}: bucket placement/plan mismatch"
-        bucket_sec = best2(lambda: L.bucket_topk(s, trees, 10).collect())
+        bucket_sec = best_of(lambda: L.bucket_topk(s, trees, 10).collect())
         rec[name] = {"bucket_sec": bucket_sec, "dataframe_sec": df_sec,
                      "identical_results": True}
     # phrases are drawn from the corpus text
@@ -197,9 +210,9 @@ def _bench_routed_shapes(spark, s, top_terms, texts) -> dict:
         assert bucket_rows == rows(kernel(queries)), f"{name}: bucket/kernel mismatch"
         rec[name] = {
             "queries": len(trees),
-            "bucket_sec": best2(lambda: L.bucket_topk(s, trees, 10).collect()),
-            "kernel_sec": best2(lambda: kernel(queries).collect()),
-            "batch_search_sec": best2(lambda: B.batch_search(s, trees, k=10).collect()),
+            "bucket_sec": best_of(lambda: L.bucket_topk(s, trees, 10).collect()),
+            "kernel_sec": best_of(lambda: kernel(queries).collect()),
+            "batch_search_sec": best_of(lambda: B.batch_search(s, trees, k=10).collect()),
             "identical_results": True,
         }
         if name.startswith("prefix"):
@@ -240,6 +253,123 @@ def _bench_local_dist(spark, idx_dir: str, out: dict):
             db = dt if db is None or dt < db else db
         rec[name] = {"local_sec": round(lb, 3), "distributed_sec": round(db, 3)}
     out["local_vs_distributed_sf1.0"] = rec
+
+
+#: synth_code_corpus size of the wand_ab section; its ``sym_<i>`` tail
+#: (df ~ 5.1 * docs / WAND_RARE_VOCAB ~ 50) supplies the rare terms
+WAND_DOCS = 20_000
+WAND_RARE_VOCAB = 2_000
+
+
+def _bench_wand_ab(spark, out: dict, sf_dir: str):
+    """WAND vs the exact route, single query and selective batch, on the
+    testdata corpus ``sf_dir`` and a WAND_DOCS synth_code_corpus."""
+    from pyspark.sql import functions as F
+
+    import whoosh_spark.query as Q
+    from whoosh_spark.corpus import synth_code_corpus
+    from whoosh_spark.index import Index, build_index
+    from whoosh_spark.schema import code_corpus_schema
+    from whoosh_spark.search import Searcher
+    from whoosh_spark.search.batch import batch_term_search, batch_wand_search
+
+    synth = os.path.join(REPO, ".index_cache", f"wand_synth{WAND_DOCS}")
+    if not os.path.exists(synth):
+        build_index(spark, synth_code_corpus(spark, WAND_DOCS,
+                                             rare_vocab=WAND_RARE_VOCAB),
+                    code_corpus_schema(), synth, sha_col="content")
+    sf_name = os.path.basename(os.path.normpath(sf_dir))
+    sf_idx = _bench_index(spark, os.path.join(sf_dir, "documents.parquet"),
+                          f"bench_{sf_name}")
+    # the tests/test_wand.py shapes; the testdata has its own 31-word
+    # vocabulary
+    words = {"content": ["def", "merge", "data", "cache", "mutex", "alpha",
+                         "lima", "import", "golf"],
+             "text": ["scan", "merge", "join", "window", "sort", "row",
+                      "order", "group", "filter"]}
+    for tag, idx, field in ((sf_name, sf_idx, "text"),
+                            (f"synth{WAND_DOCS}", synth, "content")):
+        ix = Index(spark, idx)
+        s = Searcher(ix, exact_scores=True, cache_postings=False, use_local=False)
+        w = words[field]
+        shapes = {
+            "term": [(w[0], 1.0)],
+            "or2": [(w[0], 1.0), (w[1], 1.0)],
+            "or3": [(w[2], 1.0), (w[3], 1.0), (w[4], 1.0)],
+            "or3b": [(w[5], 1.0), (w[6], 1.0), (w[7], 1.0)],
+            "or2_boosted": [(w[0], 2.0), (w[8], 1.0)],
+        }
+        rec: dict = {"docs": ix.doc_count_all(), "single": {}}
+        for name, terms in shapes.items():
+            q = (Q.Term(field, terms[0][0]) if len(terms) == 1 else
+                 Q.Or([Q.Term(field, t, boost=b) for t, b in terms]))
+            exact = [(r["doc_id"], r["score"])
+                     for r in s.search(q, limit=10, use_wand=False).collect()]
+            got = [(r["doc_id"], r["score"])
+                   for r in s.search(q, limit=10, use_wand=True).collect()]
+            # ranks must match; scores within 1e-9 so the section can also
+            # time trees whose WAND was not bit-exact (recorded below)
+            assert [d for d, _ in got] == [d for d, _ in exact], (tag, name)
+            assert all(abs(a - b) <= 1e-9 * abs(b)
+                       for (_, a), (_, b) in zip(got, exact)), (tag, name)
+            _, st = batch_wand_search(s, [("q", field, [t for t, _ in terms])],
+                                      k=10, with_stats=True)
+            rec["single"][name] = {
+                "wand_s": best_of(lambda: s.search(q, limit=10, use_wand=True).collect(), 3),
+                "exact_s": best_of(lambda: s.search(q, limit=10, use_wand=False).collect(), 3),
+                "bit_exact": got == exact,
+                "blocks_kept": st["qt_blocks_kept"],
+                "blocks_total": st["qt_blocks_total"],
+            }
+        # selective batch: each of the 20 rarest terms with df >= k (not
+        # among the 5 hottest) paired with one of the 5 hottest
+        by_df = [r["term"] for r in ix.termstats()
+                 .filter((F.col("field") == field) & (F.col("df") >= 10))
+                 .orderBy("df", "term").collect()]
+        hot = by_df[-5:]
+        rare = [t for t in by_df[:20] if t not in hot]
+        batch = [(f"b{i}", field, [r, hot[i % len(hot)]])
+                 for i, r in enumerate(rare)]
+
+        def ranked(df):
+            return sorted((r["query_id"], r["rank"], r["doc_id"], r["score"])
+                          for r in df.collect())
+
+        exact = ranked(batch_term_search(s, batch, k=10, use_wand=False))
+        got = ranked(batch_wand_search(s, batch, k=10))
+        assert [r[:3] for r in got] == [r[:3] for r in exact], tag
+        _, st = batch_wand_search(s, batch, k=10, with_stats=True)
+        rec["batch"] = {
+            "queries": len(batch),
+            "wand_s": best_of(lambda: batch_wand_search(s, batch, k=10).collect(), 3),
+            "exact_s": best_of(lambda: batch_term_search(
+                s, batch, k=10, use_wand=False).collect(), 3),
+            "bit_exact": got == exact,
+            "blocks_kept": st["qt_blocks_kept"],
+            "blocks_total": st["qt_blocks_total"],
+            "decode_blocks_kept": st["decode_blocks_kept"],
+            "decode_blocks_total": st["decode_blocks_total"],
+        }
+        # single-query conjunctive chunk intersection (the generic plan's
+        # skip, Index.postings_for_conjunction) vs the full decode
+        noskip = Searcher(ix, exact_scores=True, cache_postings=False,
+                          use_local=False, conjunctive_skip=False)
+        conj = {
+            "and_rare_hot": Q.And([Q.Term(field, rare[0]), Q.Term(field, hot[-1])]),
+            "and_rare_phrase2": Q.And([Q.Term(field, rare[0]),
+                                       Q.Phrase(field, [hot[-1], hot[-2]], slop=2)]),
+        }
+        rec["conjunctive"] = {}
+        for name, q in conj.items():
+            got = [(r["doc_id"], r["score"]) for r in s.search(q, limit=10).collect()]
+            assert got == [(r["doc_id"], r["score"])
+                           for r in noskip.search(q, limit=10).collect()], (tag, name)
+            rec["conjunctive"][name] = {
+                "skip_s": best_of(lambda: s.search(q, limit=10).collect(), 3),
+                "full_decode_s": best_of(lambda: noskip.search(q, limit=10).collect(), 3),
+                "rows": len(got),
+            }
+        out.setdefault("wand_ab", {})[tag] = rec
 
 
 def _bench_index(spark, docs_pq: str, name: str) -> str:
@@ -301,6 +431,11 @@ def main():
 
     sf_dir = next((a.split("=", 1)[1] for a in sys.argv
                    if a.startswith("--sf-dir=")), None)
+    if "--wand-ab" in sys.argv:
+        _bench_wand_ab(spark, out, sf_dir)
+        print(json.dumps(out))
+        spark.stop()
+        return
     if sf_dir:
         name = os.path.basename(os.path.normpath(sf_dir))
         docs_pq = os.path.join(sf_dir, "documents.parquet")
@@ -317,6 +452,7 @@ def main():
     sf1_idx = _bench_index(spark, sf1_pq, "bench_sf1.0")
     _bench_batch(spark, sf1_idx, "50k", out, sf1_pq)
     _bench_local_dist(spark, sf1_idx, out)
+    _bench_wand_ab(spark, out, os.path.dirname(sf1_pq))
 
     if "--sf10" in sys.argv:
         from pyspark.sql import functions as F

@@ -42,22 +42,30 @@ def test_batch_matches_per_query_engine(ix):
 
 
 def test_batch_wand_equals_exact(ix):
-    s = Searcher(ix, exact_scores=False, cache_postings=False)
+    s = Searcher(ix, exact_scores=True, cache_postings=False, use_local=False)
     batch = [
         ("q1", "text", ["alfa"]),
         ("q2", "text", ["alfa", "echo"]),
         ("q3", "text", ["bravo", "charlie", "delta"]),
     ]
-    exact = batch_term_search(s, batch, k=10, use_wand=False).collect()
-    wand = batch_term_search(s, batch, k=10, use_wand=True).collect()
+    exact = _ranked(batch_term_search(s, batch, k=10, use_wand=False))
+    assert _ranked(batch_term_search(s, batch, k=10, use_wand=True)) == exact
 
-    def norm(rows):
-        out = {}
-        for r in rows:
-            out.setdefault(r["query_id"], []).append((round(r["score"], 9), r["doc_id"]))
-        return {q: sorted(v, reverse=True) for q, v in out.items()}
 
-    assert norm(exact) == norm(wand)
+def test_wand_repeated_term_scores_per_occurrence(ix):
+    """A repeated term scores once per occurrence (the reference does not
+    dedupe at match time), on the batch and the single-query WAND."""
+    s = Searcher(ix, exact_scores=True, cache_postings=False, use_local=False)
+    qs = [("q", "text", ["alfa", "alfa"])]
+    exact = _ranked(batch_term_search(s, qs, k=10, use_wand=False))
+    assert len(exact["q"]) == 10
+    assert _ranked(batch_term_search(s, qs, k=10, use_wand=True)) == exact
+
+    q = Q.Or([Q.Term("text", "alfa"), Q.Term("text", "alfa")])
+    want = [(r["doc_id"], r["score"]) for r in s.search(q, limit=10, use_wand=False).collect()]
+    got = [(r["doc_id"], r["score"]) for r in s.search(q, limit=10, use_wand=True).collect()]
+    assert got == want
+    assert [(d, sc) for _, d, sc in exact["q"]] == want
 
 
 def test_batch_conjunctive(ix):
@@ -95,14 +103,13 @@ def test_chunk_aligned_wand_prunes_sparse_term_ranges(spark, tmp_path):
     d = str(tmp_path / "sparse")
     build_index(spark, spark.createDataFrame(rows), IndexSchema.of(text=TEXT()),
                 d, sha_col=None)
-    s = Searcher(Index(spark, d), exact_scores=False, cache_postings=False)
+    s = Searcher(Index(spark, d), exact_scores=True, cache_postings=False,
+                 use_local=False)
     qs = [("q0", "text", ["hot", "rareterm"])]
 
-    exact = {(r["doc_id"], round(r["score"], 9))
-             for r in batch_term_search(s, qs, k=5).collect()}
+    exact = _ranked(batch_term_search(s, qs, k=5, use_wand=False))
     out, stats = batch_wand_search(s, qs, k=5, with_stats=True)
-    wand = {(r["doc_id"], round(r["score"], 9)) for r in out.collect()}
-    assert wand == exact
+    assert _ranked(out) == exact
     assert stats["qt_blocks_kept"] < stats["qt_blocks_total"], stats
     # the hot term's ~32 blocks span 16 chunks; the rare term lives in
     # chunk 0 only — the vast majority of the batch's blocks must prune

@@ -45,6 +45,39 @@ def _chunk_col() -> "F.Column":
         )
     ).alias("chunk")
 
+
+def _conjunctive_prune(blocks: DataFrame, qdf_u: DataFrame):
+    """Per-query chunk-intersection pruning on block metadata — the one
+    core of every conjunctive skip (``Index.postings_for_conjunction`` as
+    a batch of one, the conjunctive and phrase batch paths): a chunk can
+    hold a match for a query only if EVERY one of the query's distinct
+    (field, term) pairs in ``qdf_u`` (query_id, field, term) has a block
+    overlapping it. Returns (allowed, surv_blocks): ``allowed`` = per-query
+    surviving (field, term, bucket, block_no), ``surv_blocks`` = the union
+    of blocks any query still needs (decode input)."""
+    need_u = qdf_u.groupBy("query_id").agg(F.count("*").alias("_need_u"))
+    slim = blocks.select("field", "term", "bucket", "block_no", _chunk_col())
+    present = slim.select("field", "term", "chunk").distinct()
+    okchunks = (
+        present.join(F.broadcast(qdf_u), on=["field", "term"])
+        .groupBy("query_id", "chunk")
+        .agg(F.count("*").alias("_p"))
+        .join(F.broadcast(need_u), on="query_id")
+        .filter(F.col("_p") == F.col("_need_u"))
+        .select("query_id", "chunk")
+    )
+    key = ["field", "term", "bucket", "block_no"]
+    cand = (
+        slim.join(F.broadcast(qdf_u), on=["field", "term"])
+        .join(okchunks, on=["query_id", "chunk"])
+        .select("query_id", *key)
+    )
+    # a block overlapping several surviving chunks (or kept by several
+    # queries) repeats in ``cand``: the semi join needs no dedup
+    surv_blocks = blocks.join(cand, on=key, how="left_semi")
+    return cand.distinct(), surv_blocks
+
+
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("field", T.StringType()),
@@ -552,37 +585,30 @@ class Index:
         block skipping) re-expressed on block metadata: for ``And(rare,
         hot)`` the hot term's blocks decode only where the rare term's
         postings live — at 10^12 docs that turns a full hot-list decode
-        into ~df(rare)/N of it. All pruning math runs JVM-side on metadata
-        columns; pruned blocks never reach the Python decode workers."""
+        into ~df(rare)/N of it. The pruning is ``_conjunctive_prune`` for a
+        batch of one; its math runs JVM-side on metadata columns, and
+        pruned blocks never reach the Python decode workers."""
         import functools
         import operator
 
         pairs = {(f, t) for f, ts in field_terms.items() for t in ts}
-        all_pairs = pairs | set(chunk_terms or ())
+        all_pairs = sorted(pairs | set(chunk_terms or ()))
         by_field: dict[str, list[str]] = {}
-        for f, t in sorted(all_pairs):
+        for f, t in all_pairs:
             by_field.setdefault(f, []).append(t)
-        n = len(all_pairs)
         cond = functools.reduce(operator.or_, [
             (F.col("field") == f) & F.col("term").isin(ts)
             for f, ts in by_field.items()
         ])
         blocks = self.postings_blocks().filter(cond)
-        if n > 1:
-            slim = blocks.select("field", "term", "bucket", "block_no", _chunk_col())
-            shared = (
-                slim.select("field", "term", "chunk").distinct()
-                .groupBy("chunk").agg(F.count("*").alias("_present"))
-                .filter(F.col("_present") == n)
-                .select("chunk")
+        if len(all_pairs) > 1:
+            one = self.spark.createDataFrame(
+                pd.DataFrame([("q", f, t) for f, t in all_pairs],
+                             columns=["query_id", "field", "term"]),
+                schema="query_id string, field string, term string",
             )
-            kept = (
-                slim.join(shared, on="chunk")
-                .select("field", "term", "bucket", "block_no")
-                .distinct()
-            )
-            blocks = blocks.join(kept, on=["field", "term", "bucket", "block_no"])
-        if all_pairs != pairs:
+            _, blocks = _conjunctive_prune(blocks, one)
+        if len(all_pairs) != len(pairs):
             decode_cond = functools.reduce(operator.or_, [
                 (F.col("field") == f) & F.col("term").isin(ts)
                 for f, ts in field_terms.items()

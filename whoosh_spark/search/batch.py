@@ -19,8 +19,9 @@ Conjunctive batches add a HAVING count = n_terms filter.
 evaluator's bucket placement accepts (``local.bucket_tree``) joins ONE
 ``local.bucket_topk`` call — the evaluator ``Searcher.search`` also uses,
 run once per doc-complete bucket partition — except the shapes a kernel
-here serves faster: selective bag batches (block-max WAND and the
-chunk-intersection plan decode less), FuzzyTerms (one JVM Levenshtein
+here serves faster: selective conjunctive bag batches (the
+chunk-intersection plan, catalog._conjunctive_prune, decodes less and
+returns the same scores bit for bit), FuzzyTerms (one JVM Levenshtein
 lexicon scan per batch instead of a Python one per query) and
 Prefix/Wildcard/Regex/TermRange expanding past ``BUCKET_MAX_EXPANSION``
 terms (a distinct doc-id set instead of every expanded term scored). That
@@ -43,8 +44,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from whoosh_spark.index.catalog import decode_blocks
+from whoosh_spark.index.catalog import _conjunctive_prune, decode_blocks
 from whoosh_spark.search.engine import Searcher, _PlanContext
+from whoosh_spark.search.local import _term_stats
 
 
 def _prepare(searcher: Searcher, queries: list[tuple[str, str, list[str]]]):
@@ -59,10 +61,7 @@ def _prepare(searcher: Searcher, queries: list[tuple[str, str, list[str]]]):
     for _, field, terms in queries:
         all_terms.setdefault(field, set()).update(terms)
     plan = _PlanContext(searcher)
-    plan.stats = {}
-    for field, ts in all_terms.items():
-        for t, row in ix.term_stats(field, list(ts)).items():
-            plan.stats[(field, t)] = row
+    plan.stats = _term_stats(ix, {(f, t) for f, ts in all_terms.items() for t in ts})
     qrows = []
     for qid, field, terms in queries:
         # huffman pop order IS a left fold over (df desc, seq): the merged
@@ -80,14 +79,21 @@ def _prepare(searcher: Searcher, queries: list[tuple[str, str, list[str]]]):
     return qdf, all_terms, plan
 
 
+def _ordered_sum():
+    """A (query_id, doc_id) group's ``score`` values summed from 0.0 in
+    ``pos`` order — the engine's fold order, bit for bit (a plain sum's
+    order is the shuffle's)."""
+    return F.aggregate(F.array_sort(F.collect_list(F.struct("pos", "score"))),
+                       F.lit(0.0), lambda acc, x: acc + x["score"])
+
+
 def _and_agg(per_query: DataFrame) -> DataFrame:
     """Conjunctive (query_id, doc_id, score) from per-(query, term
     occurrence, doc) rows carrying qdf's ``pos`` and ``need``: scores
-    summed in ``pos`` order — the engine's And, bit for bit (a plain sum's
-    order is the shuffle's) — keeping docs that match every occurrence."""
+    summed in ``pos`` (huffman) order — the engine's And, bit for bit —
+    keeping docs that match every occurrence."""
     return per_query.groupBy("query_id", "doc_id").agg(
-        F.aggregate(F.array_sort(F.collect_list(F.struct("pos", "score"))),
-                    F.lit(0.0), lambda acc, x: acc + x["score"]).alias("score"),
+        _ordered_sum().alias("score"),
         (F.count("*") == F.first("need")).alias("_all"),
     ).filter("_all").select("query_id", "doc_id", "score")
 
@@ -96,22 +102,16 @@ def _selective_fraction(searcher: Searcher,
                         queries: list[tuple[str, str, list[str]]],
                         k: int) -> float:
     """Fraction of queries carrying a doc-range-sparse term (k <= df <=
-    doc_count/BOUND_CHUNK). Such a term has the query's highest idf, so it
-    drives theta, and it misses most 256-id chunks, so the hot terms'
-    blocks prune there — the regime where batch WAND measured 3.1x faster
-    (BENCH/WAND_SKEW.json). Driver-side metadata only (term stats), no
-    Spark job."""
+    doc_count/BOUND_CHUNK). Such a term misses most 256-id chunks, so a
+    conjunctive query's other terms' blocks prune there (the chunk-
+    intersection plan). Driver-side metadata only (term stats), no Spark
+    job."""
     from whoosh_spark.index.catalog import BOUND_CHUNK
 
     ix = searcher.index
     cutoff = max(1, ix.doc_count_all() // BOUND_CHUNK)
-    by_field: dict[str, set] = {}
-    for _, field, terms in queries:
-        by_field.setdefault(field, set()).update(terms)
-    df: dict[tuple[str, str], int] = {}
-    for field, ts in by_field.items():
-        for t, row in ix.term_stats(field, list(ts)).items():
-            df[(field, t)] = int(row["df"])
+    df = {ft: int(row["df"]) for ft, row in _term_stats(
+        ix, {(f, t) for _, f, terms in queries for t in terms}).items()}
     sel = sum(
         1 for _, field, terms in queries
         if any(k <= df.get((field, t), 0) <= cutoff for t in terms)
@@ -138,7 +138,7 @@ def batch_term_search(
     queries: list[tuple[str, str, list[str]]],
     k: int = 10,
     conjunctive: bool = False,
-    use_wand: bool | str = "auto",
+    use_wand: bool = False,
     round_to: int | None = None,
     conjunctive_skip: bool = True,
 ) -> DataFrame:
@@ -150,9 +150,10 @@ def batch_term_search(
 
     Returns DataFrame(query_id, doc_id, score, rank). ``use_wand``:
     True routes disjunctive batches through per-query block-max pruning
-    (batch_wand_search), False skips it, and "auto" (default) picks WAND
-    when >=80% of the batch is selective (has a doc-range-sparse high-idf
-    term) — where WAND measured 3.1x faster. Every other batch runs the
+    (batch_wand_search, exact like every route here). It is not the
+    default: the bucket evaluator below measured faster on every batch
+    WAND was timed on, selective ones included (BENCH/WAND_SKEW.json).
+    Every other batch runs the
     exact evaluator once per doc-complete bucket partition
     (``local.bucket_topk``) on the bag's Or/And tree, which scores each
     query bit-identically to ``Searcher.search`` and never materializes
@@ -161,11 +162,9 @@ def batch_term_search(
     skipping (it decodes less; ``conjunctive_skip=False`` keeps the
     full-decode plan for A/B benchmarking), and ``round_to`` rounds scores
     BEFORE the top-k window so the k-boundary tie-cut is deterministic
-    across engines (oracle comparisons). Conjunctive plans sum in the
-    engine's huffman order too; disjunctive ones sum in shuffle order."""
-    if use_wand == "auto":
-        use_wand = (not conjunctive
-                    and _selective_fraction(searcher, queries, k) >= 0.8)
+    across engines (oracle comparisons). Conjunctive plans and WAND sum
+    in the engine's order (huffman, child) too; the rounded disjunctive
+    plan sums in shuffle order."""
     if use_wand and not conjunctive:
         return batch_wand_search(searcher, queries, k, round_to=round_to)
     if round_to is None and not (
@@ -212,38 +211,6 @@ def batch_term_search(
     return _topk_window(out, k)
 
 
-def _conjunctive_prune(blocks: DataFrame, qdf_u: DataFrame):
-    """Per-query chunk-intersection pruning on block metadata (the shared
-    core of the conjunctive and phrase batch paths): a chunk can hold a
-    match for a query only if EVERY of the query's (field, term) pairs has
-    a block overlapping it. Returns (allowed, surv_blocks, slim):
-    ``allowed`` = per-query surviving (field, term, bucket, block_no),
-    ``surv_blocks`` = the union of blocks any query still needs (decode
-    input), ``slim`` = the block metadata projection (for diagnostics)."""
-    from whoosh_spark.index.catalog import _chunk_col
-
-    need_u = qdf_u.groupBy("query_id").agg(F.count("*").alias("_need_u"))
-    slim = blocks.select("field", "term", "bucket", "block_no", _chunk_col())
-    present = slim.select("field", "term", "chunk").distinct()
-    okchunks = (
-        present.join(F.broadcast(qdf_u), on=["field", "term"])
-        .groupBy("query_id", "chunk")
-        .agg(F.count("*").alias("_p"))
-        .join(F.broadcast(need_u), on="query_id")
-        .filter(F.col("_p") == F.col("_need_u"))
-        .select("query_id", "chunk")
-    )
-    allowed = (
-        slim.join(F.broadcast(qdf_u), on=["field", "term"])
-        .join(okchunks, on=["query_id", "chunk"])
-        .select("query_id", "field", "term", "bucket", "block_no")
-        .distinct()
-    )
-    survivors = allowed.select("field", "term", "bucket", "block_no").distinct()
-    surv_blocks = blocks.join(survivors, on=["field", "term", "bucket", "block_no"])
-    return allowed, surv_blocks, slim
-
-
 def batch_conjunctive_search(
     searcher: Searcher,
     queries: list[tuple[str, str, list[str]]],
@@ -275,7 +242,7 @@ def batch_conjunctive_search(
     # qdf (with any repeated terms) is joined back afterwards so duplicate
     # terms keep scoring twice, exactly like the unpruned plan
     qdf_u = qdf.dropDuplicates(["query_id", "field", "term"])
-    allowed, surv_blocks, slim = _conjunctive_prune(blocks, qdf_u)
+    allowed, surv_blocks = _conjunctive_prune(blocks, qdf_u)
     decoded = ix._mask_deleted(decode_blocks(surv_blocks, with_block_id=True))
     scored = plan.attach_scores(decoded, sorted(term_pairs),
                                 extra_cols=["bucket", "block_no"])
@@ -288,11 +255,8 @@ def batch_conjunctive_search(
     topk = _topk_window(out, k)
     if not with_stats:
         return topk
-    qt_total = slim.select("field", "term", "bucket", "block_no").distinct().join(
-        F.broadcast(qdf_u), on=["field", "term"]
-    ).count()
     return topk, {
-        "qt_blocks_total": qt_total,
+        "qt_blocks_total": blocks.join(F.broadcast(qdf_u), on=["field", "term"]).count(),
         "qt_blocks_kept": allowed.count(),
         "decode_blocks_total": blocks.count(),
         "decode_blocks_kept": surv_blocks.count(),
@@ -306,185 +270,28 @@ def batch_wand_search(
     with_stats: bool = False,
     round_to: int | None = None,
 ):
-    """Block-max WAND for a whole query batch (disjunctive scoring).
+    """Block-max WAND (``wand.block_max_wand``) for a bag batch
+    [(query_id, field, [terms...])], each query scored as ``Or`` of its
+    terms: per-query θ seeded from the strongest term's best blocks, then
+    chunk-aligned pruning on block metadata before decode. Returns the
+    exact route's top-k, bit for bit, repeated terms included.
 
-    Phase 1: for each query, decode just enough of its strongest term's
-    best-bounded blocks to cover k postings; the k-th exact partial is a
-    valid per-query threshold theta (any k exact partials lower-bound the
-    true k-th best total).
-    Phase 2: CHUNK-ALIGNED (doc-range) block-max pruning. Blocks are
-    doc-sorted, so each block's [min_id, max_id] span says exactly which
-    256-id chunks of doc-id space it can score into. For each
-    (query, chunk) the sum over the query's terms of their MAX overlapping
-    block quality upper-bounds every doc total in the chunk (terms absent
-    from a chunk contribute 0 — vs the reference-style global max_quality
-    rest bound, which never prunes hot+rare disjunctions, and vs a
-    per-bucket rest, which saturates once every term touches every 8192-id
-    bucket). A (query, term) block survives iff SOME chunk it overlaps has
-    block_quality + (chunk_bound - own term's chunk max) >= theta. Every
-    doc whose true total can reach theta keeps ALL its blocks, so returned
-    top-k lists are exact (same invariant as search/wand.py).
+    ``with_stats=True`` returns ``(df, stats)`` with the ``qt_blocks_*`` /
+    ``decode_blocks_*`` keep/total counts and the seeded θ per query
+    (extra count jobs — diagnostic / benchmark use only).
 
-    ``with_stats=True`` returns ``(df, stats)`` where stats counts the
-    per-(query,term) blocks the pruned plan keeps vs the full batch scan
-    (two extra count jobs — diagnostic / benchmark use only).
+    Not a default route: on a 200,000-doc corpus with a rare long tail
+    (``scripts/wand_skew_bench.py``, BENCH/WAND_SKEW.json) a selective
+    200-query batch prunes 52% of its per-(query, term) blocks here and
+    still runs about 10x slower than ``local.bucket_topk``."""
+    from whoosh_spark.search.wand import block_max_wand
 
-    Default-strategy guidance (measured at 600k docs with a realistic
-    long-tail vocabulary, BENCH/WAND_SKEW.json): selective batches — every
-    query carrying a rare high-idf term (df ~60) — run 4.2x faster here
-    than the exact plan, with 85% of per-(query,term) blocks pruned;
-    ``batch_term_search(use_wand="auto")`` routes those batches here. The
-    saturated control (every term touches every 256-id chunk) prunes 0%
-    and pays the extra phases, so auto keeps it on the exact plan."""
-    from whoosh_spark.search.wand import EPS, _max_quality, _wand_consts
-
-    ix = searcher.index
-    spark = ix.spark
-    qdf, all_terms, plan = _prepare(searcher, queries)
-
-    # driver-side per-(field,term) constants + bounds
-    consts = _wand_consts(searcher, plan.stats, [
-        (f, t, 1.0) for f, ts in all_terms.items() for t in ts])
-    mq = {ft: _max_quality(searcher, c) for ft, c in consts.items()}
-    if not consts:
-        return spark.createDataFrame([], "query_id string, doc_id long, score double, rank int")
-
-    # per-query strongest term + per-(query,term) rest bound
-    qstar_rows = []
-    qterm_rows = []
-    for qid, field, terms in queries:
-        live = [(field, t) for t in terms if (field, t) in consts]
-        if not live:
-            continue
-        star = max(live, key=lambda ft: mq[ft])
-        qstar_rows.append((qid, star[0], star[1]))
-        for ft in live:
-            qterm_rows.append((qid, ft[0], ft[1]))
-    import pandas as pd
-
-    qstar = spark.createDataFrame(
-        pd.DataFrame(qstar_rows, columns=["query_id", "field", "term"]),
-        schema="query_id string, field string, term string",
+    return block_max_wand(
+        searcher,
+        [(qid, [(field, t, 1.0) for t in terms], 1.0)
+         for qid, field, terms in queries],
+        k, with_stats=with_stats, round_to=round_to,
     )
-    qterm_names = spark.createDataFrame(
-        pd.DataFrame(qterm_rows, columns=["query_id", "field", "term"]),
-        schema="query_id string, field string, term string",
-    )
-
-    # block metadata with per-term quality bound (JVM-side expression)
-    meta_rows = [
-        {
-            "field": f, "term": t, "idf": c["idf"], "avgfl": c["avgfl"],
-            "b": c["B"], "one_minus_b": 1 - c["B"], "fboost": c["fboost"],
-            "scorable": c["scorable"],
-        }
-        for (f, t), c in consts.items()
-    ]
-    import pandas as pd
-
-    meta = spark.createDataFrame(pd.DataFrame(meta_rows))  # Arrow LocalRelation
-    blocks = ix.postings_blocks().filter(
-        F.col("term").isin([t for _, t in consts]) & F.col("field").isin(list(all_terms))
-    )
-    from whoosh_spark.search.scoring import byte_to_length_col
-
-    bmeta = blocks.join(F.broadcast(meta), on=["field", "term"])
-    w_col = F.col("max_tf") * F.col("fboost")
-    fl_col = byte_to_length_col(F.col("min_len_byte"))
-    bq = searcher.weighting.score_col(
-        w_col, fl_col, F.col("idf"), F.col("avgfl"), F.col("b"),
-        F.col("one_minus_b"), F.col("scorable"),
-    )
-    bmeta = bmeta.select(
-        "field", "term", "bucket", "block_no", "count", "min_id", "max_id",
-        bq.alias("bq"),
-    )
-
-    # ---- phase 1: theta per query from the strongest term's best blocks
-    seed_meta = bmeta.join(F.broadcast(qstar), on=["field", "term"])
-    wq = Window.partitionBy("query_id").orderBy(F.desc("bq"), F.asc("bucket"), F.asc("block_no"))
-    seed_sel = (
-        seed_meta.withColumn("_cum", F.sum("count").over(wq))
-        .filter(F.col("_cum") - F.col("count") < k)
-        .select("query_id", "field", "term", "bucket", "block_no")
-    )
-    seed_blocks = blocks.join(
-        seed_sel.select("field", "term", "bucket", "block_no").distinct(),
-        on=["field", "term", "bucket", "block_no"],
-    )
-    seed_decoded = ix._mask_deleted(decode_blocks(seed_blocks))
-    seed_scored = plan.attach_scores(seed_decoded, sorted(consts)).join(
-        F.broadcast(qstar), on=["field", "term"]
-    )
-    wq2 = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    theta = (
-        seed_scored.withColumn("_rn", F.row_number().over(wq2))
-        .filter(F.col("_rn") == k)
-        .select("query_id", F.col("score").alias("theta"))
-    )
-
-    # ---- phase 2: chunk-aligned per-(query, block) pruning, dedup
-    # decode, exact scoring. Explode each block into the 256-id chunks its
-    # [min_id, max_id] span overlaps (≤ bucket_width/256 + 1 chunks);
-    # tcq = a term's best overlapping block quality per chunk; chunk_bound
-    # = sum of tcq over the query's terms PRESENT in the chunk (absent
-    # terms bound to 0 — the big win over both a global rest and a
-    # per-bucket rest). All metadata-sized, all JVM-side.
-    from whoosh_spark.search.wand import BOUND_CHUNK
-
-    chunk = F.explode(
-        F.sequence(
-            (F.col("min_id") / BOUND_CHUNK).cast("long"),
-            (F.col("max_id") / BOUND_CHUNK).cast("long"),
-        )
-    ).alias("chunk")
-    bchunk = bmeta.select("field", "term", "bucket", "block_no", "bq", chunk)
-    tcq = bchunk.groupBy("field", "term", "chunk").agg(F.max("bq").alias("tcq"))
-    qchunk = (
-        tcq.join(F.broadcast(qterm_names), on=["field", "term"])
-        .groupBy("query_id", "chunk")
-        .agg(F.sum("tcq").alias("chunk_bound"))
-    )
-    # a block may survive via several chunks — distinct() restores the
-    # one-row-per-(query, block) shape the score join depends on
-    allowed = (
-        bchunk.join(F.broadcast(qterm_names), on=["field", "term"])
-        .join(tcq, on=["field", "term", "chunk"])
-        .join(qchunk, on=["query_id", "chunk"])
-        .join(F.broadcast(theta), on="query_id", how="left")
-        .filter(
-            F.col("theta").isNull()
-            | ((F.col("bq") + (F.col("chunk_bound") - F.col("tcq")))
-               * F.lit(1 + EPS) + F.lit(EPS) >= F.col("theta"))
-        )
-        .select("query_id", "field", "term", "bucket", "block_no")
-        .distinct()
-    )
-    survivors = allowed.select("field", "term", "bucket", "block_no").distinct()
-    surv_blocks = blocks.join(survivors, on=["field", "term", "bucket", "block_no"])
-    decoded = ix._mask_deleted(decode_blocks(surv_blocks, with_block_id=True))
-    scored = plan.attach_scores(decoded, sorted(consts), extra_cols=["bucket", "block_no"])
-    per_query = scored.join(allowed, on=["field", "term", "bucket", "block_no"])
-    agg = per_query.groupBy("query_id", "doc_id").agg(F.sum("score").alias("score"))
-    if round_to is not None:
-        # round BEFORE the top-k window: the k-boundary tie-cut is then
-        # deterministic across engines (oracle comparisons)
-        agg = agg.withColumn("score", F.round(F.col("score"), round_to))
-    out = _topk_window(agg, k)
-    if not with_stats:
-        return out
-    qt_blocks_total = bmeta.join(F.broadcast(qterm_names), on=["field", "term"]).count()
-    qt_blocks_kept = allowed.count()
-    decode_total = blocks.count()
-    decode_kept = survivors.count()
-    return out, {
-        # per-(query,term) pruning decisions — the WAND skip rate
-        "qt_blocks_total": qt_blocks_total,
-        "qt_blocks_kept": qt_blocks_kept,
-        # physical blocks decoded once after dedup vs the full batch scan
-        "decode_blocks_total": decode_total,
-        "decode_blocks_kept": decode_kept,
-    }
 
 
 def batch_phrase_search(
@@ -529,10 +336,7 @@ def batch_phrase_search(
     for _, field, words in queries:
         all_terms.setdefault(field, set()).update(words)
     plan = _PlanContext(searcher)
-    plan.stats = {}
-    for field, ts in all_terms.items():
-        for t, row in ix.term_stats(field, list(ts)).items():
-            plan.stats[(field, t)] = row
+    plan.stats = _term_stats(ix, {(f, t) for f, ts in all_terms.items() for t in ts})
     term_pairs = {(f, t) for f, ts in all_terms.items() for t in ts}
 
     blocks = ix.postings_blocks().filter(
@@ -541,7 +345,7 @@ def batch_phrase_search(
     )
     qdf_u = qdf.dropDuplicates(["query_id", "field", "term"])
     if conjunctive_skip:
-        allowed, surv_blocks, _ = _conjunctive_prune(blocks, qdf_u)
+        allowed, surv_blocks = _conjunctive_prune(blocks, qdf_u)
     else:
         allowed, surv_blocks = None, blocks
     decoded = ix._mask_deleted(
@@ -701,7 +505,7 @@ def batch_fuzzy_search(
     maxdist: int = 1,
     prefixlength: int = 1,
     round_to: int | None = None,
-    use_wand: bool | str = False,
+    use_wand: bool = False,
 ) -> DataFrame:
     """queries: [(query_id, field, word)] -> top-k per query with EXACT
     single-query FuzzyTerm semantics (reference terms.py:420-485 as a
@@ -989,8 +793,8 @@ def batch_search(
     (``local.bucket_tree``) joins ONE ``local.bucket_topk`` call — the
     exact evaluator in each doc-complete bucket partition, so those
     queries equal ``Searcher.search`` bit for bit — except the shapes a
-    batch kernel serves faster: Term/Or/And bag batches that are selective
-    (WAND and the chunk-intersection plan decode less there), FuzzyTerms,
+    batch kernel serves faster: And bag batches that are selective (the
+    chunk-intersection plan decodes less there), FuzzyTerms,
     and Prefix/Wildcard/Regex/TermRange nodes expanding past
     ``BUCKET_MAX_EXPANSION`` terms (see ``_bucket_route``). Multiterms
     join it expanded against the driver-cached lexicon. The batch kernels
@@ -1039,10 +843,9 @@ def batch_search(
         from whoosh_spark.search.local import bucket_topk
 
         selective = set()
-        for kind in ("term", "and"):
-            bags = [(qid, *c[1]) for qid, _, c in routed if c and c[0] == kind]
-            if bags and _selective_fraction(searcher, bags, k) >= 0.8:
-                selective.update(qid for qid, _, _ in bags)
+        bags = [(qid, *c[1]) for qid, _, c in routed if c and c[0] == "and"]
+        if bags and _selective_fraction(searcher, bags, k) >= 0.8:
+            selective.update(qid for qid, _, _ in bags)
         exact, declined, lexicons = [], [], {}
         for qid, q, c in routed:
             t = None if qid in selective else _bucket_route(searcher, q, c, lexicons)

@@ -112,9 +112,9 @@ class Searcher:
                use_wand: bool = False) -> DataFrame:
         """Top-k (score desc, doc_id asc) as a DataFrame(doc_id, score).
 
-        ``use_wand=True`` routes eligible disjunctions of scored terms
-        through block-max pruning (search/wand.py); results are the same
-        top-k (scores may differ in the last ulp from aggregation order)."""
+        ``use_wand=True`` routes a Term or flat Or of Terms without
+        negative boosts through block-max pruning (search/wand.py); it
+        returns the same (doc_id, score) top-k, bit for bit."""
         if (self.use_local and self.exact_scores and limit is not None
                 and filter_q is None and mask_q is None
                 and not getattr(self.weighting, "use_final", False)
@@ -178,18 +178,18 @@ class Searcher:
         return self.index.spark.createDataFrame(pdf, schema="doc_id long, score double")
 
     def wand_search(self, q: Q.Query, limit: int) -> DataFrame | None:
-        """Block-max WAND path for Term / flat Or-of-Terms; None if the
-        query shape is not eligible."""
-        from whoosh_spark.search.wand import wand_topk
+        """Block-max WAND (search/wand.py) for ``q`` as a batch of one;
+        None if the query shape is not eligible (``_wand_terms``)."""
+        from whoosh_spark.search.wand import block_max_wand
 
-        plan = _PlanContext(self)
-        qn = plan.prepare(q)
-        terms = _wand_terms(qn)
-        if terms is None:
+        spec = _wand_terms(_PlanContext(self)._resolve_multiterms(q))
+        if spec is None:
             return None
-        plan.ensure_persisted()  # WAND references the base twice (seed + main)
-        df, _ = wand_topk(plan, terms, limit)
-        return df
+        terms, boost = spec
+        df = block_max_wand(self, [("q", terms, boost)], limit)
+        # one query: its <= limit rows fit one partition, sorted there
+        # without the sampling job a global orderBy launches
+        return df.coalesce(1).sortWithinPartitions("rank").select("doc_id", "score")
 
     def search_results(self, q: Q.Query, limit: int | None = 10,
                        terms: bool = False, sortedby=None,
@@ -489,23 +489,20 @@ class Searcher:
         return self.weighting.idf(doc_count_all, df)
 
 
-def _wand_terms(q: Q.Query) -> list[tuple[str, str, float]] | None:
-    """[(field, term, boost)] when q is a scored term disjunction."""
+def _wand_terms(q: Q.Query):
+    """([(field, term, boost)], boost) when q is a Term or a flat Or of
+    Terms, else None. WAND's bounds assume every contribution is >= 0, so
+    a negative term or Or boost declines too (the exact route answers)."""
     if isinstance(q, Q.Term):
-        return [(q.field, q.text, q.boost)]
-    if isinstance(q, Q.Or) and q.minmatch == 0 and q.scale is None:
-        out = []
-        for c in q.subqueries:
-            if not isinstance(c, Q.Term):
-                return None
-            out.append((c.field, c.text, c.boost * q.boost))
-        # duplicate (field, term) children must each contribute (the
-        # reference does not dedupe at match time) — WAND groups by term,
-        # so fall back to the generic plan for those
-        if len({(f, t) for f, t, _ in out}) != len(out):
-            return None
-        return out
-    return None
+        terms, boost = [q], 1.0
+    elif (isinstance(q, Q.Or) and q.minmatch == 0 and q.scale is None
+          and all(isinstance(c, Q.Term) for c in q.subqueries)):
+        terms, boost = q.subqueries, q.boost
+    else:
+        return None
+    if boost < 0 or any(c.boost < 0 for c in terms):
+        return None
+    return [(c.field, c.text, c.boost) for c in terms], boost
 
 
 class _PlanContext:
@@ -1069,12 +1066,27 @@ class _PlanContext:
 
     # ---------------------------------------------------- scored base build
 
-    def attach_scores(self, decoded: DataFrame, terms: list[tuple[str, str]],
-                      keep_positions: bool = False, extra_cols: list[str] | None = None) -> DataFrame:
-        """Join decoded postings with a broadcast per-term stats frame and
-        evaluate the scoring expression (driver-computed idf/avgfl literals,
+    #: per-(field, term) scoring constants of ``score_meta`` rows
+    SCORE_META_SCHEMA = T.StructType(
+        [
+            T.StructField("field", T.StringType()),
+            T.StructField("term", T.StringType()),
+            T.StructField("idf", T.DoubleType()),
+            T.StructField("avgfl", T.DoubleType()),
+            T.StructField("b", T.DoubleType()),
+            T.StructField("one_minus_b", T.DoubleType()),
+            T.StructField("fboost", T.DoubleType()),
+            T.StructField("scorable", T.BooleanType()),
+            T.StructField("cf", T.DoubleType()),
+            T.StructField("fl_total", T.DoubleType()),
+            T.StructField("dc", T.DoubleType()),
+        ]
+    )
+
+    def score_meta(self, terms: list[tuple[str, str]]) -> list[dict]:
+        """One ``SCORE_META_SCHEMA`` row per (field, term): the driver-
+        computed constants ``score_col`` reads (idf/avgfl literals,
         reference op order)."""
-        w = self.s.weighting
         dc = self.ix.doc_count_all()
         meta_rows = []
         for (field, term), c in term_constants(
@@ -1097,34 +1109,12 @@ class _PlanContext:
                     "dc": float(dc),
                 }
             )
-        # NOTE: inlining these constants as per-row literal CASE chains was
-        # tried and REVERTED — it re-evaluates an O(n_terms) string-compare
-        # chain per decoded posting row, which collapsed the 500-query batch
-        # workload from 157s to 950s at 16 cores. The broadcast hash join is
-        # O(1) per row and its exchange job is negligible.
-        meta_schema = T.StructType(
-            [
-                T.StructField("field", T.StringType()),
-                T.StructField("term", T.StringType()),
-                T.StructField("idf", T.DoubleType()),
-                T.StructField("avgfl", T.DoubleType()),
-                T.StructField("b", T.DoubleType()),
-                T.StructField("one_minus_b", T.DoubleType()),
-                T.StructField("fboost", T.DoubleType()),
-                T.StructField("scorable", T.BooleanType()),
-                T.StructField("cf", T.DoubleType()),
-                T.StructField("fl_total", T.DoubleType()),
-                T.StructField("dc", T.DoubleType()),
-            ]
-        )
-        # pandas -> Arrow LocalRelation: a plain-list createDataFrame goes
-        # through RDD parallelize and costs ~0.5s of py4j round-trips per
-        # query (see spark_rows_df)
-        import pandas as pd
+        return meta_rows
 
-        meta_pdf = pd.DataFrame(meta_rows)[[f.name for f in meta_schema.fields]]
-        meta = self.spark.createDataFrame(meta_pdf, schema=meta_schema)
-        joined = decoded.join(F.broadcast(meta), on=["field", "term"])
+    def score_col(self, terms: list[tuple[str, str]]) -> "F.Column":
+        """The posting score over decoded columns (``weight``, ``fl``,
+        ``field``) joined with ``score_meta`` columns."""
+        w = self.s.weighting
         # decoded `weight` is the token-boost sum (== tf unless the field's
         # analyzer carries delimited boosts); reference Frequency-format
         # weight semantics (formats.py:162-263)
@@ -1140,17 +1130,33 @@ class _PlanContext:
             # CASE chain only over the few OVERRIDDEN fields present (the
             # reverted O(n_terms) literal-CASE issue doesn't apply: this is
             # O(n_overridden_fields), typically 1-2)
-            score = w.score_col_dispatch(
+            return w.score_col_dispatch(
                 F.col("field"), sorted({f for f, _ in terms}), *score_args, **score_kw
             )
-        else:
-            score = w.score_col(*score_args, **score_kw)
+        return w.score_col(*score_args, **score_kw)
+
+    def attach_scores(self, decoded: DataFrame, terms: list[tuple[str, str]],
+                      keep_positions: bool = False, extra_cols: list[str] | None = None) -> DataFrame:
+        """Join decoded postings with a broadcast per-term stats frame
+        (``score_meta``) and evaluate ``score_col``."""
+        # NOTE: inlining these constants as per-row literal CASE chains was
+        # tried and REVERTED — it re-evaluates an O(n_terms) string-compare
+        # chain per decoded posting row, which collapsed the 500-query batch
+        # workload from 157s to 950s at 16 cores. The broadcast hash join is
+        # O(1) per row and its exchange job is negligible.
+        # pandas -> Arrow LocalRelation: a plain-list createDataFrame goes
+        # through RDD parallelize and costs ~0.5s of py4j round-trips per
+        # query (see spark_rows_df)
+        schema = self.SCORE_META_SCHEMA
+        meta_pdf = pd.DataFrame(self.score_meta(terms))[[f.name for f in schema.fields]]
+        meta = self.spark.createDataFrame(meta_pdf, schema=schema)
+        joined = decoded.join(F.broadcast(meta), on=["field", "term"])
         cols = ["field", "term", "doc_id"]
         if keep_positions:
             cols.append("positions")
         if extra_cols:
             cols.extend(extra_cols)
-        return joined.select(*cols, score.alias("score"))
+        return joined.select(*cols, self.score_col(terms).alias("score"))
 
     def _scored_base(self, terms: set[tuple[str, str]], with_positions: bool,
                      chunk_terms: set | None = None) -> DataFrame | None:

@@ -1,205 +1,207 @@
-"""Block-max WAND: two-phase top-k with block-metadata pruning.
+"""Block-max WAND: exact top-k with block-metadata pruning.
 
-Batch re-expression of the reference's quality optimization
-(/root/reference/src/whoosh/collectors.py:405-413 skip_to_quality,
-matching/binary.py:511-548, codec/whoosh3.py:1038-1051 block skipping;
-bounds per scoring.py:199-221):
+One implementation serves a single query (``Searcher.search(use_wand=True)``,
+a batch of one) and a batch (``batch.batch_wand_search``). A query is a
+flat disjunction ``(query_id, [(field, term, boost), ...], boost)``. Re-
+expresses the reference's quality optimization (collectors.py:405-413
+skip_to_quality, matching/binary.py:511-548, codec/whoosh3.py:1038-1051;
+bounds per scoring.py:199-221) as two collected Spark steps and a final
+plan.
 
-Phase 1 — seed a threshold θ: exactly score the single term with the
-highest max_quality and take its k-th best partial score. Every document's
-total score is ≥ any single-term partial (BM25 contributions are positive),
-so θ is a valid lower bound on the true k-th best total.
+Phase 1 — seed θ from seed blocks: each query's strongest term t has its
+best-quality blocks covering k postings decoded and scored exactly; the
+k-th best is θ_t, and the query's θ is (θ_t * w) * qb, the k-th best of
+its partials (a factor >= 0 keeps their order). Every contribution is
+>= 0 (callers decline negative boosts), so a doc's total is >= its
+partial: θ <= the k-th best total. θ_t is collected per term, so queries
+sharing a strongest term seed once.
 
-Phase 2 — prune at block granularity *before decoding*: a block b of term
-t can be skipped when  block_quality(b) + Σ_{t'≠t} max_quality(t') < θ.
-Any document with true total ≥ θ has every one of its blocks kept (its
-per-block quality bound ≥ its contribution), so all candidates for the
-top-k are scored exactly; partially-scored documents are provably below θ
-and cannot intrude. The pruning filter runs on block *metadata columns*
-(max_tf, min_len_byte) JVM-side — pruned blocks never reach Python.
+Phase 2 — chunk-aligned pruning on block metadata, JVM side. A block's
+[min_id, max_id] span names the ``BOUND_CHUNK``-id chunks it scores into;
+per (query, chunk) the sum of each term occurrence's best overlapping
+block quality bounds every doc total there (an absent term adds 0). A
+(query, occurrence, block) survives iff some chunk it overlaps has
+block_quality + (chunk_bound − its own chunk max) >= θ. The surviving
+keys are collected (what broadcasting them would ship anyway) and return
+as one local relation that selects the blocks to decode and joins each
+posting to the query occurrences that kept its block.
 
-This is the plan that matters at 100 TB: for a 3-term disjunction over a
-10^12-doc index, phase 2 touches only blocks whose upper bound can reach
-the running top-k floor.
+Exactness: every block of a doc whose total reaches θ covers the doc's
+chunk, so it survives and the doc is scored in full; a doc that lost a
+block has total < θ and cannot enter the top k (``round_to`` lowers θ by
+10^-round_to so it cannot tie after rounding either). A repeated term
+scores once per occurrence; each term's score times its boost is summed
+in child order by the ordered aggregate the conjunctive plans use, and
+the sum is multiplied by the query boost — the exact evaluator's op
+order, so WAND returns the ``Searcher.search`` top-k bit for bit.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import Window, functions as F, types as T
 
-from whoosh_spark.search.scoring import byte_to_length_col, term_constants
+from whoosh_spark.index.catalog import _chunk_col, decode_blocks
+from whoosh_spark.search.scoring import byte_to_length_col
 
 EPS = 1e-12
 
-# Doc-range bound granularity: rest-bounds are computed per CHUNK of doc-id
-# space (chunk = doc_id // BOUND_CHUNK) instead of per salt bucket — a hot
-# term's full 128-posting block spans only ~BOUND_CHUNK ids, so a rare term
-# absent from that slice contributes 0 to the bound where the coarser
-# per-bucket rest (8192 ids) would still count it. Canonical constant lives
-# in the catalog (shared with conjunctive chunk-intersection skipping).
-from whoosh_spark.index.catalog import BOUND_CHUNK  # noqa: E402,F401
+_KEY = ["field", "term", "bucket", "block_no"]
 
 
-def _wand_consts(searcher, stats, terms) -> dict:
-    """(field, term) -> the shared scoring constants plus the query
-    ``boost`` and the term's bound inputs (max_tf, min_len_byte), for the
-    [(field, term, boost)] query terms that have stats."""
-    live = [(f, t, b) for f, t, b in terms if stats.get((f, t))]
-    consts = term_constants(searcher, stats, [(f, t) for f, t, _ in live])
-    for f, t, b in live:
-        st = stats[(f, t)]
-        consts[(f, t)].update(boost=b, max_tf=float(st["max_tf"]),
-                              min_len_byte=int(st["min_len_byte"]))
-    return consts
-
-
-def _max_quality(searcher, c: dict) -> float:
+def _max_quality(searcher, c: dict, st: dict) -> float:
+    """A term's best posting score bound from its ``score_meta`` row ``c``
+    and term stats ``st``."""
     from whoosh_spark.index.quantize import byte_to_length
 
-    w = searcher.weighting
-    max_w = c["max_tf"] * c["fboost"]
+    max_w = float(st["max_tf"]) * c["fboost"]
     if not c["scorable"]:
         return max_w
-    min_fl = float(byte_to_length(c["min_len_byte"]))
-    return w.max_quality(c["idf"], max_w, min_fl, c["avgfl"], c["B"])
+    min_fl = float(byte_to_length(int(st["min_len_byte"])))
+    return searcher.weighting.max_quality(c["idf"], max_w, min_fl, c["avgfl"], c["b"])
 
 
-def wand_topk(plan, terms: list[tuple[str, str, float]], k: int) -> tuple[DataFrame, dict]:
-    """Top-k for a disjunction of scored terms [(field, term, boost)].
+def block_max_wand(searcher, queries: list, k: int, with_stats: bool = False,
+                   round_to: int | None = None):
+    """Top-k per query for ``queries`` = [(query_id, [(field, term, boost),
+    ...], boost)], every boost >= 0. Returns DataFrame(query_id, doc_id,
+    score, rank); ``round_to`` rounds scores before the top-k window.
 
-    Returns (DataFrame(doc_id, score), stats) where stats reports block
-    counts before/after pruning (the observability the judge can grade).
-    """
-    s = plan.s
-    ix = plan.ix
-    consts = _wand_consts(s, plan.stats, terms)
-    if not consts:
-        return plan._empty(), {"blocks_total": 0, "blocks_kept": 0, "theta": 0.0}
+    ``with_stats=True`` returns ``(df, stats)``: per-(query, occurrence)
+    blocks kept vs total (``qt_blocks_*``), physical blocks decoded vs the
+    full scan (``decode_blocks_*``) and the seeded θ per query (``theta``)
+    — extra count jobs, for diagnostics and benchmarks only."""
+    from whoosh_spark.search.batch import _ordered_sum, _topk_window
+    from whoosh_spark.search.engine import _PlanContext
+    from whoosh_spark.search.local import _term_stats
 
-    mq = {ft: _max_quality(s, c) * c["boost"] for ft, c in consts.items()}
-
-    # ---- phase 1: exact partials of the strongest term ----
-    t_star = max(mq, key=lambda ft: mq[ft])
-    p1 = plan.base.filter(
-        (F.col("field") == t_star[0]) & (F.col("term") == t_star[1])
-    ).select("doc_id", (F.col("score") * F.lit(consts[t_star]["boost"])).alias("score"))
-    seed = p1.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    theta = seed[-1]["score"] if len(seed) >= k else float("-inf")
-
-    # ---- phase 2: chunk-aligned (doc-range) block pruning on metadata,
-    # decode survivors, exact score. Same invariant as batch.py: a doc's
-    # postings for a term sit in exactly one block whose [min_id, max_id]
-    # span covers the doc's chunk, so sum-over-terms of per-chunk best
-    # overlapping block quality upper-bounds every doc total in the chunk —
-    # strictly tighter than the global max_quality rest (which never prunes
-    # hot-term disjunctions) and than a per-bucket rest (8192-id buckets
-    # saturate long before 256-id chunks do).
-    kept = _pruned_blocks(s, ix, consts, theta)
-
-    from whoosh_spark.index.catalog import decode_blocks
-
-    decoded = ix._mask_deleted(decode_blocks(kept))
-    # score with the same meta-join machinery as the exact path
-    scored = plan.attach_scores(decoded, [(f, t) for f, t, _ in terms])
-    boost_map = {(f, t): b for f, t, b in terms}
-    if any(b != 1.0 for b in boost_map.values()):
-        expr = None
-        for (f, t), b in boost_map.items():
-            cond = (F.col("field") == f) & (F.col("term") == t)
-            expr = F.when(cond, F.lit(float(b))) if expr is None else expr.when(cond, F.lit(float(b)))
-        scored = scored.withColumn("score", F.col("score") * expr.otherwise(F.lit(1.0)))
-    agg = scored.groupBy("doc_id").agg(F.sum("score").alias("score"))
-    out = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    stats = {"theta": None if theta == float("-inf") else theta}
-    return out, stats
-
-
-def _block_meta(s, ix, consts):
-    """Query-term block rows joined with per-term scoring constants and a
-    JVM-side block-quality column ``bq`` (boost included)."""
+    ix = searcher.index
     spark = ix.spark
-    meta_rows = [
-        {
-            "field": f, "term": t, "idf": c["idf"], "avgfl": c["avgfl"],
-            "b": c["B"], "one_minus_b": 1 - c["B"], "fboost": c["fboost"],
-            "scorable": c["scorable"], "qboost": c["boost"],
-        }
-        for (f, t), c in consts.items()
-    ]
-    import pandas as pd
+    plan = _PlanContext(searcher)
+    plan.stats = _term_stats(ix, {(f, t) for _, terms, _ in queries for f, t, _ in terms})
+    live_terms = sorted(plan.stats)
+    meta = {(r["field"], r["term"]): r for r in plan.score_meta(live_terms)}
+    mq = {ft: _max_quality(searcher, c, plan.stats[ft]) for ft, c in meta.items()}
 
-    meta = spark.createDataFrame(pd.DataFrame(meta_rows))  # Arrow LocalRelation
-    fields = sorted({f for f, _ in consts})
+    # one row per (query, term occurrence) carrying its term's score
+    # constants: pos = child order, w = term boost, qb = query boost; and
+    # each query's strongest occurrence (its star)
+    occ_rows, stars = [], {}
+    for qid, terms, qb in queries:
+        live = [(pos, f, t, float(b)) for pos, (f, t, b) in enumerate(terms)
+                if (f, t) in meta]
+        if live:
+            _, f, t, b = max(live, key=lambda o: mq[(o[1], o[2])] * o[3])
+            stars[qid] = ((f, t), b, float(qb))
+            occ_rows.extend(dict(meta[(f, t)], query_id=qid, pos=pos, w=b, qb=float(qb))
+                            for pos, f, t, b in live)
+    if not occ_rows:
+        empty = spark.createDataFrame(
+            [], "query_id string, doc_id long, score double, rank int")
+        if not with_stats:
+            return empty
+        return empty, {"qt_blocks_total": 0, "qt_blocks_kept": 0,
+                       "decode_blocks_total": 0, "decode_blocks_kept": 0, "theta": {}}
+    occ_pdf = pd.DataFrame(occ_rows)
+    schema = T.StructType([T.StructField("query_id", T.StringType()),
+                           T.StructField("pos", T.IntegerType()), T.StructField("w", T.DoubleType()),
+                           T.StructField("qb", T.DoubleType()), *plan.SCORE_META_SCHEMA.fields])
+    qocc = spark.createDataFrame(occ_pdf[schema.names], schema=schema)
+
     blocks = ix.postings_blocks().filter(
-        F.col("field").isin(fields) & F.col("term").isin([t for _, t in consts])
+        F.col("term").isin(sorted({t for _, t in live_terms}))
+        & F.col("field").isin(sorted({f for f, _ in live_terms}))
     )
-    bmeta = blocks.join(F.broadcast(meta), on=["field", "term"])
-    w_col = F.col("max_tf") * F.col("fboost")
-    fl_col = byte_to_length_col(F.col("min_len_byte"))
-    bq = s.weighting.score_col(
-        w_col, fl_col, F.col("idf"), F.col("avgfl"), F.col("b"),
-        F.col("one_minus_b"), F.col("scorable"),
-    ) * F.col("qboost")
-    return bmeta.withColumn("bq", bq)
-
-
-def _pruned_blocks(s, ix, consts, theta):
-    """Chunk-aligned (doc-range) block-max pruning: a block survives iff
-    SOME chunk of doc-id space it overlaps has  block_quality + (sum over
-    the OTHER query terms of their best overlapping block quality in that
-    chunk) >= theta  (absent terms bound to 0).
-
-    Exactness: a doc d with true total >= theta lives in chunk
-    c = d // BOUND_CHUNK; for each of its terms t, d's posting sits in the
-    single block b_t(d), whose [min_id, max_id] span covers c, and
-    tcq(t', c) >= that term's contribution for every other term t' of d —
-    so bq(b_t(d)) + rest(c) >= total(d) >= theta and the block is kept.
-    Strictly tighter than a per-bucket rest (chunk ⊆ bucket ⇒ fewer terms
-    present ⇒ smaller bound), which never prunes when every term touches
-    every 8192-doc bucket."""
-    bmeta = _block_meta(s, ix, consts)
-    payload = bmeta.drop("bq", "idf", "avgfl", "b", "one_minus_b",
-                         "fboost", "scorable", "qboost")
-    if theta == float("-inf"):
-        return payload
-    chunk = F.explode(
-        F.sequence(
-            (F.col("min_id") / BOUND_CHUNK).cast("long"),
-            (F.col("max_id") / BOUND_CHUNK).cast("long"),
-        )
-    ).alias("chunk")
-    slim = bmeta.select("field", "term", "bucket", "block_no", "bq", chunk)
-    tcq = slim.groupBy("field", "term", "chunk").agg(F.max("bq").alias("tcq"))
-    chunkb = tcq.groupBy("chunk").agg(F.sum("tcq").alias("chunk_bound"))
-    kept_keys = (
-        slim.join(tcq, on=["field", "term", "chunk"])
-        .join(chunkb, on="chunk")
-        .filter(
-            (F.col("bq") + (F.col("chunk_bound") - F.col("tcq")))
-            * F.lit(1 + EPS) + F.lit(EPS) >= F.lit(theta)
-        )
-        .select("field", "term", "bucket", "block_no")
-        .distinct()
+    # a block's quality bound (JVM-side, from its max_tf and min_len_byte)
+    bq = searcher.weighting.score_col(
+        F.col("max_tf") * F.col("fboost"), byte_to_length_col(F.col("min_len_byte")),
+        F.col("idf"), F.col("avgfl"), F.col("b"), F.col("one_minus_b"),
+        F.col("scorable"),
     )
-    return payload.join(kept_keys, on=["field", "term", "bucket", "block_no"])
 
-
-def wand_block_counts(plan, terms: list[tuple[str, str, float]], k: int) -> dict:
-    """Diagnostic: how many blocks the pruned plan reads vs the full scan."""
-    s = plan.s
-    ix = plan.ix
-    consts = _wand_consts(s, plan.stats, terms)
-    if not consts:
-        return {"blocks_total": 0, "blocks_kept": 0}
-    mq = {ft: _max_quality(s, c) * c["boost"] for ft, c in consts.items()}
-    t_star = max(mq, key=lambda ft: mq[ft])
-    p1 = plan.base.filter((F.col("field") == t_star[0]) & (F.col("term") == t_star[1]))
+    # ---- phase 1: θ_t per star term over its best blocks; a query's θ
+    # is (θ_t * w) * qb, its partials' k-th best as the engine computes them
+    star_terms = sorted({ft for ft, _, _ in stars.values()})
+    star_meta = spark.createDataFrame(
+        pd.DataFrame([meta[ft] for ft in star_terms])[plan.SCORE_META_SCHEMA.names],
+        schema=plan.SCORE_META_SCHEMA)
     seed = (
-        p1.select("doc_id", (F.col("score") * F.lit(consts[t_star]["boost"])).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
+        blocks.join(F.broadcast(star_meta), on=["field", "term"])
+        .withColumn("_cum", F.sum("count").over(Window.partitionBy("field", "term").orderBy(
+            bq.desc(), F.asc("bucket"), F.asc("block_no"))))
+        .filter(F.col("_cum") - F.col("count") < k)
+        .select(*_KEY)
     )
-    theta = seed[-1]["score"] if len(seed) >= k else float("-inf")
-    total = _block_meta(s, ix, consts).count()
-    kept = _pruned_blocks(s, ix, consts, theta).count()
-    return {"blocks_total": total, "blocks_kept": kept, "theta": theta}
+    score = plan.score_col(live_terms)
+    partial = ix._mask_deleted(decode_blocks(
+        blocks.join(F.broadcast(seed), on=_KEY, how="left_semi"))).join(
+        F.broadcast(star_meta), on=["field", "term"]).select(
+        "field", "term", score.alias("score")).toPandas()
+    theta_t = {ft: float(np.sort(g.to_numpy())[-k])
+               for ft, g in partial.groupby(["field", "term"])["score"] if len(g) >= k}
+    theta = {qid: (theta_t[ft] * w) * qb
+             for qid, (ft, w, qb) in stars.items() if ft in theta_t}
+    slack = 0.0 if round_to is None else 10.0 ** -round_to
+    qtheta = spark.createDataFrame(
+        pd.DataFrame({"query_id": list(theta), "theta": [v - slack for v in theta.values()]}),
+        schema="query_id string, theta double")
+
+    # ---- phase 2: chunk-aligned pruning, one shuffle by query (every
+    # window and the dedup run inside it). tcq = the occurrence's best
+    # block quality in the chunk, chunk_bound = the sum of tcq over the
+    # query's occurrences; a block survives via any chunk it overlaps
+    w_occ = Window.partitionBy("query_id", "chunk", "pos")
+    occ = blocks.join(F.broadcast(qocc), on=["field", "term"]).select(
+        "query_id", "pos", *_KEY, "min_id", "max_id",
+        (bq * (F.col("w") * F.col("qb"))).alias("bqm"))
+    kept = (
+        occ.join(F.broadcast(qtheta), on="query_id", how="left")
+        .select("*", _chunk_col())
+        .repartition("query_id")
+        .withColumn("tcq", F.max("bqm").over(w_occ))
+        .withColumn("_rn", F.row_number().over(w_occ.orderBy("bucket", "block_no")))
+        .withColumn("chunk_bound", F.sum(F.when(F.col("_rn") == 1, F.col("tcq")))
+                    .over(Window.partitionBy("query_id", "chunk")))
+        .filter(
+            F.col("theta").isNull()
+            | ((F.col("bqm") + (F.col("chunk_bound") - F.col("tcq")))
+               * F.lit(1 + EPS) + F.lit(EPS) >= F.col("theta"))
+        )
+        .select("query_id", "pos", *_KEY)
+        .distinct()
+        .toPandas()
+    )
+    # each posting of a kept block once per query occurrence that kept
+    # it; the keys ship with the occurrences' constants as one local
+    # relation (broadcast without a Spark job) and bound the decode too
+    key_schema = T.StructType([*schema.fields, T.StructField("bucket", T.LongType()),
+                               T.StructField("block_no", T.IntegerType())])
+    keys = F.broadcast(spark.createDataFrame(
+        kept.merge(occ_pdf, on=["query_id", "pos", "field", "term"])[key_schema.names],
+        schema=key_schema))
+    decoded = ix._mask_deleted(decode_blocks(
+        blocks.join(keys, on=_KEY, how="left_semi"), with_block_id=True))
+    # each query's postings in one partition: the ordered sum and the
+    # top-k window share one shuffle
+    agg = (
+        decoded.join(keys, on=_KEY)
+        .select("query_id", "doc_id", "pos", "qb",
+                (score * F.col("w")).alias("score"))
+        .repartition("query_id").groupBy("query_id", "doc_id")
+        .agg((_ordered_sum() * F.first("qb")).alias("score"))
+    )
+    if round_to is not None:
+        agg = agg.withColumn("score", F.round(F.col("score"), round_to))
+    out = _topk_window(agg, k)
+    if not with_stats:
+        return out
+    return out, {
+        # per-(query, occurrence) pruning decisions — the WAND skip rate
+        "qt_blocks_total": occ.count(),
+        "qt_blocks_kept": len(kept),
+        # physical blocks decoded once vs the full batch scan
+        "decode_blocks_total": blocks.count(),
+        "decode_blocks_kept": len(kept.drop_duplicates(_KEY)),
+        "theta": theta,
+    }
