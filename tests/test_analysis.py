@@ -46,7 +46,7 @@ def test_random_texts_match_whoosh(whoosh_ref):
         assert standard_analyzer().tokens(text) == ref_tokens(whoosh_ref, text)
 
 
-def test_analyze_doc_aggregation(whoosh_ref):
+def test_analyze_doc_aggregation():
     text = "red red town render red a it"
     terms, length = standard_analyzer().analyze_doc(text)
     d = {t: (tf, ps) for t, tf, ps in terms}

@@ -63,10 +63,7 @@ def test_position_lists_property(lists):
         assert list(a) == list(b)
 
 
-def test_quantize_matches_reference_table():
-    import sys
-
-    sys.path.insert(0, "/root/reference/src")
+def test_quantize_matches_reference_table(whoosh_ref):
     from whoosh.util.numeric import _length_byte_cache
     from whoosh.util.numeric import byte_to_length as ref_b2l
     from whoosh.util.numeric import length_to_byte as ref_l2b

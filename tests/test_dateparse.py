@@ -231,7 +231,7 @@ def test_free_date_queries_match_reference(our_index, whoosh_ref, qs):
     assert got == want, (qs, got, want)
 
 
-def test_boolean_field(our_index, whoosh_ref):
+def test_boolean_field(our_index):
     ix, schema = our_index
     s = Searcher(ix)
     for text, expect in [("true", [0, 2, 4, 6]), ("yes", [0, 2, 4, 6]),

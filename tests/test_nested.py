@@ -24,12 +24,16 @@ DOCS = [
 
 
 @pytest.fixture(scope="module")
-def pair(spark, whoosh_ref, tmp_path_factory):
+def nested_ours(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("nested"))
     schema = IndexSchema.of(type=ID(stored=True), text=TEXT(stored=True))
     df = spark.createDataFrame([Row(doc_id=i, type=t, text=x) for i, (t, x) in enumerate(DOCS)])
     build_index(spark, df, schema, d, sha_col=None)
+    return Index(spark, d)
 
+
+@pytest.fixture(scope="module")
+def pair(nested_ours, whoosh_ref):
     from whoosh import fields
     from whoosh.filedb.filestore import RamStorage
 
@@ -40,7 +44,7 @@ def pair(spark, whoosh_ref, tmp_path_factory):
     for t, x in DOCS:
         w.add_document(type=t, text=x)
     w.commit()
-    return Index(spark, d), wix
+    return nested_ours, wix
 
 
 def test_nested_parent_matches_whoosh(pair, whoosh_ref):
@@ -61,8 +65,8 @@ def test_nested_parent_matches_whoosh(pair, whoosh_ref):
         assert s1 == pytest.approx(s2, rel=1e-12), d1
 
 
-def test_nested_parent_limit_and_fn(pair, whoosh_ref):
-    ix, _ = pair
+def test_nested_parent_limit_and_fn(nested_ours):
+    ix = nested_ours
     got = nested_parent(
         Searcher(ix), Q.Term("type", "chap"), Q.Term("text", "day"),
         per_parent_limit=1, score_fn="max", limit=10,

@@ -146,7 +146,7 @@ def test_search_scores_match_reference(pb_ix, whoosh_ref, spark):
             assert ours == want, term
 
 
-def test_payloads_survive_merge(spark, tmp_path, whoosh_ref):
+def test_payloads_survive_merge(spark, tmp_path):
     from whoosh_spark.index.build import build_segment
     from whoosh_spark.index.merge import merge_segments
 

@@ -57,14 +57,18 @@ def _build_whoosh(whoosh_ref, field_defs, rows):
 
 
 @pytest.fixture(scope="module")
-def b1(spark, whoosh_ref, tmp_path_factory):
+def b1_ours(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("b1"))
     schema = IndexSchema.of(key=ID(stored=True), name=TEXT(), value=TEXT())
     df = spark.createDataFrame(
         [Row(doc_id=i, key=k, name=n, value=v) for i, (k, n, v) in enumerate(B1_DOCS)]
     )
     build_index(spark, df, schema, d, sha_col=None)
+    return Index(spark, d)
 
+
+@pytest.fixture(scope="module")
+def b1(b1_ours, whoosh_ref):
     from whoosh import fields
 
     wix = _build_whoosh(
@@ -72,7 +76,7 @@ def b1(spark, whoosh_ref, tmp_path_factory):
         lambda: dict(key=fields.ID(stored=True), name=fields.TEXT(), value=fields.TEXT()),
         [dict(key=k, name=n, value=v) for k, n, v in B1_DOCS],
     )
-    return Index(spark, d), wix
+    return b1_ours, wix
 
 
 @pytest.fixture(scope="module")
@@ -95,17 +99,22 @@ def b2(spark, whoosh_ref, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def w100(spark, whoosh_ref, tmp_path_factory):
+def w100_ours(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("w100"))
     docs = _weighting100_docs()
     schema = IndexSchema.of(text=TEXT())
     df = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in enumerate(docs)])
     build_index(spark, df, schema, d, sha_col=None)
+    return Index(spark, d)
 
+
+@pytest.fixture(scope="module")
+def w100(w100_ours, whoosh_ref):
     from whoosh import fields
 
+    docs = _weighting100_docs()
     wix = _build_whoosh(whoosh_ref, lambda: dict(text=fields.TEXT()), [dict(text=t) for t in docs])
-    return Index(spark, d), wix
+    return w100_ours, wix
 
 
 # ------------------------------------------------------------------ helpers
@@ -233,8 +242,8 @@ def test_b1_rank_identity(b1, whoosh_ref, name, mk_ours, mk_theirs):
     assert_identical(got, want, name)
 
 
-def test_b1_expected_keys(b1):
-    ix, _ = b1
+def test_b1_expected_keys(b1_ours):
+    ix = b1_ours
     got = ours(ix, Q.Term("name", "yellow"))
     assert [d for d, _ in got] == [0, 4]  # A, E (reference test_searching.py:70-73)
 
@@ -249,7 +258,7 @@ def test_b2_score_retrieval(b2, whoosh_ref):
     assert all(s not in (0, 1) for _, s in got)
 
 
-def test_b3_resultcopy(spark, whoosh_ref, tmp_path_factory):
+def test_b3_resultcopy(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("b3"))
     schema = IndexSchema.of(a=TEXT(stored=True))
     df = spark.createDataFrame([Row(doc_id=i, a=t) for i, t in enumerate(B3_DOCS)])
@@ -325,7 +334,7 @@ def test_w100_other_weightings(w100, whoosh_ref):
         assert_identical(got, want, type(ow).__name__)
 
 
-def test_dfree_matches_formula(w100, whoosh_ref):
+def test_dfree_matches_formula(w100_ours):
     """DFree vs the reference formula evaluated directly (scoring.py:337-352;
     the reference's scorer wrapper itself crashes on a missing method)."""
     import math
@@ -333,7 +342,7 @@ def test_dfree_matches_formula(w100, whoosh_ref):
     from whoosh_spark.index.quantize import quantize_length
     from whoosh_spark.search.scoring import DFree
 
-    ix, _ = w100
+    ix = w100_ours
     docs = _weighting100_docs()
     toks = [d.split() for d in docs]
     lens = [len(t) for t in toks]

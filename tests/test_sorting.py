@@ -31,7 +31,7 @@ B4 = [
 
 
 @pytest.fixture(scope="module")
-def b4(spark, whoosh_ref, tmp_path_factory):
+def b4_ours(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("b4"))
     schema = IndexSchema.of(
         id=ID(stored=True), num=NUMERIC(stored=True), frac=NUMERIC(stored=True),
@@ -39,7 +39,11 @@ def b4(spark, whoosh_ref, tmp_path_factory):
     )
     rows = [Row(doc_id=i, id=i_, num=n, frac=f, tag=t, ev="a") for i, (i_, n, t, f) in enumerate(B4)]
     build_index(spark, spark.createDataFrame(rows), schema, d, sha_col=None)
+    return Index(spark, d)
 
+
+@pytest.fixture(scope="module")
+def b4(b4_ours, whoosh_ref):
     from whoosh import fields
     from whoosh.filedb.filestore import RamStorage
 
@@ -55,7 +59,7 @@ def b4(spark, whoosh_ref, tmp_path_factory):
     for i_, n, t, f in B4:
         w.add_document(id=i_, num=n, frac=f, tag=t, ev="a")
     w.commit()
-    return Index(spark, d), wix
+    return b4_ours, wix
 
 
 @pytest.mark.parametrize("field,reverse", [
@@ -122,8 +126,8 @@ def test_collapse_matches_whoosh(b4, whoosh_ref):
     assert sorted(got) == sorted(want)  # same kept set; order: score ties -> doc order both
 
 
-def test_range_facet(b4):
-    ix, _ = b4
+def test_range_facet(b4_ours):
+    ix = b4_ours
     s = Searcher(ix)
     from whoosh_spark.search.sorting import _matches_with_docs
 
@@ -137,8 +141,8 @@ def test_range_facet(b4):
     assert got == {0: 3, 1: 3, 2: 3}
 
 
-def test_facet_best(b4):
-    ix, _ = b4
+def test_facet_best(b4_ours):
+    ix = b4_ours
     got = {r["value"]: r["best_doc_id"] for r in facet_best(Searcher(ix), Q.Every("ev"), "tag").collect()}
     # Every scores all 1.0 -> best = lowest doc_id per tag
     assert got == {"one": 0, "three": 1, "two": 2}
@@ -161,11 +165,11 @@ def test_matched_terms(b4, whoosh_ref):
     assert got == want
 
 
-def test_sorted_search_respects_filter_and_mask(spark, b4):
+def test_sorted_search_respects_filter_and_mask(spark, b4_ours):
     """search_results(sortedby=...) must honor filter_q/mask_q (they fold
     into the match set as Require/AndNot on the unscored path); unknown
     kwargs raise instead of being silently dropped."""
-    ix, _ = b4
+    ix = b4_ours
     s = Searcher(ix)
     every = Q.Term("ev", "a")
 

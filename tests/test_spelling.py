@@ -19,11 +19,15 @@ DOCS = [
 
 
 @pytest.fixture(scope="module")
-def pair(spark, whoosh_ref, tmp_path_factory):
+def spell_ours(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("spell"))
     df = spark.createDataFrame([Row(doc_id=i, value=t) for i, t in enumerate(DOCS)])
     build_index(spark, df, IndexSchema.of(value=TEXT()), d, sha_col=None)
+    return Index(spark, d)
 
+
+@pytest.fixture(scope="module")
+def pair(spell_ours, whoosh_ref):
     from whoosh import fields
     from whoosh.filedb.filestore import RamStorage
 
@@ -32,7 +36,7 @@ def pair(spark, whoosh_ref, tmp_path_factory):
     for t in DOCS:
         w.add_document(value=t)
     w.commit()
-    return Index(spark, d), wix
+    return spell_ours, wix
 
 
 CASES = [
@@ -54,8 +58,8 @@ def test_suggest_matches_whoosh(pair, whoosh_ref, text, limit, maxdist, prefix):
     assert got == want, f"{text}: {got} != {want}"
 
 
-def test_correct_query_terms(pair):
-    ix, _ = pair
+def test_correct_query_terms(spell_ours):
+    ix = spell_ours
     fixes = correct_query_terms(ix, "value", ["rendar", "render", "zzzzzz"])
     assert fixes.get("rendar") == "render"
     assert "render" not in fixes
