@@ -147,9 +147,7 @@ def _bench_routed_shapes(spark, s, top_terms, texts) -> dict:
     import whoosh_spark.search.batch as B
     from whoosh_spark.search import local as L
 
-    s.index._maybe_prefetch_field("text")
-    lexicon = sorted(t for (f, t), row in s.index._term_stats_cache.items()
-                     if f == "text" and row is not None)
+    lexicon = s.index.cached_terms("text")
 
     def width(stem):
         return (bisect.bisect_left(lexicon, stem + "\uffff")

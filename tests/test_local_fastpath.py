@@ -176,3 +176,52 @@ def test_timelimit_search(spark, ix):
     # greedy mode never raises; it returns a list (possibly empty partial)
     rows = search_with_timelimit(s, q, timelimit=0.001, limit=10, greedy=True)
     assert isinstance(rows, list)
+
+
+@pytest.fixture(scope="module")
+def tombstoned_dir(spark, tmp_path_factory):
+    """A three-segment index with tombstones in two segments: a bulk build,
+    then two writer commits that add, update by unique path and delete."""
+    from whoosh_spark.schema import ID
+
+    rng = random.Random(11)
+    d = str(tmp_path_factory.mktemp("freshix"))
+    schema = IndexSchema.of(path=ID(stored=True, unique=True), text=TEXT())
+    df = spark.createDataFrame([
+        Row(doc_id=i, path=f"/p{i}",
+            text=" ".join(rng.choice(VOCAB) for _ in range(rng.randint(3, 20))))
+        for i in range(60)])
+    build_index(spark, df, schema, d, sha_col=None)
+    for r in range(2):
+        w = Index(spark, d).writer()
+        for i in range(5):
+            w.add_document(path=f"/r{r}-{i}", text=f"alfa bravo round{r}")
+        w.update_document(path=f"/p{r}", text="bravo charlie")
+        w.delete_document(10 + 50 * r)  # round 1 deletes a round-0 add
+        w.commit(merge=False)
+    ix = Index(spark, d)
+    assert len(ix.manifest.segments) == 3
+    assert sum(s.has_deletes for s in ix.manifest.segments) == 2
+    return d
+
+
+@pytest.mark.parametrize("q, hits", [
+    (Q.Term("text", "alfa"), True),
+    (Q.Term("text", "nosuch"), False),
+    (Q.Phrase("text", ["alfa", "bravo"]), True),
+    (Q.Prefix("text", "ro"), True),
+], ids=["hit", "empty", "phrase", "prefix"])
+def test_fresh_read_launches_no_jobs(spark, tombstoned_dir, q, hits):
+    """A freshly opened Index answers its first local search with zero
+    Spark jobs: stats, block reads, evaluation and the result DataFrame
+    all stay on the driver."""
+    from test_merge import _count_jobs
+
+    got = []
+    jobs = _count_jobs(spark, lambda: got.extend(
+        (r["doc_id"], r["score"])
+        for r in Searcher(Index(spark, tombstoned_dir)).search(q, limit=15).collect()))
+    assert jobs == 0, q
+    want = [(r["doc_id"], r["score"]) for r in Searcher(
+        Index(spark, tombstoned_dir), use_local=False).search(q, limit=15).collect()]
+    assert got == want and bool(got) == hits

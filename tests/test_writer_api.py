@@ -149,3 +149,46 @@ def test_stored_glob_numeric_widths_merge(spark, tmp_path):
     ix = Index(spark, d)
     rows = {r["doc_id"]: r["f1"] for r in ix.docs().collect()}
     assert rows == {0: 1.0, 1: 2.5}
+
+
+def test_commit_one_tombstone_pass_equals_two(spark, tmp_path):
+    """A commit tombstones its deleted ids and the rows its updates
+    replace in one pass; the live set and every segment's deleted_count
+    equal deleting the ids first and committing the updates after. One
+    update replaces a row that is also deleted by id."""
+    from whoosh_spark.index.merge import delete_docs
+
+    schema = IndexSchema.of(key=ID(stored=True, unique=True),
+                            body=TEXT(stored=True))
+    twins = []
+    for name in ("one_pass", "two_pass"):
+        ix = create_in(spark, str(tmp_path / name), schema)
+        for r in range(2):
+            with ix.writer() as w:
+                for i in range(6):
+                    w.add_document(key=f"k{r}{i}", body=f"alfa {r} {i}")
+        twins.append(ix)
+    ids = [1, 7, 8]  # doc 1 is key k01, which an update below replaces
+    updates = [("k01", "bravo one"), ("k03", "bravo three"), ("k15", "bravo five")]
+
+    one, two = twins
+    w = one.writer()
+    for i in ids:
+        w.delete_document(i)
+    for k, body in updates:
+        w.update_document(key=k, body=body)
+    w.commit(merge=False)
+
+    delete_docs(spark, two.index_dir, ids)
+    w = two.writer()
+    for k, body in updates:
+        w.update_document(key=k, body=body)
+    w.commit(merge=False)
+
+    def state(ix):
+        ix.reload()
+        live = sorted((r["doc_id"], r["key"], r["body"]) for r in ix.docs().collect())
+        return live, [s.deleted_count for s in ix.manifest.segments]
+
+    assert state(one) == state(two)
+    assert state(one)[1] == [2, 3, 0]

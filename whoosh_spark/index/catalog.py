@@ -21,6 +21,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from whoosh_spark.index import codec
@@ -34,6 +35,19 @@ from whoosh_spark.schema import IndexSchema, schema_from_dict, schema_to_dict
 # per-block skip pointers (codec/whoosh3.py:1018-1051). 256 ids ≈ two full
 # 128-posting blocks of a term present in every doc.
 BOUND_CHUNK = 256
+
+#: columns of a segment's termstats.parquet, as build_segment writes them
+TERMSTATS_SCHEMA = pa.schema([
+    ("field", pa.string()), ("term", pa.string()),
+    ("df", pa.int64()), ("total_tf", pa.int64()),
+    ("max_tf", pa.float64()), ("total_w", pa.float64()),
+    ("min_len_byte", pa.int32()), ("max_len_byte", pa.int32()),
+    ("min_id", pa.int64()), ("max_id", pa.int64()),
+])
+#: how ``Index.term_stats`` combines a term's per-segment rows
+_STATS_AGG = (("df", "sum"), ("total_tf", "sum"), ("max_tf", "max"),
+              ("total_w", "sum"), ("min_len_byte", "min"),
+              ("max_len_byte", "max"), ("min_id", "min"), ("max_id", "max"))
 
 
 def _chunk_col() -> "F.Column":
@@ -108,9 +122,10 @@ class Index:
         self.manifest: Manifest = read_manifest(self.index_dir)
         self.schema: IndexSchema = schema_from_dict(self.manifest.schema)
         self._df_cache: dict = {}
+        # (field, term) -> combined stats row, or None for a term known absent
         self._term_stats_cache: dict = {}
-        self._prefetched_fields: set = set()
-        self._complete_fields: set = set()  # full lexicon stats cached
+        # field -> sorted lexicon when its whole stats are cached, else None
+        self._lexicons: dict = {}
         # Fields recorded in segment stats but no longer in the schema
         # (remove_field happened after they were indexed). Their postings
         # physically remain until a merge/optimize rewrites the segments;
@@ -283,18 +298,9 @@ class Index:
         elif table == "lengths.parquet":
             sch = LENGTHS_SCHEMA
         elif table == "termstats.parquet":
-            sch = T.StructType([
-                T.StructField("field", T.StringType()),
-                T.StructField("term", T.StringType()),
-                T.StructField("df", T.LongType()),
-                T.StructField("total_tf", T.LongType()),
-                T.StructField("max_tf", T.DoubleType()),
-                T.StructField("total_w", T.DoubleType()),
-                T.StructField("min_len_byte", T.IntegerType()),
-                T.StructField("max_len_byte", T.IntegerType()),
-                T.StructField("min_id", T.LongType()),
-                T.StructField("max_id", T.LongType()),
-            ])
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            sch = from_arrow_schema(TERMSTATS_SCHEMA)
         elif table == "vectors.parquet":
             sch = T.StructType([
                 T.StructField("doc_id", T.LongType()),
@@ -454,86 +460,83 @@ class Index:
         return self.manifest.avg_field_length(fieldname)
 
     #: full-field stats prefetch cap: when the manifest records a lexicon
-    #: at most this large, ONE job caches every term's stats and later
-    #: queries over the field cost zero extra stats jobs. Huge-vocabulary
-    #: fields (the 100 TB case) exceed it and keep per-term lookups.
+    #: at most this large, one driver-side pyarrow read caches every term's
+    #: stats (and the sorted lexicon ``cached_terms`` returns) and later
+    #: queries over the field read no stats at all. Huge-vocabulary fields
+    #: (the 100 TB case) exceed it and read only the query's terms.
     PREFETCH_TERMS = 50_000
 
-    def _maybe_prefetch_field(self, field: str) -> None:
-        if field in getattr(self, "_prefetched_fields", set()):
-            return
-        if not hasattr(self, "_prefetched_fields"):
-            self._prefetched_fields = set()
-        self._prefetched_fields.add(field)  # attempt once per reload
-        n = self.manifest.field_term_count(field)
-        if n is None or n > self.PREFETCH_TERMS:
-            return
-        ts = (
-            self.termstats()
-            .filter(F.col("field") == field)
-            .groupBy("term")
-            .agg(
-                F.sum("df").alias("df"),
-                F.sum("total_tf").alias("total_tf"),
-                F.max("max_tf").alias("max_tf"),
-                F.sum("total_w").alias("total_w"),
-                F.min("min_len_byte").alias("min_len_byte"),
-                F.max("max_len_byte").alias("max_len_byte"),
-                F.min("min_id").alias("min_id"),
-                F.max("max_id").alias("max_id"),
-            )
-        )
-        for r in ts.collect():
-            self._term_stats_cache[(field, r["term"])] = r.asDict()
-        self._complete_fields.add(field)
+    def _read_term_stats(self, field: str, terms: list[str] | None = None) -> dict[str, dict]:
+        """Combined stats rows of ``field`` (of just ``terms`` when given)
+        over every live segment: one pyarrow dataset scan on the driver,
+        no Spark job. The term-sorted files keep row-group pruning on the
+        ``field``/``term`` filter. Segments combine as the MultiReader
+        does: df/total_tf/total_w sum, extrema by min/max. A segment
+        written before the weight channel has no ``total_w``, which is
+        then its ``total_tf``. Rows are ``Row.asDict()``-shaped: a
+        ``term`` key, then plain Python ints and floats."""
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        if field in self._ghost_fields:
+            return {}
+        files = []
+        for p in self._seg_paths("termstats.parquet"):
+            files += [os.path.join(p, n) for n in sorted(os.listdir(p))
+                      if n.endswith(".parquet")]
+        if not files:
+            return {}
+        flt = pc.field("field") == field
+        if terms is not None:
+            flt &= pc.field("term").isin(terms)
+        tbl = ds.dataset(files, schema=TERMSTATS_SCHEMA, format="parquet").to_table(
+            columns=["term", *(c for c, _ in _STATS_AGG)], filter=flt)
+        i = tbl.schema.get_field_index("total_w")
+        tbl = tbl.set_column(i, "total_w", pc.coalesce(
+            tbl["total_w"], pc.cast(tbl["total_tf"], pa.float64())))
+        agg = tbl.group_by("term", use_threads=False).aggregate(list(_STATS_AGG))
+        rows = agg.select(["term", *(f"{c}_{op}" for c, op in _STATS_AGG)]).rename_columns(
+            ["term", *(c for c, _ in _STATS_AGG)]).to_pylist()
+        return {r["term"]: r for r in rows}
+
+    def cached_terms(self, field: str) -> list[str] | None:
+        """The sorted lexicon of ``field`` when its whole stats fit the
+        driver cache (``PREFETCH_TERMS``), loading them on first use after
+        each ``reload``; None for a field past the cap."""
+        if field not in self._lexicons:
+            n = self.manifest.field_term_count(field)
+            lexicon = None
+            if n is not None and n <= self.PREFETCH_TERMS:
+                rows = self._read_term_stats(field)
+                for t, r in rows.items():
+                    self._term_stats_cache[(field, t)] = r
+                lexicon = sorted(rows)
+            self._lexicons[field] = lexicon
+        return self._lexicons[field]
 
     def term_stats(self, field: str, terms: list[str]) -> dict[str, dict]:
-        """Collect combined per-term stats for a (small) query term set.
+        """Combined per-term stats for a (small) query term set, read on
+        the driver without a Spark job (``_read_term_stats``).
 
         df sums across segments; extrema combine by min/max. Deleted docs
         still count toward df — matching the reference, which computes idf
         from uncollected doc_frequency (scoring.py:53-60).
 
-        Small-lexicon fields (per the manifest's recorded term counts) are
-        prefetched whole in one job, making every later query's stats lookup
-        job-free.
+        A small-lexicon field (per the manifest's recorded term counts) is
+        read whole on first use; a larger one reads the terms not yet
+        cached.
         """
         if not terms:
             return {}
-        self._maybe_prefetch_field(field)
-        if field in self._complete_fields:
-            return {
-                t: self._term_stats_cache[(field, t)]
-                for t in terms
-                if self._term_stats_cache.get((field, t)) is not None
-            }
-        missing = [t for t in terms if (field, t) not in self._term_stats_cache]
-        if not missing:
-            out = {}
-            for t in terms:
-                row = self._term_stats_cache[(field, t)]
-                if row is not None:
-                    out[t] = row
-            return out
-        ts = (
-            self.termstats()
-            .filter((F.col("field") == field) & F.col("term").isin(terms))
-            .groupBy("term")
-            .agg(
-                F.sum("df").alias("df"),
-                F.sum("total_tf").alias("total_tf"),
-                F.max("max_tf").alias("max_tf"),
-                F.sum("total_w").alias("total_w"),
-                F.min("min_len_byte").alias("min_len_byte"),
-                F.max("max_len_byte").alias("max_len_byte"),
-                F.min("min_id").alias("min_id"),
-                F.max("max_id").alias("max_id"),
-            )
-        )
-        found = {r["term"]: r.asDict() for r in ts.collect()}
-        for t in terms:
-            self._term_stats_cache[(field, t)] = found.get(t)
-        return found
+        cache = self._term_stats_cache
+        if self.cached_terms(field) is None:
+            missing = [t for t in terms if (field, t) not in cache]
+            if missing:
+                found = self._read_term_stats(field, missing)
+                for t in missing:
+                    cache[(field, t)] = found.get(t)
+        return {t: cache[(field, t)] for t in terms
+                if cache.get((field, t)) is not None}
 
     def field_terms(self, field: str) -> DataFrame:
         """Distinct terms of a field with combined df (the lexicon scan)."""

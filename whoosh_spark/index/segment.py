@@ -37,7 +37,7 @@ class SegmentInfo:
     #: are GC'd by clean_files after the snapshot-isolation grace.
     deletes_gen: int = 0
     #: field -> distinct-term count (lexicon size); lets readers decide
-    #: driver-side whether a full-field stats prefetch is safe WITHOUT a job
+    #: before reading anything whether to cache the field's whole stats
     field_term_counts: dict = field(default_factory=dict)
     #: columns of this segment's docs.parquet; readers only pay a
     #: mergeSchema footer sweep when segments actually disagree (schema

@@ -18,7 +18,10 @@ writing.py:186-193).
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
+from pyspark.sql import DataFrame
 
 from whoosh_spark.index.catalog import Index
 
@@ -117,11 +120,13 @@ class IndexWriter:
 
             ids = Searcher(Index(self.spark, d)).matches(q).select("doc_id")
             delete_docs(self.spark, d, ids)
+        # one tombstone pass: the deleted ids plus the rows updates replace
+        tombstones = []
         if self._delete_ids:
-            delete_docs(self.spark, d, sorted(set(self._delete_ids)))
-
+            tombstones.append(self.spark.createDataFrame(
+                [(i,) for i in sorted(set(self._delete_ids))], "doc_id long"))
         if self._updates:
-            # tombstone rows matching any (unique field, value) pair
+            # rows matching any (unique field, value) pair
             ix = Index(self.spark, d)
             pairs: dict[str, set] = {}
             for row in self._updates:
@@ -129,7 +134,6 @@ class IndexWriter:
                     pairs.setdefault(u, set()).add(row[u])
             from pyspark.sql import functions as F
 
-            stale = None
             for u, vals in pairs.items():
                 if u in ix.docs().columns:
                     hit = ix.docs().filter(
@@ -137,9 +141,9 @@ class IndexWriter:
                 else:  # unstored unique field: resolve via its postings
                     hit = ix.postings_for(
                         u, sorted(str(v) for v in vals)).select("doc_id")
-                stale = hit if stale is None else stale.unionByName(hit)
-            if stale is not None and stale.limit(1).count():
-                delete_docs(self.spark, d, stale.distinct())
+                tombstones.append(hit)
+        if tombstones:
+            delete_docs(self.spark, d, functools.reduce(DataFrame.unionByName, tombstones))
 
         rows = self._adds + [
             {k: v for k, v in r.items() if k != "__uniques__"}

@@ -690,7 +690,7 @@ def batch_multiterm_search(
 BUCKET_MAX_EXPANSION = 16
 
 
-def _bucket_route(searcher, q, c, lexicons: dict):
+def _bucket_route(searcher, q, c):
     """``q`` resolved for the ``batch_search`` bucket call, or None to
     leave it to its kernel (``c`` is its ``_classify_for_batch`` result).
     FuzzyTerms stay on ``batch_fuzzy_search``: resolving one here runs a
@@ -698,9 +698,8 @@ def _bucket_route(searcher, q, c, lexicons: dict):
     where the kernel tests the whole batch in one JVM lexicon scan.
     Prefix/Wildcard/Regex/TermRange join only up to
     ``BUCKET_MAX_EXPANSION`` expanded terms; a Prefix is measured first
-    by bisecting the sorted cached lexicon (``lexicons``: field -> sorted
-    terms, filled once per batch), so a wide one skips the per-query
-    resolve."""
+    by bisecting the sorted cached lexicon (``Index.cached_terms``), so a
+    wide one skips the per-query resolve."""
     import bisect
 
     from whoosh_spark.search.local import bucket_tree
@@ -708,19 +707,13 @@ def _bucket_route(searcher, q, c, lexicons: dict):
     kind = c[0] if c else None
     if kind == "fuzzy":
         return None
-    ix = searcher.index
-    if kind == "prefix" and q.text:
-        ix._maybe_prefetch_field(q.field)
-        if q.field in ix._complete_fields:
-            if q.field not in lexicons:
-                lexicons[q.field] = sorted(
-                    t for (f, t), row in ix._term_stats_cache.items()
-                    if f == q.field and row is not None)
-            lex, p = lexicons[q.field], q.text
-            lo = bisect.bisect_left(lex, p)
-            hi = bisect.bisect_left(lex, p[:-1] + chr(ord(p[-1]) + 1), lo)
-            if hi - lo > BUCKET_MAX_EXPANSION:
-                return None
+    lex = searcher.index.cached_terms(q.field) if kind == "prefix" and q.text else None
+    if lex is not None:
+        p = q.text
+        lo = bisect.bisect_left(lex, p)
+        hi = bisect.bisect_left(lex, p[:-1] + chr(ord(p[-1]) + 1), lo)
+        if hi - lo > BUCKET_MAX_EXPANSION:
+            return None
     t = bucket_tree(searcher, q)
     if (t is not None and kind in ("prefix", "multiterm")
             and sum(1 for _ in t.leaves()) > BUCKET_MAX_EXPANSION):
@@ -846,9 +839,9 @@ def batch_search(
         bags = [(qid, *c[1]) for qid, _, c in routed if c and c[0] == "and"]
         if bags and _selective_fraction(searcher, bags, k) >= 0.8:
             selective.update(qid for qid, _, _ in bags)
-        exact, declined, lexicons = [], [], {}
+        exact, declined = [], []
         for qid, q, c in routed:
-            t = None if qid in selective else _bucket_route(searcher, q, c, lexicons)
+            t = None if qid in selective else _bucket_route(searcher, q, c)
             if t is None:
                 declined.append((qid, q, c))
             else:

@@ -122,8 +122,8 @@ class Searcher:
             # exact_scores is required: the local evaluator replicates the
             # exact-order float ops, so an exact_scores=False searcher must
             # not return last-ulp-different scores depending on corpus size.
-            # AQE-style adaptive choice: when every term's df (job-free from
-            # prefetched stats) keeps total postings under local_threshold,
+            # AQE-style adaptive choice: when every term's df (a driver-side
+            # pyarrow stats read) keeps total postings under local_threshold,
             # evaluate driver-side with pyarrow block reads — identical
             # results (tests/test_local_fastpath.py), ~50x lower latency.
             # Hot terms at corpus scale exceed the threshold and take the
@@ -163,19 +163,17 @@ class Searcher:
         """Materialize locally-computed (doc_id, score) rows as a DataFrame
         (local relation: collecting it launches no cluster job).
 
-        Goes through pandas so Spark takes the Arrow LocalRelation path —
-        createDataFrame on a plain LIST detours through an RDD parallelize
-        and costs ~0.5s of py4j round-trips per query (measured 577ms vs
-        70ms for 10 rows), which dominated the adaptive local fast path."""
-        import pandas as pd
+        Hands Spark an Arrow table so it takes the Arrow LocalRelation path
+        for every row count: a plain list, or a pandas frame with no rows,
+        detours through an RDD parallelize that costs a Spark job and
+        0.15-0.5s of py4j round-trips per query."""
+        import pyarrow as pa
 
-        pdf = pd.DataFrame(
-            {
-                "doc_id": pd.array([int(d) for d, _ in rows], dtype="int64"),
-                "score": pd.array([float(s) for _, s in rows], dtype="float64"),
-            }
-        )
-        return self.index.spark.createDataFrame(pdf, schema="doc_id long, score double")
+        tbl = pa.table({
+            "doc_id": pa.array([d for d, _ in rows], type=pa.int64()),
+            "score": pa.array([s for _, s in rows], type=pa.float64()),
+        })
+        return self.index.spark.createDataFrame(tbl, schema="doc_id long, score double")
 
     def wand_search(self, q: Q.Query, limit: int) -> DataFrame | None:
         """Block-max WAND (search/wand.py) for ``q`` as a batch of one;
@@ -926,14 +924,11 @@ class _PlanContext:
         inherently a per-term plan."""
         if isinstance(q, Q.MultiTerm):
             # job-free fast path: a small-lexicon field's full stats are
-            # already cached on the driver (catalog.py prefetch) — evaluate
-            # the predicate over the cache instead of launching a job
-            cached = None
-            if q.field in getattr(self.ix, "_complete_fields", set()):
-                cached = [
-                    (t, row) for (f, t), row in self.ix._term_stats_cache.items()
-                    if f == q.field and row is not None and q.term_predicate(t)
-                ]
+            # cached on the driver (Index.cached_terms) — evaluate the
+            # predicate over the cache instead of launching a job
+            cached = self.ix.cached_terms(q.field)
+            if cached is not None:
+                cached = [t for t in cached if q.term_predicate(t)]
             lex = self.ix.field_terms(q.field)
             flt = q.spark_term_filter()
             if flt is not None:
@@ -945,7 +940,7 @@ class _PlanContext:
                 # (reference: the multiterm matcher's spans come from its
                 # per-term union, score from ConstantScoreMatcher)
                 if cached is not None:
-                    terms = sorted(t for t, _ in cached)
+                    terms = cached
                 else:
                     cap = self.s.max_expansion
                     rows = lex.select("term").orderBy("term").limit(cap + 1).collect()
@@ -963,8 +958,9 @@ class _PlanContext:
             if q.constantscore:
                 if cached is not None:
                     n = len(cached)
-                    est = sum(int(r["df"]) for _, r in cached)
-                    t0 = min((t for t, _ in cached), default=None)
+                    est = sum(int(r["df"]) for r in
+                              self.ix.term_stats(q.field, cached).values())
+                    t0 = cached[0] if cached else None
                 else:
                     row = lex.agg(
                         F.count("*").alias("n"),
@@ -979,7 +975,7 @@ class _PlanContext:
                 return Q._MultiTermDocs(q, est=int(est))
             if cached is not None:
                 cap = self.s.max_expansion
-                terms = sorted(t for t, _ in cached)
+                terms = cached
                 if len(terms) > cap:
                     raise ValueError(
                         f"{type(q).__name__} on field {q.field!r} expands to "

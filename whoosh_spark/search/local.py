@@ -15,12 +15,15 @@ Driver placement (``try_local_search``): Spark's per-job overhead
 (~0.3-0.8s: scheduling, Python-worker hops, a shuffle for top-k) dominates
 interactive latency when a query's posting lists are tiny. Like an
 AQE-style adaptive choice, the Searcher evaluates driver-side when EVERY
-term's df (job-free from the prefetched stats) keeps the total postings
-under ``local_threshold``: pyarrow reads ONLY the query terms' blocks from
-the segment Parquet files (row-group pruning on the term-sorted files
-still applies — zero Spark jobs). Measured ~8x faster than the dict
-evaluator it replaced (r6), which moves the local-vs-distributed
-crossover into the millions of postings (see LOCAL_THRESHOLD).
+term's df keeps the total postings under ``local_threshold``. Nothing on
+this path launches a Spark job, even on a freshly opened ``Index``: the
+stats come from ``Index.term_stats`` (a pyarrow read of the segments'
+termstats), pyarrow reads ONLY the query terms' blocks from the segment
+Parquet files (row-group pruning on the term-sorted files still applies),
+and ``Searcher.spark_rows_df`` wraps the rows as an Arrow local relation.
+Measured ~8x faster than the dict evaluator it replaced (r6), which moves
+the local-vs-distributed crossover into the millions of postings (see
+LOCAL_THRESHOLD).
 
 Bucket placement (``bucket_topk``): all of a doc's postings share the
 build-time ``bucket`` (doc_id // bucket_width), so repartitioning the
@@ -440,15 +443,11 @@ class _NotLocal(Exception):
 def _resolve_multiterms_local(q, searcher):
     """Expand multiterms against the driver-cached lexicon (zero jobs);
     raises _NotLocal when the field's lexicon isn't fully cached."""
-    ix = searcher.index
     if isinstance(q, Q.MultiTerm):
-        ix._maybe_prefetch_field(q.field)
-        if q.field not in ix._complete_fields:
+        lexicon = searcher.index.cached_terms(q.field)
+        if lexicon is None:
             raise _NotLocal
-        terms = sorted(
-            t for (f, t), row in ix._term_stats_cache.items()
-            if f == q.field and row is not None and q.term_predicate(t)
-        )
+        terms = [t for t in lexicon if q.term_predicate(t)]
         if len(terms) > searcher.max_expansion:
             raise _NotLocal
         if not terms:
@@ -504,7 +503,7 @@ def _term_stats(ix, pairs) -> dict:
 def try_local_search(searcher, q, limit: int):
     """Driver placement: None when the query isn't eligible or a posting
     read fails; else the top-k rows [(doc_id, score)] computed entirely
-    driver-side (no Spark jobs once the field stats are prefetched)."""
+    driver-side, with no Spark job."""
     import pyarrow as pa
 
     from whoosh_spark.search.engine import _Stats
@@ -521,7 +520,6 @@ def try_local_search(searcher, q, limit: int):
     _collect_terms(q, plain, positional)
     if not plain:
         return None
-    # stats (prefetched fields answer without a job)
     stats = _term_stats(ix, plain)
     total_postings = sum(int(st["df"]) for st in stats.values() if st)
     if total_postings > threshold:
