@@ -33,12 +33,13 @@ Sections:
   wand_ab      block-max WAND wall times (best-of-3) on a testdata
                corpus and a 20,000-doc synth_code_corpus: single-query
                search(use_wand=True) on the tests/test_wand.py shapes and
-               a selective rare+hot bag batch through batch_wand_search,
-               each against the exact route (rows asserted equal, bit
-               equality recorded) with blocks kept/total, and the
-               single-query conjunctive chunk intersection (And of a rare
-               and a hot term, and of a rare term and a slop-2 phrase)
-               against the full decode (BENCH/WAND_AB.json)
+               a selective rare+hot bag batch through batch_wand_search —
+               the bucket placement with its block-max skip — each
+               against the exact route (rows asserted identical) with
+               blocks kept/total, and the single-query conjunctive chunk
+               intersection of the generic plan (And of a rare and a hot
+               term, and of a rare term and a slop-2 phrase) against the
+               full decode (BENCH/WAND_AB.json)
 
 Env: SPARK_GRAFT_CPUS (default 32).
 """
@@ -102,20 +103,15 @@ def _bench_batch(spark, idx_dir: str, tag: str, out: dict, docs_pq: str):
                  for qid, f, terms in batch]
         spark.sparkContext.setJobDescription(f"{tag} {name} bucket placement")
         bucket_rows = rows(L.bucket_topk(s, trees, 10))
-        if conj:
-            spark.sparkContext.setJobDescription(f"{tag} {name} chunk plan")
-            df_rows = rows(B.batch_conjunctive_search(s, batch, k=10))
-            df_sec = best_of(lambda: B.batch_conjunctive_search(s, batch, k=10).collect())
-        else:
-            orig = L.bucket_topk
-            L.bucket_topk = lambda *a, **kw: None
-            try:
-                spark.sparkContext.setJobDescription(f"{tag} {name} DataFrame plan")
-                df_rows = rows(B.batch_term_search(s, batch, k=10, use_wand=False))
-                df_sec = best_of(lambda: B.batch_term_search(
-                    s, batch, k=10, use_wand=False).collect())
-            finally:
-                L.bucket_topk = orig
+        orig = L.bucket_topk
+        L.bucket_topk = lambda *a, **kw: None
+        try:
+            spark.sparkContext.setJobDescription(f"{tag} {name} DataFrame plan")
+            df_rows = rows(B.batch_term_search(s, batch, k=10, conjunctive=conj))
+            df_sec = best_of(lambda: B.batch_term_search(
+                s, batch, k=10, conjunctive=conj).collect())
+        finally:
+            L.bucket_topk = orig
         assert bucket_rows == df_rows, f"{tag} {name}: bucket placement/plan mismatch"
         bucket_sec = best_of(lambda: L.bucket_topk(s, trees, 10).collect())
         rec[name] = {"bucket_sec": bucket_sec, "dataframe_sec": df_sec,
@@ -305,11 +301,7 @@ def _bench_wand_ab(spark, out: dict, sf_dir: str):
                      for r in s.search(q, limit=10, use_wand=False).collect()]
             got = [(r["doc_id"], r["score"])
                    for r in s.search(q, limit=10, use_wand=True).collect()]
-            # ranks must match; scores within 1e-9 so the section can also
-            # time trees whose WAND was not bit-exact (recorded below)
-            assert [d for d, _ in got] == [d for d, _ in exact], (tag, name)
-            assert all(abs(a - b) <= 1e-9 * abs(b)
-                       for (_, a), (_, b) in zip(got, exact)), (tag, name)
+            assert got == exact, (tag, name)
             _, st = batch_wand_search(s, [("q", field, [t for t, _ in terms])],
                                       k=10, with_stats=True)
             rec["single"][name] = {
@@ -335,7 +327,7 @@ def _bench_wand_ab(spark, out: dict, sf_dir: str):
 
         exact = ranked(batch_term_search(s, batch, k=10, use_wand=False))
         got = ranked(batch_wand_search(s, batch, k=10))
-        assert [r[:3] for r in got] == [r[:3] for r in exact], tag
+        assert got == exact, tag
         _, st = batch_wand_search(s, batch, k=10, with_stats=True)
         rec["batch"] = {
             "queries": len(batch),

@@ -120,18 +120,18 @@ def main() -> None:
         {"pushdown": True, "broadcast": True},
     ))
     audits.append(audit(
-        "batch: 3 queries, one shuffle (broadcast query table)",
+        "batch: 3 queries, one shuffle of encoded blocks (bucket placement)",
         batch_term_search(s, [("q1", "text", ["scan", "merge"]),
                               ("q2", "text", ["join"]),
                               ("q3", "text", ["window", "sort", "row"])],
                           k=10, use_wand=False),
-        {"pushdown": True, "broadcast": True},
+        {"pushdown": True, "python_above_filter": True},
     ))
     audits.append(audit(
-        "batch WAND: per-query chunk-aligned block pruning",
+        "batch WAND: block-max skip inside the bucket placement",
         batch_wand_search(s, [("q1", "text", ["scan", "merge"]),
                               ("q2", "text", ["join", "row"])], k=10),
-        {"pushdown": True, "broadcast": True, "python_above_filter": True},
+        {"pushdown": True, "python_above_filter": True},
     ))
 
     from whoosh_spark.search.batch import batch_phrase_search, batch_prefix_search
@@ -152,7 +152,7 @@ def main() -> None:
     from whoosh_spark.search.batch import batch_search
 
     audits.append(audit(
-        "batch query-log router: mixed shapes, one posting scan per bucket",
+        "batch query-log router: mixed shapes, one bucket placement call",
         batch_search(s, [
             ("qa", Q.Term("text", "join")),
             ("qb", Q.Or([Q.Term("text", "scan"), Q.Term("text", "merge")])),
@@ -160,8 +160,7 @@ def main() -> None:
             ("qd", Q.Phrase("text", ["order", "sort"])),
             ("qe", Q.Prefix("text", "b")),
         ], k=10),
-        {"pushdown": True, "positional": True, "broadcast": True,
-         "python_above_filter": True},
+        {"pushdown": True, "positional": True, "python_above_filter": True},
     ))
 
     lines = ["# Plan audit (`.explain(\"formatted\")`) — distributed search paths",

@@ -243,8 +243,8 @@ def run(spark, n_trees: int, base_seed: int, workdir: str) -> int:
             configs.append(("dist", s_dist, 9))
         if i % 8 == 0:
             configs.append(("agg", s_agg, 6))
-        if i % 8 == 4:
-            configs.append(("wand", s_dist, 6))
+        if i % 8 == 4:  # the bucket placement's block-max skip: exact
+            configs.append(("wand", s_dist, 9))
         for name, srch, nd in configs:
             got = [(r["doc_id"], round(r["score"], nd))
                    for r in srch.search(q, limit=K,

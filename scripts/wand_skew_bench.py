@@ -1,20 +1,25 @@
-"""Batch block-max WAND evidence on a skewed corpus (VERDICT r3 task #5).
+"""The bucket placement's two block skips on a skewed corpus.
 
 Builds (or reuses) a zipfian synthetic code corpus WITH a realistic
-long-tail identifier vocabulary (rare_vocab symbols, df ≈ 60 at 600k
-docs — real code corpora are full of df<100 identifiers), then measures
-TWO 500-query workloads through the exact batch path AND the chunk-aligned
-batch WAND path, asserting identical top-k lists:
+long-tail identifier vocabulary (rare_vocab symbols, df ≈ 60 — real code
+corpora are full of df<100 identifiers), then times three batch workloads
+through ``local.bucket_topk`` with and without the skip that applies,
+asserting identical (query_id, rank, doc_id, score) rows:
 
-- ``selective``: 1 hot head term + 1-2 rare ``sym_*`` tail terms — theta
-  is driven by the rare term's quality, so the hot term's blocks prune in
-  every 256-id chunk the rare term doesn't touch.
+- ``selective``: 1 hot head term + 1-2 rare ``sym_*`` tail terms, Or
+  semantics — block-max skip (``batch_wand_search``) vs none
+  (``batch_term_search``); θ is driven by the rare term's quality.
 - ``saturated``: 1 hot head term + 1-2 mid-frequency ``VOCAB`` tail terms
-  (df ≈ 15k) — every term touches every chunk, no exact bound can prune;
-  recorded honestly as the regime where the exact path stays the default.
+  (df ≈ 15k), Or semantics — every term touches every block range, the
+  control where no exact bound can prune.
+- ``conjunctive``: the selective queries with And semantics — And skip
+  (``conjunctive_skip=True``) vs none.
 
-Env: WAND_DOCS (default 600000), WAND_QUERIES (500), WAND_CPUS (8),
-WAND_K (10), WAND_RARE_VOCAB (50000).
+Each side runs ``WAND_RUNS`` times, alternating, and the best is kept;
+block counts come from ``with_stats=True``. Writes BENCH/WAND_SKEW.json.
+
+Env: WAND_DOCS (default 200000), WAND_QUERIES (200), WAND_CPUS (4),
+WAND_K (10), WAND_RARE_VOCAB (16667), WAND_RUNS (3).
 """
 
 from __future__ import annotations
@@ -28,11 +33,12 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-N_DOCS = int(os.environ.get("WAND_DOCS", "600000"))
-N_QUERIES = int(os.environ.get("WAND_QUERIES", "500"))
-CPUS = int(os.environ.get("WAND_CPUS", "8"))
+N_DOCS = int(os.environ.get("WAND_DOCS", "200000"))
+N_QUERIES = int(os.environ.get("WAND_QUERIES", "200"))
+CPUS = int(os.environ.get("WAND_CPUS", "4"))
 K = int(os.environ.get("WAND_K", "10"))
-RARE_VOCAB = int(os.environ.get("WAND_RARE_VOCAB", "50000"))
+RARE_VOCAB = int(os.environ.get("WAND_RARE_VOCAB", "16667"))
+RUNS = int(os.environ.get("WAND_RUNS", "3"))
 
 CORPUS_DIR = os.path.join(REPO, ".index_cache", f"wand_corpus_{N_DOCS}_r{RARE_VOCAB}")
 IDX_DIR = os.path.join(REPO, ".index_cache", f"wand_idx_{N_DOCS}_r{RARE_VOCAB}")
@@ -103,75 +109,46 @@ def main() -> None:
         shutil.rmtree(IDX_DIR, ignore_errors=True)
         build_index(spark, docs, code_corpus_schema(), IDX_DIR, sha_col="content")
 
-    s = Searcher(Index(spark, IDX_DIR), exact_scores=False, cache_postings=False)
+    s = Searcher(Index(spark, IDX_DIR), exact_scores=True, cache_postings=False)
 
-    def timed(fn, runs=2):
-        best, rows = None, None
-        for _ in range(runs):
-            t0 = time.time()
-            got = fn().collect()
-            dt = time.time() - t0
-            if best is None or dt < best:
-                best, rows = dt, got
-        return best, rows
+    def rows(df):
+        return sorted((r["query_id"], r["rank"], r["doc_id"], r["score"])
+                      for r in df.collect())
 
-    # exactness gate: same doc sets with same (rounded) scores per query,
-    # and the same score sequence by rank. Distributed Sum order differs
-    # between the two plans, so last-ulp ties can swap adjacent ranks
-    # (observed once in 5000 rows at 600k docs: two docs rounding to the
-    # same 9-decimal score exchanged ranks 8/9) — sets + score sequences
-    # are the order-robust equality.
-    def keys(rows):
-        docs = sorted((r["query_id"], r["doc_id"], round(r["score"], 9)) for r in rows)
-        ranks = sorted((r["query_id"], r["rank"], round(r["score"], 9)) for r in rows)
-        return docs, ranks
-
-    def measure(name: str, qs: list) -> dict:
-        # warm both plans (footers, stats prefetch, JIT)
-        batch_term_search(s, qs[:2], k=K, use_wand=False).collect()
-        batch_wand_search(s, qs[:2], k=K).collect()
-        exact_sec, exact_rows = timed(
-            lambda: batch_term_search(s, qs, k=K, use_wand=False))
-        wand_sec, wand_rows = timed(lambda: batch_wand_search(s, qs, k=K))
-        assert keys(exact_rows) == keys(wand_rows), (
-            f"batch WAND diverged from exact on {name}")
-        _, stats = batch_wand_search(s, qs, k=K, with_stats=True)
+    def measure(name: str, qs: list, conjunctive: bool) -> dict:
+        """Kernel without the skip vs with it, alternating, best of RUNS."""
+        if conjunctive:
+            off = lambda q: batch_term_search(s, q, k=K, conjunctive=True,  # noqa: E731
+                                              conjunctive_skip=False)
+            on = lambda q: batch_term_search(s, q, k=K, conjunctive=True)  # noqa: E731
+            _, stats = batch_conjunctive_search(s, qs, k=K, with_stats=True)
+        else:
+            off = lambda q: batch_term_search(s, q, k=K)  # noqa: E731
+            on = lambda q: batch_wand_search(s, q, k=K)  # noqa: E731
+            _, stats = batch_wand_search(s, qs, k=K, with_stats=True)
+        stats.pop("theta")
+        off(qs[:2]).collect()  # warm footers, stats and Python workers
+        on(qs[:2]).collect()
+        best = {"off": None, "on": None}
+        got = {}
+        for _ in range(RUNS):
+            for side, fn in (("off", off), ("on", on)):
+                t0 = time.time()
+                got[side] = rows(fn(qs))
+                dt = time.time() - t0
+                best[side] = dt if best[side] is None else min(best[side], dt)
+        assert got["on"] == got["off"], f"the skip changed the rows on {name}"
         return {
             "workload": name,
-            "exact_batch_sec": round(exact_sec, 2),
-            "wand_batch_sec": round(wand_sec, 2),
-            "speedup": round(exact_sec / wand_sec, 2),
+            "kernel_no_skip_sec": round(best["off"], 2),
+            "kernel_skip_sec": round(best["on"], 2),
+            "skip_over_no_skip": round(best["on"] / best["off"], 2),
             **stats,
             "qt_prune_pct": round(
                 100 * (1 - stats["qt_blocks_kept"] / stats["qt_blocks_total"]), 1),
             "decode_prune_pct": round(
                 100 * (1 - stats["decode_blocks_kept"] / stats["decode_blocks_total"]), 1),
-            "results_identical": True,
-        }
-
-    def measure_conjunctive(name: str, qs: list) -> dict:
-        """And-semantics batch: chunk-intersection skip vs full decode."""
-        batch_term_search(s, qs[:2], k=K, conjunctive=True).collect()
-        batch_term_search(s, qs[:2], k=K, conjunctive=True,
-                          conjunctive_skip=False).collect()
-        full_sec, full_rows = timed(lambda: batch_term_search(
-            s, qs, k=K, conjunctive=True, conjunctive_skip=False))
-        skip_sec, skip_rows = timed(lambda: batch_term_search(
-            s, qs, k=K, conjunctive=True))
-        assert keys(full_rows) == keys(skip_rows), (
-            f"conjunctive skip diverged on {name}")
-        _, stats = batch_conjunctive_search(s, qs, k=K, with_stats=True)
-        return {
-            "workload": name,
-            "full_decode_sec": round(full_sec, 2),
-            "chunk_skip_sec": round(skip_sec, 2),
-            "speedup": round(full_sec / skip_sec, 2),
-            **stats,
-            "qt_prune_pct": round(
-                100 * (1 - stats["qt_blocks_kept"] / stats["qt_blocks_total"]), 1),
-            "decode_prune_pct": round(
-                100 * (1 - stats["decode_blocks_kept"] / stats["decode_blocks_total"]), 1),
-            "results_identical": True,
+            "rows_identical": True,
         }
 
     out = {
@@ -180,16 +157,16 @@ def main() -> None:
         "k": K,
         "cpus": CPUS,
         "rare_vocab": RARE_VOCAB,
-        "bound": "chunk-aligned doc-range rest (BOUND_CHUNK=256)",
+        "runs": RUNS,
         "selective": measure(
-            "selective: 1 hot head term + 1-2 rare sym_* terms (df~60)",
-            selective_workload(N_QUERIES)),
+            "selective Or: 1 hot head term + 1-2 rare sym_* terms (df~60); "
+            "block-max skip", selective_workload(N_QUERIES), False),
         "saturated": measure(
-            "saturated control: 1 hot head term + 1-2 mid-df (~15k) terms",
-            saturated_workload(N_QUERIES)),
-        "conjunctive": measure_conjunctive(
-            "And-semantics: 1 hot head term AND 1-2 rare sym_* terms (df~60)",
-            selective_workload(N_QUERIES)),
+            "saturated Or control: 1 hot head term + 1-2 mid-df (~15k) terms; "
+            "block-max skip", saturated_workload(N_QUERIES), False),
+        "conjunctive": measure(
+            "And: 1 hot head term AND 1-2 rare sym_* terms (df~60); And skip",
+            selective_workload(N_QUERIES), True),
     }
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", "WAND_SKEW.json"), "w") as f:

@@ -79,14 +79,15 @@ def test_batch_conjunctive(ix):
 
 
 def test_chunk_aligned_wand_prunes_sparse_term_ranges(spark, tmp_path):
-    """POSITIVE pruning evidence for the chunk-aligned doc-range bound: the
-    whole corpus is ONE salt bucket (4000 docs < default bucket_width), so
-    a per-bucket rest could never prune — but the rare term's postings all
-    live in the first 256-id chunk, so the hot term's blocks outside that
-    doc range bound below theta and must prune, while results stay
-    identical to the exact path. (On the saturated control workload in
-    BENCH/WAND_SKEW.json every term touches every chunk and nothing can
-    prune — this test isolates the regime the bound is FOR.)"""
+    """POSITIVE pruning evidence for the block-max skip inside the bucket
+    placement: the whole corpus is ONE salt bucket (4000 docs < default
+    bucket_width), so a per-bucket bound could never prune — but the rare
+    term's postings all live in doc ids 0..39, so the hot term's blocks
+    outside that doc range bound below theta and must not decode, while
+    results stay identical to the exact path. (On the saturated control
+    workload in BENCH/WAND_SKEW.json every term touches every block range
+    and nothing can prune — this test isolates the regime the bound is
+    FOR.)"""
     import random
 
     from whoosh_spark.search.batch import batch_wand_search
@@ -96,7 +97,7 @@ def test_chunk_aligned_wand_prunes_sparse_term_ranges(spark, tmp_path):
     for i in range(4000):
         words = ["hot"] * rng.randint(1, 4) + ["filler%d" % rng.randint(0, 30)
                                                for _ in range(rng.randint(5, 15))]
-        if i < 40:  # rare term only in doc ids 0..39 = chunk 0 (BOUND_CHUNK=256)
+        if i < 40:  # rare term only in doc ids 0..39
             words.append("rareterm")
         rng.shuffle(words)
         rows.append(Row(doc_id=i, text=" ".join(words)))
@@ -111,10 +112,11 @@ def test_chunk_aligned_wand_prunes_sparse_term_ranges(spark, tmp_path):
     out, stats = batch_wand_search(s, qs, k=5, with_stats=True)
     assert _ranked(out) == exact
     assert stats["qt_blocks_kept"] < stats["qt_blocks_total"], stats
-    # the hot term's ~32 blocks span 16 chunks; the rare term lives in
-    # chunk 0 only — the vast majority of the batch's blocks must prune
-    # even though every block shares the single bucket
+    # the hot term has ~32 blocks; the rare term's one block spans ids
+    # 0..39 — the vast majority of the batch's blocks must prune even
+    # though every block shares the single bucket
     assert stats["qt_blocks_kept"] <= stats["qt_blocks_total"] * 0.4, stats
+    assert stats["decode_blocks_kept"] < stats["decode_blocks_total"], stats
 
 
 def test_batch_phrase_matches_per_query_engine(ix):

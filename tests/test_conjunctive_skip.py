@@ -1,8 +1,9 @@
-"""Conjunctive chunk-intersection block skipping (the reference
-IntersectionMatcher skip_to analog, matching/binary.py +
-codec/whoosh3.py:1018-1036): And-of-Terms / Phrase roots and conjunctive
-batches must return IDENTICAL results with skipping on and off, while
-decoding strictly fewer posting blocks when one term is doc-range sparse.
+"""Conjunctive block skipping (the reference IntersectionMatcher skip_to
+analog, matching/binary.py + codec/whoosh3.py:1018-1036): And-of-Terms /
+Phrase roots on the generic plan (chunk intersection) and conjunctive
+batches on the bucket placement (the And skip inside local.bucket_topk)
+must return IDENTICAL results with skipping on and off, while decoding
+strictly fewer posting blocks when one term is doc-range sparse.
 """
 
 import random
@@ -17,11 +18,10 @@ from whoosh_spark.search import Searcher
 from whoosh_spark.search.batch import batch_conjunctive_search, batch_term_search
 
 
-@pytest.fixture(autouse=True)
+@pytest.fixture
 def generic_plan(monkeypatch):
-    """The skip is a generic-plan optimization: keep the bucket placement
-    of the exact evaluator, which decodes whole buckets either way, out of
-    the on/off comparisons."""
+    """Keep the bucket placement, which has its own And skip, out of the
+    generic plan's on/off comparisons."""
     from whoosh_spark.search import local as L
 
     monkeypatch.setattr(L, "bucket_topk", lambda *a, **kw: None)
@@ -52,6 +52,7 @@ def _topk(s, q, limit=10):
             for r in s.search(q, limit=limit).collect()]
 
 
+@pytest.mark.usefixtures("generic_plan")
 @pytest.mark.parametrize("exact", [True, False])
 def test_and_root_skip_identical(sparse_ix, exact):
     q = Q.And([Q.Term("text", "hot"), Q.Term("text", "rareterm")])
@@ -62,6 +63,7 @@ def test_and_root_skip_identical(sparse_ix, exact):
     assert _topk(on, q, 50) == _topk(off, q, 50)
 
 
+@pytest.mark.usefixtures("generic_plan")
 def test_phrase_root_skip_identical(sparse_ix):
     q = Q.Phrase("text", ["hot", "rareterm"])
     on = Searcher(sparse_ix, exact_scores=True, cache_postings=False,
@@ -73,6 +75,7 @@ def test_phrase_root_skip_identical(sparse_ix):
     assert len(got_on) > 0  # the adjacent pair really matches
 
 
+@pytest.mark.usefixtures("generic_plan")
 def test_conjunction_decodes_fewer_postings(sparse_ix):
     """The hot term's postings outside chunk 0 must never reach decode."""
     full = sparse_ix.postings_for("text", ["hot", "rareterm"]).count()
@@ -87,6 +90,9 @@ def test_conjunction_decodes_fewer_postings(sparse_ix):
 
 
 def test_batch_conjunctive_skip_identical_and_prunes(sparse_ix):
+    """The And skip inside the bucket placement: identical rows with the
+    skip on and off, and the hot term's blocks outside the rare term's
+    doc range never decode."""
     s = Searcher(sparse_ix, exact_scores=False, cache_postings=False)
     qs = [
         ("q0", "text", ["hot", "rareterm"]),
@@ -94,23 +100,26 @@ def test_batch_conjunctive_skip_identical_and_prunes(sparse_ix):
         ("q2", "text", ["filler1", "filler2", "filler3"]),
     ]
 
-    def norm(rows):
-        return sorted((r["query_id"], r["doc_id"], round(r["score"], 9))
-                      for r in rows)
+    def ranked(df):
+        return sorted((r["query_id"], r["rank"], r["doc_id"], r["score"])
+                      for r in df.collect())
 
-    pruned = batch_term_search(s, qs, k=20, conjunctive=True).collect()
-    control = batch_term_search(s, qs, k=20, conjunctive=True,
-                                conjunctive_skip=False).collect()
-    assert norm(pruned) == norm(control)
+    pruned = ranked(batch_term_search(s, qs, k=20, conjunctive=True))
+    control = ranked(batch_term_search(s, qs, k=20, conjunctive=True,
+                                       conjunctive_skip=False))
+    assert pruned == control
+    assert {q for q, *_ in pruned} == {"q0", "q1", "q2"}
 
-    _, stats = batch_conjunctive_search(s, qs, k=20, with_stats=True)
-    # q0's hot-term blocks outside chunk 0 must prune
+    out, stats = batch_conjunctive_search(s, [qs[0]], k=20, with_stats=True)
+    assert ranked(out) == [r for r in pruned if r[0] == "q0"]
+    # q0's hot-term blocks outside the rare term's ids 0..39 must prune
     assert stats["qt_blocks_kept"] < stats["qt_blocks_total"], stats
+    assert stats["decode_blocks_kept"] < stats["decode_blocks_total"], stats
 
 
-def test_multisegment_with_deletes_skip_identical(spark, tmp_path_factory):
-    """Chunk pruning works on GLOBAL doc-id ranges, so it must stay exact
-    across segment boundaries and must respect tombstoned docs."""
+def _seg_ix(spark, tmp_path_factory):
+    """1200 docs in 3 segments, 'rareterm' in 5 docs of every 100, and 5
+    tombstoned docs."""
     from whoosh_spark.index.merge import delete_docs
 
     rng = random.Random(17)
@@ -126,7 +135,36 @@ def test_multisegment_with_deletes_skip_identical(spark, tmp_path_factory):
     build_index(spark, spark.createDataFrame(rows), IndexSchema.of(text=TEXT()),
                 d, sha_col=None, num_chunks=3)
     delete_docs(spark, d, [0, 1, 2, 101, 102])
-    ix = Index(spark, d)
+    return Index(spark, d)
+
+
+def test_kernel_multisegment_with_deletes_skip_identical(spark, tmp_path_factory):
+    """Both block skips of the bucket placement work on global doc-id
+    ranges across segment boundaries and respect tombstones: the And skip
+    and the block-max skip each return the rows of the unpruned kernel."""
+    ix = _seg_ix(spark, tmp_path_factory)
+    s = Searcher(ix, exact_scores=True, cache_postings=False, use_local=False)
+    qs = [("q0", "text", ["hot", "rareterm"]), ("q1", "text", ["rareterm", "filler3"])]
+
+    def ranked(df):
+        return sorted((r["query_id"], r["rank"], r["doc_id"], r["score"])
+                      for r in df.collect())
+
+    for conj, skip in ((True, {"conjunctive_skip": True}),
+                       (False, {"use_wand": True})):
+        off = ranked(batch_term_search(s, qs, k=30, conjunctive=conj,
+                                       conjunctive_skip=False))
+        assert ranked(batch_term_search(s, qs, k=30, conjunctive=conj, **skip)) == off
+        assert off and not {0, 1, 2, 101, 102} & {r[2] for r in off}
+    _, stats = batch_conjunctive_search(s, qs[:1], k=30, with_stats=True)
+    assert stats["qt_blocks_kept"] < stats["qt_blocks_total"], stats
+
+
+@pytest.mark.usefixtures("generic_plan")
+def test_multisegment_with_deletes_skip_identical(spark, tmp_path_factory):
+    """Chunk pruning works on GLOBAL doc-id ranges, so it must stay exact
+    across segment boundaries and must respect tombstoned docs."""
+    ix = _seg_ix(spark, tmp_path_factory)
     q = Q.And([Q.Term("text", "hot"), Q.Term("text", "rareterm")])
     on = Searcher(ix, exact_scores=True, cache_postings=False,
                   use_local=False, conjunctive_skip=True)
@@ -138,6 +176,7 @@ def test_multisegment_with_deletes_skip_identical(spark, tmp_path_factory):
     assert not {0, 1, 2, 101, 102} & {d_ for d_, _ in got_on}
 
 
+@pytest.mark.usefixtures("generic_plan")
 def test_mixed_and_root_skip_identical(sparse_ix):
     """And([Phrase, Term]) — the parser's `"a b" c` shape — requires every
     term, so both the plain and the positional decode may prune on the
@@ -152,6 +191,7 @@ def test_mixed_and_root_skip_identical(sparse_ix):
     assert len(got_on) > 0
 
 
+@pytest.mark.usefixtures("generic_plan")
 def test_chunk_terms_superset_prunes_position_decode(sparse_ix):
     """chunk_terms not being decoded still bound the decode: the hot
     term's positions decode only where rareterm also lives."""
@@ -166,6 +206,7 @@ def test_chunk_terms_superset_prunes_position_decode(sparse_ix):
     assert {r["doc_id"] for r in rows} >= set(range(40))
 
 
+@pytest.mark.usefixtures("generic_plan")
 def test_spannear_and_require_roots_skip_identical(sparse_ix):
     """SpanNear2/Sequence and Require roots are also all-terms-required —
     their pruned results must match the full-decode plan."""
@@ -187,6 +228,7 @@ def test_spannear_and_require_roots_skip_identical(sparse_ix):
         assert len(got_on) > 0, q
 
 
+@pytest.mark.usefixtures("generic_plan")
 def test_nonroot_and_keeps_full_base(sparse_ix):
     """An And nested under an Or must NOT prune (the Or side needs the
     full posting lists)."""

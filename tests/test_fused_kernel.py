@@ -173,7 +173,8 @@ def test_fused_declines_boosts_and_mixed_shapes(ix):
 def test_fused_batch_matches_dataframe_plan(ix, monkeypatch):
     """Every batch query equals per-query Searcher.search bit for bit —
     And-of-3/4 included, which needs the engine's huffman (df-descending)
-    sum order — and the kernel equals the DataFrame batch plans."""
+    sum order — with the kernel's And skip on and off, and the kernel
+    equals the DataFrame bag plan the other weightings take."""
     import whoosh_spark.search.batch as B
 
     rng = random.Random(3)
@@ -185,22 +186,23 @@ def test_fused_batch_matches_dataframe_plan(ix, monkeypatch):
             out.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
         return out
 
-    def skip_plan(batch):
-        return B.batch_conjunctive_search(s, batch, k=8)
+    def noskip_kernel(batch):
+        return B.batch_term_search(s, batch, k=8, conjunctive=True,
+                                   conjunctive_skip=False)
 
-    def full_plan(batch):
+    def dataframe_plan(batch, conj=True):
         with monkeypatch.context() as m:
             m.setattr(L, "bucket_topk", lambda *a, **kw: None)
-            return B.batch_term_search(s, batch, k=8, conjunctive=True,
-                                       conjunctive_skip=False)
+            return B.batch_term_search(s, batch, k=8, conjunctive=conj)
 
     for n_terms, conj in ((2, False), (2, True), (3, True), (4, True)):
         batch = [(f"q{i}", "text", rng.sample(VOCAB, n_terms)) for i in range(25)]
         node = Q.And if conj else Q.Or
         routes = [B.batch_term_search(s, batch, k=8, conjunctive=conj)]
         if conj:
-            # the DataFrame And plans sum in the same huffman order
-            routes += [skip_plan(batch), full_plan(batch)]
+            # the DataFrame And plan sums in the same huffman order
+            routes += [B.batch_conjunctive_search(s, batch, k=8),
+                       noskip_kernel(batch), dataframe_plan(batch)]
         for route in routes:
             got = by_query(route)
             for qid, field, terms in batch:
@@ -216,12 +218,12 @@ def test_fused_batch_matches_dataframe_plan(ix, monkeypatch):
     for conj in (False, True):
         fused = rows(B.batch_term_search(s, batch, k=8, conjunctive=conj))
         if conj:
-            plan = rows(B.batch_conjunctive_search(s, batch, k=8))
+            assert fused == rows(noskip_kernel(batch))
+            assert fused == rows(B.batch_conjunctive_search(s, batch, k=8))
         else:
-            with monkeypatch.context() as m:
-                m.setattr(L, "bucket_topk", lambda *a, **kw: None)
-                plan = rows(B.batch_term_search(s, batch, k=8, use_wand=False))
-        assert fused == plan, f"conjunctive={conj}"
+            assert fused == rows(B.batch_wand_search(s, batch, k=8))
+            plan = rows(dataframe_plan(batch, conj=False))
+            assert fused == plan, f"conjunctive={conj}"
 
 
 def test_batch_search_one_bucket_call(ix, monkeypatch):
@@ -324,8 +326,8 @@ def _answering_spy(monkeypatch) -> list:
     answered: list = []
     orig = L.bucket_topk
 
-    def spy(searcher, trees, k):
-        out = orig(searcher, trees, k)
+    def spy(searcher, trees, k, **kw):
+        out = orig(searcher, trees, k, **kw)
         if out is not None:
             answered.append(sorted(qid for qid, _ in trees))
         return out
@@ -373,13 +375,14 @@ def _declined_case(case, spark, mix, monkeypatch):
         return (Searcher(mix, **opts), queries, None,
                 {"batch_phrase_search": [["sloppy"]]}, [["phrase"]])
     if case == "round_to":
+        # rounding runs in the bucket placement: only the FuzzyTerm keeps
+        # its kernel, whose expanded bag is a bucket_topk call of its own
         queries = [(n, MIXED_LOG[n]()) for n in
                    ("phrase2", "prefix3", "wildcard", "fuzzy", "or2", "and2")]
         return (Searcher(mix, **opts), queries, 6,
-                {"batch_phrase_search": [["phrase2"]],
-                 "batch_prefix_search": [["prefix3"]],
-                 "batch_multiterm_search": [["wildcard"]],
-                 "batch_fuzzy_search": [["fuzzy"]]}, [])
+                {"batch_phrase_search": [], "batch_prefix_search": [],
+                 "batch_multiterm_search": [], "batch_fuzzy_search": [["fuzzy"]]},
+                [["and2", "or2", "phrase2", "prefix3", "wildcard"], ["fuzzy"]])
     if case == "uncached_lexicon":
         monkeypatch.setattr(Index, "PREFETCH_TERMS", 0)
         fresh = Index(spark, mix.index_dir)
@@ -413,13 +416,12 @@ def _declined_case(case, spark, mix, monkeypatch):
     "case", ["slop2", "round_to", "uncached_lexicon", "wide_expansion",
              "max_expansion", "tf_idf"])
 def test_batch_search_declined_trees_keep_their_kernels(case, spark, mix, monkeypatch):
-    """A tree bucket_topk declines — a slop-2 phrase, any tree of a
-    round_to batch, a multiterm over an uncached lexicon or past
-    max_expansion, any tree under a non-BM25F weighting — and a multiterm
-    batch_search keeps off it for expanding past BUCKET_MAX_EXPANSION
-    still reach their DataFrame kernels; the accepted trees of the same
-    batch still join one bucket_topk call; every query equals per-query
-    search."""
+    """A tree bucket_topk declines — a slop-2 phrase, a multiterm over an
+    uncached lexicon or past max_expansion, any tree under a non-BM25F
+    weighting — and a multiterm batch_search keeps off it for expanding
+    past BUCKET_MAX_EXPANSION still reach their DataFrame kernels; the
+    accepted trees of the same batch, round_to batches included, still
+    join one bucket_topk call; every query equals per-query search."""
     from whoosh_spark.search.batch import batch_search
 
     s, queries, round_to, expected, bucket = _declined_case(
@@ -443,12 +445,13 @@ def test_batch_search_declined_trees_keep_their_kernels(case, spark, mix, monkey
 
 def test_selective_conjunctive_batch_matches_search(spark, tmp_path, monkeypatch):
     """A selective And-of-3/4 batch (each query has a doc-range-sparse
-    term) takes the chunk-intersection plan, not the bucket placement,
-    and still equals per-query Searcher.search bit for bit."""
-    from whoosh_spark.search.batch import _selective_fraction, batch_search
+    term) joins the one bucket_topk call, whose And skip leaves hot
+    blocks outside the rare terms' doc ranges undecoded, and still equals
+    per-query Searcher.search bit for bit."""
+    from whoosh_spark.search.batch import batch_conjunctive_search, batch_search
 
     rng = random.Random(5)
-    n_docs = 2560  # selectivity cutoff: df <= 2560 // 256 = 10
+    n_docs = 2560
     rare = [f"rare{j}" for j in range(6)]
     docs = []
     for i in range(n_docs):
@@ -466,15 +469,60 @@ def test_selective_conjunctive_batch_matches_search(spark, tmp_path, monkeypatch
         terms = [rng.choice(rare)] + rng.sample(VOCAB, 2 + i % 2)
         rng.shuffle(terms)
         queries.append((f"q{i}", "text", terms))
-    assert _selective_fraction(s, queries, 3) >= 0.8
     trees = [(qid, Q.And([Q.Term(f, t) for t in ts])) for qid, f, ts in queries]
     want = {qid: _top(s, q, 3) for qid, q in trees}
     answered = _spy(monkeypatch)
     got = _by_query(batch_search(s, trees, k=3).collect())
-    assert answered == []
+    assert answered == [True]
     assert any(got.values())
     for qid, _ in trees:
         assert got.get(qid, []) == want[qid], qid
+    _, stats = batch_conjunctive_search(s, queries, k=3, with_stats=True)
+    assert stats["qt_blocks_kept"] < stats["qt_blocks_total"], stats
+
+
+def test_rounded_k_boundary_through_the_kernel(spark, tmp_path, monkeypatch):
+    """Exact scores that differ below 10^-6 but tie after round(., 6), the
+    tie straddling k: batch_term_search(round_to=6) and
+    batch_search(round_to=6) each make one bucket_topk call and return the
+    rows F.round plus (score desc, doc_id asc) give over the full match
+    set, not the rounded exact top-k."""
+    from pyspark.sql import functions as F
+
+    from whoosh_spark.search.batch import batch_search, batch_term_search
+    from whoosh_spark.search.scoring import BM25F
+
+    # one "alfa" per doc, ids spread over several buckets; a higher id is
+    # a shorter doc, which scores ~2e-7 higher under B=1e-5, so the exact
+    # order is doc_id desc and a rounded tie's is doc_id asc
+    n = 48
+    docs = [Row(doc_id=i * 1000, text=" ".join(
+        ["alfa"] + ["pad"] * (n - i) + ["bravo"] * (i % 3 == 0))) for i in range(n)]
+    d = str(tmp_path / "roundix")
+    build_index(spark, spark.createDataFrame(docs), IndexSchema.of(text=TEXT()),
+                d, sha_col=None)
+    s = Searcher(Index(spark, d), weighting=BM25F(B=1e-5), exact_scores=True,
+                 cache_postings=False, use_local=False, local_threshold=0)
+    bags = [("qa", "text", ["alfa"]), ("qab", "text", ["alfa", "bravo"])]
+    trees = [(qid, Q.Or([Q.Term(f, t) for t in ts])) for qid, f, ts in bags]
+
+    def rounded(q, limit=None):
+        df = s.search(q, limit=limit).select(
+            "doc_id", F.round("score", 6).alias("score"))
+        df = df.orderBy(F.desc("score"), F.asc("doc_id"))
+        return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+    full = {qid: rounded(q) for qid, q in trees}
+    sc = [v for _, v in full["qa"]]
+    k = next(i for i in range(1, n) if sc[i - 1] == sc[i])  # a tie across k
+    want = {qid: rows[:k] for qid, rows in full.items()}
+    assert want["qa"] != rounded(trees[0][1], k)  # exact cut, then round
+    for route in (lambda: batch_term_search(s, bags, k=k, round_to=6),
+                  lambda: batch_search(s, trees, k=k, round_to=6)):
+        answered = _answering_spy(monkeypatch)
+        assert _by_query(route().collect()) == want
+        assert len(answered) == 1
+        monkeypatch.undo()
 
 
 def test_fused_tombstoned_index_bit_identical(spark, ix, tmp_path, monkeypatch):

@@ -1,5 +1,6 @@
 """Block-max WAND: pruned top-k must equal the exact top-k (mirrors the
-reference's usequality on/off differential, tests/test_quality.py)."""
+reference's usequality on/off differential, tests/test_quality.py). WAND
+is the block-max skip inside the bucket placement (local.bucket_topk)."""
 
 import pytest
 from pyspark.sql import Row
@@ -9,7 +10,7 @@ from whoosh_spark.corpus import synth_code_corpus
 from whoosh_spark.index import Index, build_index
 from whoosh_spark.schema import IndexSchema, TEXT, code_corpus_schema
 from whoosh_spark.search import Searcher
-from whoosh_spark.search.wand import block_max_wand
+from whoosh_spark.search.batch import batch_term_search, batch_wand_search
 
 
 @pytest.fixture(scope="module")
@@ -51,8 +52,11 @@ def test_wand_equals_exact(synth_ix, qi):
 
 def test_wand_actually_prunes(synth_ix):
     s = _exact_searcher(synth_ix)
-    terms = [("content", "def", 1.0), ("content", "mutex", 1.0)]
-    _, stats = block_max_wand(s, [("q", terms, 1.0)], 10, with_stats=True)
+    qs = [("q", "content", ["def", "mutex"])]
+    out, stats = batch_wand_search(s, qs, 10, with_stats=True)
+    ranked = sorted((r["rank"], r["doc_id"], r["score"]) for r in out.collect())
+    assert ranked == sorted((r["rank"], r["doc_id"], r["score"]) for r in
+                            batch_term_search(s, qs, 10).collect())
     assert stats["qt_blocks_total"] > 0
     assert stats["qt_blocks_kept"] <= stats["qt_blocks_total"]
     assert stats["decode_blocks_kept"] <= stats["decode_blocks_total"]

@@ -549,23 +549,14 @@ class Index:
 
     # ---- posting decode ----
 
-    def postings_for(self, field: str, terms: list[str], with_positions: bool = False,
-                     min_partitions: int | None = None) -> DataFrame:
+    def postings_for(self, field: str, terms: list[str],
+                     with_positions: bool = False) -> DataFrame:
         """Decoded postings for the given terms: (field, term, doc_id, tf,
         len_byte[, positions]). Parquet row-group stats prune the term scan
-        (blocks are written term-sorted).
-
-        ``min_partitions`` redistributes the (compact, encoded) block rows
-        before decode: Parquet packs small block files into one or two
-        128 MB input splits, which would serialize the decode -> score ->
-        fan-out pipeline on wide workloads (the batch path measured FLAT
-        ~250 s from 2 to 8 cores without this). Shuffling encoded blocks is
-        cheap — ~128x fewer rows than postings, binary payloads."""
+        (blocks are written term-sorted)."""
         blocks = self.postings_blocks().filter(
             (F.col("field") == field) & F.col("term").isin(list(terms))
         )
-        if min_partitions:
-            blocks = blocks.repartition(min_partitions)
         decoded = decode_blocks(blocks, with_positions=with_positions)
         return self._mask_deleted(decoded)
 
@@ -655,7 +646,7 @@ def decode_blocks(blocks: DataFrame, with_positions: bool = False,
                   with_char_formats: bool = False) -> DataFrame:
     """Decode block rows to posting rows. ``with_block_id`` carries
     (bucket, block_no) onto every posting so callers can apply per-block
-    decisions (batch WAND) after decode. ``with_char_formats`` (implies
+    decisions (batch phrases) after decode. ``with_char_formats`` (implies
     positions) additionally decodes the Characters/PositionBoosts payloads
     into ``pos_boosts``/``startchars``/``endchars`` array columns (NULL
     arrays on postings whose field doesn't store them) — the value_as

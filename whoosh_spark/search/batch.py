@@ -15,29 +15,28 @@ Supported batch shapes: bags of weighted terms per query, scored BM25F and
 combined by sum — the Or/term workload that dominates search serving.
 Conjunctive batches add a HAVING count = n_terms filter.
 
-``batch_search`` routes a query log by one rule: every tree the exact
-evaluator's bucket placement accepts (``local.bucket_tree``) joins ONE
-``local.bucket_topk`` call — the evaluator ``Searcher.search`` also uses,
-run once per doc-complete bucket partition — except the shapes a kernel
-here serves faster: selective conjunctive bag batches (the
-chunk-intersection plan, catalog._conjunctive_prune, decodes less and
-returns the same scores bit for bit), FuzzyTerms (one JVM Levenshtein
-lexicon scan per batch instead of a Python one per query) and
-Prefix/Wildcard/Regex/TermRange expanding past ``BUCKET_MAX_EXPANSION``
-terms (a distinct doc-id set instead of every expanded term scored). That
-call covers bags, slop-1 phrases, narrow multiterms expanded against the
-driver-cached lexicon and nested trees. The DataFrame kernels serve those
-exceptions and what the placement declines (``round_to`` batches,
-non-BM25F weightings, phrases with slop other than 1, uncached lexicons,
-expansions past ``max_expansion``): phrase batches
-(``batch_phrase_search``) add a positional adjacency chain evaluated as
-JVM higher-order array expressions; prefix batches
-(``batch_prefix_search``) expand against one lexicon scan per field and
-keep the reference's constant-score / single-term-degenerate semantics;
-fuzzy batches (``batch_fuzzy_search``) expand via one JVM-levenshtein
-lexicon scan into scored Or bags; generic pattern/range batches
-(``batch_multiterm_search``) evaluate every query's term predicate in
-one Arrow pass over the lexicon.
+One engine answers BM25F bag batches: ``local.bucket_topk``, the exact
+evaluator ``Searcher.search`` also uses, run once per doc-complete bucket
+partition. Posting intersection (``conjunctive_skip``) and block-max WAND
+(``use_wand``) are two exact block skips inside it, and ``round_to``
+rounds after each partition's widened top-k. The DataFrame bag plan
+serves only other weightings. ``batch_search`` sends every tree the
+placement accepts (``local.bucket_tree``) to ONE ``bucket_topk`` call —
+bags, slop-1 phrases, multiterms expanded against the driver-cached
+lexicon, nested trees — except FuzzyTerms (one JVM Levenshtein lexicon
+scan per batch instead of a Python one per query) and Prefix/Wildcard/
+Regex/TermRange expanding past ``BUCKET_MAX_EXPANSION`` terms (a distinct
+doc-id set instead of every expanded term scored). The DataFrame kernels
+serve those and what the placement declines (non-BM25F weightings,
+phrases with slop other than 1, uncached lexicons, expansions past
+``max_expansion``): phrase batches (``batch_phrase_search``) add a
+positional adjacency chain evaluated as JVM higher-order array
+expressions; prefix batches (``batch_prefix_search``) expand against one
+lexicon scan per field and keep the reference's constant-score /
+single-term-degenerate semantics; fuzzy batches (``batch_fuzzy_search``)
+expand via one JVM-levenshtein lexicon scan into scored Or bags; generic
+pattern/range batches (``batch_multiterm_search``) evaluate every
+query's term predicate in one Arrow pass over the lexicon.
 """
 
 from __future__ import annotations
@@ -45,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from whoosh_spark.index.catalog import _conjunctive_prune, decode_blocks
+from whoosh_spark.query import nodes as Q
 from whoosh_spark.search.engine import Searcher, _PlanContext
 from whoosh_spark.search.local import _term_stats
 
@@ -98,27 +98,6 @@ def _and_agg(per_query: DataFrame) -> DataFrame:
     ).filter("_all").select("query_id", "doc_id", "score")
 
 
-def _selective_fraction(searcher: Searcher,
-                        queries: list[tuple[str, str, list[str]]],
-                        k: int) -> float:
-    """Fraction of queries carrying a doc-range-sparse term (k <= df <=
-    doc_count/BOUND_CHUNK). Such a term misses most 256-id chunks, so a
-    conjunctive query's other terms' blocks prune there (the chunk-
-    intersection plan). Driver-side metadata only (term stats), no Spark
-    job."""
-    from whoosh_spark.index.catalog import BOUND_CHUNK
-
-    ix = searcher.index
-    cutoff = max(1, ix.doc_count_all() // BOUND_CHUNK)
-    df = {ft: int(row["df"]) for ft, row in _term_stats(
-        ix, {(f, t) for _, f, terms in queries for t in terms}).items()}
-    sel = sum(
-        1 for _, field, terms in queries
-        if any(k <= df.get((field, t), 0) <= cutoff for t in terms)
-    )
-    return sel / max(1, len(queries))
-
-
 def _topk_window(agg: DataFrame, k: int) -> DataFrame:
     # NOTE a partition-local pre-top-k via mapInPandas was tried here and
     # REVERTED: shipping the full aggregated (query, doc) set across the
@@ -133,6 +112,21 @@ def _topk_window(agg: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _bags(queries, conjunctive: bool) -> list:
+    node = Q.And if conjunctive else Q.Or
+    return [(qid, node([Q.Term(field, t) for t in terms]))
+            for qid, field, terms in queries]
+
+
+def _bucket_stats(searcher, bags, k, **kw):
+    from whoosh_spark.search.local import bucket_topk
+
+    out = bucket_topk(searcher, bags, k, with_stats=True, **kw)
+    if out is None:
+        raise ValueError("with_stats needs the BM25F bucket placement")
+    return out
+
+
 def batch_term_search(
     searcher: Searcher,
     queries: list[tuple[str, str, list[str]]],
@@ -144,59 +138,39 @@ def batch_term_search(
 ) -> DataFrame:
     """queries: [(query_id, field, [terms...])] -> top-k per query, each
     query scored as ``Or`` (or ``And`` when ``conjunctive``) of its terms.
-    This is the bag API; ``batch_search`` sends query trees to
-    ``local.bucket_topk`` itself and calls this only for the routes below
-    that need bags.
+    Returns DataFrame(query_id, doc_id, score, rank).
 
-    Returns DataFrame(query_id, doc_id, score, rank). ``use_wand``:
-    True routes disjunctive batches through per-query block-max pruning
-    (batch_wand_search, exact like every route here). It is not the
-    default: the bucket evaluator below measured faster on every batch
-    WAND was timed on, selective ones included (BENCH/WAND_SKEW.json).
-    Every other batch runs the
-    exact evaluator once per doc-complete bucket partition
-    (``local.bucket_topk``) on the bag's Or/And tree, which scores each
-    query bit-identically to ``Searcher.search`` and never materializes
-    the |queries| x |docs| matched set. Two cases keep DataFrame plans:
-    selective conjunctive batches take per-query chunk-intersection block
-    skipping (it decodes less; ``conjunctive_skip=False`` keeps the
-    full-decode plan for A/B benchmarking), and ``round_to`` rounds scores
-    BEFORE the top-k window so the k-boundary tie-cut is deterministic
-    across engines (oracle comparisons). Conjunctive plans and WAND sum
-    in the engine's order (huffman, child) too; the rounded disjunctive
-    plan sums in shuffle order."""
-    if use_wand and not conjunctive:
-        return batch_wand_search(searcher, queries, k, round_to=round_to)
-    if round_to is None and not (
-            conjunctive and _selective_fraction(searcher, queries, k) >= 0.8):
-        from whoosh_spark.query import nodes as Q
-        from whoosh_spark.search.local import bucket_topk
+    A BM25F batch runs ``local.bucket_topk``: each query scored
+    bit-identically to ``Searcher.search``, with the And skip
+    (``conjunctive_skip``, And batches) or the block-max skip
+    (``use_wand``, Or batches) deciding which blocks decode. ``round_to``
+    rounds scores BEFORE the top-k window so the k-boundary tie-cut is
+    deterministic across engines (oracle comparisons). Other weightings
+    take the DataFrame bag plan below (its rounded disjunctive plan sums
+    in shuffle order)."""
+    from whoosh_spark.search.local import bucket_topk
 
-        node = Q.And if conjunctive else Q.Or
-        trees = [(qid, node([Q.Term(field, t) for t in terms]))
-                 for qid, field, terms in queries]
-        out = bucket_topk(searcher, trees, k)
-        if out is not None:
-            return out
-    if conjunctive and conjunctive_skip:
-        return batch_conjunctive_search(searcher, queries, k, round_to=round_to)
+    out = bucket_topk(searcher, _bags(queries, conjunctive), k, round_to=round_to,
+                      conjunctive_skip=conjunctive_skip,
+                      use_wand=use_wand and not conjunctive)
+    if out is not None:
+        return out
     ix = searcher.index
     qdf, all_terms, plan = _prepare(searcher, queries)
     term_pairs = {(f, t) for f, ts in all_terms.items() for t in ts}
     # spread the encoded blocks across the cluster BEFORE decode — the
     # batch fan-out (score x queries-per-term) is the heavy stage and must
-    # not inherit the 1-2 packed Parquet input splits. One task per core:
-    # the r6 vectorized block decode made finer splits pure overhead
-    # (64 partitions measured 0.6s slower end-to-end than 32 on 32 cores).
-    nparts = max(1, ix.spark.sparkContext.defaultParallelism)
-    parts = []
-    for field, ts in all_terms.items():
-        parts.append(ix.postings_for(field, list(ts), min_partitions=nparts))
-    decoded = parts[0]
-    for p in parts[1:]:
-        decoded = decoded.unionByName(p)
-    scored = plan.attach_scores(decoded, sorted(term_pairs))
-
+    # not inherit the 1-2 packed Parquet input splits (Parquet packs small
+    # block files into one or two 128 MB splits; shuffling encoded blocks
+    # is cheap, ~128x fewer rows than postings). One task per core: the r6
+    # vectorized block decode made finer splits pure overhead (64
+    # partitions measured 0.6s slower end-to-end than 32 on 32 cores).
+    blocks = ix.postings_blocks().filter(
+        F.col("term").isin(sorted({t for _, t in term_pairs}))
+        & F.col("field").isin(sorted(all_terms))
+    ).repartition(max(1, ix.spark.sparkContext.defaultParallelism))
+    scored = plan.attach_scores(ix._mask_deleted(decode_blocks(blocks)),
+                                sorted(term_pairs))
     joined = scored.join(F.broadcast(qdf), on=["field", "term"])
     if conjunctive:
         out = _and_agg(joined)
@@ -218,49 +192,17 @@ def batch_conjunctive_search(
     round_to: int | None = None,
     with_stats: bool = False,
 ):
-    """Conjunctive (all-terms-required) batch with per-query
-    chunk-intersection block skipping.
-
-    For each query, only doc-id chunks where EVERY query term has an
-    overlapping block can contain a match, so each term's blocks outside
-    the query's shared chunks are dropped before decode — the reference's
+    """Conjunctive (all-terms-required) batch with the And skip inside
+    ``local.bucket_topk``: a term's block decodes only where every other
+    term of the query has an overlapping block — the reference's
     IntersectionMatcher ``skip_to`` jump (matching/binary.py,
-    codec/whoosh3.py:1018-1036) on block metadata. Exact for any scoring
-    mode: pruned blocks only hold docs missing some required term. For
-    And(rare, hot) batches this decodes ~df(rare)/N of the hot lists.
-    ``with_stats=True`` additionally returns per-(query,term) block
-    keep/total counts (two extra count jobs — diagnostics only)."""
-    ix = searcher.index
-    qdf, all_terms, plan = _prepare(searcher, queries)
-    term_pairs = {(f, t) for f, ts in all_terms.items() for t in ts}
-
-    blocks = ix.postings_blocks().filter(
-        F.col("term").isin([t for _, t in term_pairs])
-        & F.col("field").isin(list(all_terms))
-    )
-    # chunk math runs on DISTINCT (query, field, term) pairs; the original
-    # qdf (with any repeated terms) is joined back afterwards so duplicate
-    # terms keep scoring twice, exactly like the unpruned plan
-    qdf_u = qdf.dropDuplicates(["query_id", "field", "term"])
-    allowed, surv_blocks = _conjunctive_prune(blocks, qdf_u)
-    decoded = ix._mask_deleted(decode_blocks(surv_blocks, with_block_id=True))
-    scored = plan.attach_scores(decoded, sorted(term_pairs),
-                                extra_cols=["bucket", "block_no"])
-    per_query = scored.join(allowed, on=["field", "term", "bucket", "block_no"])
-    # restore duplicate-term multiplicity (qdf join fans out repeated terms)
-    per_query = per_query.join(F.broadcast(qdf), on=["query_id", "field", "term"])
-    out = _and_agg(per_query)
-    if round_to is not None:
-        out = out.withColumn("score", F.round(F.col("score"), round_to))
-    topk = _topk_window(out, k)
-    if not with_stats:
-        return topk
-    return topk, {
-        "qt_blocks_total": blocks.join(F.broadcast(qdf_u), on=["field", "term"]).count(),
-        "qt_blocks_kept": allowed.count(),
-        "decode_blocks_total": blocks.count(),
-        "decode_blocks_kept": surv_blocks.count(),
-    }
+    codec/whoosh3.py:1018-1036) on block metadata. Exact: skipped blocks
+    only hold docs missing some required term. ``with_stats=True``
+    additionally returns the block keep/total counts (one extra Spark
+    job — diagnostics only)."""
+    if with_stats:
+        return _bucket_stats(searcher, _bags(queries, True), k, round_to=round_to)
+    return batch_term_search(searcher, queries, k, conjunctive=True, round_to=round_to)
 
 
 def batch_wand_search(
@@ -270,28 +212,17 @@ def batch_wand_search(
     with_stats: bool = False,
     round_to: int | None = None,
 ):
-    """Block-max WAND (``wand.block_max_wand``) for a bag batch
-    [(query_id, field, [terms...])], each query scored as ``Or`` of its
-    terms: per-query θ seeded from the strongest term's best blocks, then
-    chunk-aligned pruning on block metadata before decode. Returns the
-    exact route's top-k, bit for bit, repeated terms included.
-
-    ``with_stats=True`` returns ``(df, stats)`` with the ``qt_blocks_*`` /
-    ``decode_blocks_*`` keep/total counts and the seeded θ per query
-    (extra count jobs — diagnostic / benchmark use only).
-
-    Not a default route: on a 200,000-doc corpus with a rare long tail
-    (``scripts/wand_skew_bench.py``, BENCH/WAND_SKEW.json) a selective
-    200-query batch prunes 52% of its per-(query, term) blocks here and
-    still runs about 10x slower than ``local.bucket_topk``."""
-    from whoosh_spark.search.wand import block_max_wand
-
-    return block_max_wand(
-        searcher,
-        [(qid, [(field, t, 1.0) for t in terms], 1.0)
-         for qid, field, terms in queries],
-        k, with_stats=with_stats, round_to=round_to,
-    )
+    """Block-max WAND for a bag batch [(query_id, field, [terms...])], each
+    query scored as ``Or`` of its terms: ``local.bucket_topk`` with its
+    block-max skip (θ seeded per partition from the strongest term's best
+    blocks). Returns the exact route's top-k, bit for bit, repeated terms
+    included. ``with_stats=True`` returns ``(df, stats)`` with the
+    ``qt_blocks_*`` / ``decode_blocks_*`` keep/total counts and each
+    query's best partition θ (one extra Spark job — diagnostics only)."""
+    if with_stats:
+        return _bucket_stats(searcher, _bags(queries, False), k, round_to=round_to,
+                             use_wand=True)
+    return batch_term_search(searcher, queries, k, use_wand=True, round_to=round_to)
 
 
 def batch_phrase_search(
@@ -785,10 +716,10 @@ def batch_search(
     One routing rule: every tree the bucket placement accepts
     (``local.bucket_tree``) joins ONE ``local.bucket_topk`` call — the
     exact evaluator in each doc-complete bucket partition, so those
-    queries equal ``Searcher.search`` bit for bit — except the shapes a
-    batch kernel serves faster: And bag batches that are selective (the
-    chunk-intersection plan decodes less there), FuzzyTerms,
-    and Prefix/Wildcard/Regex/TermRange nodes expanding past
+    queries equal ``Searcher.search`` bit for bit, with the And skip
+    deciding which blocks of And and phrase trees decode, and with
+    ``round_to`` applied before the top-k cut — except FuzzyTerms and
+    Prefix/Wildcard/Regex/TermRange nodes expanding past
     ``BUCKET_MAX_EXPANSION`` terms (see ``_bucket_route``). Multiterms
     join it expanded against the driver-cached lexicon. The batch kernels
     serve those exceptions and what the placement declines, one job chain
@@ -798,7 +729,6 @@ def batch_search(
     by (maxdist, prefixlength)) and constant-score Wildcard/Regex/TermRange
     to ``batch_multiterm_search``. The bucket placement declines:
 
-    - every tree of a ``round_to`` batch
     - every tree when the weighting is not plain BM25F
     - multi-word phrases with slop other than 1
     - multiterms on a field whose lexicon is past ``Index.PREFETCH_TERMS``
@@ -811,9 +741,10 @@ def batch_search(
     kernels' shapes instead (a serving deployment that must never run
     per-query jobs).
 
-    Fallback note: batch kernels apply ``round_to`` BEFORE their top-k
-    tie-cut; fallback queries keep the engine's exact-score cut and round
-    after, which can differ at a rounded k-boundary tie."""
+    Fallback note: the bucket placement and the batch kernels apply
+    ``round_to`` BEFORE their top-k tie-cut; fallback queries keep the
+    engine's exact-score cut and round after, which can differ at a
+    rounded k-boundary tie."""
     ix = searcher.index
     if any(isinstance(q, str) for _, q in queries):
         if parser is None:
@@ -831,30 +762,24 @@ def batch_search(
         if c is None or c[0] != "null":
             routed.append((qid, q, c))
 
-    outs = []
-    if round_to is None:
-        from whoosh_spark.search.local import bucket_topk
+    from whoosh_spark.search.local import bucket_topk
 
-        selective = set()
-        bags = [(qid, *c[1]) for qid, _, c in routed if c and c[0] == "and"]
-        if bags and _selective_fraction(searcher, bags, k) >= 0.8:
-            selective.update(qid for qid, _, _ in bags)
-        exact, declined = [], []
-        for qid, q, c in routed:
-            t = None if qid in selective else _bucket_route(searcher, q, c)
-            if t is None:
-                declined.append((qid, q, c))
-            else:
-                exact.append((qid, t))
-        if exact:
-            outs.append(bucket_topk(searcher, exact, k))
-        routed = declined
+    outs = []
+    exact, declined = [], []
+    for qid, q, c in routed:
+        t = _bucket_route(searcher, q, c)
+        if t is None:
+            declined.append((qid, q, c))
+        else:
+            exact.append((qid, t))
+    if exact:
+        outs.append(bucket_topk(searcher, exact, k, round_to=round_to))
 
     buckets: dict = {"term": [], "and": [], "prefix": [], "multiterm": []}
     phrase_by_slop: dict = {}
     fuzzy_by_params: dict = {}
     fallback = []
-    for qid, q, c in routed:
+    for qid, q, c in declined:
         if c is None:
             fallback.append((qid, q))
             continue

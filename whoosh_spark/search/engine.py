@@ -112,9 +112,11 @@ class Searcher:
                use_wand: bool = False) -> DataFrame:
         """Top-k (score desc, doc_id asc) as a DataFrame(doc_id, score).
 
-        ``use_wand=True`` routes a Term or flat Or of Terms without
-        negative boosts through block-max pruning (search/wand.py); it
-        returns the same (doc_id, score) top-k, bit for bit."""
+        ``use_wand=True`` sends a Term or flat Or of Terms without
+        negative boosts to the bucket placement with its block-max skip
+        (``local.bucket_topk``): blocks whose bound cannot reach the
+        partition's k-th score are never decoded. It returns the same
+        (doc_id, score) top-k, bit for bit; other shapes ignore it."""
         if (self.use_local and self.exact_scores and limit is not None
                 and filter_q is None and mask_q is None
                 and not getattr(self.weighting, "use_final", False)
@@ -133,24 +135,22 @@ class Searcher:
             rows = try_local_search(self, q, limit)
             if rows is not None:
                 return self.spark_rows_df(rows)
-        if (use_wand and limit is not None and filter_q is None and mask_q is None
-                and not getattr(self.weighting, "use_final", False)):
-            wand = self.wand_search(q, limit)
-            if wand is not None:
-                return wand
-        from whoosh_spark.search.local import bucket_topk, kernel_shape
+        from whoosh_spark.search.local import bucket_topk, kernel_shape, wand_terms
 
-        if (self.exact_scores and limit is not None and filter_q is None
-                and mask_q is None and kernel_shape(q)):
+        wand = use_wand and wand_terms(q) is not None
+        if (limit is not None and filter_q is None and mask_q is None
+                and (wand or (self.exact_scores and kernel_shape(q)))):
             # past the local threshold: the same exact evaluator runs once
             # per doc-complete bucket partition (search/local.py) for flat
-            # term bags, slop-1 phrases and AndNot/Require of a bag. Unlike
-            # the expression/join plans below it never materializes or
-            # shuffles the full matched set. Measured at 2.5M docs: or5
-            # 4.9s -> ~1.5s, and2 3.4 -> ~1.2s. The relaxed
+            # term bags, slop-1 phrases and AndNot/Require of a bag, and
+            # for every ``use_wand`` Term / flat Or (with its block-max
+            # skip). Unlike the expression/join plans below it never
+            # materializes or shuffles the full matched set. Measured at
+            # 2.5M docs: or5 4.9s -> ~1.5s, and2 3.4 -> ~1.2s. The relaxed
             # exact_scores=False contract keeps its aggregation plan:
             # oracle comparisons hash that plan's output.
-            df = bucket_topk(self, [("q", q)], limit)
+            df = bucket_topk(self, [("q", q)], limit, use_wand=wand,
+                             conjunctive_skip=self.conjunctive_skip)
             if df is not None:
                 return df.orderBy(F.asc("rank")).select("doc_id", "score")
         df = self.matches(q, filter_q=filter_q, mask_q=mask_q)
@@ -174,20 +174,6 @@ class Searcher:
             "score": pa.array([s for _, s in rows], type=pa.float64()),
         })
         return self.index.spark.createDataFrame(tbl, schema="doc_id long, score double")
-
-    def wand_search(self, q: Q.Query, limit: int) -> DataFrame | None:
-        """Block-max WAND (search/wand.py) for ``q`` as a batch of one;
-        None if the query shape is not eligible (``_wand_terms``)."""
-        from whoosh_spark.search.wand import block_max_wand
-
-        spec = _wand_terms(_PlanContext(self)._resolve_multiterms(q))
-        if spec is None:
-            return None
-        terms, boost = spec
-        df = block_max_wand(self, [("q", terms, boost)], limit)
-        # one query: its <= limit rows fit one partition, sorted there
-        # without the sampling job a global orderBy launches
-        return df.coalesce(1).sortWithinPartitions("rank").select("doc_id", "score")
 
     def search_results(self, q: Q.Query, limit: int | None = 10,
                        terms: bool = False, sortedby=None,
@@ -485,22 +471,6 @@ class Searcher:
 
     def idf(self, doc_count_all: int, df: int) -> float:
         return self.weighting.idf(doc_count_all, df)
-
-
-def _wand_terms(q: Q.Query):
-    """([(field, term, boost)], boost) when q is a Term or a flat Or of
-    Terms, else None. WAND's bounds assume every contribution is >= 0, so
-    a negative term or Or boost declines too (the exact route answers)."""
-    if isinstance(q, Q.Term):
-        terms, boost = [q], 1.0
-    elif (isinstance(q, Q.Or) and q.minmatch == 0 and q.scale is None
-          and all(isinstance(c, Q.Term) for c in q.subqueries)):
-        terms, boost = q.subqueries, q.boost
-    else:
-        return None
-    if boost < 0 or any(c.boost < 0 for c in terms):
-        return None
-    return [(c.field, c.text, c.boost) for c in terms], boost
 
 
 class _PlanContext:

@@ -33,13 +33,14 @@ every query of the batch and emits a local top-k; a small window merges
 the partitions, exact by the top-k merge property (doc_id breaks score
 ties). Only ``queries x k`` rows per partition reach a shuffle — this is
 the scale path for hot terms past the threshold. ``Searcher.search`` sends
-it the single-query shapes ``kernel_shape`` names. ``batch_search`` sends
-it, in one call, every tree of an unrounded batch that ``bucket_tree``
-accepts — bags, slop-1 phrases, multiterms expanded against the
-driver-cached lexicon, nested trees — except selective bag batches,
+it the single-query shapes ``kernel_shape`` names and its ``use_wand``
+Terms and flat Ors. ``batch_search`` sends it, in one call, every tree of
+a batch that ``bucket_tree`` accepts — bags, slop-1 phrases, multiterms
+expanded against the driver-cached lexicon, nested trees — except
 FuzzyTerms and wide multiterm expansions, which its DataFrame kernels
 serve faster; those kernels also serve the trees ``bucket_tree``
-declines.
+declines. Posting intersection and block-max WAND are two exact block
+skips inside this placement (``_prune``), not plans of their own.
 """
 
 from __future__ import annotations
@@ -608,20 +609,181 @@ def bucket_tree(searcher, q):
     return q
 
 
-def bucket_topk(searcher, queries, k: int):
+def wand_terms(q):
+    """([((field, term), boost)], boost) when ``q`` is a Term or a flat Or
+    of Terms, else None. Block-max bounds assume every contribution is
+    >= 0, so a negative term or Or boost declines too."""
+    if isinstance(q, Q.Term):
+        terms, boost = [q], 1.0
+    elif (isinstance(q, Q.Or) and q.minmatch == 0 and q.scale is None
+          and all(isinstance(c, Q.Term) for c in q.subqueries)):
+        terms, boost = q.subqueries, q.boost
+    else:
+        return None
+    if boost < 0 or any(c.boost < 0 for c in terms):
+        return None
+    return [((c.field, c.text), c.boost) for c in terms], boost
+
+
+def _required(q) -> set:
+    """The (field, term) pairs every match of ``q`` contains."""
+    if isinstance(q, Q.Term):
+        return {(q.field, q.text)}
+    if isinstance(q, Q.Phrase):
+        return {(q.field, w) for w in q.words}
+    if isinstance(q, (Q.Or, Q.DisjunctionMax)):
+        subs = [_required(c) for c in q.subqueries]
+        return set.intersection(*subs) if subs else set()
+    if isinstance(q, (Q.AndNot, Q.AndMaybe)):
+        return _required(q.a)
+    if isinstance(q, (Q.And, Q.Require, Q.ConstantScore)):
+        return set().union(*(_required(c) for c in q.children()))
+    return set()
+
+
+#: relative and absolute slack on a block-max bound, for float rounding
+EPS = 1e-12
+
+
+def _runs(lo, hi, val):
+    """A term's block doc ranges merged into disjoint sorted runs:
+    (starts, ends, max ``val`` per run plus a trailing 0.0)."""
+    o = np.argsort(lo, kind="stable")
+    lo, hi, val = lo[o], hi[o], val[o]
+    at = np.flatnonzero(np.r_[True, lo[1:] > np.maximum.accumulate(hi)[:-1]])
+    return lo[at], np.maximum.reduceat(hi, at), np.r_[np.maximum.reduceat(val, at), 0.0]
+
+
+def _overlap(runs, lo, hi, scored=False):
+    """Per doc range [lo, hi]: whether it overlaps any of ``runs`` or,
+    ``scored``, the max value of the runs it overlaps (0.0 where none)."""
+    rlo, rhi, rval = runs
+    a = np.searchsorted(rhi, lo)            # first run ending at/after lo
+    b = np.searchsorted(rlo, hi, "right")   # runs starting at/before hi
+    if not scored:
+        return b > a
+    ab = np.empty(2 * a.size, dtype=np.int64)
+    ab[0::2], ab[1::2] = a, b
+    return np.where(b > a, np.maximum.reduceat(rval, ab)[::2], 0.0)
+
+
+def _cols(fr):
+    """A block-row frame's ``_BLOCK_COLS`` as lists (None where absent)."""
+    return [fr[c].tolist() if c in fr else [None] * len(fr) for c in _BLOCK_COLS]
+
+
+def _prune(frames, plans, k, slack, consts, weighting, deleted):
+    """The block skips of one query group in a doc-complete partition,
+    where ``frames`` maps (field, term) to its block rows; ``plans`` holds
+    (query_id, terms, req, wand) per query. And skip: a block whose
+    [min_id, max_id] overlaps no block of some other pair in ``req`` (the
+    pairs every match contains) holds no match. Block-max skip: θ is the
+    k-th best score of the strongest ``wand`` occurrence over its best
+    blocks covering k postings (contributions are >= 0, so those k docs
+    total >= θ); a block whose bound plus every other occurrence's best
+    overlapping block bound cannot reach θ − ``slack`` is skipped. A doc
+    scoring >= θ − ``slack`` keeps all its blocks; one that lost a block
+    scores below the partition's k-th and its rounding window. Returns
+    ({(field, term): decode mask}, [(query_id, blocks kept, blocks total,
+    θ)]), blocks counted per (query, term)."""
+    lo = {ft: fr["min_id"].to_numpy() for ft, fr in frames.items()}
+    hi = {ft: fr["max_id"].to_numpy() for ft, fr in frames.items()}
+    bounds: dict = {}
+    runs: dict = {}
+    seeds: dict = {}
+
+    def bound(ft):  # each block's best posting score
+        if ft not in bounds:
+            c, fr = consts[ft], frames[ft]
+            mw = fr["max_tf"].to_numpy(np.float64) * c["fboost"]
+            fl = BYTE_TO_LENGTH[fr["min_len_byte"].to_numpy()].astype(np.float64)
+            bounds[ft] = (weighting.score_np(c["idf"], mw, fl, c["avgfl"], c["B"])
+                          if c["scorable"] else mw)
+        return bounds[ft]
+
+    def over(r, ft, scored=False):  # ft's blocks against r's runs
+        if (r, scored) not in runs:
+            runs[(r, scored)] = _runs(lo[r], hi[r], bound(r) if scored
+                                      else np.zeros(lo[r].size))
+        return _overlap(runs[(r, scored)], lo[ft], hi[ft], scored)
+
+    keep = {ft: np.zeros(len(fr), dtype=bool) for ft, fr in frames.items()}
+    out = []
+    for qid, terms, req, wand in plans:
+        need = {ft: np.ones(len(frames[ft]), dtype=bool) for ft in terms if ft in frames}
+        for ft, m in need.items():
+            for r in (req or set()) - {ft}:
+                m &= r in frames and over(r, ft)
+        theta = None
+        occ = [(ft, w) for ft, w in (wand[0] if wand else []) if ft in frames]
+        if occ:
+            ft, w = max(occ, key=lambda o: bound(o[0]).max() * o[1])
+            if ft not in seeds:  # the term's scores over its best blocks
+                best = np.argsort(-bound(ft), kind="stable")
+                best = best[:int(np.searchsorted(
+                    np.cumsum(frames[ft]["count"].to_numpy()[best]), k)) + 1]
+                seed: dict = {}
+                _load_term(seed, {}, ft, _cols(frames[ft].iloc[np.sort(best)]), False, deleted)
+                seeds[ft] = LocalEvaluator(seed, {}, consts, None, weighting).term_scores(*ft)[1]
+            part = seeds[ft] * w if w != 1.0 else seeds[ft]  # term_scores' boost
+            part = part * wand[1] if wand[1] != 1.0 else part
+            if part.size >= k:
+                theta = float(np.partition(part, -k)[-k])
+                hit: dict = {}
+                for i, (fi, wi) in enumerate(occ):
+                    ub = bound(fi) * wi + sum(over(fj, fi, True) * wj
+                                              for j, (fj, wj) in enumerate(occ) if j != i)
+                    hit[fi] = hit.get(fi, False) | (
+                        (ub * wand[1]) * (1 + EPS) + EPS >= theta - slack)
+                for f, m in hit.items():
+                    need[f] &= m
+        for ft, m in need.items():
+            keep[ft] |= m
+        out.append((qid, sum(int(m.sum()) for m in need.values()),
+                    sum(m.size for m in need.values()), theta))
+    return keep, out
+
+
+def _local_top(ids, sc, k: int, slack: float):
+    """Indices of the partition's top ``k`` by (score desc, doc_id asc),
+    widened to every doc within ``slack`` of the k-th score."""
+    order = np.lexsort((ids, -sc))
+    if slack and order.size > k:
+        kth = sc[order[k - 1]]
+        return order[:max(k, int(np.searchsorted(-sc[order], slack - kth, "right")))]
+    return order[:k]
+
+
+_STATS = ("query_id string, kept long, total long, theta double, "
+          "dec_kept long, dec_total long")
+
+
+def bucket_topk(searcher, queries, k: int, round_to: int | None = None,
+                conjunctive_skip: bool = True, use_wand: bool = False,
+                with_stats: bool = False):
     """Bucket placement: top-``k`` per query for ``queries`` =
     [(query_id, tree)], the evaluator run once per doc-complete bucket
     partition inside one ``mapInPandas``. Returns DataFrame(query_id,
     doc_id, score, rank), or None when ``bucket_tree`` declines any tree.
     Deleted doc ids ship in the kernel closure and are dropped during
     decode. ``batch_search`` makes one call per batch with the trees
-    ``bucket_tree`` accepts, so a mixed query log (bags, slop-1 phrases,
-    narrow cached-lexicon multiterms, nested trees) is one job chain.
+    ``bucket_tree`` accepts, so a mixed query log is one job chain.
+
+    Before decode, ``_prune`` runs the And skip (``conjunctive_skip``)
+    and, for ``wand_terms`` trees, the block-max skip (``use_wand``) on
+    block metadata shipped with the block rows; both are exact because a
+    doc in the global top-k is in its partition's top-k. ``round_to``:
+    each partition keeps every doc within 2·10^-round_to of its k-th
+    exact score, then ``F.round`` and ``_topk_window`` run in the JVM.
+    ``with_stats=True`` returns ``(df, stats)``: blocks kept vs total per
+    (query, term) (``qt_blocks_*``) and per group (``decode_blocks_*``),
+    and each query's best θ — one more Spark job.
 
     Parallelism below one task per core is recovered by replicating the
     block stream over G query groups: each query belongs to exactly one
     group, so per-(query, doc) work is never duplicated — only the cheap
-    block decode, bounded by G."""
+    block decode (a block any query of the group needs), bounded by G."""
+    import functools
     import zlib
 
     import pandas as pd
@@ -638,17 +800,24 @@ def bucket_topk(searcher, queries, k: int):
         q = bucket_tree(searcher, q)
         if q is None:
             return None
-        _collect_terms(q, plain, positional)
-        trees.append((qid, q))
+        terms: set = set()
+        _collect_terms(q, terms, positional)
+        plain |= terms
+        req = _required(q) if conjunctive_skip else set()
+        trees.append((qid, q, (qid, terms, req if len(req) > 1 or (req and req < terms) else None,
+                               wand_terms(q) if use_wand else None)))
     ix = searcher.index
     if not plain:
-        return ix.spark.createDataFrame(
+        out = ix.spark.createDataFrame(
             [], "query_id string, doc_id long, score double, rank int")
+        return (out, {"qt_blocks_total": 0, "qt_blocks_kept": 0, "decode_blocks_total": 0,
+                      "decode_blocks_kept": 0, "theta": {}}) if with_stats else out
     w = searcher.weighting
     stats = _term_stats(ix, plain)
     consts = term_constants(searcher, stats, stats)
     stats_view = _Stats(stats, ix.doc_count_all())
     deleted = _deleted_ids(ix)
+    slack = 0.0 if round_to is None else 2 * 10.0 ** -round_to
 
     nparts = max(1, ix.spark.sparkContext.defaultParallelism)
     segs = ix.manifest.segments
@@ -656,12 +825,15 @@ def bucket_topk(searcher, queries, k: int):
             - min((s.min_doc_id for s in segs), default=0))
     G = int(max(1, min(len(trees), nparts // (span // DEFAULT_BUCKET_WIDTH + 1))))
     by_group: list = [[] for _ in range(G)]
-    for qid, q in trees:
-        by_group[zlib.crc32(str(qid).encode()) % G].append((qid, q))
+    for t in trees:
+        by_group[zlib.crc32(str(t[0]).encode()) % G].append(t)
+    pruned = [any(p[2] or p[3] for _, _, p in grp) for grp in by_group]
 
     cols = ["field", "term", "bucket", *_BLOCK_COLS[:-1]]
     if positional:
         cols.append("positions")
+    if any(pruned) or with_stats:
+        cols += ["min_id", "max_id", "max_tf", "min_len_byte"]
     blocks = ix.postings_blocks().filter(
         F.col("term").isin(sorted({t for _, t in consts}))
         & F.col("field").isin(sorted({f for f, _ in consts}))
@@ -670,38 +842,52 @@ def bucket_topk(searcher, queries, k: int):
         "g", F.explode(F.sequence(F.lit(0), F.lit(G - 1))) if G > 1 else F.lit(0))
     parts = blocks.repartition(nparts, "bucket", "g")
 
-    def kernel(batches):
-        acc: dict = {}  # (g, field, term) -> block columns
+    def kernel(batches, report=False):
+        acc: dict = {}  # g -> (field, term) -> [block-row frames]
         for pdf in batches:
             for (g, fld, trm), idx in pdf.groupby(
                     ["g", "field", "term"], sort=False).indices.items():
-                sub = pdf.iloc[idx]
-                a = acc.setdefault((g, fld, trm), tuple([] for _ in _BLOCK_COLS))
-                for c, out in zip(_BLOCK_COLS, a):
-                    out.extend(sub[c].tolist() if c in sub else [None] * len(sub))
-        out_q: list = []
-        out_d: list = []
-        out_s: list = []
-        for g in {g for g, _, _ in acc}:
+                acc.setdefault(g, {}).setdefault((fld, trm), []).append(pdf.iloc[idx])
+        rows: list = []
+        for g, by_term in acc.items():
+            frames = {ft: pd.concat(v, ignore_index=True) for ft, v in by_term.items()}
+            keep: dict = {}
+            if pruned[g] or report:
+                keep, qstats = _prune(frames, [p for _, _, p in by_group[g]],
+                                      k, slack, consts, w, deleted)
+            if report:
+                rows += [(*st, 0, 0) for st in qstats]
+                rows.append((None, 0, 0, None, sum(int(m.sum()) for m in keep.values()),
+                             sum(m.size for m in keep.values())))
+                continue
             postings: dict = {}
             positions: dict = {}
-            for (gg, fld, trm), cols_ in acc.items():
-                if gg == g:
-                    _load_term(postings, positions, (fld, trm), cols_,
-                               (fld, trm) in positional, deleted)
+            for ft, fr in frames.items():
+                fr = fr[keep[ft]] if ft in keep else fr
+                if len(fr):
+                    _load_term(postings, positions, ft, _cols(fr), ft in positional, deleted)
             ev = LocalEvaluator(postings, positions, consts, stats_view, w)
-            for qid, q in by_group[g]:
+            for qid, q, _ in by_group[g]:
                 ids, sc = ev.evaluate(q)
-                top = np.lexsort((ids, -sc))[:k]
-                out_q.extend([qid] * top.size)
-                out_d.append(ids[top])
-                out_s.append(sc[top])
-        if out_q:
-            yield pd.DataFrame({
-                "query_id": out_q,
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }, copy=False)
+                top = _local_top(ids, sc, k, slack)
+                rows.append(([qid] * top.size, ids[top], sc[top]))
+        if report:
+            yield pd.DataFrame(rows, columns=[c.split()[0] for c in _STATS.split(",")])
+        elif rows:
+            yield pd.DataFrame({"query_id": [qid for r in rows for qid in r[0]],
+                                "doc_id": np.concatenate([r[1] for r in rows]),
+                                "score": np.concatenate([r[2] for r in rows])}, copy=False)
 
     cand = parts.mapInPandas(kernel, "query_id string, doc_id long, score double")
-    return _topk_window(cand, k)
+    if round_to is not None:
+        cand = cand.withColumn("score", F.round(F.col("score"), round_to))
+    out = _topk_window(cand, k)
+    if not with_stats:
+        return out
+    st = parts.mapInPandas(functools.partial(kernel, report=True), _STATS).toPandas()
+    return out, {
+        "qt_blocks_total": int(st["total"].sum()), "qt_blocks_kept": int(st["kept"].sum()),
+        "decode_blocks_total": int(st["dec_total"].sum()),
+        "decode_blocks_kept": int(st["dec_kept"].sum()),
+        "theta": st.dropna(subset=["theta"]).groupby("query_id")["theta"].max().to_dict(),
+    }

@@ -49,10 +49,6 @@ class WeightingModel:
                   dc_col: Column | None = None) -> Column:
         raise NotImplementedError
 
-    def max_quality(self, idf: float, max_w: float, min_fl: float, avgfl: float, B: float, K1: float) -> float:
-        """Driver-side upper bound for WAND pruning."""
-        raise NotImplementedError
-
 
 class BM25F(WeightingModel):
     def __init__(self, B: float = 0.75, K1: float = 1.2, **field_B: float):
@@ -82,27 +78,17 @@ class BM25F(WeightingModel):
         K1 = self.K1
         return idf * ((w * (K1 + 1)) / (w + K1 * ((1 - B) + B * fl / avgfl)))
 
-    def max_quality(self, idf, max_w, min_fl, avgfl, B, K1=None):
-        # monotone increasing in w, decreasing in fl (scoring.py:199-221)
-        return self.score_py(idf, max_w, min_fl, avgfl, B)
-
 
 class TF_IDF(WeightingModel):
     def score_col(self, w, fl, idf_col, avgfl_col, b_col, one_minus_b_col, scorable,
                   cf_col=None, fl_total_col=None, dc_col=None):
         return F.when(scorable, w * idf_col).otherwise(w)
 
-    def max_quality(self, idf, max_w, min_fl, avgfl, B, K1=None):
-        return max_w * idf
-
 
 class Frequency(WeightingModel):
     def score_col(self, w, fl, idf_col, avgfl_col, b_col, one_minus_b_col, scorable,
                   cf_col=None, fl_total_col=None, dc_col=None):
         return w
-
-    def max_quality(self, idf, max_w, min_fl, avgfl, B, K1=None):
-        return max_w
 
 
 class DFree(WeightingModel):
@@ -121,9 +107,6 @@ class DFree(WeightingModel):
             + F.lit(0.5) * F.log(post / prior)
         )
         return F.when(scorable, score).otherwise(w)
-
-    def max_quality(self, idf, max_w, min_fl, avgfl, B, K1=None):
-        return float("inf")  # bounds unused; WAND not offered for DFree
 
 
 class PL2(WeightingModel):
@@ -146,9 +129,6 @@ class PL2(WeightingModel):
             + TF * (F.log(TF) - F.lit(self.REC_LOG2_E))
         )
         return F.when(scorable, score).otherwise(w)
-
-    def max_quality(self, idf, max_w, min_fl, avgfl, B, K1=None):
-        return float("inf")
 
 
 class MultiWeighting(WeightingModel):
@@ -182,9 +162,6 @@ class MultiWeighting(WeightingModel):
                               self.weightings[f].score_col(*args, **kw)).otherwise(expr)
         return expr
 
-    def max_quality(self, idf, max_w, min_fl, avgfl, B, K1=None):
-        return float("inf")  # mixed models: no single admissible bound
-
 
 class ReverseWeighting(WeightingModel):
     """0 - wrapped model's score (reference scoring.py:574-602): lowest
@@ -206,9 +183,6 @@ class ReverseWeighting(WeightingModel):
             w, fl, idf_col, avgfl_col, b_col, one_minus_b_col, scorable,
             cf_col=cf_col, fl_total_col=fl_total_col, dc_col=dc_col,
         )
-
-    def max_quality(self, idf, max_w, min_fl, avgfl, B, K1=None):
-        return float("inf")
 
 
 class FunctionWeighting(WeightingModel):
@@ -264,15 +238,12 @@ class FunctionWeighting(WeightingModel):
             return score
         return self.final(doc_id, score)
 
-    def max_quality(self, idf, max_w, min_fl, avgfl, B, K1=None):
-        return float("inf")  # unknown function: WAND pruning not offered
-
 
 def term_constants(searcher, stats: dict, terms) -> dict:
     """(field, term) -> the per-term constants every scoring route feeds
     its score formula: ``idf``, ``avgfl``, ``B``, ``fboost`` and
     ``scorable``. Computed once on the driver for the JVM score
-    expression's broadcast meta rows, WAND's block bounds and the numpy
+    expression's broadcast meta rows and the numpy
     evaluator alike, so every route scores a posting from the same
     Python floats. Under MultiWeighting the field's model supplies idf
     and B; a term without stats gets idf 0.0."""

@@ -29,13 +29,26 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or _default_parallelism(master)))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def default_driver_memory(ram_bytes: int | None = None) -> str:
+    """The driver heap: a quarter of physical RAM, at most 8 GB, so two
+    Spark processes (a test run beside an oracle check) fit one machine.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    if ram_bytes is None:
+        try:
+            ram_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (ValueError, OSError, AttributeError):
+            return "8g"
+    return f"{max(512, min(8192, ram_bytes // 4 // 2**20))}m"
 
 
 def _default_parallelism(master: str) -> int:
