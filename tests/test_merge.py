@@ -221,7 +221,7 @@ def test_midmerge_delete_not_resurrected(spark, tmp_path, monkeypatch):
         # lands after the merge read its snapshot but before the swap
         if not fired["done"]:
             fired["done"] = True
-            _delete_docs_locked(spark, d, [3, 7])
+            _delete_docs_locked(spark, d, spark.createDataFrame([(3,), (7,)], "doc_id long"))
         with real_lock(index_dir, timeout):
             yield
 
@@ -374,23 +374,29 @@ def _count_jobs(spark, fn):
 
 
 def test_delete_job_count_independent_of_segment_count(spark, tmp_path):
-    """delete_docs must launch a BOUNDED number of Spark jobs no matter how
-    many segments the index has (one unioned tombstone aggregation + one
-    partitioned staging write — NOT a count+write pair per segment). At
-    10^12-file scale an index has hundreds of segments; an O(segments)
-    job loop would serialize on driver round-trips."""
+    """delete_docs launches a number of Spark jobs that does not grow with
+    the index's segment count. A list of ids is tombstoned on the driver
+    and launches none. A DataFrame of ids runs one unioned tombstone
+    aggregation + one partitioned staging write — NOT a count+write pair
+    per segment. At 10^12-file scale an index has hundreds of segments;
+    an O(segments) job loop would serialize on driver round-trips."""
     schema = IndexSchema.of(key=ID(stored=True), value=TEXT())
+    ids = list(range(0, 90, 4))
     counts = {}
     for n_chunks in (3, 9):
-        d = str(tmp_path / f"idx{n_chunks}")
-        df = spark.createDataFrame(
-            [Row(doc_id=i, key=str(i), value=f"alfa w{i % 5} shared") for i in range(90)])
-        build_index(spark, df, schema, d, num_chunks=n_chunks, sha_col=None)
-        assert len(read_manifest(d).segments) == n_chunks
-        # ids spread across every segment so each one is affected
-        counts[n_chunks] = _count_jobs(
-            spark, lambda d=d: delete_docs(spark, d, list(range(0, 90, 4))))
-        assert Index(spark, d).doc_count() == 90 - len(range(0, 90, 4))
+        for kind in ("list", "frame"):
+            d = str(tmp_path / f"idx{n_chunks}{kind}")
+            df = spark.createDataFrame(
+                [Row(doc_id=i, key=str(i), value=f"alfa w{i % 5} shared") for i in range(90)])
+            build_index(spark, df, schema, d, num_chunks=n_chunks, sha_col=None)
+            assert len(read_manifest(d).segments) == n_chunks
+            # ids spread across every segment so each one is affected
+            batch = ids if kind == "list" else spark.createDataFrame(
+                [(i,) for i in ids], "doc_id long")
+            counts[n_chunks, kind] = _count_jobs(
+                spark, lambda d=d, batch=batch: delete_docs(spark, d, batch))
+            assert Index(spark, d).doc_count() == 90 - len(ids)
+    assert counts[3, "list"] == counts[9, "list"] == 0, counts
     # shape invariance: 3x the segments must not add a single job
-    assert counts[9] == counts[3], counts
-    assert counts[3] <= 12, counts  # measured 9: AQE stages, not per-segment work
+    assert counts[9, "frame"] == counts[3, "frame"], counts
+    assert counts[3, "frame"] <= 12, counts  # measured 9: AQE stages, not per-segment work

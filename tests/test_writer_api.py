@@ -192,3 +192,44 @@ def test_commit_one_tombstone_pass_equals_two(spark, tmp_path):
 
     assert state(one) == state(two)
     assert state(one)[1] == [2, 3, 0]
+
+
+def test_writer_commit_launches_no_jobs(spark, tmp_path):
+    """A commit of adds, updates by a stored and by an unstored unique
+    field, deletes by id and a delete by term writes its segment and its
+    tombstones on the driver: no Spark job. The tombstones are those of
+    test_commit_one_tombstone_pass_equals_two's one-pass commit, plus the
+    rows the term and the unstored-key update select."""
+    import pyarrow.parquet as pq
+    from test_merge import _count_jobs
+
+    schema = IndexSchema.of(key=ID(stored=True, unique=True),
+                            tag=ID(unique=True), body=TEXT(stored=True))
+    ix = create_in(spark, str(tmp_path / "nojobs"), schema)
+    for r in range(2):
+        with ix.writer() as w:
+            for i in range(6):
+                w.add_document(key=f"k{r}{i}", tag=f"t{r}{i}", body=f"alfa r{r} i{i}")
+
+    w = ix.writer()
+    for i in [1, 7, 8]:  # doc 1 is key k01, which an update below replaces
+        w.delete_document(i)
+    for k, body in [("k01", "bravo one"), ("k03", "bravo three")]:
+        w.update_document(key=k, body=body)
+    w.update_document(tag="t15", body="bravo five")  # unstored unique field
+    w.delete_by_term("body", "i4")  # docs 4 and 10
+    w.add_document(key="new", body="charlie")
+    assert _count_jobs(spark, lambda: w.commit(merge=False)) == 0
+
+    ix.reload()
+    assert [s.deleted_count for s in ix.manifest.segments] == [3, 4, 0]
+    live = sorted((r["doc_id"], r["key"], r["body"]) for r in ix.docs().collect())
+    assert live == [(0, "k00", "alfa r0 i0"), (2, "k02", "alfa r0 i2"),
+                    (5, "k05", "alfa r0 i5"), (6, "k10", "alfa r1 i0"),
+                    (9, "k13", "alfa r1 i3"), (12, "k01", "bravo one"),
+                    (13, "k03", "bravo three"), (14, None, "bravo five"),
+                    (15, "new", "charlie")]
+    # the tombstone files hold exactly the deleted ids
+    dead = sorted(int(i) for s in ix.manifest.segments if s.has_deletes
+                  for i in pq.read_table(s.deletes_path(ix.index_dir))["doc_id"].to_pylist())
+    assert dead == [1, 3, 4, 7, 8, 10, 11]

@@ -29,6 +29,15 @@ Per-posting ``len_byte`` (the quantized field length BM25 needs) is
 denormalized into the block payload, so query-time scoring requires no
 join against the lengths table — at 100 TB that removes the biggest
 shuffle from the hot path.
+
+Two placements share the kernels (``tokenize_postings``, ``doc_lengths``,
+``encode_blocks``) and write the same tables: ``build_segment`` runs them
+in the Spark plan above over a documents DataFrame (``build_index``, the
+bulk path), and ``build_segment_rows`` runs them on the driver over rows
+held there and writes each table with pyarrow as one sorted part file
+(``IndexWriter.commit``). The input decides: a writer commit's few rows
+would spend most of their time in Spark's fixed per-job cost, which the
+driver placement does not pay.
 """
 
 from __future__ import annotations
@@ -38,9 +47,13 @@ import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from whoosh_spark.index import codec
+from whoosh_spark.index.catalog import TERMSTATS_SCHEMA
 from whoosh_spark.index.quantize import length_to_byte_np
 from whoosh_spark.index.segment import (
     Manifest,
@@ -86,6 +99,8 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("endchars", T.BinaryType()),
     ]
 )
+
+POSTINGS_ARROW = to_arrow_schema(POSTINGS_SCHEMA)
 
 EXPLODED_SCHEMA = T.StructType(
     [
@@ -137,9 +152,12 @@ def _field_configs(schema: IndexSchema) -> list[tuple]:
     ]
 
 
-def extract_postings(docs: DataFrame, schema: IndexSchema, doc_id_col: str = "doc_id") -> DataFrame:
-    """docs -> long postings DF: one Arrow pass tokenizes ALL indexed fields
-    (reference emits per-field postings per doc, writing.py:737-767).
+def _postings_cfgs(schema: IndexSchema, columns) -> tuple[list[tuple], bool, bool]:
+    """The tokenize plan of a batch with ``columns``: ``(out_cfgs,
+    has_boost, has_charfmt)``. ``out_cfgs`` holds one ``(out_field,
+    src_col, analyzer, phrase, spell, charfmt)`` per posting field, where
+    charfmt is ``(store_chars, store_pos_boosts)`` for
+    Characters/PositionBoosts-format fields, else None.
 
     spelling=True morphic fields additionally emit a ``spell_<name>``
     lexicon of UNSTEMMED words, tf=1 per (doc, word) — the reference's
@@ -148,17 +166,10 @@ def extract_postings(docs: DataFrame, schema: IndexSchema, doc_id_col: str = "do
     its doc frequency)."""
     import dataclasses
 
-    schema = schema.bind_columns(docs.columns, exclude=(doc_id_col,))
     # a schema field absent from this batch's columns is simply not
     # indexed for these docs (reference add_document omits absent fields,
     # writing.py:725-760) — common right after an add_field
-    cfgs = [c for c in _field_configs(schema) if c[0] in docs.columns]
-    cols = [F.col(doc_id_col).alias("doc_id")] + [
-        F.col(name).cast("string").alias(name) for name, *_ in cfgs
-    ]
-    # (out_field, src_col, analyzer, phrase, spell, charfmt) — charfmt is
-    # (store_chars, store_pos_boosts) for Characters/PositionBoosts-format
-    # fields, else None
+    cfgs = [c for c in _field_configs(schema) if c[0] in columns]
     out_cfgs = [
         (name, name, ana, phrase, False,
          (chars, posb) if (chars or posb) else None)
@@ -172,121 +183,157 @@ def extract_postings(docs: DataFrame, schema: IndexSchema, doc_id_col: str = "do
                                      alt_stem=None, dmetaphone=None),
                  False, True, None)
             )
-
-    def _boosted(ana):
-        # delimited boosts AND dmetaphone secondary codes carry per-token
-        # boosts into posting weights
-        return ana.delimited_boost is not None or ana.dmetaphone is not None
-
     has_boost = any(_boosted(ana) for _, _, ana, _, _, _ in out_cfgs)
     has_charfmt = any(cf is not None for _, _, _, _, _, cf in out_cfgs)
+    return out_cfgs, has_boost, has_charfmt
+
+
+def _boosted(ana) -> bool:
+    # delimited boosts AND dmetaphone secondary codes carry per-token
+    # boosts into posting weights
+    return ana.delimited_boost is not None or ana.dmetaphone is not None
+
+
+def _doc_kernels(out_cfgs: list[tuple]) -> list[tuple]:
+    """Bind each posting field's per-document analyzer kernel once."""
+    return [
+        (out, src,
+         ana.doc_kernel_chars() if cf is not None
+         else (ana.doc_kernel_boost() if _boosted(ana) else ana.doc_kernel()),
+         phrase, _boosted(ana), spell, cf)
+        for out, src, ana, phrase, spell, cf in out_cfgs
+    ]
+
+
+def tokenize_postings(pdf: pd.DataFrame, kernels: list[tuple], has_boost: bool,
+                      has_charfmt: bool) -> pd.DataFrame | None:
+    """One batch of documents (``doc_id`` plus the text columns) -> its
+    exploded postings, or None when no document has text. The columns
+    follow EXPLODED_SCHEMA (with ``weight`` when ``has_boost`` or
+    ``has_charfmt``, and the payload arrays when ``has_charfmt``)."""
+    f_out, t_out, d_out, tf_out, p_out, l_out = [], [], [], [], [], []
+    w_out: list = []
+    b_out: list = []
+    sc_out: list = []
+    ec_out: list = []
+    for out, src, doc_kernel, phrase, boosted, spell, cf in kernels:
+        for did, text in zip(pdf["doc_id"], pdf[src]):
+            if text is None:
+                continue
+            agg, k = doc_kernel(text)
+            for t, val in agg.items():
+                if cf is not None:
+                    ps, scs, ecs, bs = val
+                    w = float(sum(bs))
+                elif boosted:
+                    ps, w = val
+                    scs = ecs = bs = None
+                else:
+                    ps, w = val, None
+                    scs = ecs = bs = None
+                if spell:
+                    ps = ps[:1]  # unique word per doc: tf=1
+                f_out.append(out)
+                t_out.append(t)
+                d_out.append(did)
+                tf_out.append(len(ps))
+                p_out.append(ps if phrase else None)
+                l_out.append(k)
+                if has_boost or has_charfmt:
+                    w_out.append(w if w is not None and not spell else float(len(ps)))
+                if has_charfmt:
+                    store_c, store_b = cf if cf is not None else (False, False)
+                    b_out.append(bs if (cf is not None and store_b) else None)
+                    sc_out.append(scs if (cf is not None and store_c) else None)
+                    ec_out.append(ecs if (cf is not None and store_c) else None)
+    if not f_out:
+        # a batch of only null-text docs: an all-empty pd.DataFrame
+        # types its list columns float64, which Arrow can't convert
+        # to list<int32> — yield nothing instead
+        return None
+    lens = np.asarray(l_out, dtype=np.int64)
+    out = {
+        "field": f_out,
+        "term": t_out,
+        "doc_id": d_out,
+        "tf": tf_out,
+        "positions": p_out,
+        "length": l_out,
+        "len_byte": length_to_byte_np(lens).astype(np.int32),
+    }
+    if has_boost or has_charfmt:
+        out["weight"] = w_out
+    if has_charfmt:
+        out["boosts"] = b_out
+        out["startchars"] = sc_out
+        out["endchars"] = ec_out
+    return pd.DataFrame(out)
+
+
+def doc_lengths(pdf: pd.DataFrame, cfgs: list[tuple]) -> pd.DataFrame | None:
+    """One batch of documents -> its (doc_id, field, length, len_byte)
+    rows (LENGTHS_SCHEMA), or None when no document has text."""
+    d_out, f_out, l_out = [], [], []
+    for name, ana, *_rest in cfgs:
+        for did, text in zip(pdf["doc_id"], pdf[name]):
+            if text is None:
+                continue
+            d_out.append(did)
+            f_out.append(name)
+            l_out.append(ana.kept_count(text))
+    if not d_out:
+        return None  # all-null batch: see tokenize_postings
+    lens = np.asarray(l_out, dtype=np.int64)
+    return pd.DataFrame(
+        {
+            "doc_id": d_out,
+            "field": f_out,
+            "length": l_out,
+            "len_byte": length_to_byte_np(lens).astype(np.int32),
+        }
+    )
+
+
+def _text_cols(docs: DataFrame, names, doc_id_col: str) -> list:
+    return [F.col(doc_id_col).alias("doc_id")] + [
+        F.col(name).cast("string").alias(name) for name in names
+    ]
+
+
+def extract_postings(docs: DataFrame, schema: IndexSchema, doc_id_col: str = "doc_id") -> DataFrame:
+    """docs -> long postings DF: one Arrow pass tokenizes ALL indexed fields
+    (reference emits per-field postings per doc, writing.py:737-767) with
+    ``tokenize_postings``."""
+    schema = schema.bind_columns(docs.columns, exclude=(doc_id_col,))
+    out_cfgs, has_boost, has_charfmt = _postings_cfgs(schema, docs.columns)
+    srcs = list(dict.fromkeys(src for _, src, *_ in out_cfgs))
 
     def kernel(batches):
-        kernels = [
-            (out, src,
-             ana.doc_kernel_chars() if cf is not None
-             else (ana.doc_kernel_boost() if _boosted(ana) else ana.doc_kernel()),
-             phrase, _boosted(ana), spell, cf)
-            for out, src, ana, phrase, spell, cf in out_cfgs
-        ]
+        kernels = _doc_kernels(out_cfgs)
         for pdf in batches:
-            f_out, t_out, d_out, tf_out, p_out, l_out = [], [], [], [], [], []
-            w_out: list = []
-            b_out: list = []
-            sc_out: list = []
-            ec_out: list = []
-            for out, src, doc_kernel, phrase, boosted, spell, cf in kernels:
-                texts = pdf[src]
-                dids = pdf["doc_id"]
-                for did, text in zip(dids, texts):
-                    if text is None:
-                        continue
-                    agg, k = doc_kernel(text)
-                    for t, val in agg.items():
-                        if cf is not None:
-                            ps, scs, ecs, bs = val
-                            w = float(sum(bs))
-                        elif boosted:
-                            ps, w = val
-                            scs = ecs = bs = None
-                        else:
-                            ps, w = val, None
-                            scs = ecs = bs = None
-                        if spell:
-                            ps = ps[:1]  # unique word per doc: tf=1
-                        f_out.append(out)
-                        t_out.append(t)
-                        d_out.append(did)
-                        tf_out.append(len(ps))
-                        p_out.append(ps if phrase else None)
-                        l_out.append(k)
-                        if has_boost or has_charfmt:
-                            w_out.append(w if w is not None and not spell else float(len(ps)))
-                        if has_charfmt:
-                            store_c, store_b = cf if cf is not None else (False, False)
-                            b_out.append(bs if (cf is not None and store_b) else None)
-                            sc_out.append(scs if (cf is not None and store_c) else None)
-                            ec_out.append(ecs if (cf is not None and store_c) else None)
-            if not f_out:
-                # a batch of only null-text docs: an all-empty pd.DataFrame
-                # types its list columns float64, which Arrow can't convert
-                # to list<int32> — yield nothing instead
-                continue
-            lens = np.asarray(l_out, dtype=np.int64)
-            out = {
-                "field": f_out,
-                "term": t_out,
-                "doc_id": d_out,
-                "tf": tf_out,
-                "positions": p_out,
-                "length": l_out,
-                "len_byte": length_to_byte_np(lens).astype(np.int32),
-            }
-            if has_boost or has_charfmt:
-                out["weight"] = w_out
-            if has_charfmt:
-                out["boosts"] = b_out
-                out["startchars"] = sc_out
-                out["endchars"] = ec_out
-            yield pd.DataFrame(out)
+            out = tokenize_postings(pdf, kernels, has_boost, has_charfmt)
+            if out is not None:
+                yield out
 
     out_schema = (EXPLODED_SCHEMA_CB if has_charfmt
                   else EXPLODED_SCHEMA_W if has_boost else EXPLODED_SCHEMA)
-    return docs.select(*cols).mapInPandas(kernel, out_schema)
+    return docs.select(*_text_cols(docs, srcs, doc_id_col)).mapInPandas(kernel, out_schema)
 
 
 def lengths_table(docs: DataFrame, schema: IndexSchema, doc_id_col: str = "doc_id") -> DataFrame:
     """Per-(doc, field) token counts — a dedicated light pass (no per-term
-    aggregation, no positions)."""
+    aggregation, no positions) with ``doc_lengths``."""
     schema = schema.bind_columns(docs.columns, exclude=(doc_id_col,))
     cfgs = [c for c in _field_configs(schema) if c[0] in docs.columns]
-    cols = [F.col(doc_id_col).alias("doc_id")] + [
-        F.col(name).cast("string").alias(name) for name, *_ in cfgs
-    ]
 
     def kernel(batches):
         for pdf in batches:
-            d_out, f_out, l_out = [], [], []
-            for name, ana, *_rest in cfgs:
-                for did, text in zip(pdf["doc_id"], pdf[name]):
-                    if text is None:
-                        continue
-                    d_out.append(did)
-                    f_out.append(name)
-                    l_out.append(ana.kept_count(text))
-            if not d_out:
-                continue  # all-null batch: see extract_postings note
-            lens = np.asarray(l_out, dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "doc_id": d_out,
-                    "field": f_out,
-                    "length": l_out,
-                    "len_byte": length_to_byte_np(lens).astype(np.int32),
-                }
-            )
+            out = doc_lengths(pdf, cfgs)
+            if out is not None:
+                yield out
 
-    return docs.select(*cols).mapInPandas(kernel, LENGTHS_SCHEMA)
+    return docs.select(*_text_cols(docs, [c[0] for c in cfgs], doc_id_col)).mapInPandas(
+        kernel, LENGTHS_SCHEMA)
 
 
 # ------------------------------------------------------------ block encode
@@ -365,6 +412,24 @@ def _encode_group(rows: list, field: str, term: str, bucket: int,
         )
 
 
+def _group_starts(pdf: pd.DataFrame) -> np.ndarray:
+    """Row offsets where a (field, term, bucket) group starts, over rows
+    sorted by (field, term, bucket, doc_id)."""
+    fields = pdf["field"].to_numpy()
+    terms = pdf["term"].to_numpy()
+    buckets = pdf["bucket"].to_numpy()
+    chg = np.flatnonzero(
+        (terms[1:] != terms[:-1]) | (buckets[1:] != buckets[:-1]) | (fields[1:] != fields[:-1])
+    )
+    return np.concatenate(([0], chg + 1))
+
+
+def encode_blocks(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Non-empty postings sorted by (field, term, bucket, doc_id) -> their
+    posting-block rows (POSTINGS_SCHEMA), in the same order."""
+    return _encode_rows(pdf, _group_starts(pdf), len(pdf))
+
+
 def _encode_partition(batches):
     """mapInPandas kernel over partitions pre-sorted by
     (field, term, bucket, doc_id). Emits posting-block rows; group work is
@@ -377,13 +442,7 @@ def _encode_partition(batches):
             carry = None
         if not len(pdf):
             continue
-        fields = pdf["field"].to_numpy()
-        terms = pdf["term"].to_numpy()
-        buckets = pdf["bucket"].to_numpy()
-        chg = np.flatnonzero(
-            (terms[1:] != terms[:-1]) | (buckets[1:] != buckets[:-1]) | (fields[1:] != fields[:-1])
-        )
-        starts = np.concatenate(([0], chg + 1))
+        starts = _group_starts(pdf)
         # hold back the final (possibly incomplete) group for the next batch
         last_start = int(starts[-1])
         carry = pdf.iloc[last_start:]
@@ -391,7 +450,7 @@ def _encode_partition(batches):
         if len(pdf_done):
             yield _encode_rows(pdf_done, starts[:-1], last_start)
     if carry is not None and len(carry):
-        yield _encode_rows(carry.reset_index(drop=True), np.array([0]), len(carry))
+        yield encode_blocks(carry.reset_index(drop=True))
 
 
 def _encode_rows(pdf: pd.DataFrame, starts: np.ndarray, total: int) -> pd.DataFrame:
@@ -425,10 +484,19 @@ def _encode_rows(pdf: pd.DataFrame, starts: np.ndarray, total: int) -> pd.DataFr
 
 # ------------------------------------------------------------------ build
 
-#: canonical docs.parquet dtype per typed schema kind (mirrors
-#: catalog.Index._KIND_DTYPES — the empty-index read assumes the same)
-_STORED_KIND_TYPES = {"numeric": "double", "datetime": "timestamp",
-                      "boolean": "boolean"}
+#: canonical docs.parquet dtype per typed schema kind (the empty-index
+#: read in catalog.Index assumes the same)
+_STORED_KIND_TYPES = {"numeric": T.DoubleType(), "datetime": T.TimestampType(),
+                      "boolean": T.BooleanType()}
+
+VECTORS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("field", T.StringType()),
+        T.StructField("term", T.StringType()),
+        T.StructField("tf", T.LongType()),
+    ]
+)
 
 _NUMERIC_SPARK_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
                         T.FloatType, T.DoubleType, T.DecimalType)
@@ -466,6 +534,62 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+def _claim_segment_dir(index_dir: str, segment_name: str | None = None) -> tuple[str, str]:
+    """(name, path) of the new segment's directory, created here."""
+    if segment_name is not None:
+        # partition-escaped chars (=, /, %, # ...) in a caller-supplied
+        # name would break the tombstone staging rename (delete_docs
+        # writes partitionBy("seg") dirs named after the raw segment name)
+        if not re.fullmatch(r"[A-Za-z0-9._-]+", segment_name):
+            raise ValueError(
+                f"segment_name {segment_name!r} must match [A-Za-z0-9._-]+")
+        seg_dir = os.path.join(index_dir, "segments", segment_name)
+        os.makedirs(seg_dir, exist_ok=True)
+        return segment_name, seg_dir
+    # atomically CLAIM a fresh directory: concurrent builders that all
+    # read the same manifest must not write into the same segment dir
+    # (mkdir is the mutex; the manifest commit is separately locked)
+    manifest = read_manifest(index_dir) if index_exists(index_dir) else None
+    while True:
+        name = next_segment_name(manifest, index_dir)
+        seg_dir = os.path.join(index_dir, "segments", name)
+        try:
+            os.makedirs(seg_dir, exist_ok=False)
+            return name, seg_dir
+        except FileExistsError:
+            continue
+
+
+def _segment_info(name: str, seg_dir: str, t0: float, n: int, lo, hi,
+                  field_lengths: dict, field_term_counts: dict,
+                  stored_cols: list, lineage: dict | None) -> SegmentInfo:
+    """The manifest entry of a written segment. Its lineage record carries
+    the build metrics (wall time, docs/s, bytes per table) alongside the
+    caller's chunk identity."""
+    import time as _time
+
+    build_sec = round(_time.time() - t0, 3)
+    lineage = dict(lineage or {})
+    lineage["metrics"] = {
+        "build_sec": build_sec,
+        "docs_per_sec": round(n / build_sec, 1) if build_sec else 0.0,
+        "bytes": {
+            t: _dir_bytes(os.path.join(seg_dir, f"{t}.parquet"))
+            for t in ("docs", "postings", "termstats", "lengths")
+        },
+    }
+    return SegmentInfo(
+        name=name,
+        doc_count=n,
+        field_lengths=field_lengths,
+        min_doc_id=int(lo) if lo is not None else 0,
+        max_doc_id=int(hi) if hi is not None else -1,
+        lineage=lineage,
+        field_term_counts=field_term_counts,
+        stored_cols=stored_cols,
+    )
+
+
 def build_segment(
     spark: SparkSession,
     docs: DataFrame,
@@ -487,29 +611,7 @@ def build_segment(
     import time as _time
 
     _t0 = _time.time()
-    manifest = read_manifest(index_dir) if index_exists(index_dir) else None
-    if segment_name is not None:
-        # partition-escaped chars (=, /, %, # ...) in a caller-supplied
-        # name would break the tombstone staging rename (delete_docs
-        # writes partitionBy("seg") dirs named after the raw segment name)
-        if not re.fullmatch(r"[A-Za-z0-9._-]+", segment_name):
-            raise ValueError(
-                f"segment_name {segment_name!r} must match [A-Za-z0-9._-]+")
-        name = segment_name
-        seg_dir = os.path.join(index_dir, "segments", name)
-        os.makedirs(seg_dir, exist_ok=True)
-    else:
-        # atomically CLAIM a fresh directory: concurrent builders that all
-        # read the same manifest must not write into the same segment dir
-        # (mkdir is the mutex; the manifest commit is separately locked)
-        while True:
-            name = next_segment_name(manifest, index_dir)
-            seg_dir = os.path.join(index_dir, "segments", name)
-            try:
-                os.makedirs(seg_dir, exist_ok=False)
-                break
-            except FileExistsError:
-                continue
+    name, seg_dir = _claim_segment_dir(index_dir, segment_name)
 
     # dynamic (glob) fields: materialize against this build's concrete
     # columns; the manifest keeps the pattern form (commit_segment below
@@ -651,29 +753,163 @@ def build_segment(
         field_lengths = f_len.result()
         id_stats = f_ids.result()
 
-    build_sec = round(_time.time() - _t0, 3)
-    lineage = dict(lineage or {})
-    lineage["metrics"] = {
-        "build_sec": build_sec,
-        "docs_per_sec": round(int(id_stats["n"]) / build_sec, 1) if build_sec else 0.0,
-        "bytes": {
-            t: _dir_bytes(os.path.join(seg_dir, f"{t}.parquet"))
-            for t in ("docs", "postings", "termstats", "lengths")
-        },
-    }
-    info = SegmentInfo(
-        name=name,
-        doc_count=int(id_stats["n"]),
-        field_lengths=field_lengths,
-        min_doc_id=int(id_stats["lo"]) if id_stats["lo"] is not None else 0,
-        max_doc_id=int(id_stats["hi"]) if id_stats["hi"] is not None else -1,
-        lineage=lineage,
-        field_term_counts=field_term_counts,
-        stored_cols=list(docs_out.columns),
-    )
-
+    info = _segment_info(
+        name, seg_dir, _t0, int(id_stats["n"]), id_stats["lo"], id_stats["hi"],
+        field_lengths, field_term_counts, list(docs_out.columns), lineage)
     if commit:
         commit_segment(index_dir, orig_schema, info)
+    return info
+
+
+def _text(v):
+    """A value of a text-ish field as a string: what the DataFrame
+    placement's cast to string gives for str, int and bool values."""
+    if v is None or isinstance(v, str):
+        return v
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    return str(v)
+
+
+def _stored_array(values: list, kind: str, tz: str | None) -> pa.Array:
+    """A stored column in its canonical type (``_canonical_stored_col``'s
+    rules); naive datetimes are read in the session time zone ``tz``."""
+    pin = _STORED_KIND_TYPES.get(kind)
+    if kind == "datetime":
+        ts = pd.to_datetime(pd.Series(values, dtype=object))
+        if ts.dt.tz is None:
+            ts = ts.dt.tz_localize(tz)
+        return pa.array(ts, type=to_arrow_type(pin))
+    if pin is not None:
+        conv = float if kind == "numeric" else bool
+        return pa.array([None if v is None else conv(v) for v in values],
+                        type=to_arrow_type(pin))
+    if kind == "stored":
+        present = [v for v in values if v is not None]
+        if not present:
+            return pa.array(values, type=pa.string())
+        if all(isinstance(v, (int, float)) and not isinstance(v, bool) for v in present):
+            return pa.array([None if v is None else float(v) for v in values],
+                            type=pa.float64())
+        return pa.array(values)
+    return pa.array([_text(v) for v in values], type=pa.string())
+
+
+def _termstats(blocks: pd.DataFrame) -> pa.Table:
+    """The termstats rows of term-sorted block rows: the DataFrame
+    placement's groupBy aggregation, with each term's ``total_w`` summed
+    in block order as Spark's sum does."""
+    f, t = blocks["field"].to_numpy(), blocks["term"].to_numpy()
+    starts = np.concatenate(([0], np.flatnonzero((t[1:] != t[:-1]) | (f[1:] != f[:-1])) + 1))
+
+    def red(ufunc, col):
+        return ufunc.reduceat(blocks[col].to_numpy(), starts)
+
+    sum_w = blocks["sum_w"].to_numpy(dtype=np.float64)
+    total_w = sum_w[starts].copy()
+    ends = np.append(starts[1:], len(blocks))
+    for g in np.flatnonzero(ends - starts > 1):
+        acc = 0.0
+        for w in sum_w[starts[g]:ends[g]]:
+            acc += w
+        total_w[g] = acc
+    return pa.table({
+        "field": f[starts], "term": t[starts],
+        "df": red(np.add, "count"), "total_tf": red(np.add, "sum_tf"),
+        "max_tf": red(np.maximum, "max_tf"), "total_w": total_w,
+        "min_len_byte": red(np.minimum, "min_len_byte"),
+        "max_len_byte": red(np.maximum, "max_len_byte"),
+        "min_id": red(np.minimum, "min_id"), "max_id": red(np.maximum, "max_id"),
+    }).cast(TERMSTATS_SCHEMA)
+
+
+def _write_part(table: pa.Table, path: str) -> None:
+    """One table as a Parquet directory of one part file, the layout the
+    DataFrame placement writes."""
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+
+
+def build_segment_rows(
+    spark: SparkSession,
+    rows: list[dict],
+    schema: IndexSchema,
+    index_dir: str,
+    bucket_width: int = DEFAULT_BUCKET_WIDTH,
+    lineage: dict | None = None,
+) -> SegmentInfo:
+    """Driver placement of ``build_segment``: write the segment of
+    driver-held ``rows`` (dicts with a ``doc_id``) with pyarrow and commit
+    it, launching no Spark job. The tables equal the DataFrame
+    placement's row for row (same kernels, same block encode), each as
+    one sorted part file."""
+    import time as _time
+
+    _t0 = _time.time()
+    name, seg_dir = _claim_segment_dir(index_dir)
+    cols = list(dict.fromkeys(["doc_id", *(k for r in rows for k in r)]))
+    orig_schema = schema
+    schema = schema.bind_columns(cols)
+    ids = np.asarray([int(r["doc_id"]) for r in rows], dtype=np.int64)
+    cfgs = [c for c in _field_configs(schema) if c[0] in cols]
+    texts = pd.DataFrame({"doc_id": ids})
+    for c in cfgs:
+        texts[c[0]] = pd.Series([_text(r.get(c[0])) for r in rows], dtype=object)
+
+    # ---- posting blocks + term stats (+ term vectors) ----
+    out_cfgs, has_boost, has_charfmt = _postings_cfgs(schema, cols)
+    postings = tokenize_postings(texts, _doc_kernels(out_cfgs), has_boost, has_charfmt)
+    if postings is None:
+        blocks = pd.DataFrame({c: [] for c in _POSTINGS_COLS})
+        postings = pd.DataFrame({c: [] for c in ("doc_id", "field", "term", "tf")})
+    else:
+        postings["bucket"] = (postings["doc_id"].to_numpy(dtype=np.int64)
+                              / bucket_width).astype(np.int64)
+        needs_positions = any(schema[f].phrase for f in schema.indexed_fields())
+        in_cols = ["field", "term", "bucket", "doc_id", "tf", "len_byte"] + (
+            ["weight"] if "weight" in postings.columns else []
+        ) + (["positions"] if needs_positions else []) + (
+            ["boosts", "startchars", "endchars"] if has_charfmt else []
+        )
+        postings = postings.sort_values(["field", "term", "bucket", "doc_id"],
+                                        ignore_index=True)
+        blocks = encode_blocks(postings[in_cols])
+    _write_part(pa.Table.from_pandas(blocks, schema=POSTINGS_ARROW, preserve_index=False),
+                os.path.join(seg_dir, "postings.parquet"))
+    termstats = _termstats(blocks)
+    _write_part(termstats, os.path.join(seg_dir, "termstats.parquet"))
+    vector_fields = [f for f in schema.indexed_fields() if schema[f].vector]
+    if vector_fields:
+        vec = postings.loc[postings["field"].isin(vector_fields),
+                           ["doc_id", "field", "term", "tf"]]
+        vec = vec.sort_values(["doc_id", "field", "term"], ignore_index=True)
+        _write_part(pa.Table.from_pandas(vec, schema=to_arrow_schema(VECTORS_SCHEMA),
+                                         preserve_index=False),
+                    os.path.join(seg_dir, "vectors.parquet"))
+
+    # ---- lengths ----
+    lengths = doc_lengths(texts, cfgs)
+    if lengths is None:
+        lengths = pd.DataFrame({c: [] for c in LENGTHS_SCHEMA.names})
+    _write_part(pa.Table.from_pandas(lengths, schema=to_arrow_schema(LENGTHS_SCHEMA),
+                                     preserve_index=False),
+                os.path.join(seg_dir, "lengths.parquet"))
+
+    # ---- docs (stored fields, canonical types) ----
+    stored = [c for c in schema.stored_fields() if c in cols and c != "doc_id"]
+    tz = (spark.conf.get("spark.sql.session.timeZone")
+          if any(schema[c].kind == "datetime" for c in stored) else None)
+    docs = pa.table({"doc_id": pa.array(ids, type=pa.int64()), **{
+        c: _stored_array([r.get(c) for r in rows], schema[c].kind, tz) for c in stored}})
+    _write_part(docs, os.path.join(seg_dir, "docs.parquet"))
+
+    field_lengths = {f: int(n) for f, n in lengths.groupby("field")["length"].sum().items()}
+    field_term_counts = {f: int(n) for f, n in
+                         pd.Series(termstats["field"].to_numpy()).value_counts().items()}
+    info = _segment_info(
+        name, seg_dir, _t0, len(rows), ids.min(), ids.max(),
+        field_lengths, field_term_counts, docs.column_names, lineage)
+    commit_segment(index_dir, orig_schema, info)
     return info
 
 

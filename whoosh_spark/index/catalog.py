@@ -50,6 +50,13 @@ _STATS_AGG = (("df", "sum"), ("total_tf", "sum"), ("max_tf", "max"),
               ("max_len_byte", "max"), ("min_id", "min"), ("max_id", "max"))
 
 
+def parquet_files(dirs) -> list[str]:
+    """The part files of Parquet table directories, for one pyarrow
+    dataset scan over several segments."""
+    return [os.path.join(d, n) for d in dirs for n in sorted(os.listdir(d))
+            if n.endswith(".parquet")]
+
+
 def _chunk_col() -> "F.Column":
     """Explode a block row into the chunks its [min_id, max_id] overlaps."""
     return F.explode(
@@ -287,11 +294,9 @@ class Index:
                 self._df_cache[table] = reader.parquet(*paths)
         return self._df_cache[table]
 
-    _KIND_DTYPES = {"numeric": T.DoubleType(), "datetime": T.TimestampType(),
-                    "boolean": T.BooleanType()}
-
     def _empty_table(self, table: str) -> DataFrame:
-        from whoosh_spark.index.build import LENGTHS_SCHEMA, POSTINGS_SCHEMA
+        from whoosh_spark.index.build import (_STORED_KIND_TYPES, LENGTHS_SCHEMA,
+                                              POSTINGS_SCHEMA, VECTORS_SCHEMA)
 
         if table == "postings.parquet":
             sch = POSTINGS_SCHEMA
@@ -302,16 +307,11 @@ class Index:
 
             sch = from_arrow_schema(TERMSTATS_SCHEMA)
         elif table == "vectors.parquet":
-            sch = T.StructType([
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("field", T.StringType()),
-                T.StructField("term", T.StringType()),
-                T.StructField("tf", T.LongType()),
-            ])
+            sch = VECTORS_SCHEMA
         elif table == "docs.parquet":
             fields = [T.StructField("doc_id", T.LongType())] + [
                 T.StructField(
-                    n, self._KIND_DTYPES.get(self.schema[n].kind, T.StringType())
+                    n, _STORED_KIND_TYPES.get(self.schema[n].kind, T.StringType())
                 )
                 for n in self.schema.stored_fields()
             ]
@@ -480,10 +480,7 @@ class Index:
 
         if field in self._ghost_fields:
             return {}
-        files = []
-        for p in self._seg_paths("termstats.parquet"):
-            files += [os.path.join(p, n) for n in sorted(os.listdir(p))
-                      if n.endswith(".parquet")]
+        files = parquet_files(self._seg_paths("termstats.parquet"))
         if not files:
             return {}
         flt = pc.field("field") == field

@@ -17,7 +17,9 @@ writing.py:658-705 — deletes are dropped during merge instead).
 
 Deletes are per-segment tombstone doc_id parquet (the reference's
 in-TOC deleted sets, writing.py:298-338); update_by_unique_key =
-delete-by-term + add (writing.py:420-489).
+delete-by-term + add (writing.py:420-489). Ids known on the driver (a
+list, a term, a writer commit's deletes and updates) are tombstoned there
+with pyarrow (``tombstone``); a DataFrame of ids runs a Spark plan.
 """
 
 from __future__ import annotations
@@ -25,15 +27,20 @@ from __future__ import annotations
 import os
 import shutil
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from whoosh_spark.index.build import (
     DEFAULT_BUCKET_WIDTH,
     POSTINGS_SCHEMA,
     _encode_partition,
+    _text,
+    _write_part,
     build_segment,
 )
-from whoosh_spark.index.catalog import Index, decode_blocks
+from whoosh_spark.index.catalog import Index, decode_blocks, parquet_files
 from whoosh_spark.index.segment import (
     SegmentInfo,
     next_segment_name,
@@ -389,18 +396,99 @@ def apply_merge_policy(spark: SparkSession, index_dir: str, policy: str = "MERGE
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids: DataFrame | list[int]) -> int:
     """Tombstone the given doc_ids (per-segment ``deletes.<gen>.parquet``
-    generations, repointed by the atomic manifest commit)."""
+    generations, repointed by the atomic manifest commit). A list runs on
+    the driver (``tombstone``, no Spark job); a DataFrame runs the
+    distributed plan."""
     from whoosh_spark.index.lock import index_lock
 
+    if not isinstance(doc_ids, DataFrame):
+        return tombstone(spark, index_dir, ids=doc_ids)
     with index_lock(index_dir):
         return _delete_docs_locked(spark, index_dir, doc_ids)
 
 
-def _delete_docs_locked(spark: SparkSession, index_dir: str, doc_ids) -> int:
-    """A CONSTANT number of Spark actions regardless of segment count (a
-    per-segment loop shape — count + write, or even a per-segment
-    broadcast-join inside one action — costs O(segments) jobs, wrong for
-    a 10^12-file index with hundreds of segments):
+def tombstone(spark: SparkSession, index_dir: str, ids=(), terms=(),
+              unique: dict | None = None) -> int:
+    """One driver-side tombstone pass under the index lock, launching no
+    Spark job: the union of ``ids``, the docs holding any ``(field,
+    text)`` of ``terms`` and the docs whose unique field holds a value of
+    ``unique`` (field -> values). A stored unique field is matched by a
+    pyarrow read of the segments' docs; an unstored one, like a term,
+    through its postings. Returns the number of new tombstones."""
+    from whoosh_spark.index.lock import index_lock
+    from whoosh_spark.search.local import _read_postings
+
+    with index_lock(index_dir):
+        ix = Index(spark, index_dir)
+        found = [np.asarray([int(i) for i in ids], dtype=np.int64)]
+        keys = {(f, t) for f, t in terms if f not in ix._ghost_fields}
+        for field, values in (unique or {}).items():
+            values = sorted({_text(v) for v in values if v is not None})
+            if ix.schema[field].stored:
+                found.append(_stored_doc_ids(ix, field, values))
+            else:  # unstored unique field: resolve via its postings
+                keys |= {(field, v) for v in values}
+        if keys:
+            postings, _ = _read_postings(ix, keys, set(), None)
+            found += [p[0] for p in postings.values()]
+        return _tombstone_locked(index_dir, ix.manifest, np.unique(np.concatenate(found)))
+
+
+def _stored_doc_ids(ix: Index, field: str, values: list[str]) -> np.ndarray:
+    """Ids of the docs whose stored ``field`` is one of ``values``: one
+    pyarrow dataset scan over every segment's docs (a segment written
+    before the field was added reads NULL)."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    files = parquet_files(os.path.join(s.path(ix.index_dir), "docs.parquet")
+                          for s in ix.manifest.segments)
+    if not files:
+        return np.empty(0, dtype=np.int64)
+    schema = pa.schema([("doc_id", pa.int64()), (field, pa.string())])
+    return ds.dataset(files, schema=schema, format="parquet").to_table(
+        columns=["doc_id"], filter=pc.field(field).isin(values))["doc_id"].to_numpy()
+
+
+def _tombstone_locked(index_dir: str, manifest, ids: np.ndarray) -> int:
+    """Tombstone the sorted unique ``ids``: each affected segment's full
+    set (existing ∪ new, computed with numpy) becomes its next
+    ``deletes.<gen>.parquet`` generation, and one manifest commit
+    repoints them all. An already-deleted doc does not delete again."""
+    total = 0
+    lo, hi = (int(ids[0]), int(ids[-1])) if ids.size else (0, -1)
+    for s in manifest.segments:
+        if s.min_doc_id > hi or s.max_doc_id < lo:
+            continue
+        seg_ids = pq.read_table(
+            os.path.join(s.path(index_dir), "docs.parquet"), columns=["doc_id"],
+            filters=[("doc_id", ">=", lo), ("doc_id", "<=", hi)])["doc_id"].to_numpy()
+        old = (pq.read_table(s.deletes_path(index_dir), columns=["doc_id"])["doc_id"]
+               .to_numpy() if s.has_deletes else np.empty(0, dtype=np.int64))
+        new = np.setdiff1d(np.intersect1d(seg_ids, ids), old)
+        if not new.size:
+            continue
+        s.deletes_gen += 1
+        target = s.deletes_path(index_dir)
+        # a crashed earlier attempt (file written, manifest never
+        # committed) may have left an unreferenced dir at this name
+        shutil.rmtree(target, ignore_errors=True)
+        _write_part(pa.table({"doc_id": np.union1d(old, new).astype(np.int64)}), target)
+        s.has_deletes = True
+        s.deleted_count += int(new.size)
+        total += int(new.size)
+    manifest.generation += 1
+    write_manifest(index_dir, manifest)
+    return total
+
+
+def _delete_docs_locked(spark: SparkSession, index_dir: str, doc_ids: DataFrame) -> int:
+    """The distributed tombstone plan, for a DataFrame of ids (stale-id
+    joins, query matches). A CONSTANT number of Spark actions
+    regardless of segment count (a per-segment loop shape — count +
+    write, or even a per-segment broadcast-join inside one action — costs
+    O(segments) jobs, wrong for a 10^12-file index with hundreds of
+    segments):
 
     1. one tiny aggregation of the delete batch (count + id range) used to
        prune non-intersecting segments driver-side;
@@ -417,8 +505,6 @@ def _delete_docs_locked(spark: SparkSession, index_dir: str, doc_ids) -> int:
        manifest swap below; superseded generations GC'd by clean_files).
     """
     manifest = read_manifest(index_dir)
-    if isinstance(doc_ids, list):
-        doc_ids = spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
     # localCheckpoint (NOT persist: a cached shuffle under the broadcast
     # hint defeats the broadcast — AQE re-plans the semi-join as one
     # shuffled join per union child, measured 12 jobs vs 5 on a 9-segment
@@ -512,9 +598,7 @@ def _delete_docs_locked(spark: SparkSession, index_dir: str, doc_ids) -> int:
 
 
 def delete_by_term(spark: SparkSession, index_dir: str, field: str, text: str) -> int:
-    ix = Index(spark, index_dir)
-    matches = ix.postings_for(field, [text]).select("doc_id").distinct()
-    return delete_docs(spark, index_dir, matches)
+    return tombstone(spark, index_dir, terms=[(field, text)])
 
 
 def update_documents(

@@ -1,12 +1,20 @@
 """Buffered per-document writer — the reference ``ix.writer()`` ergonomics
-(writing.py:196-520) over the DataFrame build pipeline.
+(writing.py:196-520).
 
 The reference IndexWriter accumulates documents into a posting pool and
-flushes one new segment at commit; this writer accumulates plain Python
-rows on the driver and flushes them through ``build_segment`` (one Arrow
-pass) at :meth:`commit`. It exists for API parity and incremental/small
-writes — BULK ingestion should hand a DataFrame straight to
-``build_index`` (that path never materializes rows on the driver).
+flushes them in-process as one new segment at commit (writing.py:883-906).
+This writer accumulates plain Python rows on the driver, and
+:meth:`commit` writes them with the DRIVER placement of the segment build,
+``build.build_segment_rows``: the same tokenize and block-encode kernels
+as ``build_segment``'s Spark plan, with the tables written by pyarrow. The
+commit's one tombstone pass (deleted ids and terms, and the rows updates
+replace) runs on the driver as well, under the index lock
+(``merge.tombstone``). Why the driver: a commit holds few rows, and
+Spark's fixed per-job cost would dwarf their Python work, so a commit
+launches no Spark job unless it holds ``delete_by_query`` or the merge
+policy picks segments to merge. BULK ingestion hands a DataFrame to
+``build_index`` instead, the Spark placement, which never materializes
+rows on the driver.
 
 Supported surface: add_document(**fields), update_document(**fields)
 (delete-by-unique-fields then add, writing.py:420-489), delete_document,
@@ -17,11 +25,6 @@ writing.py:186-193).
 """
 
 from __future__ import annotations
-
-import functools
-
-import pandas as pd
-from pyspark.sql import DataFrame
 
 from whoosh_spark.index.catalog import Index
 
@@ -106,54 +109,36 @@ class IndexWriter:
     def commit(self, optimize: bool = False, merge: bool = True) -> None:
         """Apply deletes, updates, then adds as one new segment; finally
         run the merge policy (reference commit(optimize=, merge=),
-        writing.py:883-906)."""
-        from whoosh_spark.index.build import build_segment
-        from whoosh_spark.index.merge import (apply_merge_policy,
-                                              delete_by_term, delete_docs)
+        writing.py:883-906). Only ``delete_by_query`` and a merge the
+        policy picks launch Spark jobs."""
+        from whoosh_spark.index.build import build_segment_rows
+        from whoosh_spark.index.merge import (apply_merge_policy, delete_docs,
+                                              tombstone)
 
         self._check_open()
         d = self.index.index_dir
-        for field, text in self._delete_terms:
-            delete_by_term(self.spark, d, field, text)
         for q in self._delete_queries:
             from whoosh_spark.search.engine import Searcher
 
             ids = Searcher(Index(self.spark, d)).matches(q).select("doc_id")
             delete_docs(self.spark, d, ids)
-        # one tombstone pass: the deleted ids plus the rows updates replace
-        tombstones = []
-        if self._delete_ids:
-            tombstones.append(self.spark.createDataFrame(
-                [(i,) for i in sorted(set(self._delete_ids))], "doc_id long"))
-        if self._updates:
-            # rows matching any (unique field, value) pair
-            ix = Index(self.spark, d)
-            pairs: dict[str, set] = {}
-            for row in self._updates:
-                for u in row["__uniques__"]:
-                    pairs.setdefault(u, set()).add(row[u])
-            from pyspark.sql import functions as F
-
-            for u, vals in pairs.items():
-                if u in ix.docs().columns:
-                    hit = ix.docs().filter(
-                        F.col(u).isin(sorted(vals))).select("doc_id")
-                else:  # unstored unique field: resolve via its postings
-                    hit = ix.postings_for(
-                        u, sorted(str(v) for v in vals)).select("doc_id")
-                tombstones.append(hit)
-        if tombstones:
-            delete_docs(self.spark, d, functools.reduce(DataFrame.unionByName, tombstones))
+        # one tombstone pass: the deleted ids and terms plus the rows
+        # updates replace (any of their (unique field, value) pairs)
+        unique: dict[str, set] = {}
+        for row in self._updates:
+            for u in row["__uniques__"]:
+                unique.setdefault(u, set()).add(row[u])
+        if self._delete_ids or self._delete_terms or unique:
+            tombstone(self.spark, d, ids=self._delete_ids,
+                      terms=self._delete_terms, unique=unique)
 
         rows = self._adds + [
             {k: v for k, v in r.items() if k != "__uniques__"}
             for r in self._updates
         ]
         if rows:
-            ix = Index(self.spark, d)
-            df = self._rows_to_df(rows, ix)
-            build_segment(self.spark, df, ix.schema, d, sha_col=None,
-                          lineage={"writer_rows": len(rows)})
+            build_segment_rows(self.spark, rows, Index(self.spark, d).schema, d,
+                               lineage={"writer_rows": len(rows)})
 
         if optimize:
             apply_merge_policy(self.spark, d, "OPTIMIZE")
@@ -161,32 +146,6 @@ class IndexWriter:
             apply_merge_policy(self.spark, d, "MERGE_SMALL")
         self.index.reload()
         self.cancel()  # clears buffers + closes
-
-    def _rows_to_df(self, rows: list[dict], ix: Index):
-        """Driver rows -> DataFrame via pandas (Arrow LocalRelation path).
-        An all-None column is pinned to the schema kind's canonical dtype
-        (not blanket string) so it can't infer NullType OR conflict with
-        segments where the field had values; build_segment then casts all
-        stored columns to the same canonical types (see
-        build._canonical_stored_col)."""
-        cols: list[str] = ["doc_id"]
-        for r in rows:
-            for k in r:
-                if k not in cols:
-                    cols.append(k)
-        pdf = pd.DataFrame([{c: r.get(c) for c in cols} for r in rows],
-                           columns=cols)
-        df = self.spark.createDataFrame(pdf)
-        from pyspark.sql import functions as F
-
-        from whoosh_spark.index.build import _STORED_KIND_TYPES
-
-        for c in cols:
-            if c != "doc_id" and pdf[c].isna().all():
-                kind = ix.schema[c].kind if c in ix.schema else None
-                df = df.withColumn(
-                    c, F.col(c).cast(_STORED_KIND_TYPES.get(kind, "string")))
-        return df
 
     def _check_open(self) -> None:
         if self._closed:

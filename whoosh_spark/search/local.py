@@ -48,8 +48,10 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pyarrow as pa
 
 from whoosh_spark.index import codec
+from whoosh_spark.index.catalog import parquet_files
 from whoosh_spark.index.quantize import BYTE_TO_LENGTH
 from whoosh_spark.query import nodes as Q
 from whoosh_spark.search.scoring import term_constants
@@ -64,6 +66,7 @@ from whoosh_spark.search.scoring import term_constants
 LOCAL_THRESHOLD = int(os.environ.get("WHOOSH_SPARK_LOCAL_THRESHOLD", "2000000"))
 
 _EMPTY_M = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+_IDS_SCHEMA = pa.schema([("doc_id", pa.int64())])
 
 
 def _collect_terms(q, plain: set, positional: set):
@@ -102,16 +105,6 @@ def _has_not(q) -> bool:
     return any(_has_not(c) for c in q.children())
 
 
-def _first_parquet_file(path: str) -> str:
-    """A Spark parquet 'file' is a directory of part files; pyarrow's
-    read_schema needs one actual file."""
-    if os.path.isdir(path):
-        for name in sorted(os.listdir(path)):
-            if name.endswith(".parquet"):
-                return os.path.join(path, name)
-    return path
-
-
 #: posting-block columns, in codec.decode_term_blocks argument order
 _BLOCK_COLS = ("count", "ids", "tfs", "len_bytes", "weights", "positions")
 
@@ -119,13 +112,12 @@ _BLOCK_COLS = ("count", "ids", "tfs", "len_bytes", "weights", "positions")
 def _deleted_ids(ix):
     """The index's deleted doc ids, sorted (``codec.decode_term_blocks``
     binary-searches them), or None."""
-    paths = ix._delete_paths()
-    if not paths:
+    files = parquet_files(ix._delete_paths())
+    if not files:
         return None
     import pyarrow.parquet as pq
 
-    return np.unique(np.concatenate(
-        [pq.read_table(p, columns=["doc_id"])["doc_id"].to_numpy() for p in paths]))
+    return np.unique(pq.read_table(files, schema=_IDS_SCHEMA)["doc_id"].to_numpy())
 
 
 def _load_term(postings, positions, key, blocks, want_pos, deleted):
@@ -140,32 +132,33 @@ def _load_term(postings, positions, key, blocks, want_pos, deleted):
 
 
 def _read_postings(ix, plain, positional, deleted):
-    """Driver posting source: pyarrow reads of just the query terms'
-    blocks from every segment, decoded like a bucket partition's."""
+    """Driver posting source: one pyarrow read per field of just the
+    query terms' blocks from every segment's files, decoded like a bucket
+    partition's. Segments written before the weight channel read NULL
+    weights."""
     import pyarrow.parquet as pq
+
+    from whoosh_spark.index.build import POSTINGS_ARROW
 
     by_field: dict = {}
     for f, t in plain | positional:
         by_field.setdefault(f, set()).add(t)
+    files = parquet_files(os.path.join(seg.path(ix.index_dir), "postings.parquet")
+                          for seg in ix.manifest.segments)
     acc: dict = {}
     for field, terms in by_field.items():
+        if not files:
+            break
         want = _BLOCK_COLS if any(f == field for f, _ in positional) \
             else _BLOCK_COLS[:-1]
-        for seg in ix.manifest.segments:
-            path = os.path.join(seg.path(ix.index_dir), "postings.parquet")
-            # pre-weight-channel segments lack the weights column
-            avail = set(pq.read_schema(_first_parquet_file(path)).names)
-            tbl = pq.read_table(
-                path, columns=["term"] + [c for c in want if c in avail],
-                filters=[("field", "==", field), ("term", "in", list(terms))],
-            )
-            n = tbl.num_rows
-            cols = [tbl[c].to_pylist() if c in tbl.column_names else [None] * n
-                    for c in _BLOCK_COLS]
-            for i, t in enumerate(tbl["term"].to_pylist()):
-                a = acc.setdefault((field, t), tuple([] for _ in _BLOCK_COLS))
-                for col, out in zip(cols, a):
-                    out.append(col[i])
+        tbl = pq.read_table(files, schema=POSTINGS_ARROW, columns=["term", *want],
+                            filters=[("field", "==", field), ("term", "in", sorted(terms))])
+        n = tbl.num_rows
+        cols = [tbl[c].to_pylist() if c in want else [None] * n for c in _BLOCK_COLS]
+        for i, t in enumerate(tbl["term"].to_pylist()):
+            a = acc.setdefault((field, t), tuple([] for _ in _BLOCK_COLS))
+            for col, out in zip(cols, a):
+                out.append(col[i])
     postings: dict = {}
     positions: dict = {}
     for key, blocks in acc.items():
