@@ -8,12 +8,13 @@ and alternating perfbench pairs of two source trees.
     python scripts/writer_commit_probe.py traced --runs 3
     python scripts/writer_commit_probe.py traced --src /path/to/parent --label parent
 
-``probe`` bulk-builds the perfbench corpus (1,000 ``synth_code_corpus``
-documents, ``sym_<i>`` rare vocabulary of 1,000), then commits ``--rounds``
-writer rounds of 70 rows — 60 adds, 10 updates by unique ``path`` and 10
-deletes — each with ``commit(merge=False)``. The library functions each
-layer runs in are wrapped with timers (self time: a nested timed call
-counts in its own layer only):
+``probe`` bulk-builds the perfbench corpus (``--docs`` documents of
+``synth_code_corpus``, 1,000 by default, with a ``sym_<i>`` rare vocabulary
+of 1,000), then commits ``--rounds`` writer rounds of 70 rows — 60 adds,
+10 updates by unique ``path`` and 10 deletes — each with
+``commit(merge=False)``. The library functions each layer runs in are
+wrapped with timers (self time: a nested timed call counts in its own
+layer only):
 
 - ``tombstone_resolve``: ``merge.tombstone`` (the driver pass) without its
   file write: finding the rows the updates replace
@@ -29,8 +30,10 @@ counts in its own layer only):
 - ``manifest``: ``build.commit_segment``
 - ``other``: the rest of the commit
 
-A layer a tree does not have reads 0. ``--src`` names the tree whose
-``whoosh_spark`` is imported (default: this checkout).
+A layer a tree does not have reads 0. ``peak_rss_mb`` is the probe
+process's peak resident set before the first commit and after the last.
+``--src`` names the tree whose ``whoosh_spark`` is imported (default: this
+checkout).
 
 ``pairs`` runs ``perfbench/run.py --trace 0`` for each workload, once in
 this checkout and once in ``--parent``, ``--pairs`` times with seeds from
@@ -57,7 +60,7 @@ import time
 from collections import defaultdict
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-N_DOCS, RARE_VOCAB, ADDS, UPDATES, DELETES = 1000, 1000, 60, 10, 10
+RARE_VOCAB, ADDS, UPDATES, DELETES = 1000, 60, 10, 10
 LAYERS = {
     "tombstone_resolve": [("whoosh_spark.index.merge", "tombstone")],
     "tombstone_write": [("whoosh_spark.index.merge", "_tombstone_locked")],
@@ -126,13 +129,14 @@ def probe(args) -> dict:
     rounds = []
     try:
         d = os.path.join(work, "ix")
-        corpus = synth_code_corpus(spark, N_DOCS + args.rounds * (ADDS + UPDATES),
+        corpus = synth_code_corpus(spark, args.docs + args.rounds * (ADDS + UPDATES),
                                    seed=args.seed, rare_vocab=RARE_VOCAB)
-        build_index(spark, corpus.filter(corpus.doc_id < N_DOCS), code_corpus_schema(), d,
-                    sha_col="content")
-        rows = corpus.toPandas().sort_values("doc_id").to_dict("records")
-        paths = {r["doc_id"]: r["path"] for r in rows[:N_DOCS]}
-        pool = iter(rows[N_DOCS:])
+        bulk = corpus.filter(corpus.doc_id < args.docs)
+        build_index(spark, bulk, code_corpus_schema(), d, sha_col="content")
+        paths = {r["doc_id"]: r["path"] for r in bulk.select("doc_id", "path").collect()}
+        pool = iter(corpus.filter(corpus.doc_id >= args.docs).toPandas()
+                    .sort_values("doc_id").to_dict("records"))
+        rss_before = _peak_rss_mb()
         rng = random.Random(args.seed)
         for k in range(args.rounds):
             picked = rng.sample(sorted(paths), UPDATES + DELETES)
@@ -171,8 +175,16 @@ def probe(args) -> dict:
         shutil.rmtree(work, ignore_errors=True)
     # the first commit runs its paths cold
     warm = rounds[1:] or rounds
-    return {"rounds": rounds, "median_ms_after_first": {
-        key: round(statistics.median(r[key] for r in warm), 2) for key in rounds[0]}}
+    return {"docs": args.docs, "rounds": rounds,
+            "peak_rss_mb": {"before_commits": rss_before, "after_commits": _peak_rss_mb()},
+            "median_ms_after_first": {
+                key: round(statistics.median(r[key] for r in warm), 2) for key in rounds[0]}}
+
+
+def _peak_rss_mb() -> float:
+    import resource
+
+    return round(resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024, 1)
 
 
 def _perfbench(tree: str, workload: str, seed: int, seconds: float, trace: int) -> dict:
@@ -248,6 +260,7 @@ def main() -> None:
     ap.add_argument("--src", default=ROOT, help="probe, traced: the source tree")
     ap.add_argument("--label", default="change", help="probe, traced: key of the result")
     ap.add_argument("--rounds", type=int, default=6)
+    ap.add_argument("--docs", type=int, default=1000, help="probe: bulk-built documents")
     ap.add_argument("--seed", type=int, default=61)
     ap.add_argument("--work", default=None, help="probe: parent dir of the index")
     ap.add_argument("--parent", help="pairs: the other source tree")

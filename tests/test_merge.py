@@ -193,17 +193,16 @@ def test_merge_keeps_snapshot_for_open_readers(spark, tmp_path):
     assert len(got) == 6
 
 
-def test_midmerge_delete_not_resurrected(spark, tmp_path, monkeypatch):
-    """A delete_docs landing between a merge's snapshot and its commit must
-    survive the merge: the commit section compares victims' deleted_count
-    under the lock and re-applies late tombstones to the merged segment."""
+def _race_delete_into_merge(spark, d, monkeypatch, delete_3_and_7):
+    """Merge every segment of ``d`` while ``delete_3_and_7`` tombstones
+    docs 3 and 7 between the merge's snapshot and its commit; the late
+    tombstones must survive the merge."""
     import contextlib
 
     import whoosh_spark.index.lock as lockmod
     from whoosh_spark.index.build import build_segment
-    from whoosh_spark.index.merge import _delete_docs_locked, merge_segments
+    from whoosh_spark.index.merge import merge_segments
 
-    d = str(tmp_path / "mmd")
     schema = IndexSchema.of(body=TEXT())
     build_index(spark, spark.createDataFrame(
         [Row(doc_id=i, body=f"alfa doc{i}") for i in range(5)]),
@@ -221,7 +220,7 @@ def test_midmerge_delete_not_resurrected(spark, tmp_path, monkeypatch):
         # lands after the merge read its snapshot but before the swap
         if not fired["done"]:
             fired["done"] = True
-            _delete_docs_locked(spark, d, spark.createDataFrame([(3,), (7,)], "doc_id long"))
+            delete_3_and_7()
         with real_lock(index_dir, timeout):
             yield
 
@@ -237,6 +236,30 @@ def test_midmerge_delete_not_resurrected(spark, tmp_path, monkeypatch):
     got = sorted(r["doc_id"] for r in
                  Searcher(ix).search(Q.Term("body", "alfa"), limit=None).collect())
     assert got == [0, 1, 2, 4, 5, 6, 8, 9]
+
+
+def test_midmerge_delete_not_resurrected(spark, tmp_path, monkeypatch):
+    """A DataFrame delete landing between a merge's snapshot and its
+    commit must survive the merge: the commit section compares victims'
+    deleted_count under the lock and re-applies late tombstones to the
+    merged segment."""
+    from whoosh_spark.index.merge import _delete_docs_locked
+
+    d = str(tmp_path / "mmd")
+    _race_delete_into_merge(spark, d, monkeypatch, lambda: _delete_docs_locked(
+        spark, d, spark.createDataFrame([(3,), (7,)], "doc_id long")))
+
+
+def test_midmerge_driver_delete_not_resurrected(spark, tmp_path, monkeypatch):
+    """The same race through the driver tombstone pass that
+    ``delete_docs(list)`` and writer commits take."""
+    import numpy as np
+
+    from whoosh_spark.index.merge import _tombstone_locked
+
+    d = str(tmp_path / "mmd")
+    _race_delete_into_merge(spark, d, monkeypatch, lambda: _tombstone_locked(
+        d, read_manifest(d), np.array([3, 7])))
 
 
 def test_merge_aborts_when_victim_replaced(spark, tmp_path, monkeypatch):

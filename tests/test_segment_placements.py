@@ -11,6 +11,13 @@ occurrence boosts and character spans (chars + pos_boosts), a spelling
 lexicon, term vectors, and stored fields of each canonical type, one of
 them all-None. One term is in every document, so its postings span
 several 128-posting blocks.
+
+The values cover every conversion the driver placement makes in Python
+where the Spark placement casts: strings into boolean, numeric and
+datetime fields, tz-aware datetimes with mixed offsets, floats, ints and
+datetimes into text fields, and ints and datetimes into STORED fields.
+A malformed string raises in both placements under ANSI casts (Spark's
+default) and stores null in both without them.
 """
 
 import datetime
@@ -43,6 +50,15 @@ SCHEMA = IndexSchema.of(
     flag=BOOLEAN(),
     blob=STORED(),
     nothing=NUMERIC(),
+    sflag=BOOLEAN(),
+    snum=NUMERIC(),
+    swhen=DATETIME(),
+    zwhen=DATETIME(),
+    fcode=ID(stored=True),
+    icode=ID(stored=True),
+    tcode=ID(stored=True),
+    iblob=STORED(),
+    tblob=STORED(),
 )
 SPARK_TYPES = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -57,7 +73,29 @@ SPARK_TYPES = T.StructType([
     T.StructField("flag", T.BooleanType()),
     T.StructField("blob", T.StringType()),
     T.StructField("nothing", T.DoubleType()),
+    T.StructField("sflag", T.StringType()),
+    T.StructField("snum", T.StringType()),
+    T.StructField("swhen", T.StringType()),
+    T.StructField("zwhen", T.TimestampType()),
+    T.StructField("fcode", T.DoubleType()),
+    T.StructField("icode", T.LongType()),
+    T.StructField("tcode", T.TimestampType()),
+    T.StructField("iblob", T.LongType()),
+    T.StructField("tblob", T.TimestampType()),
 ])
+# strings Spark's cast reads, and (MALFORMED) strings it rejects
+BOOL_STRINGS = ["false", "No", " yes ", "1", "0", "T", "f", "Y\t", None]
+NUM_STRINGS = ["1.5", " 2 ", "1e3", "inf", "-Infinity", "NaN", "2.5d", "0x1p3",
+               "-0", ".5", "1.", "+INF", None]
+TIME_STRINGS = ["2020-01-01", "2020", "2020-1-5", "2020-01-01 12", "2020-01-01 12:30",
+                "2020-01-01T12:30:15.123456789Z", "2020-01-01 00:00:00 America/New_York",
+                "2020-01-01T00:00:00+0530", "2020-01-01 00:00:00 UTC+01:00",
+                "2020-01-01 00:00:00.", " 2020-06-30 23:59:59.5 ", None]
+MALFORMED = {"sflag": "maybe", "snum": "1_000", "swhen": "2020-01-01T"}
+FLOATS = [0.0, -0.0, 1.0, 1e7, 9999999.5, 1e-3, 9.99e-4, 1e20, 1.234e-5, 0.1,
+          123456.789, -2.5e-10, float("inf"), float("nan")]
+OFFSETS = [datetime.timezone(datetime.timedelta(hours=h, minutes=m))
+           for h, m in ((0, 0), (5, 30), (-8, 0), (13, 45))]
 WORDS = ["alfa", "bravo", "charlie", "delta", "echo", "foxtrot", "golf",
          "hotel", "running", "runs", "jumped", "jumping"]
 TABLES = ("postings", "termstats", "lengths", "docs", "vectors")
@@ -84,6 +122,17 @@ def _rows(n: int) -> list[dict]:
             "flag": bool(i % 2) if i % 5 else None,
             "blob": f"payload {i}" if i % 4 else None,
             "nothing": None,
+            "sflag": BOOL_STRINGS[i % len(BOOL_STRINGS)],
+            "snum": NUM_STRINGS[i % len(NUM_STRINGS)],
+            "swhen": TIME_STRINGS[i % len(TIME_STRINGS)],
+            "zwhen": datetime.datetime(2021, 3, 1 + i % 28, i % 24, i % 60, i % 60,
+                                       tzinfo=OFFSETS[i % len(OFFSETS)]) if i % 6 else None,
+            "fcode": FLOATS[i % len(FLOATS)] * (1 + i // len(FLOATS)),
+            "icode": i * 7919 - 1000,
+            "tcode": datetime.datetime(2019, 12, 31, 23, i % 60, 0, 10000 * (i % 100),
+                                       tzinfo=OFFSETS[i % len(OFFSETS)]),
+            "iblob": i * 3 if i % 7 else None,
+            "tblob": datetime.datetime(2022, 7, 4, 0, 0, i % 60, tzinfo=OFFSETS[i % 4]),
         })
     return rows
 
@@ -113,14 +162,17 @@ def _table(spark, d, info, table):
     return [(f.name, f.dataType) for f in df.schema], rows
 
 
-def test_driver_and_spark_placements_write_equal_tables(spark, tmp_path):
-    rows = _rows(300)
+def _build_both(spark, tmp_path, rows):
     infos = {}
     for placement, build in (("spark", _spark_segment), ("driver", _driver_segment)):
         d = str(tmp_path / placement)
         create_in(spark, d, SCHEMA)
         infos[placement] = (d, build(spark, rows, d))
-    (ds, s_info), (dd, d_info) = infos["spark"], infos["driver"]
+    return infos["spark"], infos["driver"]
+
+
+def _assert_equal_tables(spark, spark_seg, driver_seg):
+    (ds, s_info), (dd, d_info) = spark_seg, driver_seg
     for table in TABLES:
         s_cols, s_rows = _table(spark, ds, s_info, table)
         d_cols, d_rows = _table(spark, dd, d_info, table)
@@ -128,6 +180,11 @@ def test_driver_and_spark_placements_write_equal_tables(spark, tmp_path):
         assert len(d_rows) == len(s_rows), table
         for a, b in zip(d_rows, s_rows):
             assert a == b, (table, a, b)
+
+
+def test_driver_and_spark_placements_write_equal_tables(spark, tmp_path):
+    (ds, s_info), (dd, d_info) = _build_both(spark, tmp_path, _rows(300))
+    _assert_equal_tables(spark, (ds, s_info), (dd, d_info))
     cols, blocks = _table(spark, dd, d_info, "postings")
     col = {name: i for i, (name, _) in enumerate(cols)}
     # the common term spans several blocks, and every payload is written
@@ -138,6 +195,30 @@ def test_driver_and_spark_placements_write_equal_tables(spark, tmp_path):
     for attr in ("doc_count", "min_doc_id", "max_doc_id", "field_lengths",
                  "field_term_counts", "stored_cols"):
         assert getattr(d_info, attr) == getattr(s_info, attr), attr
+
+
+@pytest.mark.parametrize("ansi", [True, False])
+def test_placements_agree_on_malformed_strings(spark, tmp_path, ansi):
+    """A string Spark's cast rejects fails the build in both placements
+    under ANSI casts, and stores null in both without them."""
+    rows = _rows(20)
+    for i, (field, bad) in enumerate(MALFORMED.items()):
+        rows[3 + i][field] = bad
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", str(ansi).lower())
+    try:
+        if not ansi:
+            _assert_equal_tables(spark, *_build_both(spark, tmp_path, rows))
+            return
+        for i, (field, bad) in enumerate(MALFORMED.items()):
+            one = [dict(r, **{f: None for f in MALFORMED if f != field}) for r in rows]
+            for build in (_spark_segment, _driver_segment):
+                d = str(tmp_path / f"{field}-{build.__name__}")
+                create_in(spark, d, SCHEMA)
+                with pytest.raises(Exception, match="cannot be cast|CAST_INVALID_INPUT"):
+                    build(spark, one, d)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
 
 
 QUERIES = [

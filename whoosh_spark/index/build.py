@@ -37,11 +37,14 @@ bulk path), and ``build_segment_rows`` runs them on the driver over rows
 held there and writes each table with pyarrow as one sorted part file
 (``IndexWriter.commit``). The input decides: a writer commit's few rows
 would spend most of their time in Spark's fixed per-job cost, which the
-driver placement does not pay.
+driver placement does not pay. Where the Spark placement casts a value
+to its canonical type, the driver placement evaluates the same cast in
+Python (``spark_cast``).
 """
 
 from __future__ import annotations
 
+import datetime
 import os
 import re
 
@@ -52,7 +55,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
-from whoosh_spark.index import codec
+from whoosh_spark.index import codec, spark_cast
 from whoosh_spark.index.catalog import TERMSTATS_SCHEMA
 from whoosh_spark.index.quantize import length_to_byte_np
 from whoosh_spark.index.segment import (
@@ -484,8 +487,12 @@ def _encode_rows(pdf: pd.DataFrame, starts: np.ndarray, total: int) -> pd.DataFr
 
 # ------------------------------------------------------------------ build
 
-#: canonical docs.parquet dtype per typed schema kind (the empty-index
-#: read in catalog.Index assumes the same)
+#: canonical docs.parquet dtype per typed schema kind. Its two users must
+#: agree: ``_canonical_stored_col`` (Spark's cast, the DataFrame
+#: placement) and ``_stored_array`` (the same cast in Python, the driver
+#: placement); tests/test_segment_placements.py feeds both every kind of
+#: input they convert. The empty-index read in catalog.Index assumes the
+#: same types.
 _STORED_KIND_TYPES = {"numeric": T.DoubleType(), "datetime": T.TimestampType(),
                       "boolean": T.BooleanType()}
 
@@ -761,38 +768,28 @@ def build_segment(
     return info
 
 
-def _text(v):
-    """A value of a text-ish field as a string: what the DataFrame
-    placement's cast to string gives for str, int and bool values."""
-    if v is None or isinstance(v, str):
-        return v
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)
-
-
-def _stored_array(values: list, kind: str, tz: str | None) -> pa.Array:
-    """A stored column in its canonical type (``_canonical_stored_col``'s
-    rules); naive datetimes are read in the session time zone ``tz``."""
-    pin = _STORED_KIND_TYPES.get(kind)
-    if kind == "datetime":
-        ts = pd.to_datetime(pd.Series(values, dtype=object))
-        if ts.dt.tz is None:
-            ts = ts.dt.tz_localize(tz)
-        return pa.array(ts, type=to_arrow_type(pin))
-    if pin is not None:
-        conv = float if kind == "numeric" else bool
-        return pa.array([None if v is None else conv(v) for v in values],
-                        type=to_arrow_type(pin))
+def _stored_array(values: list, kind: str, tz: str, ansi: bool) -> pa.Array:
+    """A stored column in its canonical type: Spark's cast of
+    ``_canonical_stored_col``, evaluated by ``spark_cast`` (session time
+    zone ``tz``, ``ansi`` from ``spark.sql.ansi.enabled``)."""
+    present = [v for v in values if v is not None]
+    if kind == "datetime" or (kind == "stored" and present and all(
+            isinstance(v, datetime.datetime) for v in present)):
+        us = pa.array([spark_cast.to_timestamp_us(v, tz, ansi) for v in values],
+                      type=pa.int64())
+        return us.cast(to_arrow_type(_STORED_KIND_TYPES["datetime"]))
+    if kind in ("numeric", "boolean"):
+        to = spark_cast.to_double if kind == "numeric" else spark_cast.to_bool
+        return pa.array([to(v, ansi) for v in values],
+                        type=to_arrow_type(_STORED_KIND_TYPES[kind]))
     if kind == "stored":
-        present = [v for v in values if v is not None]
         if not present:
             return pa.array(values, type=pa.string())
         if all(isinstance(v, (int, float)) and not isinstance(v, bool) for v in present):
             return pa.array([None if v is None else float(v) for v in values],
                             type=pa.float64())
         return pa.array(values)
-    return pa.array([_text(v) for v in values], type=pa.string())
+    return pa.array([spark_cast.to_text(v, tz) for v in values], type=pa.string())
 
 
 def _termstats(blocks: pd.DataFrame) -> pa.Table:
@@ -835,7 +832,6 @@ def build_segment_rows(
     rows: list[dict],
     schema: IndexSchema,
     index_dir: str,
-    bucket_width: int = DEFAULT_BUCKET_WIDTH,
     lineage: dict | None = None,
 ) -> SegmentInfo:
     """Driver placement of ``build_segment``: write the segment of
@@ -851,10 +847,13 @@ def build_segment_rows(
     orig_schema = schema
     schema = schema.bind_columns(cols)
     ids = np.asarray([int(r["doc_id"]) for r in rows], dtype=np.int64)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    ansi = spark.conf.get("spark.sql.ansi.enabled").lower() == "true"
     cfgs = [c for c in _field_configs(schema) if c[0] in cols]
     texts = pd.DataFrame({"doc_id": ids})
     for c in cfgs:
-        texts[c[0]] = pd.Series([_text(r.get(c[0])) for r in rows], dtype=object)
+        texts[c[0]] = pd.Series([spark_cast.to_text(r.get(c[0]), tz) for r in rows],
+                                dtype=object)
 
     # ---- posting blocks + term stats (+ term vectors) ----
     out_cfgs, has_boost, has_charfmt = _postings_cfgs(schema, cols)
@@ -864,7 +863,7 @@ def build_segment_rows(
         postings = pd.DataFrame({c: [] for c in ("doc_id", "field", "term", "tf")})
     else:
         postings["bucket"] = (postings["doc_id"].to_numpy(dtype=np.int64)
-                              / bucket_width).astype(np.int64)
+                              / DEFAULT_BUCKET_WIDTH).astype(np.int64)
         needs_positions = any(schema[f].phrase for f in schema.indexed_fields())
         in_cols = ["field", "term", "bucket", "doc_id", "tf", "len_byte"] + (
             ["weight"] if "weight" in postings.columns else []
@@ -897,10 +896,9 @@ def build_segment_rows(
 
     # ---- docs (stored fields, canonical types) ----
     stored = [c for c in schema.stored_fields() if c in cols and c != "doc_id"]
-    tz = (spark.conf.get("spark.sql.session.timeZone")
-          if any(schema[c].kind == "datetime" for c in stored) else None)
     docs = pa.table({"doc_id": pa.array(ids, type=pa.int64()), **{
-        c: _stored_array([r.get(c) for r in rows], schema[c].kind, tz) for c in stored}})
+        c: _stored_array([r.get(c) for r in rows], schema[c].kind, tz, ansi)
+        for c in stored}})
     _write_part(docs, os.path.join(seg_dir, "docs.parquet"))
 
     field_lengths = {f: int(n) for f, n in lengths.groupby("field")["length"].sum().items()}

@@ -36,7 +36,6 @@ from whoosh_spark.index.build import (
     DEFAULT_BUCKET_WIDTH,
     POSTINGS_SCHEMA,
     _encode_partition,
-    _text,
     _write_part,
     build_segment,
 )
@@ -47,6 +46,7 @@ from whoosh_spark.index.segment import (
     read_manifest,
     write_manifest,
 )
+from whoosh_spark.index.spark_cast import to_text
 
 _FIB_CACHE = {0: 0, 1: 1}
 
@@ -421,9 +421,10 @@ def tombstone(spark: SparkSession, index_dir: str, ids=(), terms=(),
     with index_lock(index_dir):
         ix = Index(spark, index_dir)
         found = [np.asarray([int(i) for i in ids], dtype=np.int64)]
+        tz = spark.conf.get("spark.sql.session.timeZone")
         keys = {(f, t) for f, t in terms if f not in ix._ghost_fields}
         for field, values in (unique or {}).items():
-            values = sorted({_text(v) for v in values if v is not None})
+            values = sorted({to_text(v, tz) for v in values if v is not None})
             if ix.schema[field].stored:
                 found.append(_stored_doc_ids(ix, field, values))
             else:  # unstored unique field: resolve via its postings
@@ -454,18 +455,21 @@ def _tombstone_locked(index_dir: str, manifest, ids: np.ndarray) -> int:
     """Tombstone the sorted unique ``ids``: each affected segment's full
     set (existing ∪ new, computed with numpy) becomes its next
     ``deletes.<gen>.parquet`` generation, and one manifest commit
-    repoints them all. An already-deleted doc does not delete again."""
+    repoints them all. An already-deleted doc does not delete again.
+    A segment's docs are scanned for the ids in its range only, so the
+    driver holds the matches, not the segment's id column."""
     total = 0
-    lo, hi = (int(ids[0]), int(ids[-1])) if ids.size else (0, -1)
     for s in manifest.segments:
-        if s.min_doc_id > hi or s.max_doc_id < lo:
+        mine = ids[(ids >= s.min_doc_id) & (ids <= s.max_doc_id)]
+        if not mine.size:
             continue
         seg_ids = pq.read_table(
             os.path.join(s.path(index_dir), "docs.parquet"), columns=["doc_id"],
-            filters=[("doc_id", ">=", lo), ("doc_id", "<=", hi)])["doc_id"].to_numpy()
+            filters=[("doc_id", ">=", int(mine[0])), ("doc_id", "<=", int(mine[-1])),
+                     ("doc_id", "in", mine.tolist())])["doc_id"].to_numpy()
         old = (pq.read_table(s.deletes_path(index_dir), columns=["doc_id"])["doc_id"]
                .to_numpy() if s.has_deletes else np.empty(0, dtype=np.int64))
-        new = np.setdiff1d(np.intersect1d(seg_ids, ids), old)
+        new = np.setdiff1d(seg_ids, old)
         if not new.size:
             continue
         s.deletes_gen += 1
